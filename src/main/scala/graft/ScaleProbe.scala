@@ -186,16 +186,6 @@ object ScaleProbe {
         incrementOf(s, d).filter(col("doc_id") < 100000008L), bandsDir,
         cdir, threshold = 0.5)
     }),
-    // ingest throughput (round-13 verdict ask #4 / BASELINE.md's unmet
-    // "ingest rows/sec" metric): ×n logs × ×n entries, one distinct
-    // cert per entry. serial = runOnce, the reference-faithful
-    // per-batch loop — (logs × batches) Spark jobs + store appends;
-    // batched = runOnceParallel — concurrent per-log fetches + ONE
-    // union append per round (the safe parallel shape: concurrent path
-    // appends would race the shared _temporary staging dir). rows/s on
-    // stderr; SCALE.md carries the table. Serial capped at ×10: its
-    // per-batch job overhead IS the measured bottleneck, and ×100
-    // would demonstrate it for many minutes.
     // the corpus text store's WRITE and MAINTENANCE sides at ×n: 5
     // fixed 500-doc appends into a PRIVATE copy of the ×n store (cost =
     // touched-idp increment writes + the listing-manifest torn-append
@@ -301,17 +291,11 @@ object ScaleProbe {
       val m = operators.Dedup.readBandIndexMeta(s, scratch)
       s.range(1).select(lit(m.hotBandCutoff).as("hot_band_cutoff"))
     }),
-    P("ct_ingest_serial", 10, (s, d, n) => ingestProbe(s, n, parallel = false)),
-    P("ct_ingest_batched", 100, (s, d, n) => ingestProbe(s, n, parallel = true)),
-    // the DSv2 source's ingest path at ×n (round-14 verdict ask #5):
-    // same synthetic geometry as the two loop probes, but entries ride
-    // readStream → partition-per-(log, range) EXECUTOR fetches →
-    // foreachBatch append, offsets in the checkpoint WAL — the
-    // documented deployment-scale route for fetch volumes that outgrow
-    // runOnceParallel's driver buffering. maxentriespertrigger = 4104
-    // (8 × 513) matches runOnceParallel's maxBatchesPerLogPerRound = 8,
-    // so both shapes land the same entries-per-log-per-round and the
-    // rows/s numbers compare like for like.
+    // ingest throughput (BASELINE.md's "ingest rows/sec" metric): ×n
+    // logs × ×n entries, one distinct cert per entry, through the one
+    // ingest route — readStream → partition-per-(log, range) EXECUTOR
+    // fetches → foreachBatch append, offsets in the checkpoint WAL.
+    // rows/s on stderr; SCALE.md carries the table.
     P("ct_ingest_dsv2", 100, (s, d, n) => ingestProbeDsv2(s, n)),
     // CertStore.compactDrifted under the CT drift geometry (round-13
     // verdict ask #6): ingest appends land on ONE hot month while
@@ -845,66 +829,22 @@ object ScaleProbe {
     out
   }
 
-  /** Ingest-throughput probe body (round-13 verdict ask #4 /
-    * BASELINE.md's unmet "ingest rows/sec" metric): ×n logs × ×n
-    * entries through the full parse→explode→dedup→append pipeline
-    * against a synthetic in-memory entry source — one DISTINCT cert
-    * per (log, index) ([[graft.ct.DemoFixture.uniqueDer]]) so the
-    * dedup never collapses volume and rows/s prices real work. The
-    * store and offsets are probe-private and wiped per pass. */
   private val ingestSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-  private def ingestProbe(s: SparkSession, n: Int, parallel: Boolean): DataFrame = {
-    val nLogs = 4 * math.min(n, 4) // ×1: 4 logs; ×10/×100: 16
-    val perLog = 2052L * n         // 4 reference-sized batches of 513 at ×1
-    val logs = (0 until nLogs).map(i =>
-      ct.LogList.CtLog(s"probe log $i", s"https://probe$i.example", "usable"))
-    val source = new ct.Ingestor.EntrySource {
-      def treeSize(log: ct.LogList.CtLog): Long = perLog
-      def fetchEntries(log: ct.LogList.CtLog, start: Long,
-          endInclusive: Long): Seq[ct.RawEntry] = {
-        val li = log.url.stripPrefix("https://probe").stripSuffix(".example").toLong
-        (start to endInclusive).map { i =>
-          ct.RawEntry(log.name, i,
-            java.util.Base64.getEncoder.encodeToString(
-              ct.DemoFixture.makeLeaf(
-                ct.DemoFixture.uniqueDer(li * 100000000L + i))))
-        }
-      }
-    }
-    val seq = ingestSeq.incrementAndGet()
-    val tmp = System.getProperty("java.io.tmpdir")
-    val store = new java.io.File(tmp, s"graft_ingest_probe_$seq").getAbsolutePath
-    val offDir = new java.io.File(tmp, s"graft_ingest_probe_off_$seq").getAbsolutePath
-    val offsets = new ct.Ingestor.FileOffsets(offDir)
-    val ts = java.sql.Timestamp.valueOf("2024-01-15 00:00:00")
-    val t0 = System.nanoTime()
-    val rows =
-      if (parallel)
-        ct.Ingestor.runOnceParallel(s, logs, source, store, offsets, ts)
-      else ct.Ingestor.runOnce(s, logs, source, store, offsets, ts)
-    val dt = (System.nanoTime() - t0) / 1e9
-    val entries = nLogs * perLog
-    System.err.println(
-      f"[ingest probe] ${if (parallel) "batched" else "serial"}%-7s x$n: " +
-        f"$entries entries -> $rows rows in $dt%.1f s = " +
-        f"${rows / dt}%.0f rows/s (${entries / dt}%.0f entries/s)")
-    operators.Dedup.rmdir(new java.io.File(store))
-    operators.Dedup.rmdir(new java.io.File(offDir))
-    s.range(1).select(lit(rows).as("rows_appended"))
-  }
 
-  /** DSv2-ingest probe body (round-14 verdict ask #5): the same
-    * ×n synthetic backlog as [[ingestProbe]], drained through the
-    * streaming source ([[graft.ct.source.CtMicroBatchSource]]) with
-    * `Trigger.AvailableNow` — fetches run INSIDE partition readers on
-    * executor threads (one InputPartition per (log, ≤513-entry range)),
-    * so nothing buffers on the driver; the per-round entry cap matches
-    * runOnceParallel's 8-batch bound for a like-for-like rows/s. The
-    * store, checkpoint and registry key are probe-private per pass. */
+  /** DSv2-ingest probe body: ×n logs × ×n entries against a synthetic
+    * in-memory entry source — one DISTINCT cert per (log, index)
+    * ([[graft.ct.DemoFixture.uniqueDer]]) so the dedup never collapses
+    * volume and rows/s prices real work — drained through the streaming
+    * source ([[graft.ct.source.CtMicroBatchSource]]) with
+    * `Trigger.AvailableNow`. Fetches run INSIDE partition readers on
+    * executor threads (one InputPartition per (log, ≤512-entry range)),
+    * so nothing buffers on the driver; 4104 entries per log per trigger
+    * keeps the rounds of the SCALE.md round-15 table. The store,
+    * checkpoint and registry key are probe-private per pass. */
   private def ingestProbeDsv2(s: SparkSession, n: Int): DataFrame = {
     val nLogs = 4 * math.min(n, 4)
     val perLog = 2052L * n
-    val source = new ct.Ingestor.EntrySource {
+    val source = new ct.source.EntrySource {
       def treeSize(log: ct.LogList.CtLog): Long = perLog
       def fetchEntries(log: ct.LogList.CtLog, start: Long,
           endInclusive: Long): Seq[ct.RawEntry] = {

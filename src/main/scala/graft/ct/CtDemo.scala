@@ -4,10 +4,12 @@ import java.nio.file.Files
 import java.sql.{Date, Timestamp}
 import java.time.Instant
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.Trigger
 
 /** Runnable end-to-end smoke of the CT engine: log-list admission →
-  * micro-batch ingest (fixture entry source; production swaps in the CT
-  * HTTP API) → partitioned store → all 8 endpoint query shapes.
+  * StreamIngest over a registered fixture entry source (production drops
+  * the `sourcekey` option and reads the CT HTTP API) → partitioned store →
+  * all 8 endpoint query shapes.
   *
   * `sbt "runMain graft.ct.CtDemo"` — prints each query's result.
   */
@@ -38,17 +40,20 @@ object CtDemo {
     println(s"admitted logs: ${logs.map(l => s"${l.name}(${l.state})").mkString(", ")}")
 
     val store = Files.createTempDirectory("ct-demo-store").toString
-    val offsets = new Ingestor.FileOffsets(Files.createTempDirectory("ct-demo-off").toString)
-    val source = new Ingestor.EntrySource {
+    val checkpoint = Files.createTempDirectory("ct-demo-ckpt").toString
+    source.CtMicroBatchSource.register("ct-demo", new source.EntrySource {
       def treeSize(log: LogList.CtLog): Long = 5L
       def fetchEntries(log: LogList.CtLog, start: Long, end: Long): Seq[RawEntry] =
         (start to end).map(i => RawEntry(log.name, i, DemoFixture.leafB64))
-    }
-    val n = Ingestor.runOnce(spark, logs, source, store, offsets,
-      Timestamp.from(now), batchSize = Ingestor.BatchSize)
-    println(s"ingested rows: $n (store: $store, ${CertStore.humanBytes(CertStore.sizeBytes(spark, store))})")
-
+    })
+    StreamIngest.start(spark,
+      Map("loglist" -> logListJson, "now" -> now.toString, "sourcekey" -> "ct-demo"),
+      store, checkpoint, () => Timestamp.from(now), Trigger.AvailableNow())
+      .awaitTermination()
     val table = CertStore.read(spark, store)
+    println(s"ingested rows: ${table.count()} (store: $store, " +
+      s"${CertStore.humanBytes(CertStore.sizeBytes(spark, store))})")
+
     println("-- /domain/www.example.com")
     CtQueries.domainLookup(table, "www.example.com").show(5, truncate = false)
     println("-- /subdomains/example.com")

@@ -16,7 +16,7 @@ import java.util.Base64
   * so a deployment needs no other HTTP plumbing.
   */
 class CtHttpSource(client: HttpClient = CtHttpSource.defaultClient)
-    extends Ingestor.EntrySource {
+    extends source.EntrySource {
 
   private def getJson(url: String, timeoutSec: Int): com.fasterxml.jackson.databind.JsonNode = {
     val req = HttpRequest.newBuilder(URI.create(url))
@@ -58,7 +58,7 @@ class CtHttpSource(client: HttpClient = CtHttpSource.defaultClient)
     * if `cacheFile` exists and is younger than `ttl`, serve it without any
     * network call; otherwise fetch and overwrite the cache. No stale
     * fallback on fetch failure — reference parity (a failed refresh
-    * propagates, the retry loop handles it). `now` is injectable for
+    * propagates to the caller). `now` is injectable for
     * deterministic TTL tests. */
   def fetchLogListCached(url: String, cacheFile: java.nio.file.Path,
       ttl: Duration = Duration.ofHours(24),

@@ -8,10 +8,11 @@ import org.apache.spark.sql.functions._
   *
   * Declarative port of the reference worker's per-batch loop
   * (/root/reference/ingestion/ct_ingestor.py:180-221):
-  *   base64 decode → parse leaf (admission + X.509) → drop unparsed/empty →
-  *   explode to one row per domain (grain G1, :189-203) → normalize
-  *   (lowercase domains are produced by the parser; log_name spaces → '_',
-  *   :152) → derive base_domain → dedup on (fingerprint, domain).
+  *   base64 decode → parse leaf (admission + X.509) → explode to one row
+  *   per domain, dropping unparsed/empty leaves (grain G1, :189-203) →
+  *   normalize (lowercase domains are produced by the parser; log_name
+  *   spaces → '_', :152) → derive base_domain → dedup on (fingerprint,
+  *   domain).
   *
   * The dedup implements the README's *claimed* semantics ("Deduplicates
   * certificates by SHA256 fingerprint", README.md:19) which the reference
@@ -28,12 +29,12 @@ object IngestPipeline {
   /** `ingestTs` is the parameterized "now" (never the wall clock —
     * determinism rule, SURVEY §7.4; reference uses utcnow() at :191). */
   def certDomains(raw: Dataset[RawEntry], ingestTs: Timestamp): DataFrame = {
-    val parsed = raw
+    // no filter on `cert`: explode already emits nothing for a null or
+    // empty `domains`, and a filter would be pushed below the projection,
+    // inlining the parse UDF into it and parsing every leaf again
+    raw
       .withColumn("leaf", unbase64(col("leaf_input")))
       .withColumn("cert", CertParser.parse_leaf(col("leaf")))
-      .filter(col("cert").isNotNull && size(col("cert.domains")) > 0)
-
-    parsed
       .select(
         lit(ingestTs).as("ts"),
         explode(col("cert.domains")).as("domain"),

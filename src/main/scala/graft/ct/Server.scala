@@ -50,6 +50,8 @@ class Server(spark: SparkSession, table: () => DataFrame, storePath: String,
   private val streamPool = java.util.concurrent.Executors.newCachedThreadPool(r => {
     val t = new Thread(r, "graft-sse"); t.setDaemon(true); t
   })
+  // non-daemon: released by stop(), or the JVM could not exit
+  private val requestPool = java.util.concurrent.Executors.newFixedThreadPool(4)
 
   def boundPort: Int = http.getAddress.getPort
 
@@ -244,7 +246,7 @@ class Server(spark: SparkSession, table: () => DataFrame, storePath: String,
         try send(ex, 500, jval(Map("error" -> String.valueOf(e.getMessage))))
         catch { case _: Throwable => () }
       })
-    http.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
+    http.setExecutor(requestPool)
     http.start()
     this
   }
@@ -252,6 +254,7 @@ class Server(spark: SparkSession, table: () => DataFrame, storePath: String,
   def stop(): Unit = {
     streaming = false
     http.stop(0)
+    requestPool.shutdownNow()
     streamPool.shutdownNow()
   }
 }

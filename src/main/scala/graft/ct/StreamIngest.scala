@@ -5,8 +5,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** End-to-end streaming ingest over the DataSource-v2 CT source: readStream
-  * (transport) → IngestPipeline.certDomains (parse/explode/dedup — the SAME
-  * transform as batch ingest) → one idempotent store write per micro-batch.
+  * (transport) → IngestPipeline.certDomains (parse/explode/dedup) → one
+  * idempotent store write per micro-batch.
   *
   * foreachBatch rather than the parquet streaming sink because the store
   * write is not a plain append — it month-partitions, repartitions and
@@ -24,17 +24,17 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * `ingestTs` parameterizes the wall clock per micro-batch (determinism
   * rule, SURVEY §7.4).
   *
-  * THE DEPLOYMENT DEFAULT (round-15/16): this route measured
-  * 14.7k/81k/74k rows/s across ×1/×10/×100 backlogs on local[32] —
-  * ~2× [[Ingestor.runOnceParallel]] from ×10 up — and is the only
-  * ingest shape whose fetches run on executors (partition-per-
-  * (log, range), source/CtMicroBatchSource.scala:172), so it scales
-  * with the cluster rather than a driver thread pool. Row identity
-  * with the serial loop is spec-pinned (CtDsv2Spec). Cluster-FS
-  * portability is pinned too: store root, checkpoint WAL, and the
-  * layout guard below all resolve scheme-qualified URIs through the
-  * Hadoop FS API (CtDsv2Spec's file:-scheme lifecycle leg — the
-  * round-15 FsPointers defect class, kept out by test).
+  * The engine's one ingest route. Fetches run on executors
+  * (partition-per-(log, range), see source.CtMicroBatchSource), so
+  * ingest scales with the cluster rather than a driver thread pool;
+  * it measured 14.7k/81k/74k rows/s across ×1/×10/×100 backlogs on
+  * local[32] (SCALE.md round 15). Bounded runs use
+  * `Trigger.AvailableNow`. That transport, batching and epoch layout
+  * land the same rows as one `IngestPipeline.certDomains` pass over the
+  * whole backlog is spec-pinned (CtDsv2Spec). Cluster-FS portability is
+  * pinned too: store root, checkpoint WAL, and the layout guard below
+  * all resolve scheme-qualified URIs through the Hadoop FS API
+  * (CtDsv2Spec's file:-scheme lifecycle leg).
   */
 object StreamIngest {
 

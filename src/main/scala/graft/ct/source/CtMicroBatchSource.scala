@@ -3,6 +3,7 @@ package graft.ct.source
 import java.time.Instant
 import java.util
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -13,12 +14,27 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.ct.{CtHttpSource, Ingestor, LogList}
+import graft.ct.{CtHttpSource, LogList, RawEntry}
 
-/** DataSource-v2 micro-batch CT source — the v1 idiomatic end state the
-  * SURVEY sanctions over the v0 driver loop (Ingestor.runOnce): S1–S8 as a
-  * first-class `readStream` source whose offsets live in the Structured
-  * Streaming checkpoint.
+/** S3 + S4: tree size high-watermark and contiguous entry fetch.
+  *
+  * Both methods are called concurrently: `treeSize` from the driver,
+  * `fetchEntries` from every partition reader on the executors. An
+  * implementation with shared mutable state (a single connection, a
+  * reused buffer) must synchronize or use per-thread resources. Fixture
+  * sources built on immutable maps are safe by construction.
+  *
+  * `fetchEntries` MAY return fewer entries than the requested range
+  * (RFC 6962 §4.6 allows servers to truncate); [[CtPartitionReader]]
+  * re-requests the remainder. */
+trait EntrySource {
+  def treeSize(log: LogList.CtLog): Long
+  def fetchEntries(log: LogList.CtLog, start: Long, endInclusive: Long): Seq[RawEntry]
+}
+
+/** DataSource-v2 micro-batch CT source — the engine's one ingest route:
+  * S1–S9 as a first-class `readStream` source whose offsets live in the
+  * Structured Streaming checkpoint.
   *
   * Mapping to the reference worker (/root/reference/ingestion/ct_ingestor.py):
   *  - S1/S2 (log-list + admission): the `loglist` option carries the
@@ -29,13 +45,17 @@ import graft.ct.{CtHttpSource, Ingestor, LogList}
   *  - S4 (get-entries): each `InputPartition` is one (log, [from, to])
   *    range of ≤ `batchSize` entries fetched by its reader (:107-111) —
   *    per-log AND per-range parallelism, where the reference forks one OS
-  *    process per log.
+  *    process per log. A short return is re-requested until the range is
+  *    covered; the reference's `idx = end + 1` (:223) skipped the tail.
   *  - S5 (offsets): the per-log next-index map IS the streaming Offset;
   *    Spark's checkpoint WAL replaces the offset files (:169,224-226).
   *    Exactly-once: ranges are deterministic per offset pair, and the
   *    downstream (fingerprint, domain) dedup makes replays idempotent.
   *  - S7/S8 (cadence, frozen logs): the trigger sets cadence; a frozen
   *    log's tree size stops moving so it simply stops producing batches.
+  *  - S9 (error retry, :228-230): a log whose get-sth fails is held at
+  *    its current offset for that trigger and logged to stderr; the other
+  *    logs advance, and the next trigger asks the failing log again.
   *
   * Rows are RAW entries (log_name, entry_index, leaf_input) — parsing and
   * explosion stay in IngestPipeline as ordinary DataFrame transforms, so
@@ -106,21 +126,32 @@ class CtMicroBatchStream(options: CaseInsensitiveStringMap)
     LogList.parse(json, now)
   }
   private val batchSize = Option(options.get("batchsize")).map(_.toInt)
-    .getOrElse(Ingestor.BatchSize)
+    .getOrElse(CtMicroBatchSource.BatchSize)
   private val maxEntriesPerTrigger: Long =
     Option(options.get("maxentriespertrigger")).map(_.toLong)
-      .getOrElse(Ingestor.BatchSize.toLong)
+      .getOrElse(CtMicroBatchSource.BatchSize.toLong)
   require(maxEntriesPerTrigger > 0,
     s"maxentriespertrigger must be positive, got $maxEntriesPerTrigger")
   private val sourceKey = Option(options.get("sourcekey"))
-  private def source: Ingestor.EntrySource = CtMicroBatchSource.resolve(sourceKey)
+  private def source: EntrySource = CtMicroBatchSource.resolve(sourceKey)
 
   override def initialOffset(): Offset =
     CtOffset(logs.map(_.name -> 0L).toMap)
 
-  /** S3: poll every admitted log's signed tree head for its current size. */
-  private def availableOffsets(): Map[String, Long] =
-    logs.map(lg => lg.name -> source.treeSize(lg)).toMap
+  /** S3: poll every admitted log's signed tree head for its current size.
+    * A log whose get-sth fails is left out, so callers hold it where it is
+    * (S9: one log's outage never stops the others). */
+  private def availableOffsets(): Map[String, Long] = {
+    val src = source
+    logs.flatMap { lg =>
+      try Some(lg.name -> src.treeSize(lg))
+      catch { case NonFatal(e) =>
+        System.err.println(s"[ct source] get-sth failed for ${lg.name}: " +
+          s"${e.getMessage}; holding its offset until the next trigger")
+        None
+      }
+    }.toMap
+  }
 
   /** Admission control (SupportsAdmissionControl): a fresh start against a
     * real CT log (10⁹ entries) must NOT plan one unbounded catch-up
@@ -142,7 +173,8 @@ class CtMicroBatchStream(options: CaseInsensitiveStringMap)
     * back to Trigger.Once semantics — ONE batch to the current head with
     * the read limit ignored, i.e. exactly the unbounded catch-up batch
     * admission control exists to prevent. With it, the engine pins the
-    * target head here and runs capped batches until reaching it. */
+    * target head here and runs capped batches until reaching it. A log
+    * whose get-sth fails here is held for the whole run. */
   @volatile private var availableNowEnd: Option[Map[String, Long]] = None
   override def prepareForTriggerAvailableNow(): Unit =
     availableNowEnd = Some(availableOffsets())
@@ -151,11 +183,12 @@ class CtMicroBatchStream(options: CaseInsensitiveStringMap)
     val from = start.asInstanceOf[CtOffset].next
     val capPerLog = maxRowsOf(limit)
     val heads = availableNowEnd.getOrElse(availableOffsets())
-    CtOffset(heads.map { case (name, size) =>
-      val lo = from.getOrElse(name, 0L)
-      val hi = math.max(size, lo) // a shrinking tree head never rewinds the offset
-      name -> capPerLog.fold(hi)(c => math.min(hi, lo + c))
-    })
+    CtOffset(logs.map { lg =>
+      val lo = from.getOrElse(lg.name, 0L)
+      // a shrinking tree head never rewinds the offset; an unreachable one holds it
+      val hi = math.max(heads.getOrElse(lg.name, lo), lo)
+      lg.name -> capPerLog.fold(hi)(c => math.min(hi, lo + c))
+    }.toMap)
   }
 
   /** Effective per-log row cap of a ReadLimit tree: tightest maxRows wins;
@@ -199,12 +232,28 @@ class CtMicroBatchStream(options: CaseInsensitiveStringMap)
 case class CtInputPartition(logName: String, url: String, state: String,
     from: Long, toInclusive: Long, sourceKey: Option[String]) extends InputPartition
 
-/** S4 on the executor: fetch the partition's range once, emit raw rows. */
+/** S4 on the executor: fetch the partition's range, emit raw rows. A short
+  * return (RFC 6962 §4.6) is followed by a request for the rest of the
+  * range, so nothing is skipped once the offset commits. An empty return,
+  * or one longer than requested, fails the task: the source cannot be
+  * trusted to cover the range contiguously. */
 class CtPartitionReader(p: CtInputPartition) extends PartitionReader[InternalRow] {
-  private lazy val entries = CtMicroBatchSource.resolve(p.sourceKey)
-    .fetchEntries(LogList.CtLog(p.logName, p.url, p.state), p.from, p.toInclusive)
-    .iterator
-  private var current: graft.ct.RawEntry = _
+  private lazy val entries: Iterator[RawEntry] = {
+    val src = CtMicroBatchSource.resolve(p.sourceKey)
+    val log = LogList.CtLog(p.logName, p.url, p.state)
+    Iterator.unfold(p.from) { next =>
+      if (next > p.toInclusive) None
+      else {
+        val requested = p.toInclusive - next + 1
+        val got = src.fetchEntries(log, next, p.toInclusive)
+        if (got.isEmpty || got.length > requested)
+          throw new IllegalStateException(s"${p.logName} returned ${got.length} " +
+            s"entries for range [$next, ${p.toInclusive}] ($requested requested)")
+        Some((got, next + got.length))
+      }
+    }.flatten
+  }
+  private var current: RawEntry = _
 
   override def next(): Boolean =
     if (entries.hasNext) { current = entries.next(); true } else false
@@ -217,6 +266,10 @@ class CtPartitionReader(p: CtInputPartition) extends PartitionReader[InternalRow
 }
 
 object CtMicroBatchSource {
+  /** Reference BATCH_SIZE (ct_ingestor.py:25): entries per get-entries
+    * range and, by default, per log per trigger. */
+  val BatchSize = 512
+
   /** Raw-entry schema; field order matches graft.ct.RawEntry. */
   val schema: StructType = StructType(Seq(
     StructField("log_name", StringType, nullable = false),
@@ -226,13 +279,13 @@ object CtMicroBatchSource {
   /** Test hook: an injected EntrySource under a key (same-JVM/local mode —
     * zero-egress tests register fixtures here). Absent a key, the real CT
     * HTTP API client is constructed, which works on any executor. */
-  private val registry = new java.util.concurrent.ConcurrentHashMap[String, Ingestor.EntrySource]()
-  def register(key: String, src: Ingestor.EntrySource): Unit = registry.put(key, src)
+  private val registry = new java.util.concurrent.ConcurrentHashMap[String, EntrySource]()
+  def register(key: String, src: EntrySource): Unit = registry.put(key, src)
   /** Remove a registered fixture (callers register per-run unique keys;
     * without this, a long bench-sweep JVM would retain every run's
     * fixture closures forever — r15 ADVICE). */
   def unregister(key: String): Unit = { registry.remove(key); () }
-  def resolve(key: Option[String]): Ingestor.EntrySource = key match {
+  def resolve(key: Option[String]): EntrySource = key match {
     case Some(k) => Option(registry.get(k)).getOrElse(
       throw new IllegalStateException(s"no registered ct entry source '$k'"))
     case None => new CtHttpSource()

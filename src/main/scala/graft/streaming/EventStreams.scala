@@ -8,10 +8,11 @@ import org.apache.spark.sql.types._
 
 /** Structured Streaming operators over an event stream (ts, key, payload) —
   * the unbounded view of the engine's data (SURVEY §2.10). The reference's
-  * streaming surface is a poll loop (ST4, ported in ct.StreamTail); these
-  * extend it with the windowed/stateful operations a real deployment of the
-  * same data model needs, all on the micro-batch engine with checkpointed
-  * exactly-once file sources.
+  * streaming surface is a poll loop (ST4, ported as ct.Server's /stream
+  * over CtQueries.streamTailAfter); these extend it with the
+  * windowed/stateful operations a real deployment of the same data model
+  * needs, all on the micro-batch engine with checkpointed exactly-once file
+  * sources.
   *
   * At scale: windowed aggregation state is partitioned by (window, key)
   * across executors; the watermark bounds state size (late rows beyond it

@@ -2,13 +2,11 @@ package graft.ct
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import java.nio.file.Files
 import java.sql.Timestamp
-import java.time.Instant
 
 /** Reference-parity smoke over the FULL dataflow of the reference
-  * deployment in one spec: log-list admission → micro-batch ingest of
-  * raw Merkle leaves → parquet store → HTTP API — then replays the
+  * deployment in one spec: log-list admission → StreamIngest of raw
+  * Merkle leaves → parquet store → HTTP API — then replays the
   * README's four canonical queries (reference README.md:162-197) over
   * HTTP and pins the reference's JSON shapes: list-of-lists for the row
   * endpoints (api/app.py:106,117,129 jsonify result_rows), dict for
@@ -37,17 +35,14 @@ class CanonicalE2eSpec extends graft.SparkSpec
       |]}]}""".stripMargin
 
   private lazy val storeDir = {
-    val store = Files.createTempDirectory("canonical-store").toString
-    val logs = LogList.parse(logListJson, Instant.parse("2024-01-15T00:00:00Z"))
-    val offsets = new Ingestor.FileOffsets(Files.createTempDirectory("off").toString)
-    val source = new Ingestor.EntrySource {
+    val src = new source.EntrySource {
       def treeSize(log: LogList.CtLog): Long = 3L
       def fetchEntries(log: LogList.CtLog, start: Long, end: Long): Seq[RawEntry] =
         (start to end).map(i => RawEntry(log.name, i, Fixtures.leafB64()))
     }
-    val n = Ingestor.runOnce(spark, logs, source, store, offsets,
-      ts("2024-01-15 00:00:00"), batchSize = 2)
-    assert(n > 0, "ingest produced no rows")
+    val store = Fixtures.ingest(spark, logListJson, src,
+      ts("2024-01-15 00:00:00"), Map("batchsize" -> "2"))
+    assert(CertStore.read(spark, store).count() > 0, "ingest produced no rows")
     store
   }
 

@@ -3,7 +3,7 @@ package graft.ct
 import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.streaming.Trigger
-import graft.ct.source.CtMicroBatchSource
+import graft.ct.source.{CtMicroBatchSource, EntrySource}
 
 /** The DataSource-v2 micro-batch CT source end-to-end: admission from the
   * log list, range-partitioned fetches, checkpointed offsets, and
@@ -18,7 +18,7 @@ class CtDsv2Spec extends graft.SparkSpec {
       |{"description":"Retired Log","url":"https://l3.example","state":{"retired":{}}}
       |]}]}""".stripMargin
 
-  private class Fixture extends Ingestor.EntrySource {
+  private class Fixture extends EntrySource {
     @volatile var size = 3L
     val fetched = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Long)]()
     def treeSize(log: LogList.CtLog): Long = size
@@ -132,49 +132,33 @@ class CtDsv2Spec extends graft.SparkSpec {
     assert(CertStore.read(spark, store).count() == 12L)
   }
 
-  test("DSv2 ingest lands the same row set as the serial loop on a " +
-      "unique-cert backlog (the deployment-scale route's row identity, " +
-      "round-14 verdict ask #5)") {
+  test("DSv2 ingest lands the same row set as one IngestPipeline pass over " +
+      "the whole unique-cert backlog (transport, batching and epoch layout " +
+      "change no row)") {
     val logs2 =
       """{"operators":[{"logs":[
         |{"description":"Log A","url":"https://a.example/","state":{"usable":{}}},
         |{"description":"Log B","url":"https://b.example/","state":{"usable":{}}}
         |]}]}""".stripMargin
     // one DISTINCT cert per (log, index): no cross-entry dedup, so the
-    // two shapes must land IDENTICAL row sets
+    // route must land the one-pass rows IDENTICALLY
     def entryAt(logName: String, i: Long): RawEntry = {
       val tag = (if (logName == "Log A") 0L else 1L) * 1000L + i
       RawEntry(logName, i, Fixtures.leafB64(DemoFixture.uniqueDer(tag)))
     }
-    val src = new Ingestor.EntrySource {
+    val src = new EntrySource {
       def treeSize(log: LogList.CtLog): Long = 5L
       def fetchEntries(log: LogList.CtLog, start: Long, end: Long): Seq[RawEntry] =
         (start to end).map(entryAt(log.name, _))
     }
-    CtMicroBatchSource.register("fix-rowid", src)
     val t0 = Timestamp.valueOf("2024-01-15 00:00:00")
-    val dsStore = Files.createTempDirectory("dsv2-rowid-store").toString
-    val ckpt = Files.createTempDirectory("dsv2-rowid-ckpt").toString
-    val q = StreamIngest.start(spark,
-      Map("loglist" -> logs2, "now" -> "2024-01-15T00:00:00Z",
-        "sourcekey" -> "fix-rowid", "batchsize" -> "2"),
-      dsStore, ckpt, () => t0, Trigger.AvailableNow())
-    q.awaitTermination()
-    val serStore = Files.createTempDirectory("dsv2-rowid-ser").toString
-    val admitted = LogList.parse(logs2,
-      java.time.Instant.parse("2024-01-15T00:00:00Z"))
-    Ingestor.runOnce(spark, admitted, src, serStore,
-      new Ingestor.FileOffsets(
-        Files.createTempDirectory("dsv2-rowid-off").toString), t0,
-      batchSize = 2)
-    def rowsOf(store: String): Seq[Seq[Any]] =
-      CertStore.read(spark, store).select(CertDomain.columns.map(
-        org.apache.spark.sql.functions.col): _*)
-        .collect().map(_.toSeq.map {
-          case s: Seq[_] => s.mkString("|"); case x => x
-        }).toSeq.sortBy(_.mkString(","))
-    assert(rowsOf(dsStore) == rowsOf(serStore),
-      "the DSv2 route must land the serial loop's exact row set")
+    // batches of 2, at most 3 entries per log per trigger: several
+    // partitions per epoch and several epochs per log
+    val dsStore = Fixtures.ingest(spark, logs2, src, t0,
+      Map("batchsize" -> "2", "maxentriespertrigger" -> "3"))
+    val all = Seq("Log A", "Log B").flatMap(n => (0L until 5L).map(entryAt(n, _)))
+    assert(Fixtures.rowsOf(spark, dsStore) == Fixtures.onePass(spark, all, t0),
+      "the DSv2 route must land the one-pass row set exactly")
   }
 
   test("file:-scheme store and checkpoint roots: the full lifecycle " +

@@ -3,8 +3,10 @@ package graft.ct
 import java.nio.file.Files
 import java.sql.Timestamp
 import java.time.Instant
+import org.apache.spark.sql.streaming.StreamingQueryException
+import graft.ct.source.EntrySource
 
-/** End-to-end: log list admission → micro-batch ingest → store → queries
+/** End-to-end: log list admission → StreamIngest → store → queries
   * (SURVEY §5.2 "End-to-end"). Entries come from an injected fixture source
   * (zero-egress stand-in for get-sth/get-entries). */
 class IngestorEndToEndSpec extends graft.SparkSpec {
@@ -26,28 +28,38 @@ class IngestorEndToEndSpec extends graft.SparkSpec {
     assert(logs.head.url == "https://l1.example") // trailing slash stripped
   }
 
+  private val t0 = Timestamp.valueOf("2024-01-15 00:00:00")
+
+  /** One distinct cert per (log, index): no cross-entry dedup. */
+  private def entryAt(log: LogList.CtLog, i: Long): RawEntry = {
+    val tag = (if (log.name == "Usable Log") 0L else 1L) * 1000L + i
+    RawEntry(log.name, i, Fixtures.leafB64(DemoFixture.uniqueDer(tag)))
+  }
+
   test("micro-batch ingest to store, offset resume, frozen-log boundedness") {
-    val logs = LogList.parse(logListJson, Instant.parse("2024-01-15T00:00:00Z"))
     val store = Files.createTempDirectory("store").toString
-    val offsets = new Ingestor.FileOffsets(Files.createTempDirectory("off").toString)
+    val ckpt = Files.createTempDirectory("ckpt").toString
 
     // fixture source: every log has 3 entries, each the same fixture cert
-    val source = new Ingestor.EntrySource {
-      var fetches = 0
+    val source = new EntrySource {
+      val fetches = new java.util.concurrent.atomic.AtomicInteger(0)
       def treeSize(log: LogList.CtLog): Long = 3L
       def fetchEntries(log: LogList.CtLog, start: Long, end: Long): Seq[RawEntry] = {
-        fetches += 1
+        fetches.incrementAndGet()
         (start to end).map(i => RawEntry(log.name, i, Fixtures.leafB64()))
       }
     }
+    def run(): Unit = Fixtures.ingest(spark, logListJson, source, t0,
+      Map("batchsize" -> "2"), store, ckpt)
 
-    val t0 = Timestamp.valueOf("2024-01-15 00:00:00")
-    val n = Ingestor.runOnce(spark, logs, source, store, offsets, t0, batchSize = 2)
+    run()
+    val n = CertStore.read(spark, store).count()
     assert(n > 0)
     // offsets advanced to tree size → second run is a no-op (bounded, S8)
-    val before = source.fetches
-    assert(Ingestor.runOnce(spark, logs, source, store, offsets, t0, batchSize = 2) == 0L)
-    assert(source.fetches == before)
+    val before = source.fetches.get()
+    run()
+    assert(CertStore.read(spark, store).count() == n)
+    assert(source.fetches.get() == before)
 
     // stored rows are queryable through the endpoint shapes
     val table = CertStore.read(spark, store)
@@ -56,134 +68,65 @@ class IngestorEndToEndSpec extends graft.SparkSpec {
     assert(CertStore.sizeBytes(spark, store) > 0)
   }
 
-  test("runOnceParallel lands the same rows as the serial loop, resumes " +
-      "offsets, and replays idempotently through the dedupe merge") {
+  test("a short get-entries return (RFC 6962 truncation) skips nothing: " +
+      "the reader re-requests the rest of its range") {
     val logs = LogList.parse(logListJson, Instant.parse("2024-01-15T00:00:00Z"))
-    // unique cert per (log, index): no cross-entry dedup, so the two
-    // loop shapes must land IDENTICAL row sets, not merely
-    // dedupe-equivalent ones
-    def src() = new Ingestor.EntrySource {
-      def treeSize(log: LogList.CtLog): Long = 5L
-      def fetchEntries(log: LogList.CtLog, start: Long, end: Long): Seq[RawEntry] =
-        (start to end).map { i =>
-          val tag = (if (log.name == "Usable Log") 0L else 1L) * 1000L + i
-          RawEntry(log.name, i, Fixtures.leafB64(DemoFixture.uniqueDer(tag)))
-        }
-    }
-    val t0 = Timestamp.valueOf("2024-01-15 00:00:00")
-    def rowsOf(store: String): Seq[Seq[Any]] =
-      CertStore.read(spark, store).select(CertDomain.columns.map(
-        org.apache.spark.sql.functions.col): _*)
-        .collect().map(_.toSeq.map {
-          case s: Seq[_] => s.mkString("|"); case x => x
-        }).toSeq.sortBy(_.mkString(","))
-    val serialStore = Files.createTempDirectory("store-ser").toString
-    val serialOff = new Ingestor.FileOffsets(
-      Files.createTempDirectory("off-ser").toString)
-    val nSerial = Ingestor.runOnce(spark, logs, src(), serialStore,
-      serialOff, t0, batchSize = 2)
-    val parStore = Files.createTempDirectory("store-par").toString
-    val parOffDir = Files.createTempDirectory("off-par").toString
-    val parOff = new Ingestor.FileOffsets(parOffDir)
-    val nPar = Ingestor.runOnceParallel(spark, logs, src(), parStore,
-      parOff, t0, batchSize = 2, fetchThreads = 4,
-      maxBatchesPerLogPerRound = 2)
-    assert(nPar == nSerial, s"parallel appended $nPar vs serial $nSerial")
-    assert(rowsOf(parStore) == rowsOf(serialStore),
-      "the two loop shapes must land identical row sets")
-    // offsets advanced to tree size → second run is a bounded no-op (S8)
-    assert(Ingestor.runOnceParallel(spark, logs, src(), parStore, parOff,
-      t0, batchSize = 2) == 0L)
-    // at-least-once replay: rewind offsets, re-ingest, dedupe-merge —
-    // the FINAL (compacted) table equals the never-replayed one's
-    logs.foreach(lg => parOff.write(lg.name.replace(' ', '_'), 0L))
-    assert(Ingestor.runOnceParallel(spark, logs, src(), parStore, parOff,
-      t0, batchSize = 2) == nPar)
-    val parFinal = Files.createTempDirectory("store-par-final").toString
-    val serFinal = Files.createTempDirectory("store-ser-final").toString
-    CertStore.compact(spark, parStore, parFinal, dedupe = true)
-    CertStore.compact(spark, serialStore, serFinal, dedupe = true)
-    assert(rowsOf(parFinal) == rowsOf(serFinal),
-      "replay + dedupe merge must be idempotent")
-    // runLoop(parallel = true) drains through the batched shape and
-    // terminates on the frozen/caught-up logs like the serial loop
-    val loopStore = Files.createTempDirectory("store-loop").toString
-    val loopOff = new Ingestor.FileOffsets(
-      Files.createTempDirectory("off-loop").toString)
-    val nLoop = Ingestor.runLoop(spark, logs, src(), loopStore, loopOff,
-      () => t0, rounds = 2, pollMs = 1L, batchSize = 2, parallel = true)
-    assert(nLoop == nSerial, s"loop appended $nLoop vs $nSerial")
-    assert(rowsOf(loopStore) == rowsOf(serialStore))
-  }
-
-  test("runOnceParallel advances offsets by entries ACTUALLY returned: a " +
-      "short get-entries return (RFC 6962 truncation) skips nothing — the " +
-      "next fetch resumes at the true high-watermark") {
-    val logs = LogList.parse(logListJson, Instant.parse("2024-01-15T00:00:00Z"))
-    val t0 = Timestamp.valueOf("2024-01-15 00:00:00")
-    def entryAt(log: LogList.CtLog, i: Long): RawEntry = {
-      val tag = (if (log.name == "Usable Log") 0L else 1L) * 1000L + i
-      RawEntry(log.name, i, Fixtures.leafB64(DemoFixture.uniqueDer(tag)))
-    }
-    // well-behaved source → the reference row set
-    def fullSrc() = new Ingestor.EntrySource {
-      def treeSize(log: LogList.CtLog): Long = 5L
-      def fetchEntries(log: LogList.CtLog, start: Long, end: Long): Seq[RawEntry] =
-        (start to end).map(entryAt(log, _))
-    }
     // truncating source: EVERY fetch returns only the first entry of the
-    // requested range — the old `idx = end + 1` advance would skip the
-    // tail of every batch forever (2 of 5 entries per log surviving)
+    // requested range — advancing to the range end on a short return
+    // would skip the tail of every range for good
     val shortFetches = new java.util.concurrent.atomic.AtomicLong(0L)
-    def shortSrc() = new Ingestor.EntrySource {
+    val shortSrc = new EntrySource {
       def treeSize(log: LogList.CtLog): Long = 5L
       def fetchEntries(log: LogList.CtLog, start: Long, end: Long): Seq[RawEntry] = {
         shortFetches.incrementAndGet()
         Seq(entryAt(log, start))
       }
     }
-    def rowsOf(store: String): Seq[Seq[Any]] =
-      CertStore.read(spark, store).select(CertDomain.columns.map(
-        org.apache.spark.sql.functions.col): _*)
-        .collect().map(_.toSeq.map {
-          case s: Seq[_] => s.mkString("|"); case x => x
-        }).toSeq.sortBy(_.mkString(","))
-    val refStore = Files.createTempDirectory("store-ref").toString
-    val nRef = Ingestor.runOnceParallel(spark, logs, fullSrc(), refStore,
-      new Ingestor.FileOffsets(Files.createTempDirectory("off-ref").toString),
-      t0, batchSize = 2)
-    val store = Files.createTempDirectory("store-short").toString
-    val off = new Ingestor.FileOffsets(
-      Files.createTempDirectory("off-short").toString)
-    val n = Ingestor.runOnceParallel(spark, logs, shortSrc(), store, off,
-      t0, batchSize = 2)
-    assert(n == nRef, s"short returns lost rows: $n vs $nRef")
-    assert(rowsOf(store) == rowsOf(refStore),
+    val ckpt = Files.createTempDirectory("ckpt-short").toString
+    val store = Fixtures.ingest(spark, logListJson, shortSrc, t0,
+      Map("batchsize" -> "2"), checkpoint = ckpt)
+    val all = logs.flatMap(lg => (0L until 5L).map(entryAt(lg, _)))
+    assert(Fixtures.rowsOf(spark, store) == Fixtures.onePass(spark, all, t0),
       "every truncated tail must be re-fetched, none skipped")
-    logs.foreach { lg =>
-      assert(off.read(lg.name.replace(' ', '_')) == 5L,
-        s"${lg.name} offset must reach tree size")
+    assert(shortFetches.get() == all.length, "one fetch per entry")
+    // the offsets reached tree size: the drained state is a bounded no-op
+    Fixtures.ingest(spark, logListJson, shortSrc, t0, Map("batchsize" -> "2"),
+      store, ckpt)
+    assert(shortFetches.get() == all.length)
+  }
+
+  test("a get-entries return that is empty or longer than requested fails the task") {
+    def failing(overrun: Boolean) = new EntrySource {
+      def treeSize(log: LogList.CtLog): Long = 5L
+      def fetchEntries(log: LogList.CtLog, start: Long, end: Long): Seq[RawEntry] =
+        if (overrun) (start to end + 1).map(entryAt(log, _)) else Seq.empty
     }
-    // and the drained state is a bounded no-op
-    assert(Ingestor.runOnceParallel(spark, logs, shortSrc(), store, off,
-      t0, batchSize = 2) == 0L)
+    for ((overrun, got) <- Seq(true -> 3, false -> 0)) {
+      val e = intercept[StreamingQueryException] {
+        Fixtures.ingest(spark, logListJson, failing(overrun), t0, Map("batchsize" -> "2"))
+      }
+      val messages = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(x => String.valueOf(x.getMessage)).toSeq
+      assert(messages.exists(_.contains(s"returned $got entries for range [")),
+        messages.mkString("\n"))
+    }
   }
 
   test("ingest evaluates the X.509 parse exactly once per entry") {
-    val logs = LogList.parse(logListJson, Instant.parse("2024-01-15T00:00:00Z"))
-    val store = Files.createTempDirectory("store-once").toString
-    val offsets = new Ingestor.FileOffsets(Files.createTempDirectory("off-once").toString)
-    val source = new Ingestor.EntrySource {
+    // 3 entries per log, the last a precert leaf the parser rejects: a
+    // rejected leaf is parsed once too
+    val source = new EntrySource {
       def treeSize(log: LogList.CtLog): Long = 3L
       def fetchEntries(log: LogList.CtLog, start: Long, end: Long): Seq[RawEntry] =
-        (start to end).map(i => RawEntry(log.name, i, Fixtures.leafB64()))
+        (start to end).map(i => RawEntry(log.name, i,
+          Fixtures.leafB64(leafType = if (i == 2L) 1 else 0)))
     }
     CertParser.parseInvocations.set(0)
-    val n = Ingestor.runOnce(spark, logs, source, store, offsets,
-      Timestamp.valueOf("2024-01-15 00:00:00"), batchSize = 2)
-    assert(n > 0)
-    // 2 admitted logs × 3 entries: a count() action after the write would
-    // double this to 12 by re-running the whole parse pipeline.
+    val store = Fixtures.ingest(spark, logListJson, source, t0, Map("batchsize" -> "2"))
+    assert(CertStore.read(spark, store).count() > 0)
+    // 2 admitted logs × 3 entries: a filter on the parsed cert, pushed
+    // below the explode's projection, raises this to 14 (each accepted
+    // leaf parsed three times)
     assert(CertParser.parseInvocations.get() == 6L,
       s"expected 6 parse calls, got ${CertParser.parseInvocations.get()}")
   }

@@ -188,4 +188,20 @@ class ServerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       assert(allSeen, s"stream stalled before delivering all rows; got:\n$sb")
     } finally srv.stop()
   }
+
+  test("stop() leaves no non-daemon thread the server started alive") {
+    import scala.jdk.CollectionConverters._
+    def nonDaemon(): Set[Thread] = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && !t.isDaemon).toSet
+    assert(getWith(server, Nil) == 200) // the shared server and client start first
+    val before = nonDaemon()
+    val srv = new Server(spark, () => CertStore.read(spark, storeDir), storeDir,
+      port = 0).start()
+    (1 to 8).foreach(_ => assert(getWith(srv, Nil) == 200))
+    srv.stop()
+    def leaked = nonDaemon() -- before
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (leaked.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(leaked.isEmpty, s"threads left running: ${leaked.map(_.getName)}")
+  }
 }
