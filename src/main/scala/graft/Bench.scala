@@ -533,11 +533,10 @@ object Bench {
     // The embedding store's maintenance path (round 13): recluster must
     // cost ∝ drift, not ∝ store size (measured curve: SCALE.md round-13
     // fourth wave) — timed against a corpus-only store built UNTIMED in
-    // scratch with the id sidecar on (the production serving shape),
-    // fragmented by five disjoint-id appends of the 10% increment so
-    // every touched cell and sidecar idp dir clears the default file
-    // bound. The timed call is the whole maintenance op: parallel drift
-    // listing, one batched pruned rewrite each for cells and sidecar,
+    // scratch, fragmented by five disjoint-id appends of the 10%
+    // increment so every touched cell clears the default file bound.
+    // The timed call is the whole maintenance op: parallel drift
+    // listing, one batched pruned rewrite of the drifted cells,
     // archive-then-swap. Mutating, so timed once like components_incr.
     val embRecluster =
       if (only.forall(o => o.contains("artifact") || o.contains("artifact_emb") ||
@@ -548,16 +547,16 @@ object Bench {
         val scratch = graft.queries.PipelineQueries.componentsArtifactPath(sfDir) +
           "_embbase"
         graft.operators.Dedup.rmdir(new java.io.File(scratch))
-        graft.operators.EmbeddingStore.write(corpus, scratch, idIndex = true)
+        graft.operators.EmbeddingStore.write(corpus, scratch)
         for (k <- 1 to 5)
           graft.operators.EmbeddingStore.append(
             increment.withColumn("vec_id", col("vec_id") + lit(k * 10000000L)),
-            scratch, idIndex = true)
+            scratch)
         isolate()
         val t0 = System.nanoTime()
         val cells = graft.operators.EmbeddingStore.recluster(spark, scratch)
         val dt = (System.nanoTime() - t0) / 1e9
-        require(cells.cells.nonEmpty, "emb_recluster bench fixture must drift ≥1 cell")
+        require(cells.nonEmpty, "emb_recluster bench fixture must drift ≥1 cell")
         graft.operators.Dedup.rmdir(new java.io.File(scratch))
         isolate()
         Seq("artifact:emb_recluster" -> dt)

@@ -99,14 +99,6 @@ object ScaleProbe {
     P("dedup_semantic_scaledk", 100, (s, d, n) =>
       operators.Dedup.semanticNearDups(Tables.embeddings(s, d),
         k = 8 * n, iters = 2, threshold = 0.45)),
-    // same rule, SCALE path: centroids trained on the 1/max(1,n/10)
-    // hash-sample (≥ ~25 vectors/cluster at every scale here) and
-    // assignment via the two-level O(n·√k) route — the configuration
-    // whose curve should stay ~linear where the flat twin turns n²
-    P("dedup_semantic_hier", 100, (s, d, n) =>
-      operators.Dedup.semanticNearDups(Tables.embeddings(s, d),
-        k = 8 * n, iters = 2, threshold = 0.45,
-        hierProbe = Some(1), trainDenom = Some(math.max(1, n / 10)))),
     P("emb_knn", 100, declared("emb_knn")),
     P("graph_pagerank", 100, declared("graph_pagerank")),
     P("dedup_clusters", 100, declared("dedup_clusters")),
@@ -482,7 +474,7 @@ object ScaleProbe {
     // candidate count, the default's second verify join shuffles rows
     // carrying a full embedding per candidate (~150M × ~600 B ≈ 90 GB at
     // ×100) — measured to exhaust first an 8 GB heap, then 79 GB of
-    // spill disk. That wall is the reason inlineVerify exists.
+    // spill disk.
     P("dedup_embedding_lsh_scaledp", 10, (s, d, n) =>
       operators.Dedup.embeddingNearDupsLsh(Tables.embeddings(s, d),
         threshold = 0.45, nPlanes = ceilLog2(40 * n), nBands = 32)),
@@ -492,25 +484,17 @@ object ScaleProbe {
     // increment re-ids replica-0's first 500 docs (disjoint doc_ids,
     // shingles shared with exactly their origin replica), so true-pair
     // volume is increment-bounded at every scale. What should grow is
-    // nothing; what the default shape actually pays is the corpus-index
-    // SHUFFLE (every rare corpus row moves to the sh-hash join), the
-    // twin probes the broadcast semi-join pushdown that holds the
-    // shuffle at candidate volume
+    // nothing; what this unpruned call pays is the corpus-index
+    // SHUFFLE (every rare corpus row moves to the sh-hash join) — the
+    // append below semi-joins the corpus side at the scan instead
     P("artifact_incr_pairs", 100, (s, d, n) =>
       operators.Dedup.incrementalNgramPairs(
         incrementOf(s, d),
         s.read.parquet(artifactOf(s, d) + "/shingles"),
         s.read.parquet(artifactOf(s, d) + "/sizes"),
         s.read.parquet(artifactOf(s, d) + "/hot"), k = 3, threshold = 0.5)),
-    P("artifact_incr_pairs_semi", 100, (s, d, n) =>
-      operators.Dedup.incrementalNgramPairs(
-        incrementOf(s, d),
-        s.read.parquet(artifactOf(s, d) + "/shingles"),
-        s.read.parquet(artifactOf(s, d) + "/sizes"),
-        s.read.parquet(artifactOf(s, d) + "/hot"), k = 3, threshold = 0.5,
-        broadcastIncrementShingles = true)),
     // the FULL serving append at ×n — everything an hourly append pays
-    // beyond the pair computation the twins above isolate: torn-append
+    // beyond the pair computation the probe above isolates: torn-append
     // validation (idx7: two parallel listing manifests — previously an
     // O(index-files) footer pass + corpus-row-linear sizes SUM, the
     // round-14 deferred term), the adaptive-pushdown pair
@@ -627,34 +611,18 @@ object ScaleProbe {
     // corpus-size-INDEPENDENT (rows read ≈ occupancy·(p+1) under
     // Hamming≤1 multi-probe — grows with log n only) — the property that
     // makes the layout the serving shape at 10⁹ vectors
-    P("emb_store_probe_scaledp", 100, (s, d, n) => {
-      val p = ceilLog2(16 * n)
-      val path = new java.io.File(storesDirFor(d), s"emb_store_p$p").getAbsolutePath
-      val marker = new java.io.File(path, s"_STORE_COMPLETE_$Version")
-      if (!marker.exists()) {
-        operators.EmbeddingStore.write(Tables.embeddings(s, d), path, nPlanes = p)
-        java.nio.file.Files.write(marker.toPath, Array.empty[Byte])
-      }
-      // dev knobs for attributing probe cost: FLIPS=0 reads 1 cell vs
-      // p+1 (latency barely moving between them = discovery-bound, the
-      // measurement that motivated directRead); DIRECT=0 re-times the
-      // full-discovery shape
-      operators.EmbeddingStore.knnProbeVector(s, path,
-        Array.tabulate(64)(i => math.sin(i + 1.0)), k = 10, nPlanes = p,
-        maxFlips = sys.env.getOrElse("SPARK_GRAFT_STORE_FLIPS", "1").toInt,
-        directRead = sys.env.getOrElse("SPARK_GRAFT_STORE_DIRECT", "1") == "1")
-    }),
-    // the store's id-probe twin pair, sharing one sidecar-enabled store
-    // per scale: the default shape pays a store-wide scan for the
-    // id → cell lookup (vec_id cannot prune cell partitions) PLUS full
-    // discovery; the direct shape resolves the id through one 16-byte-row
-    // sidecar partition and opens only the probed cells
+    P("emb_store_probe_scaledp", 100, (s, d, n) =>
+      // dev knob for attributing probe cost: FLIPS=0 reads 1 cell vs
+      // p+1 (latency barely moving between them = discovery-bound)
+      operators.EmbeddingStore.knnProbeVector(s, embStoreOf(s, d, n),
+        Array.tabulate(64)(i => math.sin(i + 1.0)), k = 10, nPlanes = ceilLog2(16 * n),
+        maxFlips = sys.env.getOrElse("SPARK_GRAFT_STORE_FLIPS", "1").toInt)),
+    // the store's id probe on the same store: a store-wide scan for the
+    // id → cell lookup (vec_id cannot prune cell partitions) plus full
+    // discovery
     P("emb_store_idprobe", 100, (s, d, n) =>
-      operators.EmbeddingStore.knnProbe(s, idStoreOf(s, d, n), queryId = 0L,
+      operators.EmbeddingStore.knnProbe(s, embStoreOf(s, d, n), queryId = 0L,
         k = 10, nPlanes = ceilLog2(16 * n), maxFlips = 1)),
-    P("emb_store_idprobe_direct", 100, (s, d, n) =>
-      operators.EmbeddingStore.knnProbe(s, idStoreOf(s, d, n), queryId = 0L,
-        k = 10, nPlanes = ceilLog2(16 * n), maxFlips = 1, directRead = true)),
     // the embedding store's MAINTENANCE path at ×n — the last persisted
     // store whose compaction analog had no measured curve (components
     // artifact: artifact_compact_full; band index: band_index_append's
@@ -698,23 +666,13 @@ object ScaleProbe {
       for (b <- 0 until 5) {
         val inc = baseInc.withColumn("vec_id",
           col("vec_id") + 400000000L + seq * 10000L + b * 1000L)
-        operators.EmbeddingStore.append(inc, path, nPlanes = p, idIndex = true)
+        operators.EmbeddingStore.append(inc, path, nPlanes = p)
       }
       phase("appends")
       val done = operators.EmbeddingStore.recluster(s, path)
       phase("recluster")
-      s.range(1).select(lit(done.cells.size).as("n_reclustered_cells"),
-        lit(done.idParts.size).as("n_sidecar_parts"))
-    }),
-    // same scale rule + inline verify: cosine computed inside the band
-    // join, so wide rows ride only the linear n·B band sort and every
-    // shuffled candidate is a narrow (i, j, cos_sim). LAST on purpose:
-    // still the heaviest entry, and an executor-thread OOM in local
-    // mode kills the whole JVM — running it last loses nothing else.
-    P("dedup_embedding_lsh_inline", 100, (s, d, n) =>
-      operators.Dedup.embeddingNearDupsLsh(Tables.embeddings(s, d),
-        threshold = 0.45, nPlanes = ceilLog2(40 * n), nBands = 32,
-        inlineVerify = true)))
+      s.range(1).select(lit(done.size).as("n_reclustered_cells"))
+    }))
 
   /** The ×n corpus's components artifact (cold-built on first touch via
     * the same stamped buildOnce the declared queries use). */
@@ -1072,7 +1030,7 @@ object ScaleProbe {
   }
 
   /** A PRIVATE embedding store for the recluster probe — its own store
-    * (never the probe-shared `emb_store_p*`/`emb_store_idx_p*`, whose
+    * (never the probe-shared `emb_store_p*`, whose
     * immutability the serving probes rely on), rebuilt fresh once per
     * JVM run so a previous run's chained appends (ids colliding with
     * this run's restarted sequence) never leak in — the same contract
@@ -1085,24 +1043,19 @@ object ScaleProbe {
       s"emb_store_recluster_p$p").getAbsolutePath
     if (reclusterStoreReady.add(out)) {
       graft.operators.Dedup.rmdir(new java.io.File(out))
-      // sidecar ON — the production serving shape (and the bench
-      // line's): appends maintain it, recluster compacts it, so the
-      // measured curve carries both stores' maintenance terms
-      operators.EmbeddingStore.write(Tables.embeddings(s, d), out,
-        nPlanes = p, idIndex = true)
+      operators.EmbeddingStore.write(Tables.embeddings(s, d), out, nPlanes = p)
     }
     out
   }
 
-  /** The ×n corpus's sidecar-enabled embedding store under the scale
-    * rule p = log2(16n), built once per scale (marker-guarded). */
-  private def idStoreOf(s: SparkSession, d: String, n: Int): String = {
+  /** The ×n corpus's embedding store under the scale rule
+    * p = log2(16n), built once per scale (marker-guarded). */
+  private def embStoreOf(s: SparkSession, d: String, n: Int): String = {
     val p = ceilLog2(16 * n)
-    val path = new java.io.File(storesDirFor(d), s"emb_store_idx_p$p").getAbsolutePath
+    val path = new java.io.File(storesDirFor(d), s"emb_store_p$p").getAbsolutePath
     val marker = new java.io.File(path, s"_STORE_COMPLETE_$Version")
     if (!marker.exists()) {
-      operators.EmbeddingStore.write(Tables.embeddings(s, d), path,
-        nPlanes = p, idIndex = true)
+      operators.EmbeddingStore.write(Tables.embeddings(s, d), path, nPlanes = p)
       java.nio.file.Files.write(marker.toPath, Array.empty[Byte])
       ()
     }

@@ -14,19 +14,14 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     RelationalQueries.q1Agg(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. The
-    * knob-sweep-only entries (graft.Knobs) appear ONLY when
-    * SPARK_GRAFT_KNOBS=1 is set — the driver never sets it, so the
-    * declared surface it sees stays frozen. */
+  /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     RelationalQueries.queries ++ CtShapeQueries.queries ++
-      PipelineQueries.queries ++ StreamingQueries.queries ++
-      (if (Knobs.forced) PipelineQueries.knobQueries else Map.empty)
+      PipelineQueries.queries ++ StreamingQueries.queries
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     RelationalQueries.oracleSql ++ CtShapeQueries.oracleSql ++
-      PipelineQueries.oracleSql ++ StreamingQueries.oracleSql ++
-      (if (Knobs.forced) PipelineQueries.knobOracleSql else Map.empty)
+      PipelineQueries.oracleSql ++ StreamingQueries.oracleSql
 }

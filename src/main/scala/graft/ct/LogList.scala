@@ -1,16 +1,14 @@
 package graft.ct
 
 import java.time.Instant
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** CT log discovery: admission filtering of the log-list JSON
   * (reference discover_logs, /root/reference/ingestion/ct_ingestor.py:63-97).
   *
   * The HTTP fetch + 24 h disk cache (S1) is deployment plumbing; this module
   * implements the *semantics* — which logs are admitted — over an
-  * already-obtained JSON document, driver-side via Spark's own JSON reader
-  * (zero-egress builds test it with fixture JSON).
+  * already-obtained JSON document, driver-side with Jackson (zero-egress
+  * builds test it with fixture JSON).
   *
   * Admission (S2, :77-97): drop `retired`; keep `usable`/`frozen`; keep only
   * logs whose temporal_interval contains `now` (parameterized, not wall
@@ -50,11 +48,5 @@ object LogList {
       }
     }
     out.toSeq
-  }
-
-  /** The same admission as a DataFrame for introspection/joins. */
-  def toDf(spark: SparkSession, logs: Seq[CtLog]): DataFrame = {
-    import spark.implicits._
-    logs.toDF()
   }
 }

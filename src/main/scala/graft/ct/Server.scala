@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.sql.{Date, Timestamp}
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
+import scala.util.control.NonFatal
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
@@ -232,7 +233,21 @@ class Server(spark: SparkSession, table: () => DataFrame, storePath: String,
               // full batch ⇒ backlog: drain immediately, only idle-sleep when caught up
               if (rows.length < streamBatch) Thread.sleep(streamPollMs)
             }
-          } catch { case _: Throwable => /* client closed */ }
+          } catch {
+            // the client went away, or stop() ended the feed: a normal close
+            case _: java.io.IOException | _: InterruptedException => ()
+            case _ if !streaming => ()
+            // a failed poll is reported to the subscriber, not hidden as
+            // a close: one `event: error` frame carrying the message
+            case NonFatal(e) =>
+              System.err.println(s"[server] /stream poll failed: $e")
+              try {
+                val out = ex.getResponseBody
+                out.write(("event: error\ndata: " +
+                  jval(Map("error" -> String.valueOf(e.getMessage))) + "\n\n").getBytes(UTF_8))
+                out.flush()
+              } catch { case _: java.io.IOException => () }
+          }
           finally { activeStreams.decrementAndGet(); ex.close() }
         }
       case _ => send(ex, 404, jval(Map("error" -> "not found")))

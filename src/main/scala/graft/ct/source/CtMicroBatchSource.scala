@@ -166,8 +166,12 @@ class CtMicroBatchStream(options: CaseInsensitiveStringMap)
     "latestOffset(Offset, ReadLimit) should be called instead (SupportsAdmissionControl)")
 
   /** True head positions regardless of the cap — lets the engine report
-    * backlog (latestOffset vs endOffset) in progress events. */
-  override def reportLatestOffset(): Offset = CtOffset(availableOffsets())
+    * backlog (latestOffset vs endOffset) in progress events. The engine
+    * calls this right after `latestOffset(start, limit)`, so it returns
+    * the heads that call used (the pinned ones under AvailableNow)
+    * instead of asking every log's get-sth a second time. */
+  override def reportLatestOffset(): Offset = lastHeads.map(CtOffset(_)).orNull
+  @volatile private var lastHeads: Option[Map[String, Long]] = None
 
   /** SupportsTriggerAvailableNow: without it, Trigger.AvailableNow falls
     * back to Trigger.Once semantics — ONE batch to the current head with
@@ -183,6 +187,7 @@ class CtMicroBatchStream(options: CaseInsensitiveStringMap)
     val from = start.asInstanceOf[CtOffset].next
     val capPerLog = maxRowsOf(limit)
     val heads = availableNowEnd.getOrElse(availableOffsets())
+    lastHeads = Some(heads)
     CtOffset(logs.map { lg =>
       val lo = from.getOrElse(lg.name, 0L)
       // a shrinking tree head never rewinds the offset; an unreachable one holds it

@@ -12,8 +12,7 @@ import org.apache.spark.sql.functions._
   * whole corpus text per lookup. It is the MergeTree primary-key
   * point-read analog (reference clickhouse/init.sql:18 — the sort key
   * that serves `WHERE domain = ...` without a table scan) applied to
-  * (doc_id, text), in the same layout discipline as the embedding
-  * store's id sidecar: rows Hive-partitioned by `idp = pmod(doc_id,
+  * (doc_id, text): rows Hive-partitioned by `idp = pmod(doc_id,
   * n_parts)` and doc_id-sorted within each file, so a lookup opens the
   * touched idp DIRECTORIES only and row-group min/max on doc_id skips
   * inside them.

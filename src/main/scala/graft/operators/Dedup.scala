@@ -1081,7 +1081,6 @@ object Dedup {
   def incrementalNgramPairs(increment: DataFrame, corpusShingles0: DataFrame,
       corpusSizes: DataFrame, hotShingles: DataFrame, k: Int = 3,
       threshold: Double = 0.5,
-      broadcastIncrementShingles: Boolean = false,
       pruneVerifyByCandidates: Boolean = false,
       sorted: Boolean = true): DataFrame = {
     // normalize to the (doc_id, sh) grain: the persisted index is
@@ -1094,24 +1093,10 @@ object Dedup {
     val incSh = shingleRows(increment, k)
     val incSizes = incSh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val incRare = incSh.join(broadcast(hotShingles), Seq("sh"), "left_anti")
-    // Opt-in serving-case pushdown: the xc equi-join below keeps only
-    // corpus rows whose shingle ALSO occurs in the increment, but the
-    // default plan discovers that at the join — AFTER shuffling the
-    // corpus index's every rare row. When the increment is small (the
-    // hourly-append case: increment ≪ corpus), its distinct rare
-    // shingle set is broadcastable, and semi-joining the corpus side
-    // down at the SCAN means the corpus-wide shuffle carries only
-    // matching rows (≈ candidate volume). Default-off because the knob
-    // inverts at corpus-scale increments, where the broadcast itself
-    // would be the wall — same contract as every scale knob here; the
-    // artifact append (PipelineQueries.appendComponentsArtifact) picks
-    // it ADAPTIVELY from the increment's measured shingle-row count.
-    // Output is identical either way (spec-pinned): the semi-join
-    // removes only rows the equi-join was about to drop.
-    val corpusRare0 = corpusShingles.join(broadcast(hotShingles), Seq("sh"), "left_anti")
-    val corpusRare = if (broadcastIncrementShingles)
-      corpusRare0.join(broadcast(incRare.select(col("sh")).distinct()), Seq("sh"), "left_semi")
-    else corpusRare0
+    // the artifact append passes the corpus side already semi-joined to
+    // the increment's rare shingles at the scan, so its corpus shuffle
+    // carries only rows that can match
+    val corpusRare = corpusShingles.join(broadcast(hotShingles), Seq("sh"), "left_anti")
     // increment×corpus candidates: one hash join per shared rare shingle;
     // least/greatest normalizes to the cold build's i < j orientation
     val xc = incRare.as("a").join(corpusRare.as("b"), col("a.sh") === col("b.sh"))
@@ -1721,39 +1706,8 @@ object Dedup {
     * operators. */
   def semanticNearDups(embeddings: DataFrame, k: Int = 8, iters: Int = 2,
       threshold: Double = 0.45,
-      maxClusterRows: Option[Long] = None,
-      hierProbe: Option[Int] = None,
-      trainDenom: Option[Int] = None): DataFrame = {
-    // Opt-in scale paths, both default-off so the declared query's plan
-    // is untouched. Under the k ∝ n sizing rule the flat path is O(n²)
-    // twice over — Lloyd TRAINING is O(n·k·iters) and the final
-    // ASSIGNMENT O(n·k) — and the two knobs remove one each:
-    //  - trainDenom = Some(d): train centroids on the deterministic
-    //    1/d hash-sample of vectors (standard k-means practice — the
-    //    codebook needs a representative sample, not the corpus), then
-    //    assign ALL vectors under those centroids. Training drops to
-    //    O((n/d)·k·iters).
-    //  - hierProbe = Some(p): assign via the two-level
-    //    [[KMeans.assignCellsHier]] route (kSuper = ⌈√k⌉, nProbe = p) —
-    //    assignment drops to O(n·√k); exact for p ≥ kSuper, standard
-    //    IVF residency approximation below that (acceptable for
-    //    SemDeDup blocking by the same argument as the cluster split
-    //    documented above).
-    val asg = (hierProbe, trainDenom) match {
-      case (None, None) =>
-        KMeans.lloyd(embeddings, k, iters).select(col("vec_id"), col("cluster"))
-      case (hp, td) =>
-        val trainSet = td.fold(embeddings) { d =>
-          require(d > 0, "trainDenom must be positive")
-          embeddings.filter(pmod(hash(col("vec_id")), lit(d)) === 0)
-        }
-        val cents = KMeans.centroidsAfter(trainSet, k, iters)
-        val cells = hp.fold(KMeans.assignCells(embeddings, cents)) { p =>
-          val kSuper = math.max(1, math.ceil(math.sqrt(k.toDouble)).toInt)
-          KMeans.assignCellsHier(embeddings, cents, kSuper, p)
-        }
-        cells.select(col("vec_id"), col("cid").as("cluster"))
-    }
+      maxClusterRows: Option[Long] = None): DataFrame = {
+    val asg = KMeans.lloyd(embeddings, k, iters).select(col("vec_id"), col("cluster"))
     // Opt-in hot-cluster circuit breaker, same contract as the LSH
     // `maxBucketRows` above: the within-cluster pair join is C(|cell|, 2)
     // per cell, so one cluster past the bound means a quadratic join —
@@ -1793,8 +1747,7 @@ object Dedup {
 
   def embeddingNearDupsLsh(embeddings: DataFrame, threshold: Double = 0.45,
       nPlanes: Int = 3, nBands: Int = 32,
-      maxBucketRows: Option[Long] = None,
-      inlineVerify: Boolean = false): DataFrame = {
+      maxBucketRows: Option[Long] = None): DataFrame = {
     val withNorm = embeddings.select(col("vec_id"),
       col("embedding").cast("array<double>").as("embedding"),
       sqrt(V.norm2(col("embedding"))).as("nrm"))
@@ -1821,52 +1774,27 @@ object Dedup {
           "semanticNearDups(k ∝ n) for the low-threshold regime"
       })
     }
-    // Two verify shapes with identical output, different shuffle economics:
-    //
-    //  default (distinct-then-join): dedup candidate pairs first, then
-    //  re-join both vectors by vec_id. Cosine is computed once per
-    //  DISTINCT pair — but the second verify join shuffles rows already
-    //  carrying one full embedding, i.e. candidates × vector-width bytes.
-    //  ScaleProbe measured that wall: at a ×100 corpus (200k vectors,
-    //  ~150M candidates) the wide-row shuffle wanted ~90 GB of spill.
-    //
-    //  inlineVerify: carry (embedding, nrm) on the band rows and compute
-    //  cosine INSIDE the band self-join, filter to ≥ threshold, and only
-    //  then distinct. Wide rows ride only the n·B band sort (linear in
-    //  the corpus); every shuffled candidate row is a narrow (i, j,
-    //  cos_sim). The price is up to B× redundant cosine computes for
-    //  pairs colliding in several bands — pure CPU, no memory footprint
-    //  — which is the right trade at scale (same per-pair value in every
-    //  band, so the post-filter distinct is exact). This is the shape to
-    //  use beyond ~10⁵ vectors per box; the PQ-coded ADC in the IVF+PQ
-    //  operators is the same idea taken further (verify on 64×-smaller
-    //  codes first).
-    if (inlineVerify) {
-      val wide = withNorm.select(col("vec_id"), col("embedding"), col("nrm"),
-        posexplode(V.lshBands(col("embedding"), nPlanes, nBands)).as(Seq("band_idx", "bucket")))
-      wide.as("a").join(wide.as("b"),
-          col("a.band_idx") === col("b.band_idx") && col("a.bucket") === col("b.bucket") &&
-            col("a.vec_id") < col("b.vec_id"))
-        .select(col("a.vec_id").as("i"), col("b.vec_id").as("j"),
-          V.cosineRatio(V.dot(col("a.embedding"), col("b.embedding")),
-            col("a.nrm") * col("b.nrm")).as("cos_sim"))
-        .filter(col("cos_sim") >= threshold)
-        .distinct()
-        .orderBy(col("i"), col("j"))
-    } else {
-      val cand = bands.as("a").join(bands.as("b"),
-          col("a.band_idx") === col("b.band_idx") && col("a.bucket") === col("b.bucket") &&
-            col("a.vec_id") < col("b.vec_id"))
-        .select(col("a.vec_id").as("i"), col("b.vec_id").as("j"))
-        .distinct()
-      cand
-        .join(withNorm.as("va"), col("i") === col("va.vec_id"))
-        .join(withNorm.as("vb"), col("j") === col("vb.vec_id"))
-        .select(col("i"), col("j"),
-          V.cosineRatio(V.dot(col("va.embedding"), col("vb.embedding")), col("va.nrm") * col("vb.nrm")).as("cos_sim"))
-        .filter(col("cos_sim") >= threshold)
-        .orderBy(col("i"), col("j"))
-    }
+    // Verify: dedup candidate pairs first, then re-join both vectors by
+    // vec_id, so cosine is computed once per DISTINCT pair. The second
+    // verify join shuffles rows carrying one full embedding, i.e.
+    // candidates × vector-width bytes — ScaleProbe measured that wall at
+    // a ×100 corpus (200k vectors, ~150M candidates: ~90 GB of spill).
+    // Computing cosine inside the band join would keep shuffled rows
+    // narrow but pays up to B× redundant cosines per pair — measured
+    // 2.1× slower at sf0.1 on 4 cores (median 13.3 vs 6.4 s); the
+    // PQ-coded ADC in the IVF+PQ operators is the narrow-row answer.
+    val cand = bands.as("a").join(bands.as("b"),
+        col("a.band_idx") === col("b.band_idx") && col("a.bucket") === col("b.bucket") &&
+          col("a.vec_id") < col("b.vec_id"))
+      .select(col("a.vec_id").as("i"), col("b.vec_id").as("j"))
+      .distinct()
+    cand
+      .join(withNorm.as("va"), col("i") === col("va.vec_id"))
+      .join(withNorm.as("vb"), col("j") === col("vb.vec_id"))
+      .select(col("i"), col("j"),
+        V.cosineRatio(V.dot(col("va.embedding"), col("vb.embedding")), col("va.nrm") * col("vb.nrm")).as("cos_sim"))
+      .filter(col("cos_sim") >= threshold)
+      .orderBy(col("i"), col("j"))
   }
 
   /** Blocked fuzzy key matching — the record-linkage pattern (near-equal

@@ -22,124 +22,10 @@ object EmbeddingStore {
 
   val partitionCol = "lsh_bucket"
 
-  /** What [[recluster]] actually maintained: the compacted cell ids AND
-    * the compacted id-sidecar `idp` partitions. Both in the return value
-    * (round-13 verdict nit #2) so an operator can gate on sidecar
-    * maintenance programmatically instead of scraping the stderr
-    * accounting line. */
-  case class ReclusterResult(cells: Seq[Long], idParts: Seq[Long]) {
-    def isEmpty: Boolean = cells.isEmpty && idParts.isEmpty
-    def nonEmpty: Boolean = !isEmpty
-  }
-
-  /** The opt-in id→cell sidecar lives under an underscore-prefixed dir,
-    * which Spark's file listing skips — the main store's partition
-    * discovery and schema never see it. */
-  val idIndexDir = "_idx"
-  private val IdIndexParts = 64L
-
-  /** Cross-table tear receipt (round-15 verdict ask #1): cells and
-    * sidecar are two separate write jobs, so a crash between them used
-    * to leave an id point-lookup silently missing vectors the cell scan
-    * finds — the silent-miss class the band-index/corpus-store receipt
-    * lock ([[Dedup.docReceipt]] required-equal metas) was built to
-    * loud-stop. Each half now carries a one-line receipt file
-    * (`_META_emv1` at the store root and inside `_idx`): row count +
-    * xor of one 64-bit hash per (vec_id, cell) row — commutative,
-    * append-foldable, derivable from either half at rest. Publication
-    * order on a sidecar-maintaining append is store-receipt FIRST, data
-    * jobs, sidecar-receipt LAST, so EVERY crash window leaves the two
-    * receipts unequal and the directRead path fail-stops instead of
-    * silently missing (a reader probing mid-append sees the same
-    * transient mismatch — the stores' single-writer maintenance-window
-    * contract, same as the band-index/corpus-store pair). Receipts ride
-    * [[FsPointers]] (atomic rename publish, Hadoop FS API — an
-    * `hdfs://`-rooted store resolves like a local one). Sidecar-less
-    * stores carry no receipt: a single committer-atomic table needs no
-    * cross-table lock. Reference motivation: the MergeTree part-commit
-    * atomicity the layout mimics (`clickhouse/init.sql:16`). */
-  private val MetaName = "_META_emv1"
-
-  private case class StoreMeta(n: Long, xor: Long)
-
-  /** (count, xor) over canonical `(vec_id long, bucket long)` rows —
-    * the cast is load-bearing: xxhash64 is type-sensitive and the cell
-    * half's partition-dir values are type-INFERRED on read (often int)
-    * while the sidecar stores long. */
-  private def vecReceiptAgg(rows: DataFrame, bucketCol: String): StoreMeta = {
-    val r = rows.agg(count(lit(1)),
-      coalesce(expr(s"bit_xor(xxhash64(cast(vec_id as long), " +
-        s"cast($bucketCol as long)))"), lit(0L))).head()
-    StoreMeta(r.getLong(0), r.getLong(1))
-  }
-
-  private def readMetaAt(root: String): Option[StoreMeta] =
-    FsPointers.read(root, MetaName).map { line =>
-      val p = line.split(" ")
-      require(p.length == 3 && p(0) == "emv1",
-        s"unrecognized embedding-store receipt '$line' at $root")
-      StoreMeta(p(1).toLong, p(2).toLong)
-    }
-
-  private def publishMetaAt(root: String, m: StoreMeta): Unit =
-    FsPointers.publish(root, MetaName, s"emv1 ${m.n} ${m.xor}")
-
-  private def tornStoreError(path: String, detail: String): Nothing =
-    throw new IllegalStateException(
-      s"embedding store at $path: cells and id sidecar describe " +
-        s"different states ($detail) — a torn append left the sidecar " +
-        "out of step with the cells (id lookups would miss or misroute " +
-        "vectors the cell scan holds); rewrite with idIndex = true to " +
-        "rebuild both halves from the store")
-
   /** Write the corpus partitioned by LSH cell (one shuffle on the cell id,
-    * large sorted files per cell — the CertStore discipline). With
-    * `idIndex` the write also maintains the (vec_id → cell) sidecar that
-    * [[knnProbe]]'s `directRead` serving path resolves ids through:
-    * narrow 16-byte rows, Hive-partitioned by `idp = vec_id mod 64` so a
-    * point lookup opens ONE sidecar partition instead of scanning the
-    * store (whose id lookup is otherwise a full-corpus read — vec_id
-    * cannot prune cell partitions). Default-off: the sidecar is extra
-    * write cost the declared demo queries don't pay; a serving
-    * deployment turns it on at write time (or fronts the store with a
-    * real KV index — this sidecar is that index expressed in the same
-    * parquet layout discipline as the store itself). */
+    * large sorted files per cell — the CertStore discipline). */
   def write(embeddings: DataFrame, path: String, nPlanes: Int = 4,
-      mode: SaveMode = SaveMode.Overwrite, idIndex: Boolean = false): Unit = {
-    // The sidecar must never be PARTIAL or STALE: a sidecar that lacks
-    // an id the store holds makes the directRead probe error on a real
-    // vector, and one that maps ids to removed cells resolves wrong. So
-    // an append onto a sidecar-carrying store maintains it regardless of
-    // the flag, and an idIndex append onto a sidecar-LESS store
-    // backfills the whole store (read back once) instead of writing a
-    // sidecar of just the increment.
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      embeddings.sparkSession.sparkContext.hadoopConfiguration)
-    val hadIdx = fs.exists(new org.apache.hadoop.fs.Path(path, idIndexDir))
-    // An Overwrite with idIndex=false must not leave the old sidecar
-    // behind. A static-mode Overwrite happens to delete the whole dir,
-    // but that is a session conf away from not holding
-    // (partitionOverwriteMode=dynamic rewrites only touched cell dirs,
-    // leaving _idx in place → directRead would resolve ids against the
-    // PREVIOUS corpus) — so the removal is explicit, not an overwrite
-    // side effect. Overwrite ONLY (ADVICE r9): Ignore on an existing
-    // store is a data no-op and ErrorIfExists throws before writing —
-    // neither replaces the vectors, so stripping a valid sidecar there
-    // would break directRead on a store whose data never changed.
-    if (mode == SaveMode.Overwrite && !idIndex && hadIdx)
-      fs.delete(new org.apache.hadoop.fs.Path(path, idIndexDir), true)
-    // a sidecar-less store carries no receipt — drop a stale one with
-    // the sidecar (static Overwrite deletes the dir anyway; dynamic
-    // partitionOverwriteMode would leave it behind)
-    if (mode == SaveMode.Overwrite && !idIndex)
-      FsPointers.deleteFile(
-        new org.apache.hadoop.fs.Path(path, MetaName).toString)
-    // Ignore-mode writes onto an EXISTING store are data no-ops; the
-    // sidecar writes below must no-op with them, or an idIndex=true
-    // Ignore call would write a sidecar of just the ignored increment
-    // (partial: directRead would error on every pre-existing id).
-    val ignoredNoop = mode == SaveMode.Ignore &&
-      fs.exists(new org.apache.hadoop.fs.Path(path))
+      mode: SaveMode = SaveMode.Overwrite): Unit =
     // The append path stays on the stock committer DELIBERATELY — a
     // direct per-cell placement variant (staging write + per-file
     // renames, the write-side mirror of directStore) was built and
@@ -152,39 +38,6 @@ object EmbeddingStore {
     // min(|increment|, 2^p) — increment-bounded by construction
     // (SCALE.md round-13 fourth wave). The stock committer keeps the
     // simpler crash story for free.
-    val idxRoot = new org.apache.hadoop.fs.Path(path, idIndexDir).toString
-    val incIdxRows = embeddings.select(col("vec_id"),
-      V.lshBucket(col("embedding"), nPlanes).as("bucket"))
-    // Receipt fold for a sidecar-maintaining APPEND happens BEFORE any
-    // data job (the publish-first protocol — see MetaName): old receipts
-    // are required equal up front (a pre-existing tear must loud-stop,
-    // not compound), the store's new receipt is published, then cells,
-    // then sidecar, then the sidecar's receipt — every crash window
-    // leaves the two receipts unequal for the directRead guard. A
-    // pre-receipt legacy sidecar migrates in place via one loud
-    // recompute over the store at rest (column-pruned vec_id+cell scan),
-    // the same one-time-migration discipline as the idx6→idx7 artifact.
-    val pendingIdxMeta: Option[StoreMeta] =
-      if (mode == SaveMode.Append && hadIdx) {
-        val inc = vecReceiptAgg(incIdxRows, "bucket")
-        val next = (readMetaAt(path), readMetaAt(idxRoot)) match {
-          case (Some(a), Some(b)) =>
-            if (a != b) tornStoreError(path,
-              s"store receipt n=${a.n} xor=${a.xor} vs sidecar n=${b.n} xor=${b.xor}")
-            StoreMeta(a.n + inc.n, a.xor ^ inc.xor)
-          case (None, None) =>
-            System.err.println(s"[embstore] sidecar at $path carries no " +
-              "receipt (written before emv1) — recomputing from the store " +
-              "at rest, one-time migration")
-            val old = vecReceiptAgg(read(embeddings.sparkSession, path)
-              .select(col("vec_id"), col(partitionCol).as("bucket")), "bucket")
-            StoreMeta(old.n + inc.n, old.xor ^ inc.xor)
-          case (a, _) => tornStoreError(path,
-            s"receipt present on ${if (a.isDefined) "cells only" else "sidecar only"}")
-        }
-        publishMetaAt(path, next) // store receipt FIRST
-        Some(next)
-      } else None
     embeddings
       .withColumn(partitionCol, V.lshBucket(col("embedding"), nPlanes))
       .repartition(col(partitionCol))
@@ -192,43 +45,6 @@ object EmbeddingStore {
       .write.mode(mode)
       .partitionBy(partitionCol)
       .parquet(path)
-    def writeIdx(rows: DataFrame, m: SaveMode): Unit =
-      rows
-        .select(col("vec_id"), col("bucket").cast("long").as("bucket"),
-          pmod(col("vec_id"), lit(IdIndexParts)).as("idp"))
-        .repartition(col("idp"))
-        .sortWithinPartitions("vec_id")
-        .write.mode(m)
-        .partitionBy("idp")
-        .parquet(idxRoot)
-    if (mode != SaveMode.Append) {
-      if (idIndex && !ignoredNoop) {
-        // fresh store (Overwrite replaced the dir; ErrorIfExists/Ignore
-        // only reach here on a path that held none): both receipts
-        // describe the one input, published around the sidecar write —
-        // a crash before the sidecar exists degrades directRead to the
-        // safe full-scan shape, so no publish-first step is needed
-        val m = vecReceiptAgg(incIdxRows, "bucket")
-        publishMetaAt(path, m)
-        writeIdx(incIdxRows, mode)
-        publishMetaAt(idxRoot, m)
-      }
-    } else if (hadIdx) {
-      writeIdx(incIdxRows, SaveMode.Append)
-      publishMetaAt(idxRoot, pendingIdxMeta.get) // sidecar receipt LAST
-    } else if (idIndex) {
-      // first-idIndex-on-append backfill: the store (which now includes
-      // the increment) is read back once; partition-dir bucket values
-      // are type-inferred on read, hence writeIdx's (and the receipt
-      // hash's) cast to long
-      val full = read(embeddings.sparkSession, path)
-        .select(col("vec_id"), col(partitionCol).as("bucket"))
-      val m = vecReceiptAgg(full, "bucket")
-      publishMetaAt(path, m)
-      writeIdx(full, SaveMode.Overwrite)
-      publishMetaAt(idxRoot, m)
-    }
-  }
 
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
@@ -243,9 +59,8 @@ object EmbeddingStore {
     * uniqueness across batches (same contract as any append-only store).
     * Each append adds ≤ one file per touched cell — after many increments
     * run [[recluster]], the compaction analog for this layout. */
-  def append(embeddings: DataFrame, path: String, nPlanes: Int = 4,
-      idIndex: Boolean = false): Unit =
-    write(embeddings, path, nPlanes, SaveMode.Append, idIndex)
+  def append(embeddings: DataFrame, path: String, nPlanes: Int = 4): Unit =
+    write(embeddings, path, nPlanes, SaveMode.Append)
 
   /** Cell compaction ("recluster"): cells whose directories have
     * fragmented past `maxFilesPerCell` (the drift signature of repeated
@@ -265,48 +80,24 @@ object EmbeddingStore {
     * (and tasks) — a petabyte cell raises it rather than funneling
     * through one task.
     *
-    * The id sidecar (when present) is compacted by the same kernel
-    * under the same bounds: appends fragment its `idp=` dirs one file
-    * per touched partition per append — exactly the tiny-file drift
-    * that degrades the 16-byte-row point lookup `directRead` exists
-    * for — and no other maintenance path touches it.
-    *
     * Concurrency contract: the delete→rename swap is not atomic — a
     * reader that lists a cell in exactly that window sees it missing
     * (the standard limit of file-layout compaction without a table
     * format's transaction log; run recluster in the maintenance window,
     * or front the store with Delta/Iceberg for serialized swaps). */
   def recluster(spark: SparkSession, path: String, maxFilesPerCell: Int = 4,
-      targetFilesPerCell: Int = 1): ReclusterResult = {
+      targetFilesPerCell: Int = 1): Seq[Long] = {
     require(maxFilesPerCell >= 1, s"maxFilesPerCell must be >= 1, got $maxFilesPerCell")
     require(targetFilesPerCell >= 1, s"targetFilesPerCell must be >= 1, got $targetFilesPerCell")
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return ReclusterResult(Seq.empty, Seq.empty)
+    if (!fs.exists(root)) return Seq.empty
     val cells = PartitionCompaction.compactDrifted(spark, fs, root,
       partitionCol, Seq("vec_id"), xxhash64(col("vec_id")),
       maxFilesPerCell, targetFilesPerCell)
-    // the id sidecar fragments at the SAME rate as the cells (every
-    // append onto a sidecar-carrying store maintains it — one file per
-    // touched idp dir per append, with no natural bound), and its
-    // point-lookup read is exactly what tiny-file drift degrades; a
-    // recluster that restored the cells but left a year of hourly
-    // appends in the sidecar would hand directRead a thousand-file
-    // directory for a 16-byte row. Same kernel, same bounds, same
-    // crash-recovery discipline.
-    val idx = new org.apache.hadoop.fs.Path(root, idIndexDir)
-    val idps =
-      if (fs.exists(idx))
-        PartitionCompaction.compactDrifted(spark, fs, idx,
-          "idp", Seq("vec_id"), xxhash64(col("vec_id")),
-          maxFilesPerCell, targetFilesPerCell)
-      else Seq.empty
-    // stderr accounting stays (the components append prints the same),
-    // and both halves ride the return value so callers can gate on
-    // sidecar maintenance programmatically
-    System.err.println(s"[embstore] recluster: compacted ${cells.size} " +
-      s"cell(s) + ${idps.size} sidecar partition(s) at $path")
-    ReclusterResult(cells, idps)
+    // stderr accounting stays (the components append prints the same)
+    System.err.println(s"[embstore] recluster: compacted ${cells.size} cell(s) at $path")
+    cells
   }
 
   /** ANN probe against the store: resolve the query's cell (one pruned
@@ -316,55 +107,7 @@ object EmbeddingStore {
     * neighbor cells (multi-probe recall recovery), still as an enumerated
     * partition predicate via isin. */
   def knnProbe(spark: SparkSession, path: String, queryId: Long, k: Int = 10,
-      nPlanes: Int = 4, maxFlips: Int = 0, directRead: Boolean = false): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    // `directRead` with the sidecar present resolves id → cell through
-    // ONE sidecar partition (16-byte rows, idp = vec_id mod 64) and then
-    // reads only the probed cell dirs — no store-wide scan, no full
-    // listing. Without the sidecar it degrades to the default shape
-    // (correct, slower) so the flag is safe on any store.
-    val idx = new org.apache.hadoop.fs.Path(path, idIndexDir)
-    if (directRead && fs.exists(idx)) {
-      // the cross-table tear guard (see MetaName): the sidecar is only
-      // trusted when both halves' receipts exist and agree — two one-line
-      // FS reads, corpus-size-free. A pre-receipt legacy sidecar (both
-      // absent) is tolerated uncheckable; any append or rewrite upgrades
-      // it. One-sided or unequal receipts are exactly the torn-append
-      // signature and fail-stop instead of silently missing ids.
-      (readMetaAt(path), readMetaAt(idx.toString)) match {
-        case (Some(a), Some(b)) =>
-          if (a != b) tornStoreError(path,
-            s"store receipt n=${a.n} xor=${a.xor} vs sidecar n=${b.n} xor=${b.xor}")
-        case (None, None) => ()
-        case (a, _) => tornStoreError(path,
-          s"receipt present on ${if (a.isDefined) "cells only" else "sidecar only"}")
-      }
-      val part = new org.apache.hadoop.fs.Path(idx,
-        s"idp=${java.lang.Math.floorMod(queryId, IdIndexParts)}")
-      val qBucket = (if (fs.exists(part))
-          spark.read.option("basePath", idx.toString).parquet(part.toString)
-            .filter(col("vec_id") === queryId)
-            .select(col("bucket")).limit(1).collect().headOption
-        else None)
-        .getOrElse(throw new IllegalArgumentException(
-          s"queryId $queryId not found in embedding store at $path"))
-        .getLong(0)
-      // the query vector from its own (direct-read) cell
-      val qVec = directStore(spark, path, fs, Seq(qBucket))
-        .filter(col("vec_id") === queryId)
-        .select(col("embedding").cast("array<double>"))
-        .limit(1).collect().headOption
-        .getOrElse(throw new IllegalStateException(
-          s"id index maps $queryId to cell $qBucket but the cell lacks it " +
-            s"(stale sidecar — rewrite with idIndex = true)"))
-        .getSeq[Double](0)
-      import spark.implicits._
-      val q = Seq((qVec, math.sqrt(qVec.map(x => x * x).sum))).toDF("q_emb", "q_nrm")
-      val store = directStore(spark, path, fs, probedBuckets(qBucket, nPlanes, maxFlips))
-      return probeCells(store, q, qBucket, nPlanes, maxFlips,
-        excludeId = Some(queryId), k)
-    }
+      nPlanes: Int = 4, maxFlips: Int = 0): DataFrame = {
     val store = read(spark, path)
     // ONE lookup fetches bucket + embedding together (a vec_id predicate
     // cannot prune cell partitions, so this is the single unavoidable
@@ -387,40 +130,33 @@ object EmbeddingStore {
   /** ANN probe with an ARBITRARY query vector (the serving path — query
     * vectors are normally not in the corpus). The cell id is the same pure
     * LCG plane function the store was written with, computed driver-side
-    * on the one query vector; everything else is the pruned-cell read. */
+    * on the one query vector. The probed cell ids are then known
+    * driver-side, so the read lists nothing and opens exactly those cell
+    * directories under basePath (the partition column still derives
+    * from the dir names). Discovery is the cost that grows with the
+    * store — ScaleProbe measured a 12-cell probe at 2048 cells
+    * discovery-BOUND (5.8 s, and ~4.7 s of that remained with a 1-cell
+    * probe); the data path is occupancy·(p+1) rows regardless of corpus
+    * size. The per-cell existence checks (bounded: Σ C(p, ≤f) probes)
+    * stand in for the catalog/manifest lookup a deployment-scale store
+    * front-ends this with. */
   def knnProbeVector(spark: SparkSession, path: String, query: Array[Double],
-      k: Int = 10, nPlanes: Int = 4, maxFlips: Int = 0,
-      directRead: Boolean = false): DataFrame = {
+      k: Int = 10, nPlanes: Int = 4, maxFlips: Int = 0): DataFrame = {
     // cell id via the SAME static kernel the LshBands expression runs on
     // executors — one driver-side call, bit-identical bucketing
     val qBucket = graft.expressions.ArrayExprs.lshBands(
       new org.apache.spark.sql.catalyst.util.GenericArrayData(query), nPlanes, 1).getLong(0)
-    // Two read shapes, identical output (spec-pinned). The default
-    // discovers the whole store (one listing, then partition-pruned) —
-    // right for ad-hoc use. `directRead` is the SERVING shape: the
-    // probed cell ids are already known driver-side, so it lists
-    // nothing and opens exactly those cell directories under basePath
-    // (the partition column still derives from the dir names).
-    // Discovery is the cost that grows with the store — ScaleProbe
-    // measured a 12-cell probe at 2048 cells discovery-BOUND (5.8 s,
-    // and ~4.7 s of that remained with a 1-cell probe); the data path
-    // is occupancy·(p+1) rows regardless of corpus size. The per-cell
-    // existence checks (bounded: Σ C(p, ≤f) probes) stand in for the
-    // catalog/manifest lookup a deployment-scale store front-ends this
-    // with.
-    val store =
-      if (!directRead) read(spark, path)
-      else directStore(spark, path,
-        new org.apache.hadoop.fs.Path(path).getFileSystem(
-          spark.sparkContext.hadoopConfiguration),
-        probedBuckets(qBucket, nPlanes, maxFlips))
+    val store = directStore(spark, path,
+      new org.apache.hadoop.fs.Path(path).getFileSystem(
+        spark.sparkContext.hadoopConfiguration),
+      probedBuckets(qBucket, nPlanes, maxFlips))
     val qNrm = math.sqrt(query.map(x => x * x).sum)
     import spark.implicits._
     val q = Seq((query.toSeq, qNrm)).toDF("q_emb", "q_nrm")
     probeCells(store, q, qBucket, nPlanes, maxFlips, excludeId = None, k)
   }
 
-  /** The direct-read shape both serving probes share: open exactly the
+  /** The direct read [[knnProbeVector]] uses: open exactly the
     * given (existing) cell directories under basePath — the partition
     * column still derives from the dir names, and nothing else is
     * listed. The bounded per-cell existence checks stand in for the

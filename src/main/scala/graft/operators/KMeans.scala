@@ -128,92 +128,6 @@ object KMeans {
       .orderBy(col("vec_id"))
   }
 
-  /** Previous hierarchical-assignment centroid cache — one slot, the
-    * newest call unpersists the prior frame (same discipline as the
-    * guarded-shingle cache in Dedup): bounded at k·d doubles. */
-  private val lastHierCents =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-
-  /** Two-level cell assignment — an IVF built over the centroid table
-    * itself. Flat [[assignCells]] evaluates n·k distances; under the
-    * SemDeDup sizing rule k ∝ n (mean cell size held ~10³-10⁴) that is
-    * O(n²) compute — ScaleProbe measured the semantic-dedup entry at 18×
-    * across its last ×10 decade for exactly this reason. The fix is the
-    * same residency trick the ANN operators already use, applied to
-    * assignment: cluster the k centroids into `kSuper` ≈ √k super-cells
-    * (training cost k·kSuper — trivial), then each vector (1) ranks the
-    * kSuper super-centroids and keeps its `nProbe` nearest, and (2)
-    * searches only the centroids routed to those super-cells. Compute
-    * per vector ≈ kSuper + nProbe·k/kSuper ≈ 2√k at nProbe=1 — O(n·√k)
-    * overall instead of O(n·k).
-    *
-    * Plan shape at 100 TB: step (1) is PURE MAP-SIDE — the (non-empty)
-    * super-centroids are collected into a plan literal (bounded: kSuper
-    * ≈ √k rows, the same bounded-frame contract as the IVF probe frames
-    * in Similarity), so the top-nProbe pick is array expression work
-    * with no shuffle and no groupBy; step (2) is a broadcast hash join
-    * against the k-row routing table followed by the usual struct-min
-    * aggregate, whose partial (map-side) combine means the one shuffle
-    * carries n narrow (vec_id, cid, d2) rows — identical shuffle volume
-    * to flat assignment, ~√k-fold less compute.
-    *
-    * APPROXIMATE for nProbe < kSuper: the true nearest centroid may be
-    * routed to an unprobed super-cell — the standard IVF residency
-    * approximation, which SemDeDup-style blocking accepts by design. At
-    * nProbe ≥ (non-empty) kSuper every centroid is searched and the
-    * output is bit-identical to [[assignCells]] (spec-pinned).
-    * Empty super-cells (Lloyd may empty one) are excluded from the probe
-    * literal, so no vector can burn a probe — or lose its row at the
-    * inner routing join — on a cell with no members.
-    *
-    * Determinism: the probe ranking sorts (d2, scid) structs and both
-    * assignment levels use the (d2, cid) struct-min — no arbitrary
-    * winners anywhere, partitioning-invariant like the flat pass. */
-  def assignCellsHier(embs: DataFrame, centroids: DataFrame, kSuper: Int,
-      nProbe: Int = 1): DataFrame = {
-    require(kSuper > 0 && nProbe > 0, "kSuper and nProbe must be positive")
-    // the centroid frame feeds super-training, routing and the final
-    // search — persist so the (often corpus-sized) plan behind it runs
-    // once; k·d doubles, the same bound that makes centroids
-    // broadcastable in the first place
-    val cents = centroids
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // `ne` guard: persist() returns the same Dataset reference, so a
-    // repeat call with the same centroid frame would otherwise evict the
-    // cache it just (re-)registered
-    Option(lastHierCents.getAndSet(cents))
-      .foreach(old => if (old ne cents) old.unpersist(false))
-    val centsAsEmb =
-      cents.select(col("cid").as("vec_id"), col("cent").as("embedding"))
-    val superCents = centroidsAfter(centsAsEmb, kSuper, iters = 2)
-    // route every centroid to its single nearest super-cell; the k-row
-    // (scid, cid, cent) table is the broadcast side of step (2)
-    val members = assignCells(centsAsEmb, superCents)
-      .select(col("cid").as("scid"), col("vec_id").as("cid"))
-      .join(cents, Seq("cid"))
-    // non-empty super-cells as a plan literal (bounded collect: ≤ kSuper
-    // rows), sorted by scid so the literal itself is deterministic
-    val live = superCents
-      .join(members.select(col("scid").as("cid")).distinct(), Seq("cid"), "left_semi")
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray.toSeq))
-      .toSeq.sortBy(_._1)
-    val scArr = typedLit(live)
-    val e = embs.select(col("vec_id"),
-      col("embedding").cast("array<double>").as("emb"))
-    val ranked = transform(scArr, s => struct(
-      graft.expressions.ArrayExprs.l2_dist2(col("emb"), s.getField("_2")).as("d2"),
-      s.getField("_1").as("scid")))
-    e.select(col("vec_id"), col("emb"),
-        explode(slice(sort_array(ranked), 1, nProbe)).as("probe"))
-      .select(col("vec_id"), col("emb"), col("probe.scid").as("scid"))
-      .join(broadcast(members), Seq("scid"))
-      .select(col("vec_id"),
-        struct(dist2(col("emb"), col("cent")).as("d2"), col("cid")).as("dc"))
-      .groupBy(col("vec_id")).agg(min(col("dc")).as("m"))
-      .select(col("vec_id"), col("m.cid").as("cid"), col("m.d2").as("d2"))
-  }
-
   /** Embedding-space outlier flagging — the distance-to-centroid prune
     * (mislabeled/garbage/off-distribution points sit far from every
     * cluster): each vector flagged iff its squared distance to its

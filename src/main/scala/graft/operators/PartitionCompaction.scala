@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * archive-then-swap. Cost scales with DRIFT, not store size.
   *
   * Extracted round 13 from `EmbeddingStore.recluster` (which applies it
-  * to the cell layout and the id sidecar; measured drift-bounded at
+  * to the cell layout; measured drift-bounded at
   * ×1→×100, SCALE.md round-13 fourth wave). `CertStore.compactDrifted`
   * is the second user — the MergeTree background-merge analog
   * (reference `clickhouse/init.sql:16-18`) applied in place to the

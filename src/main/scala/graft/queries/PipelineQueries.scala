@@ -884,7 +884,7 @@ object PipelineQueries {
     *    shingles, so THIS scan prunes to their few buckets by layout.
     * The pair join gets the pre-filtered corpus rows (their union IS
     * the subset every join inside touches), so no second semi-join
-    * pass is needed — broadcastIncrementShingles stays off.
+    * pass is needed.
     * Returns (newPairs, touchedCorpus); `touchedCorpus` comes back
     * PERSISTED (the caller's drift probe is its second consumer, and
     * the caller unpersists). Factored out of the append so Bench's
@@ -1058,7 +1058,6 @@ object PipelineQueries {
     val newPairs = Dedup.incrementalNgramPairs(increment,
         touchedCorpus.unionByName(hotCorpus), sizesDf, hot,
         ComponentsK, ComponentsThreshold,
-        broadcastIncrementShingles = false,
         // the candidate-pruned verify removes the per-append docHot
         // shuffle of every hot corpus row at the price of one extra
         // eager materialization — a measured LOSS at small hot volumes
@@ -1727,13 +1726,8 @@ object PipelineQueries {
     "dedup_embedding_pairs" -> ((s, d) =>
       Dedup.embeddingNearDupsExact(Tables.embeddings(s, d), threshold = 0.45)),
 
-    // knob-sweep force (graft.Knobs): inline verify + an untrippable
-    // hot-bucket breaker — output-identical by contract, here under the
-    // same oracle as the default shape
     "dedup_embedding_lsh" -> ((s, d) =>
-      Dedup.embeddingNearDupsLsh(Tables.embeddings(s, d), threshold = 0.45,
-        maxBucketRows = graft.Knobs.uncapped,
-        inlineVerify = graft.Knobs.forced)),
+      Dedup.embeddingNearDupsLsh(Tables.embeddings(s, d), threshold = 0.45)),
 
     "emb_knn" -> ((s, d) =>
       Similarity.bruteForceKnn(Tables.embeddings(s, d), queryId = 0L, k = 10)),
@@ -1764,16 +1758,11 @@ object PipelineQueries {
     // pruning); the oracle recomputes the same cells over the flat table.
     // The store write is part of the query on purpose: bench times the
     // full write+probe cycle, and reruns stay idempotent via Overwrite.
-    // knob-sweep force (graft.Knobs): write the id→cell sidecar and
-    // probe through it (directRead) — the serving shape, spec-pinned
-    // identical to full discovery, here under the default's oracle
     "emb_knn_store" -> ((s, d) => {
       val path = new java.io.File(System.getProperty("java.io.tmpdir"),
         "graft_emb_store_" + Integer.toHexString(d.hashCode)).getAbsolutePath
-      EmbeddingStore.write(Tables.embeddings(s, d), path, nPlanes = 4,
-        idIndex = graft.Knobs.forced)
-      EmbeddingStore.knnProbe(s, path, queryId = 0L, k = 10, nPlanes = 4,
-          maxFlips = 1, directRead = graft.Knobs.forced)
+      EmbeddingStore.write(Tables.embeddings(s, d), path, nPlanes = 4)
+      EmbeddingStore.knnProbe(s, path, queryId = 0L, k = 10, nPlanes = 4, maxFlips = 1)
         .select(col("vec_id"), col("label"),
           col("bucket").cast("long").as("bucket"), col("cos_sim"))
     }),
@@ -1788,16 +1777,11 @@ object PipelineQueries {
       val embs = Tables.embeddings(s, d)
       // the initial Overwrite write clears any prior run's directory;
       // two 20% appends fragment every cell past the compaction bound
-      // knob-sweep force: sidecar written with the base, auto-maintained
-      // across both appends and recluster, then probed directly — the
-      // maintained-sidecar serving path under the shared oracle
-      EmbeddingStore.write(embs.filter(col("vec_id") % 5 < 3), path, nPlanes = 4,
-        idIndex = graft.Knobs.forced)
+      EmbeddingStore.write(embs.filter(col("vec_id") % 5 < 3), path, nPlanes = 4)
       (3 to 4).foreach(m =>
         EmbeddingStore.append(embs.filter(col("vec_id") % 5 === m), path, nPlanes = 4))
       EmbeddingStore.recluster(s, path, maxFilesPerCell = 2)
-      EmbeddingStore.knnProbe(s, path, queryId = 0L, k = 10, nPlanes = 4,
-          maxFlips = 1, directRead = graft.Knobs.forced)
+      EmbeddingStore.knnProbe(s, path, queryId = 0L, k = 10, nPlanes = 4, maxFlips = 1)
         .select(col("vec_id"), col("label"),
           col("bucket").cast("long").as("bucket"), col("cos_sim"))
     }),
@@ -1979,16 +1963,9 @@ object PipelineQueries {
     // SemDeDup-style semantic dedup: deterministic k-means clusters as the
     // blocking structure, pairs generated by a hash equi-join on the
     // cluster id only (never corpus²), exact cosine on the survivors
-    // knob-sweep force (graft.Knobs): train on the 1/1 sample (= full
-    // corpus), assign via the two-level route with nProbe = k ≥ kSuper
-    // (bit-identical to flat), arm the untrippable cluster breaker —
-    // the O(n·√k) assignment path under the default query's oracle
     "dedup_semantic" -> ((s, d) =>
       graft.operators.Dedup.semanticNearDups(Tables.embeddings(s, d),
-        k = 8, iters = 2, threshold = 0.45,
-        maxClusterRows = graft.Knobs.uncapped,
-        hierProbe = graft.Knobs.opt(8),
-        trainDenom = graft.Knobs.opt(1))),
+        k = 8, iters = 2, threshold = 0.45)),
 
     // sequence packing: concat-and-chunk token offsets + context-window
     // bins via the distributed prefix sum (range partition → local cumsum
@@ -2412,69 +2389,6 @@ object PipelineQueries {
         .orderBy(col("doc_id"))
     })
   )
-
-  // ---- knob-sweep-only queries (graft.Knobs) ----
-
-  /** Visible ONLY under SPARK_GRAFT_KNOBS=1 — the driver's declared
-    * surface stays frozen. `incrementalNgramPairs` is the one scale-knob
-    * carrier with no declared twin (the artifact append path is
-    * bench/spec-gated), so the sweep adds a direct query for it: the
-    * dedup_incremental_near increment fixture, paired against a corpus
-    * snapshot index (shingles/sizes/hot at the autoDfCutoff), with
-    * `broadcastIncrementShingles` forced on. The oracle recomputes the
-    * exact pair set from first principles: candidates discovered through
-    * ≥ 1 shared NON-hot shingle (the snapshot guard's discovery rule),
-    * jaccard over the FULL shingle sets. */
-  private[graft] def knobQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "knob_incr_ngram_pairs" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val inc = docs.filter(T.splitHash(col("doc_id"), "incn") >= 80)
-        .select(incrementId(col("doc_id")),
-          when(pmod(col("doc_id"), lit(2L)) === 1,
-            concat(lit("fresh "), col("lang"), lit(" page about topic "),
-              col("doc_id").cast("string")))
-            .otherwise(concat(col("text"), lit(" tail note"))).as("text"))
-      val corpus = docs.select(col("doc_id"), col("text"))
-      val corpusSh = Dedup.shingleIndex(corpus, 3)
-      val cutoff = Dedup.autoDfCutoff(corpus)
-      val sizes = corpusSh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      val hot = corpusSh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-        .filter(col("df") > cutoff).select(col("sh"))
-      // both scale knobs forced under the sweep: the broadcast pushdown
-      // AND the round-15 candidate-pruned verify ride the DuckDB hash
-      // gate in their output-identical configurations
-      Dedup.incrementalNgramPairs(inc, corpusSh, sizes, hot, k = 3,
-        threshold = 0.5, broadcastIncrementShingles = true,
-        pruneVerifyByCandidates = true)
-    }))
-
-  private[graft] def knobOracleSql: Map[String, String] = Map(
-    "knob_incr_ngram_pairs" ->
-      s"""WITH kin0 AS (SELECT orig_id + 1000000 AS doc_id,
-         |    CASE WHEN orig_id % 2 = 1 THEN 'fresh ' || lang || ' page about topic ' || orig_id
-         |         ELSE text || ' tail note' END AS text
-         |  FROM (SELECT doc_id AS orig_id, lang, text FROM documents
-         |        WHERE ${dPoly("'incn:' || doc_id")} % 100 >= 80)),
-         |kall AS (SELECT doc_id, text FROM kin0 UNION ALL SELECT doc_id, text FROM documents),
-         |kths AS (SELECT doc_id, ${dTokenHashes("text")} AS ths FROM kall),
-         |ksh AS (SELECT doc_id, unnest(list_distinct(${dShingleIds("ths", 3)})) AS sh FROM kths),
-         |ksizes AS (SELECT doc_id, count(*) AS n FROM ksh GROUP BY doc_id),
-         |kcut AS (SELECT greatest(16, floor(count(*)::DOUBLE * 0.004::DOUBLE)::BIGINT) AS c
-         |         FROM documents),
-         |khot AS (SELECT sh FROM ksh WHERE doc_id < 1000000 GROUP BY sh
-         |         HAVING count(*) > (SELECT c FROM kcut)),
-         |kcand AS (SELECT DISTINCT a.doc_id AS i, b.doc_id AS j
-         |          FROM ksh a JOIN ksh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-         |          WHERE (a.doc_id >= 1000000 OR b.doc_id >= 1000000)
-         |            AND NOT EXISTS (SELECT 1 FROM khot h WHERE h.sh = a.sh)),
-         |kinters AS (SELECT c.i, c.j, count(*) AS inter FROM kcand c
-         |            JOIN ksh sa ON sa.doc_id = c.i
-         |            JOIN ksh sb ON sb.doc_id = c.j AND sb.sh = sa.sh
-         |            GROUP BY 1, 2)
-         |SELECT t.i, t.j, t.inter, t.inter::DOUBLE / (na.n + nb.n - t.inter) AS jaccard
-         |FROM kinters t JOIN ksizes na ON t.i = na.doc_id JOIN ksizes nb ON t.j = nb.doc_id
-         |WHERE t.inter::DOUBLE / (na.n + nb.n - t.inter) >= 0.5
-         |ORDER BY t.i, t.j""".stripMargin)
 
   // ---- oracle SQL ----
 

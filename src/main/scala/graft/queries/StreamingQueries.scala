@@ -433,12 +433,8 @@ object StreamingQueries {
       .parquet(splitDir)
     val q = src.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // knob-sweep force (graft.Knobs): sidecar born with batch 0 and
-        // auto-maintained by every append (hadIdx path), so the final
-        // probe can resolve the query id through it
         if (batchId == 0L)
-          EmbeddingStore.write(batch.toDF(), storePath, nPlanes = 4,
-            idIndex = graft.Knobs.forced)
+          EmbeddingStore.write(batch.toDF(), storePath, nPlanes = 4)
         else
           EmbeddingStore.append(batch.toDF(), storePath, nPlanes = 4)
       }
@@ -449,7 +445,7 @@ object StreamingQueries {
     finally graft.operators.Dedup.rmdir(new java.io.File(ckpt))
     EmbeddingStore.recluster(spark, storePath, maxFilesPerCell = 2)
     val view = EmbeddingStore.knnProbe(spark, storePath, queryId = 0L, k = 10,
-        nPlanes = 4, maxFlips = 1, directRead = graft.Knobs.forced)
+        nPlanes = 4, maxFlips = 1)
       .select(col("vec_id"), col("label"),
         col("bucket").cast("long").as("bucket"), col("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_id"))

@@ -2,6 +2,7 @@ package graft.ct
 
 import java.nio.file.Files
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.streaming.Trigger
 import graft.ct.source.{CtMicroBatchSource, EntrySource}
 
@@ -70,6 +71,35 @@ class CtDsv2Spec extends graft.SparkSpec {
     assert(table.count() == 6L)
     val subs = CtQueries.subdomains(table, "example.com").collect()
     assert(subs.map(_.getAs[String]("domain")).contains("www.example.com"))
+  }
+
+  test("an AvailableNow run asks each log's get-sth exactly once, however many " +
+      "micro-batches it plans") {
+    val store = Files.createTempDirectory("dsv2-sth-store").toString
+    val ckpt = Files.createTempDirectory("dsv2-sth-ckpt").toString
+    val calls = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+    val src = new Fixture {
+      size = 10L
+      override def treeSize(log: LogList.CtLog): Long = {
+        calls.merge(log.name, 1, _ + _)
+        super.treeSize(log)
+      }
+    }
+    CtMicroBatchSource.register("fix-sth", src)
+    val opts = Map(
+      "loglist" -> logListJson,
+      "now" -> "2024-01-15T00:00:00Z",
+      "sourcekey" -> "fix-sth",
+      "batchsize" -> "2",
+      "maxentriespertrigger" -> "3")
+    val q = StreamIngest.start(spark, opts, store, ckpt,
+      () => Timestamp.valueOf("2024-01-15 00:00:00"), Trigger.AvailableNow())
+    q.awaitTermination()
+    CtMicroBatchSource.unregister("fix-sth")
+    // 10 entries at 3 per trigger: four micro-batches per log
+    assert(q.recentProgress.count(_.numInputRows > 0) == 4)
+    assert(calls.asScala.toMap == Map("Usable Log" -> 1, "Frozen Log" -> 1),
+      s"get-sth calls per log: $calls")
   }
 
   test("admission control: 10k backlog consumed in capped micro-batches, exactly-once across kill/resume") {

@@ -101,14 +101,18 @@ class IngestorEndToEndSpec extends graft.SparkSpec {
       def fetchEntries(log: LogList.CtLog, start: Long, end: Long): Seq[RawEntry] =
         if (overrun) (start to end + 1).map(entryAt(log, _)) else Seq.empty
     }
-    for ((overrun, got) <- Seq(true -> 3, false -> 0)) {
+    // whichever range's task fails first reports it: a 2-entry range
+    // overrun returns 3, the 1-entry tail range [4, 4] returns 2
+    val report = """returned (\d+) entries for range \[\d+, \d+\] \((\d+) requested\)""".r
+    for (overrun <- Seq(true, false)) {
       val e = intercept[StreamingQueryException] {
         Fixtures.ingest(spark, logListJson, failing(overrun), t0, Map("batchsize" -> "2"))
       }
       val messages = Iterator.iterate[Throwable](e)(_.getCause)
         .takeWhile(_ != null).map(x => String.valueOf(x.getMessage)).toSeq
-      assert(messages.exists(_.contains(s"returned $got entries for range [")),
-        messages.mkString("\n"))
+      assert(messages.exists(m => report.findAllMatchIn(m).exists { r =>
+          r.group(1).toLong == (if (overrun) r.group(2).toLong + 1 else 0L)
+        }), messages.mkString("\n"))
     }
   }
 

@@ -189,6 +189,24 @@ class ServerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     } finally srv.stop()
   }
 
+  test("/stream reports a failing poll as an error frame, not a silent close") {
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    val srv = new Server(spark, () =>
+        if (calls.incrementAndGet() == 2) throw new IllegalStateException("store unreadable")
+        else CertStore.read(spark, storeDir),
+      storeDir, port = 0, streamPollMs = 50).start()
+    try {
+      val req = HttpRequest.newBuilder(
+          URI.create(s"http://127.0.0.1:${srv.boundPort}/stream"))
+        .timeout(java.time.Duration.ofSeconds(30)).GET().build()
+      // the server closes the feed after the error frame, so the body ends
+      val body = client.send(req, HttpResponse.BodyHandlers.ofString()).body()
+      assert(body.contains("a.example.com"), s"first poll's rows missing:\n$body")
+      assert(body.contains("event: error\ndata: {\"error\":\"store unreadable\"}\n\n"),
+        s"no error frame:\n$body")
+    } finally srv.stop()
+  }
+
   test("stop() leaves no non-daemon thread the server started alive") {
     import scala.jdk.CollectionConverters._
     def nonDaemon(): Set[Thread] = Thread.getAllStackTraces.keySet.asScala

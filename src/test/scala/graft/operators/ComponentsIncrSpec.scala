@@ -100,26 +100,23 @@ class ComponentsIncrSpec extends SparkSpec {
     }
   }
 
-  test("broadcastIncrementShingles pushdown: identical pairs, guard armed") {
+  test("candidate-pruned verify: identical pairs to the default verify, " +
+      "over-cap fallback included, guard armed") {
     val base = Files.createTempDirectory("comp-incr-semi").toString
     try {
       PipelineQueries.buildComponentsArtifactFrom(spark, corpusDocs, base)
-      def pairs(push: Boolean) = Dedup.incrementalNgramPairs(incrementDocs,
+      val dflt = Dedup.incrementalNgramPairs(incrementDocs,
           spark.read.parquet(s"$base/shingles"),
           spark.read.parquet(s"$base/sizes"),
-          spark.read.parquet(s"$base/hot"), k = 3, threshold = 0.5,
-          broadcastIncrementShingles = push)
+          spark.read.parquet(s"$base/hot"), k = 3, threshold = 0.5)
         .collect().map(_.toSeq).toSeq
-      val dflt = pairs(push = false)
       // the fixture surfaces cross-boundary, increment-internal and
-      // hot-contribution pairs — a diverging pushdown could not hide
+      // hot-contribution pairs — a diverging verify could not hide
       assert(dflt.nonEmpty)
-      assert(pairs(push = true) == dflt,
-        "the semi-join pushdown must not change a single pair or value")
-      // round-15 knob on the same fixture: the candidate-pruned verify
-      // (hotAll/sizes semi-joined to collected candidate ids) must be
-      // row-identical too — the hot-contribution pairs make a wrongly
-      // pruned docHot impossible to hide
+      // the candidate-pruned verify (hotAll/sizes semi-joined to
+      // collected candidate ids) must be row-identical — the
+      // hot-contribution pairs make a wrongly pruned docHot impossible
+      // to hide
       def pruned(cap: String) = {
         spark.conf.set("graft.dedup.candidatePairCollectMaxRows", cap)
         try Dedup.incrementalNgramPairs(incrementDocs,

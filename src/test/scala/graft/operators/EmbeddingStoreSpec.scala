@@ -1,9 +1,10 @@
 package graft.operators
 
 import java.nio.file.Files
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{broadcast, col, sqrt}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import graft.{SparkSpec, Tables}
+import graft.functions.{VectorFunctions => V}
 
 /** The IVF layout: cell-partitioned store, probes prune to the probed
   * cells' directories, results agree with the in-memory LSH operators. */
@@ -14,6 +15,28 @@ class EmbeddingStoreSpec extends SparkSpec {
   private def scannedPartitions(df: org.apache.spark.sql.DataFrame): Int = {
     val scan = df.queryExecution.sparkPlan.collect { case f: FileSourceScanExec => f }.head
     scan.relation.location.listFiles(scan.partitionFilters, scan.dataFilters).length
+  }
+
+  /** The vector probe from first principles over a FULL store read: the
+    * query's cell and its ≤ maxFlips-bit neighbours, each row scored
+    * with the probe's own cosine expression — what the direct read of
+    * only the probed cell dirs must match. */
+  private def scanProbe(dir: String, q: Array[Double], k: Int,
+      maxFlips: Int): Seq[Seq[Any]] = {
+    import spark.implicits._
+    val qBucket = graft.expressions.ArrayExprs.lshBands(
+      new org.apache.spark.sql.catalyst.util.GenericArrayData(q), 4, 1).getLong(0)
+    val probed = (0 to maxFlips).flatMap(f => (0 until 4).combinations(f)
+      .map(_.foldLeft(qBucket)((b, i) => b ^ (1L << i))))
+    val qDf = Seq((q.toSeq, math.sqrt(q.map(x => x * x).sum))).toDF("q_emb", "q_nrm")
+    EmbeddingStore.read(spark, dir)
+      .filter(col(EmbeddingStore.partitionCol).isin(probed: _*))
+      .crossJoin(broadcast(qDf))
+      .select(col("vec_id"), col("label"), col(EmbeddingStore.partitionCol).as("bucket"),
+        V.cosineRatio(V.dot(col("embedding"), col("q_emb")),
+          sqrt(V.norm2(col("embedding"))) * col("q_nrm")).as("cos_sim"))
+      .orderBy(col("cos_sim").desc, col("vec_id")).limit(k)
+      .collect().map(_.toSeq).toSeq
   }
 
   test("bucket-partitioned store: probe scans one cell, matches lshKnn") {
@@ -57,19 +80,18 @@ class EmbeddingStoreSpec extends SparkSpec {
     val qVec = embs.filter(col("vec_id") === 0L)
       .select(col("embedding").cast("array<double>")).head()
       .getSeq[Double](0).toArray
-    // the serving shape must be row- and value-identical to the
-    // discovery shape at every flip count, including flips where some
-    // neighbor cells have no directory (skipped driver-side, which is
-    // exactly what the partition filter does to them under discovery)
+    // the pruned read must be row- and value-identical to a full store
+    // scan at every flip count, including flips where some neighbor
+    // cells have no directory (skipped driver-side, which is exactly
+    // what the partition filter does to them under a full scan)
     for (flips <- Seq(0, 1, 2)) {
-      val listed = EmbeddingStore.knnProbeVector(spark, dir, qVec,
-        k = 11, nPlanes = 4, maxFlips = flips).collect().map(_.toSeq).toSeq
       val direct = EmbeddingStore.knnProbeVector(spark, dir, qVec,
-        k = 11, nPlanes = 4, maxFlips = flips, directRead = true)
-      assert(direct.collect().map(_.toSeq).toSeq == listed,
-        s"directRead diverged at maxFlips=$flips")
+        k = 11, nPlanes = 4, maxFlips = flips)
+      assert(direct.collect().map(_.toSeq).toSeq ==
+        scanProbe(dir, qVec, k = 11, maxFlips = flips),
+        s"pruned read diverged from the full scan at maxFlips=$flips")
       // the scan's file index must hold at most the probed cell count —
-      // direct read never discovers the rest of the store
+      // the read never discovers the rest of the store
       val scan = direct.queryExecution.sparkPlan
         .collect { case f: FileSourceScanExec => f }.head
       val rootDirs = scan.relation.location.rootPaths.length
@@ -81,74 +103,10 @@ class EmbeddingStoreSpec extends SparkSpec {
     // neighbors: empty result, correct schema, no exception
     val farQ = Array.fill(64)(0.0)
     val empty = EmbeddingStore.knnProbeVector(spark, dir, farQ,
-      k = 5, nPlanes = 4, maxFlips = 0, directRead = true)
-    val alsoListed = EmbeddingStore.knnProbeVector(spark, dir, farQ,
       k = 5, nPlanes = 4, maxFlips = 0)
     assert(empty.collect().map(_.toSeq).toSeq ==
-      alsoListed.collect().map(_.toSeq).toSeq,
-      "missing-cell probe must agree between shapes (possibly empty)")
-  }
-
-  test("id-sidecar directRead probe: identical to the store-scan shape") {
-    val dir = Files.createTempDirectory("embstore-idx").toString
-    // sidecar-less store first: directRead must silently degrade to the
-    // default shape (correct on any store, faster only with the sidecar)
-    EmbeddingStore.write(embs, dir, nPlanes = 4)
-    def probe(direct: Boolean, id: Long = 0L) =
-      EmbeddingStore.knnProbe(spark, dir, id, k = 10, nPlanes = 4,
-        maxFlips = 1, directRead = direct).collect().map(_.toSeq).toSeq
-    val want = probe(direct = false)
-    assert(probe(direct = true) == want, "no sidecar: directRead must fall back")
-
-    // sidecar-enabled store: identical output through the id index
-    EmbeddingStore.write(embs, dir, nPlanes = 4, idIndex = true)
-    assert(probe(direct = true) == want,
-      "sidecar directRead must match the store-scan probe exactly")
-    // ids landing in different idp partitions all resolve
-    for (id <- Seq(1L, 63L, 64L, 100L))
-      assert(probe(direct = true, id) == probe(direct = false, id),
-        s"id $id diverged through the sidecar")
-    // a missing id errors through the sidecar too
-    intercept[IllegalArgumentException] { probe(direct = true, id = 999999L) }
-
-    // append with idIndex maintains the sidecar: appended ids resolve and
-    // probes stay equal to the store-scan shape over the grown store
-    val extra = embs.filter(col("vec_id") < 5)
-      .withColumn("vec_id", col("vec_id") + 1000000L)
-    EmbeddingStore.append(extra, dir, nPlanes = 4, idIndex = true)
-    assert(probe(direct = true, 1000001L) == probe(direct = false, 1000001L),
-      "appended id must resolve through the appended sidecar")
-    assert(probe(direct = true) == probe(direct = false),
-      "post-append probes must stay identical between shapes")
-    // an append WITHOUT the flag must still maintain an existing sidecar
-    // (a stale sidecar would make directRead miss vectors the store holds)
-    val extra2 = embs.filter(col("vec_id") < 3)
-      .withColumn("vec_id", col("vec_id") + 2000000L)
-    EmbeddingStore.append(extra2, dir, nPlanes = 4)
-    assert(probe(direct = true, 2000001L) == probe(direct = false, 2000001L),
-      "flagless append onto a sidecar store must keep the sidecar current")
-    // recluster compacts cell files without touching bucket assignment:
-    // the sidecar stays valid and both probe shapes agree afterwards
-    EmbeddingStore.recluster(spark, dir, maxFilesPerCell = 1)
-    assert(probe(direct = true) == probe(direct = false),
-      "post-recluster probes must stay identical between shapes")
-    assert(probe(direct = true, 2000001L) == probe(direct = false, 2000001L))
-  }
-
-  test("first idIndex append onto a sidecar-less store backfills every id") {
-    val dir = Files.createTempDirectory("embstore-backfill").toString
-    EmbeddingStore.write(embs, dir, nPlanes = 4) // no sidecar
-    val extra = embs.filter(col("vec_id") < 5)
-      .withColumn("vec_id", col("vec_id") + 1000000L)
-    EmbeddingStore.append(extra, dir, nPlanes = 4, idIndex = true)
-    def probe(direct: Boolean, id: Long) =
-      EmbeddingStore.knnProbe(spark, dir, id, k = 10, nPlanes = 4,
-        maxFlips = 1, directRead = direct).collect().map(_.toSeq).toSeq
-    // a sidecar holding only the appended batch would error here on the
-    // pre-existing id — the backfill must cover the WHOLE store
-    for (id <- Seq(0L, 63L, 1000001L))
-      assert(probe(direct = true, id) == probe(direct = false, id),
-        s"id $id must resolve through the backfilled sidecar")
+      scanProbe(dir, farQ, k = 5, maxFlips = 0),
+      "missing-cell probe must agree with the full scan (possibly empty)")
   }
 
   test("append routes to existing cells; recluster compacts without changing probes") {
@@ -187,9 +145,9 @@ class EmbeddingStoreSpec extends SparkSpec {
     val before = cellFiles
     assert(before.values.exists(_ > 2), s"appends should fragment cells, got $before")
     val done = EmbeddingStore.recluster(spark, dir, maxFilesPerCell = 2)
-    assert(done.cells.nonEmpty, "fragmented cells must be reclustered")
+    assert(done.nonEmpty, "fragmented cells must be reclustered")
     val after = cellFiles
-    assert(done.cells.forall(c => after(s"${EmbeddingStore.partitionCol}=$c") == 1),
+    assert(done.forall(c => after(s"${EmbeddingStore.partitionCol}=$c") == 1),
       s"reclustered cells must compact to one file: $after")
     assert(before.filter(_._2 <= 2).forall { case (c, n) => after(c) == n },
       "cells within bound must be untouched")
@@ -204,58 +162,12 @@ class EmbeddingStoreSpec extends SparkSpec {
     assert(EmbeddingStore.recluster(spark, dir, maxFilesPerCell = 2).isEmpty)
   }
 
-  test("Overwrite with idIndex=false removes a stale sidecar even under " +
-      "dynamic partitionOverwriteMode") {
-    val dir = Files.createTempDirectory("embstore-stale-idx").toString
-    val idx = new java.io.File(dir, EmbeddingStore.idIndexDir)
-    EmbeddingStore.write(embs, dir, nPlanes = 4, idIndex = true)
-    assert(idx.isDirectory)
-    // dynamic overwrite rewrites only touched cell dirs — the mode under
-    // which the old sidecar would have survived an in-place Overwrite
-    // (ADVICE r8); the explicit removal must not depend on the conf
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try EmbeddingStore.write(embs, dir, nPlanes = 4)
-    finally prev.fold(spark.conf.unset("spark.sql.sources.partitionOverwriteMode"))(
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
-    assert(!idx.exists, "stale sidecar must be removed by an idIndex=false overwrite")
-    // and the store stays probe-able through the default shape
-    assert(EmbeddingStore.knnProbe(spark, dir, 0L, 5, nPlanes = 4,
-      directRead = true).count() == 5L)
-  }
-
-  test("Ignore-mode write on an existing store is a full no-op: the valid " +
-      "sidecar survives and no partial sidecar is written (ADVICE r9)") {
-    val dir = Files.createTempDirectory("embstore-ignore-idx").toString
-    val idx = new java.io.File(dir, EmbeddingStore.idIndexDir)
-    EmbeddingStore.write(embs, dir, nPlanes = 4, idIndex = true)
-    val want = EmbeddingStore.knnProbe(spark, dir, 0L, 5, nPlanes = 4,
-      directRead = true).collect().map(_.toSeq).toSeq
-    // idIndex=false Ignore: the data write no-ops, so the sidecar —
-    // still valid for vectors that were never rewritten — must survive
-    EmbeddingStore.write(embs.limit(3), dir, nPlanes = 4,
-      mode = org.apache.spark.sql.SaveMode.Ignore)
-    assert(idx.isDirectory, "Ignore on an existing store must not strip the sidecar")
-    assert(EmbeddingStore.knnProbe(spark, dir, 0L, 5, nPlanes = 4,
-      directRead = true).collect().map(_.toSeq).toSeq == want)
-    // idIndex=true Ignore: the data write no-ops, so the sidecar write
-    // must no-op too — a sidecar of just the ignored increment would be
-    // PARTIAL (directRead would error on every pre-existing id)
-    val before = Option(idx.listFiles()).toSeq.flatten.map(_.getName).sorted
-    EmbeddingStore.write(embs.limit(3), dir, nPlanes = 4,
-      mode = org.apache.spark.sql.SaveMode.Ignore, idIndex = true)
-    assert(Option(idx.listFiles()).toSeq.flatten.map(_.getName).sorted == before,
-      "Ignore must not rewrite the sidecar of an ignored data write")
-    assert(EmbeddingStore.knnProbe(spark, dir, 0L, 5, nPlanes = 4,
-      directRead = true).collect().map(_.toSeq).toSeq == want)
-  }
-
   test("directRead against a store with no cell directories returns the " +
       "documented empty frame instead of throwing") {
     val dir = Files.createTempDirectory("embstore-empty").toString
     // a root with no cell dirs at all (never written / emptied)
     val out = EmbeddingStore.knnProbeVector(spark, dir,
-      Array.tabulate(8)(_.toDouble), k = 5, nPlanes = 4, directRead = true)
+      Array.tabulate(8)(_.toDouble), k = 5, nPlanes = 4)
     assert(out.columns.toSeq ==
       Seq("vec_id", "label", "bucket", "cos_sim"))
     assert(out.count() == 0L)
@@ -289,138 +201,5 @@ class EmbeddingStoreSpec extends SparkSpec {
     fs.mkdirs(new Path(new Path(dir), s".old_${done.getName}"))
     EmbeddingStore.recluster(spark, dir, maxFilesPerCell = 1000)
     assert(fs.exists(done) && !fs.exists(new Path(new Path(dir), s".old_${done.getName}")))
-  }
-
-  test("recluster compacts the id sidecar's drifted idp dirs (and recovers them)") {
-    import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.functions.lit
-    val dir = Files.createTempDirectory("embstore-sidecar-compact").toString
-    EmbeddingStore.write(embs, dir, nPlanes = 4, idIndex = true)
-    // five appends whose single vector shares one mod-64 residue: the
-    // sidecar partition idp=40 gains one file per append (the drift
-    // signature — every append onto a sidecar-carrying store maintains
-    // the sidecar, so its fragmentation has no natural bound)
-    val ids = Seq(1000L, 1064L, 1128L, 1192L, 1256L)
-    val vec0 = embs.filter(col("vec_id") === 0L).select(col("embedding")).head().getSeq[Float](0)
-    import spark.implicits._
-    for (id <- ids)
-      EmbeddingStore.append(Seq((id, vec0, 0)).toDF("vec_id", "embedding", "label"),
-        dir, nPlanes = 4, idIndex = true)
-    val idx = new Path(dir, EmbeddingStore.idIndexDir)
-    val fs = idx.getFileSystem(spark.sessionState.newHadoopConf())
-    val hot = new Path(idx, "idp=40")
-    def files(p: Path): Int = fs.listStatus(p).count(f => f.isFile &&
-      !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-    assert(files(hot) > 4, s"fixture must fragment idp=40 past the bound, got ${files(hot)}")
-    val res = EmbeddingStore.recluster(spark, dir, maxFilesPerCell = 4)
-    assert(files(hot) == 1, s"sidecar partition must be compacted to one file, got ${files(hot)}")
-    // the sidecar maintenance is in the RETURN VALUE, not just stderr —
-    // callers gate on it programmatically (round-13 verdict nit #2)
-    assert(res.idParts.contains(40L),
-      s"recluster result must report the compacted sidecar partition, got ${res.idParts}")
-    assert(res.nonEmpty)
-    // every appended id still resolves through the compacted sidecar,
-    // identically to the store-scan shape
-    for (id <- ids) {
-      val direct = EmbeddingStore.knnProbe(spark, dir, id, k = 5, nPlanes = 4,
-        directRead = true).collect().map(_.toSeq).toSeq
-      val scan = EmbeddingStore.knnProbe(spark, dir, id, k = 5, nPlanes = 4)
-        .collect().map(_.toSeq).toSeq
-      assert(direct == scan, s"directRead diverged for appended id $id after sidecar compaction")
-    }
-    // sidecar crash window: archived idp dir with live missing is
-    // restored by the same recovery sweep the cells get
-    val archive = new Path(idx, ".old_idp=40")
-    assert(fs.rename(hot, archive))
-    EmbeddingStore.recluster(spark, dir, maxFilesPerCell = 1000)
-    assert(fs.exists(hot) && !fs.exists(archive), "archived sidecar partition must be restored")
-    val direct = EmbeddingStore.knnProbe(spark, dir, ids.head, k = 5, nPlanes = 4,
-      directRead = true).collect().map(_.toSeq).toSeq
-    assert(direct.nonEmpty)
-  }
-
-  test("cross-table receipts: a planted tear between cells and sidecar " +
-      "loud-stops the directRead path (round-15 verdict ask #1)") {
-    val dir = Files.createTempDirectory("embstore-receipt").toString
-    val metaName = "_META_emv1"
-    def metaAt(root: String): Option[String] = {
-      val f = new java.io.File(root, metaName)
-      if (f.exists()) Some(new String(
-        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").trim)
-      else None
-    }
-    def probe(direct: Boolean, id: Long = 0L) =
-      EmbeddingStore.knnProbe(spark, dir, id, k = 10, nPlanes = 4,
-        maxFlips = 1, directRead = direct).collect().map(_.toSeq).toSeq
-    val idxDir = s"$dir/${EmbeddingStore.idIndexDir}"
-
-    // a sidecar write publishes EQUAL receipts on both halves, and they
-    // survive appends (folded) and recluster (content-based) unchanged
-    EmbeddingStore.write(embs, dir, nPlanes = 4, idIndex = true)
-    assert(metaAt(dir).exists(_.startsWith("emv1 ")), "store receipt missing")
-    assert(metaAt(dir) == metaAt(idxDir), "halves must publish equal receipts")
-    val extra = embs.filter(col("vec_id") < 5)
-      .withColumn("vec_id", col("vec_id") + 1000000L)
-    EmbeddingStore.append(extra, dir, nPlanes = 4)
-    assert(metaAt(dir) == metaAt(idxDir), "append must fold both receipts")
-    assert(metaAt(dir) != metaAt(idxDir).map(_ => "emv1 0 0"),
-      "folded receipt must describe the grown store")
-    EmbeddingStore.recluster(spark, dir, maxFilesPerCell = 1)
-    assert(metaAt(dir) == metaAt(idxDir), "recluster must not move receipts")
-    val want = probe(direct = false)
-    assert(probe(direct = true) == want)
-
-    // PLANTED TEAR — the exact crash window the publish-first protocol
-    // leaves detectable: store receipt already advanced (and cells
-    // possibly appended), sidecar receipt still old. Emulated by
-    // republishing a bumped store receipt. directRead must fail-stop
-    // with the actionable message; the cell-scan shape stays correct.
-    val good = metaAt(dir).get
-    val bumped = { val p = good.split(" "); s"emv1 ${p(1).toLong + 5} ${p(2)}" }
-    java.nio.file.Files.write(new java.io.File(dir, metaName).toPath,
-      bumped.getBytes("UTF-8"))
-    val e1 = intercept[IllegalStateException] { probe(direct = true) }
-    assert(e1.getMessage.contains("torn append") &&
-      e1.getMessage.contains("idIndex = true"), e1.getMessage)
-    assert(probe(direct = false) == want,
-      "the cell-scan shape must stay correct on a torn store")
-    // a further sidecar-maintaining append must refuse to compound it
-    val e2 = intercept[IllegalStateException] {
-      EmbeddingStore.append(extra.withColumn("vec_id",
-        col("vec_id") + 1000000L), dir, nPlanes = 4)
-    }
-    assert(e2.getMessage.contains("torn append"), e2.getMessage)
-
-    // ONE-SIDED receipt (crash in the pre-receipt→receipt upgrade, or a
-    // manually-deleted half): same loud stop
-    java.nio.file.Files.write(new java.io.File(dir, metaName).toPath,
-      good.getBytes("UTF-8"))
-    assert(probe(direct = true) == want, "restored receipt must re-arm directRead")
-    assert(new java.io.File(idxDir, metaName).delete())
-    val e3 = intercept[IllegalStateException] { probe(direct = true) }
-    assert(e3.getMessage.contains("cells only"), e3.getMessage)
-
-    // LEGACY store (both receipts absent — written before emv1): the
-    // probe is tolerated uncheckable, and one loud append migrates the
-    // store in place — receipts recomputed from the store at rest, equal
-    // on both halves, and the directRead guard re-armed
-    assert(new java.io.File(dir, metaName).delete())
-    assert(probe(direct = true) == want, "legacy sidecar must stay probe-able")
-    val extra2 = embs.filter(col("vec_id") < 3)
-      .withColumn("vec_id", col("vec_id") + 3000000L)
-    EmbeddingStore.append(extra2, dir, nPlanes = 4)
-    assert(metaAt(dir).isDefined && metaAt(dir) == metaAt(idxDir),
-      "a sidecar-maintaining append must migrate a legacy store to receipts")
-    assert(probe(direct = true, 3000001L) == probe(direct = false, 3000001L))
-
-    // the recomputed receipt equals the protocol's folded one: rebuilding
-    // the same rows from scratch in a fresh dir publishes the same value
-    // modulo the vec_id set — pin by rebuilding identically
-    val dir2 = Files.createTempDirectory("embstore-receipt2").toString
-    EmbeddingStore.write(EmbeddingStore.read(spark, dir)
-      .select(col("vec_id"), col("embedding"), col("label")),
-      dir2, nPlanes = 4, idIndex = true)
-    assert(metaAt(dir2) == metaAt(dir),
-      "receipt must be a pure content hash: rebuild == folded appends")
   }
 }

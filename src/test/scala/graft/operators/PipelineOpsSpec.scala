@@ -271,14 +271,10 @@ class PipelineOpsSpec extends SparkSpec {
       .select("i", "j").as[(Long, Long)].collect().toSet
     assert(lsh.subsetOf(exact), "verify step must keep only true >= threshold pairs")
     assert(lsh == exact, s"tuned (p=3, B=32) recall on sf0.001 is 100% (missed ${exact -- lsh})")
-    // the inline-verify shape (cosine inside the band join, distinct
-    // after the threshold filter) must produce the identical rows —
-    // pairs AND IEEE cosine values — as the distinct-then-join default
-    val inline = Dedup.embeddingNearDupsLsh(embs, 0.45, inlineVerify = true)
-      .collect().map(_.toSeq).toSeq
-    val deflt = Dedup.embeddingNearDupsLsh(embs, 0.45)
-      .collect().map(_.toSeq).toSeq
-    assert(inline == deflt, "inlineVerify must be output-identical to the default shape")
+    // at full recall the rows themselves — each pair once, IEEE cosine
+    // values included — are the all-pairs truth's
+    assert(Dedup.embeddingNearDupsLsh(embs, 0.45).collect().map(_.toSeq).toSeq ==
+      Dedup.embeddingNearDupsAllPairs(embs, 0.45).collect().map(_.toSeq).toSeq)
   }
 
   test("semantic dedup: exactly the co-clustered near-dup pairs, equi-join plan") {
@@ -1072,75 +1068,11 @@ class PipelineOpsSpec extends SparkSpec {
     assert(reparted == got, "assignment must not depend on partitioning")
   }
 
-  test("hierarchical assignment: full probe bit-equal to flat, nProbe=1 sound") {
-    val cents = KMeans.centroidsAfter(embs, k = 8, iters = 2)
-    def toMap(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-    val flat = toMap(KMeans.assignCells(embs, cents))
-    // nProbe >= kSuper searches every centroid: output must be
-    // BIT-identical to the flat pass, d2 doubles included
-    val full = toMap(KMeans.assignCellsHier(embs, cents, kSuper = 3, nProbe = 3))
-    assert(full == flat, "full-probe hierarchical assignment must equal flat")
-    // nProbe=1: the IVF residency approximation — every vector keeps
-    // exactly one row, and its d2 is a true distance to the assigned
-    // centroid, so it can never beat the exact min
-    val h1 = toMap(KMeans.assignCellsHier(embs, cents, kSuper = 3, nProbe = 1))
-    assert(h1.keySet == flat.keySet, "no vector may be dropped or duplicated")
-    h1.foreach { case (id, (_, d2)) =>
-      assert(d2 >= flat(id)._2, s"vec $id: approx d2 $d2 beats exact ${flat(id)._2}")
-    }
-    val agree = h1.count { case (id, (cid, _)) => cid == flat(id)._1 }
-    assert(agree.toDouble / flat.size >= 0.7,
-      s"nProbe=1 agreement collapsed: $agree/${flat.size}")
-    // determinism across repartitioning, like the flat pass
-    val reparted = toMap(KMeans.assignCellsHier(
-      Tables.embeddings(spark, sf("sf0.001")).repartition(7), cents, 3, 1))
-    assert(reparted == h1, "hier assignment must not depend on partitioning")
-  }
-
-  test("hierarchical assignment degenerate corners match flat where exactness holds") {
-    val cents = KMeans.centroidsAfter(embs, k = 8, iters = 2)
-    def toMap(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-    val flat = toMap(KMeans.assignCells(embs, cents))
-    // kSuper=1: one super-cell holds every centroid, so even nProbe=1
-    // searches them all — bit-equal to flat by construction
-    assert(toMap(KMeans.assignCellsHier(embs, cents, kSuper = 1, nProbe = 1)) == flat,
-      "kSuper=1 must degenerate to the flat pass")
-    // nProbe far beyond the super-cell count: the probe slice clamps,
-    // every centroid searched — bit-equal, no duplicated vectors
-    assert(toMap(KMeans.assignCellsHier(embs, cents, kSuper = 3, nProbe = 100)) == flat,
-      "overflowing nProbe must clamp to all super-cells and equal flat")
-    // kSuper >= k: super-clustering the 8 centroids into 8 super-cells
-    // (some may come out empty — exactly the empty-cell exclusion path);
-    // full probe still searches everything reachable and must be exact
-    assert(toMap(KMeans.assignCellsHier(embs, cents, kSuper = 8, nProbe = 8)) == flat,
-      "kSuper=k full probe must equal flat despite empty super-cells")
-    // k=1 corpus-wide single centroid: both levels collapse to one row
-    val c1 = KMeans.centroidsAfter(embs, k = 1, iters = 1)
-    assert(toMap(KMeans.assignCellsHier(embs, c1, kSuper = 1, nProbe = 1)) ==
-      toMap(KMeans.assignCells(embs, c1)), "k=1 must match flat trivially")
-  }
-
-  test("hierarchical assignment plan: broadcast routing join, no cartesian") {
-    val cents = KMeans.centroidsAfter(embs, k = 8, iters = 2)
-    val plan = KMeans.assignCellsHier(embs, cents, kSuper = 3, nProbe = 1)
-      .queryExecution.executedPlan.toString
-    // the vector→centroid routing must be a hash equi-join on the probed
-    // super-cell id with the k-row members table broadcast — the
-    // docstring's "identical shuffle volume to flat" claim rests on it
-    assert(plan.contains("BroadcastHashJoin [scid"),
-      s"routing must broadcast-hash-join on scid:\n$plan")
-    assert(!plan.contains("CartesianProduct"), s"no cartesian allowed:\n$plan")
-  }
-
   test("scale paths on hostile edge vectors: zero vector, exact dups, antipodes") {
-    // the declared queries' hostile gate covers only the default shapes;
-    // this pins the opt-in scale paths on the same edge classes. Full
-    // probe (hierProbe >= kSuper = 2 for k=3) and an everything-sample
-    // (trainDenom=1) are exactness-preserving, so both must reproduce
-    // the default output on data with a zero-norm vector (NULL cosine —
-    // must pair with nothing), bit-equal duplicates and an antipodal pair
+    // both blocking dedups on data with a zero-norm vector (NULL cosine —
+    // must pair with nothing), bit-equal duplicates and an antipodal
+    // pair: every emitted pair is an all-pairs truth row, cosine value
+    // included, emitted once
     val hostile = Seq(
       (0L, Array(0f, 0f, 0f, 0f)),                // zero vector
       (1L, Array(1f, 0f, 0f, 0f)),
@@ -1152,56 +1084,17 @@ class PipelineOpsSpec extends SparkSpec {
       (7L, Array(0f, 0f, 1f, 0f))
     ).toDF("vec_id", "embedding")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
-    val dflt = rows(Dedup.semanticNearDups(hostile, k = 3, iters = 2, threshold = 0.8))
-    val scale = rows(Dedup.semanticNearDups(hostile, k = 3, iters = 2,
-      threshold = 0.8, hierProbe = Some(2), trainDenom = Some(1)))
-    assert(scale == dflt, "exact scale configuration must survive hostile vectors")
-    assert(!dflt.exists(r => r(1) == 0L || r(2) == 0L),
-      "the zero-norm vector must pair with nothing (NULL cosine)")
-    val lshD = rows(Dedup.embeddingNearDupsLsh(hostile, 0.8, nPlanes = 2, nBands = 8))
-    val lshI = rows(Dedup.embeddingNearDupsLsh(hostile, 0.8, nPlanes = 2, nBands = 8,
-      inlineVerify = true))
-    assert(lshI == lshD, "inlineVerify must match on hostile vectors")
-    assert(!lshD.exists(r => r(0) == 0L || r(1) == 0L),
-      "LSH must never emit the zero-norm vector")
-  }
-
-  test("inlineVerify == default across parameter grid") {
-    // divergence risks the single pinned point can't see: band counts
-    // that change redundant-compute multiplicity, plane counts that
-    // change bucket widths, thresholds on both sides of the fixture's
-    // cosine spectrum — the two shapes must stay row- AND value-equal
-    for (p <- Seq(2, 5); b <- Seq(8, 32); t <- Seq(0.30, 0.60)) {
-      val d = Dedup.embeddingNearDupsLsh(embs, t, nPlanes = p, nBands = b)
-        .collect().map(_.toSeq).toSeq
-      val i = Dedup.embeddingNearDupsLsh(embs, t, nPlanes = p, nBands = b,
-        inlineVerify = true).collect().map(_.toSeq).toSeq
-      assert(i == d, s"inlineVerify diverged at nPlanes=$p nBands=$b t=$t")
+    val truth = rows(Dedup.embeddingNearDupsAllPairs(hostile, 0.8)).toSet
+    val sem = rows(Dedup.semanticNearDups(hostile, k = 3, iters = 2, threshold = 0.8))
+      .map(_.drop(1))
+    val lsh = rows(Dedup.embeddingNearDupsLsh(hostile, 0.8, nPlanes = 2, nBands = 8))
+    for ((name, got) <- Seq("semantic" -> sem, "LSH" -> lsh)) {
+      assert(got.toSet.subsetOf(truth), s"$name emitted a non-truth row: ${got.toSet -- truth}")
+      assert(got.distinct == got, s"$name emitted a pair twice: $got")
+      assert(got.exists(r => r(0) == 1L && r(1) == 2L), s"$name missed the exact duplicate")
+      assert(!got.exists(r => r(0) == 0L || r(1) == 0L),
+        s"$name paired the zero-norm vector (NULL cosine)")
     }
-  }
-
-  test("semantic dedup scale path: full-probe == default; sampled+probed sound") {
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
-    val dflt = rows(Dedup.semanticNearDups(embs, k = 8, iters = 2, threshold = 0.45))
-    // hierProbe >= kSuper (3 for k=8) makes assignment exact, so the
-    // pair output — values included — must match the default plan
-    val full = rows(Dedup.semanticNearDups(embs, k = 8, iters = 2,
-      threshold = 0.45, hierProbe = Some(3)))
-    assert(full == dflt, "full-probe hier path must reproduce the default output")
-    // the full scale configuration (sampled training + 1-probe
-    // assignment) is approximate by design: pin well-formedness and
-    // determinism, not equality
-    val scale = Dedup.semanticNearDups(embs, k = 8, iters = 2, threshold = 0.45,
-      hierProbe = Some(1), trainDenom = Some(2))
-    val got = scale.collect()
-    got.foreach { r =>
-      assert(r.getLong(1) < r.getLong(2), "pairs must be i < j")
-      assert(r.getDouble(3) >= 0.45, "verify filter must hold")
-    }
-    val again = Dedup.semanticNearDups(embs, k = 8, iters = 2, threshold = 0.45,
-      hierProbe = Some(1), trainDenom = Some(2)).collect()
-    assert(got.map(_.toSeq).toSeq == again.map(_.toSeq).toSeq,
-      "sampled+probed path must be run-to-run deterministic")
   }
 
   test("JSONL round-trip preserves escape-hostile text exactly") {

@@ -13,7 +13,7 @@ import graft.SparkSpec
   * drives hand-picked shapes (one append + one recluster, one crash
   * recovery); this property drives random interleavings of appends and
   * reclusters — random batch sizes, random `maxFilesPerCell` /
-  * `targetFilesPerCell`, sidecar on or off, random plane count — and
+  * `targetFilesPerCell`, random plane count — and
   * asserts after EVERY step that
   *
   *  (a) the store's content equals the running corpus exactly
@@ -23,9 +23,8 @@ import graft.SparkSpec
   *  (b) the serving probe against the store stays value- and
   *      order-identical to the in-memory operator over the running
   *      corpus (layout maintenance is invisible to queries),
-  *  (c) with the sidecar on, the directRead shape resolves EVERY id —
-  *      including ones appended after the base write — identically to
-  *      the store-scan shape (the sidecar is never partial or stale),
+  *  (c) a probe by the most recently appended id answers like the
+  *      in-memory operator (appended ids are never missed),
   *  (d) after a recluster, no cell directory exceeds the larger of the
   *      two file bounds (the compaction actually restored the layout).
   *
@@ -62,12 +61,11 @@ object StorePropertySpec extends Properties("embeddingStore") {
       t  <- Gen.choose(1, 2)
     } yield Recluster(mx, t)))
 
-  private val schedGen: Gen[(List[Op], Int, Boolean)] = for {
+  private val schedGen: Gen[(List[Op], Int)] = for {
     n      <- Gen.choose(2, 5)
     ops    <- Gen.listOfN(n, opGen)
     planes <- Gen.oneOf(2, 3, 4)
-    idIdx  <- Gen.oneOf(true, false)
-  } yield (ops, planes, idIdx)
+  } yield (ops, planes)
 
   private def storeRows(dir: String): Seq[(Long, Seq[Float])] =
     EmbeddingStore.read(spark, dir)
@@ -89,38 +87,30 @@ object StorePropertySpec extends Properties("embeddingStore") {
 
   property("random append/recluster schedules: content equals corpus, " +
       "probes match the in-memory operator, sidecar never stale") =
-      Prop.forAll(schedGen) { case (ops, planes, idIdx) =>
+      Prop.forAll(schedGen) { case (ops, planes) =>
     val dir = Files.createTempDirectory("store-prop").toString
     try {
       val baseIds: Seq[Long] = (0L until 40L).toVector
       var corpusIds = baseIds
       var nextId = 1000L
-      EmbeddingStore.write(frame(baseIds), dir, nPlanes = planes,
-        idIndex = idIdx)
+      EmbeddingStore.write(frame(baseIds), dir, nPlanes = planes)
       var ok = true
       for (op <- ops if ok) {
         val stepInfo = op match {
           case Append(n) =>
             val ids: Seq[Long] = (nextId until nextId + n).toVector
             nextId += n
-            EmbeddingStore.append(frame(ids), dir, nPlanes = planes,
-              idIndex = idIdx)
+            EmbeddingStore.append(frame(ids), dir, nPlanes = planes)
             corpusIds = corpusIds ++ ids
             s"append($n)"
           case Recluster(mx, t) =>
             val drifted = EmbeddingStore.recluster(spark, dir,
               maxFilesPerCell = mx, targetFilesPerCell = t)
             val bound = math.max(mx, t)
-            // the bound must hold for the cell layout AND the sidecar's
-            // idp dirs — both fragment one file per touched partition
-            // per append, both are recluster's responsibility
             val over = partFileCounts(dir,
-                EmbeddingStore.partitionCol + "=").filter(_ > bound) ++
-              partFileCounts(s"$dir/${EmbeddingStore.idIndexDir}", "idp=")
-                .filter(_ > bound)
+              EmbeddingStore.partitionCol + "=").filter(_ > bound)
             ok = ok && over.isEmpty
-            s"recluster($mx,$t) drifted=${drifted.cells.size}" +
-              s"+${drifted.idParts.size} over=$over"
+            s"recluster($mx,$t) drifted=${drifted.size} over=$over"
         }
         val corpus = frame(corpusIds)
         val contentOk = storeRows(dir) ==
@@ -128,19 +118,15 @@ object StorePropertySpec extends Properties("embeddingStore") {
         val probeOk = probeOf(EmbeddingStore.knnProbe(spark, dir, 0L,
             k = 10, nPlanes = planes)) ==
           probeOf(Similarity.lshKnn(corpus, 0L, 10, planes))
-        // a recently-appended id through the sidecar, against the
-        // store-scan shape of the same query — pins sidecar maintenance
-        val directOk = !idIdx || {
-          val qid = corpusIds.last
-          probeOf(EmbeddingStore.knnProbe(spark, dir, qid, k = 5,
-              nPlanes = planes, directRead = true)) ==
-            probeOf(EmbeddingStore.knnProbe(spark, dir, qid, k = 5,
-              nPlanes = planes))
-        }
-        ok = ok && contentOk && probeOk && directOk
+        // a recently-appended id, against the in-memory operator's answer
+        val qid = corpusIds.last
+        val appendedOk = probeOf(EmbeddingStore.knnProbe(spark, dir, qid, k = 5,
+            nPlanes = planes)) ==
+          probeOf(Similarity.lshKnn(corpus, qid, 5, planes))
+        ok = ok && contentOk && probeOk && appendedOk
         if (!ok) System.err.println(s"[store-prop] step failed: $stepInfo " +
-          s"planes=$planes idIdx=$idIdx corpus=${corpusIds.size} " +
-          s"contentOk=$contentOk probeOk=$probeOk directOk=$directOk")
+          s"planes=$planes corpus=${corpusIds.size} " +
+          s"contentOk=$contentOk probeOk=$probeOk appendedOk=$appendedOk")
       }
       ok
     } finally Dedup.rmdir(new java.io.File(dir))

@@ -10,14 +10,10 @@
 #      (PlansDocSpec enforces the same thing, but regenerating here
 #      catches a forgotten commit of PLANS.md itself)
 #   3. HostileGen — regenerate the adversarial corpus
-#   4. the five-leg parity matrix:
+#   4. the three-leg parity matrix:
 #        default   sf0.01      197 declared queries
 #        default   sf0.001     197
 #        hostile   (generated) 197
-#        knobs     sf0.01      198 (five scale knobs forced on via
-#                                   SPARK_GRAFT_KNOBS=1 + sweep-only
-#                                   knob_incr_ngram_pairs; KNOBSWEEP.md)
-#        knobs-hostile         198
 #   5. full Bench at sf0.1 on an OTHERWISE-IDLE machine (~15 min wall;
 #      concurrent CPU work pollutes timings by ~10%+) — refreshes
 #      bench_full.json, which must then be committed.
@@ -45,16 +41,14 @@ echo "== 3/5 HostileGen"
 sbt -batch "runMain graft.HostileGen" > /tmp/hg_close.log 2>&1 \
   || { tail -20 /tmp/hg_close.log; exit 1; }
 
-echo "== 4/5 parity matrix (5 legs)"
+echo "== 4/5 parity matrix (3 legs)"
 for run in \
-    "default:/root/testdata/sf0.01:/tmp/vclose_001:" \
-    "default0001:/root/testdata/sf0.001:/tmp/vclose_0001:" \
-    "hostile:/tmp/graft_hostile_sf:/tmp/vclose_host:" \
-    "knobs:/root/testdata/sf0.01:/tmp/vclose_knob:1" \
-    "knobs-hostile:/tmp/graft_hostile_sf:/tmp/vclose_knobhost:1"; do
-  IFS=: read -r tag sf out knob <<< "$run"
+    "default:/root/testdata/sf0.01:/tmp/vclose_001" \
+    "default0001:/root/testdata/sf0.001:/tmp/vclose_0001" \
+    "hostile:/tmp/graft_hostile_sf:/tmp/vclose_host"; do
+  IFS=: read -r tag sf out <<< "$run"
   rm -rf "$out"
-  env ${knob:+SPARK_GRAFT_KNOBS=1} SPARK_GRAFT_CPUS=8 \
+  SPARK_GRAFT_CPUS=8 \
     sbt -batch "runMain graft.Verify $sf $out" > "/tmp/verify_close_$tag.log" 2>&1 \
     || { echo "$tag: Verify FAILED"; tail -20 "/tmp/verify_close_$tag.log"; exit 1; }
   if python3 tools/check_parity.py "$out" "$sf" > "/tmp/parity_close_$tag.log" 2>&1; then
