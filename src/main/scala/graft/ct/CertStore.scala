@@ -1,8 +1,12 @@
 package graft.ct
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType}
+import graft.operators.FsPointers
 
 /** Columnar store for `cert_domains`: the Spark analog of the reference's
   * MergeTree layout (/root/reference/clickhouse/init.sql:16-18).
@@ -18,13 +22,31 @@ import org.apache.spark.sql.functions._
   * At 100 TB: monthly dirs bound each write job's shuffle to one month of
   * data; the repartition key (`ts_month`) co-locates a partition dir's rows
   * on one task so each dir gets few, large, sorted files.
+  *
+  * Commits: every writer here (and `StreamIngest.writeEpoch`) ends a
+  * successful mutation by replacing the one-line `_commit` file at the
+  * store root with a fresh random token — the store's version, as the
+  * set of active parts is a MergeTree table's. Readers build one pinned
+  * snapshot per token (see [[read]]).
   */
 object CertStore {
 
   val partitionCol = "ts_month"
 
-  /** Append a batch of canonical rows, partitioned + sorted for scan speed. */
-  def write(df: DataFrame, path: String, mode: SaveMode = SaveMode.Append): Unit =
+  /** The commit-token file. The leading `_` hides it from Spark's listing
+    * and from data-file byte counts. */
+  private val CommitFile = "_commit"
+
+  /** Append a batch of canonical rows, partitioned + sorted for scan
+    * speed, then commit. */
+  def write(df: DataFrame, path: String, mode: SaveMode = SaveMode.Append): Unit = {
+    writeFiles(df, path, mode)
+    commit(path)
+  }
+
+  /** The data-file half of [[write]], without the commit: for writers
+    * that commit somewhere else (an epoch dir commits at its store root). */
+  private[ct] def writeFiles(df: DataFrame, path: String, mode: SaveMode): Unit =
     df.withColumn(partitionCol, date_format(col("ts"), "yyyyMM"))
       .repartition(col(partitionCol))
       .sortWithinPartitions("base_domain", "domain", "fingerprint")
@@ -32,22 +54,96 @@ object CertStore {
       .partitionBy(partitionCol)
       .parquet(path)
 
+  /** Publish a new commit token at store root `root` (atomic replace). A
+    * random token, not a counter: a directory swapped in by the "stop,
+    * compact, swap" procedure, or rebuilt by an Overwrite that deleted
+    * the old file, must never reuse a value a reader has cached. */
+  private[ct] def commit(root: String): Unit =
+    FsPointers.publish(root, CommitFile, java.util.UUID.randomUUID().toString)
+
+  /** The store's current token, or None when it has none: a path that does
+    * not exist, a store written by a bare `df.write.parquet`, or an
+    * unreadable token file (then the caller lists the tree afresh, which is
+    * never stale). Every read pays this, so it is one `open` on the cached
+    * FileSystem rather than `FsPointers.read`'s exists-then-open through a
+    * fresh FileContext. */
+  private def token(fs: FileSystem, root: Path): Option[String] =
+    try {
+      val in = fs.open(new Path(root, CommitFile))
+      try Some(new String(in.readAllBytes(), "UTF-8").trim) finally in.close()
+    } catch { case _: java.io.IOException => None }
+
+  /** One store version: the frame built under `token` and its data bytes. */
+  private final case class Snapshot(token: String, df: DataFrame, bytes: Long)
+  private final class Slot { @volatile var snap: Option[Snapshot] = None }
+  private val slots = new ConcurrentHashMap[(SparkSession, String), Slot]()
+
+  /** The pinned snapshot for the store's current token, built at most once
+    * per (session, qualified path, token); None when the store has no
+    * token. The token is read BEFORE the listing, so a snapshot is never
+    * older than the token it is cached under. A reader that sees a new
+    * token waits for the rebuild under the store's lock — it is never
+    * served the previous snapshot, since /domain must show every row
+    * committed before the request. */
+  private def pinned(spark: SparkSession, path: String): Option[Snapshot] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    token(fs, root).flatMap { seen =>
+      val slot = slots.computeIfAbsent((spark, fs.makeQualified(root).toString), _ => new Slot)
+      slot.snap.filter(_.token == seen).orElse(slot.synchronized {
+        // another reader may have rebuilt meanwhile, or a writer committed again
+        token(fs, root).map { now =>
+          slot.snap.filter(_.token == now).getOrElse {
+            val df = load(spark, path)
+            val built = Snapshot(now, df, fileBytes(df))
+            slot.snap = Some(built)
+            built
+          }
+        }
+      })
+    }
+  }
+
   /** Read the table back; `ts_month` appears as a partition column. A
     * streaming store's per-epoch directories (StreamIngest.writeEpoch)
     * surface as an extra `epoch` partition column — an idempotency
-    * implementation detail, dropped here. */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read.parquet(path)
-    if (df.columns.contains("epoch")) df.drop("epoch") else df
-  }
+    * implementation detail, dropped here.
+    *
+    * The result is the store's pinned snapshot: its file index (listing
+    * plus inferred schema) is built once per commit token and shared by
+    * every request, `/stream` poll and route until the next commit, so a
+    * read costs one small file read, not a listing and a schema job. Only
+    * a writer's commit ends a snapshot's lifetime: files written behind
+    * CertStore's back into a store that has a token stay invisible until
+    * the next commit. A store without a token (e.g. written by a bare
+    * `df.write.parquet`) is listed afresh on every call, as before. A path
+    * that does not exist yet, or holds no data files, reads as an empty
+    * frame with the populated store's schema (memoized only under a
+    * token). */
+  def read(spark: SparkSession, path: String): DataFrame =
+    pinned(spark, path).map(_.df).getOrElse(load(spark, path))
 
-  /** Read restricted to the months a [from, to) time predicate can touch —
-    * the query-construction discipline that turns `ts` predicates into
-    * partition pruning (SURVEY §4 "caveat"). */
-  def readMonths(spark: SparkSession, path: String,
-      fromMonth: String, toMonth: String): DataFrame =
-    read(spark, path)
-      .filter(col(partitionCol) >= fromMonth && col(partitionCol) <= toMonth)
+  /** A fresh listing of the store: the frame a snapshot pins. */
+  private def load(spark: SparkSession, path: String): DataFrame =
+    try {
+      val df = spark.read.parquet(path)
+      if (df.columns.contains("epoch")) df.drop("epoch") else df
+    } catch {
+      case e: AnalysisException
+          if Set("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA").contains(e.getCondition) =>
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), emptySchema(spark))
+    }
+
+  /** `CertDomain.schema` plus `ts_month` typed as partition inference types
+    * a yyyyMM directory value. */
+  private def emptySchema(spark: SparkSession) =
+    CertDomain.schema.add(partitionCol,
+      if (spark.sessionState.conf.partitionColumnTypeInferenceEnabled) IntegerType else StringType)
+
+  /** Bytes of the data files in `df`'s file index; 0 for an empty frame. */
+  private def fileBytes(df: DataFrame): Long =
+    df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r.location.sizeInBytes }.getOrElse(0L)
 
   /** MergeTree background-merge analog: rewrite each monthly partition into
     * `filesPerMonth` sorted files. Plain batch job, no custom strategy
@@ -55,7 +151,7 @@ object CertStore {
     * `dedupe` applies the ReplacingMergeTree-style merge the README claims
     * (README.md:19): collapse rows sharing (fingerprint, domain) — e.g. the
     * same certificate observed in several CT logs or replayed batches —
-    * keeping the earliest ts. */
+    * keeping the earliest ts. Commits at `dest`. */
   def compact(spark: SparkSession, src: String, dest: String,
       filesPerMonth: Int = 1, dedupe: Boolean = false): Unit = {
     val base = read(spark, src)
@@ -79,6 +175,7 @@ object CertStore {
       .write.mode(SaveMode.Overwrite)
       .partitionBy(partitionCol)
       .parquet(dest)
+    commit(dest)
   }
 
   /** In-place drifted-month compaction — the OPERATIONAL background-merge
@@ -107,7 +204,10 @@ object CertStore {
     * Epoch-partitioned streaming stores' month dirs hold epoch
     * SUBDIRECTORIES, which the kernel never treats as drifted (a flat
     * rewrite would lose the per-epoch idempotency layout) — use the
-    * full [[compact]] for those. Returns the compacted months. */
+    * full [[compact]] for those. Returns the compacted months.
+    *
+    * Commits after every call on an existing store, compacted months or
+    * none: the kernel's recovery sweep may have moved a month back. */
   def compactDrifted(spark: SparkSession, path: String,
       maxFilesPerMonth: Int = 4, filesPerMonth: Int = 1,
       dedupe: Boolean = false): Seq[Long] = {
@@ -123,15 +223,23 @@ object CertStore {
         df.withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1).drop("__rn")
       }
-    graft.operators.PartitionCompaction.compactDrifted(spark, fs, root,
+    val months = graft.operators.PartitionCompaction.compactDrifted(spark, fs, root,
       partitionCol, Seq("base_domain", "domain", "fingerprint"),
       hash(col("fingerprint")), maxFilesPerMonth, filesPerMonth, merge)
+    commit(path)
+    months
   }
 
   /** `system.parts` bytes_on_disk analog (reference api/app.py:224-229):
-    * sum the table's file sizes via the Hadoop FileSystem — metadata only,
-    * no query engine involved (SURVEY §2.1 S12). */
-  def sizeBytes(spark: SparkSession, path: String): Long = {
+    * file metadata only (SURVEY §2.1 S12). A store with a commit token
+    * answers from its pinned snapshot's file index — the same snapshot
+    * [[read]] serves, built by whichever of the two comes first after a
+    * commit — so /size costs no listing; one without a token sums its
+    * `.parquet` files via the Hadoop FileSystem. */
+  def sizeBytes(spark: SparkSession, path: String): Long =
+    pinned(spark, path).map(_.bytes).getOrElse(listBytes(spark, path))
+
+  private def listBytes(spark: SparkSession, path: String): Long = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) 0L

@@ -64,10 +64,10 @@ object CtDemo {
     CtQueries.tldTopk(table, "com", 100).show(false)
     println("-- /stats?date=2024-01-15")
     CtQueries.stats(table, Date.valueOf("2024-01-15")).show(false)
-    println("-- count")
-    CtQueries.totalCount(table).show(false)
-    println("-- /stream tail from epoch")
-    CtQueries.streamTail(table, Timestamp.valueOf("2024-01-15 00:00:00")).show(false)
+    println(s"-- count: ${table.count()}")
+    println("-- /stream tail from the start of 2024-01-15")
+    CtQueries.streamTailAfter(table, Timestamp.valueOf("2024-01-15 00:00:00"), "", "", "")
+      .show(false)
 
     spark.stop()
   }

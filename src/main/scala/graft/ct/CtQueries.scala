@@ -108,23 +108,11 @@ object CtQueries {
       max(col("ts")).as("last_seen"))
   }
 
-  /** Total row count (README.md:167). */
-  def totalCount(certDomains: DataFrame): DataFrame =
-    certDomains.agg(count(lit(1)).as("total"))
-
-  /** GET /stream poll step (app.py:258-262): one incremental batch.
-    * Deviation (SURVEY §2.10 ST4): the reference's `ts > last LIMIT 100`
-    * loses rows sharing the boundary second; we poll with `ts >= last` and
-    * a deterministic (ts, fingerprint, domain) order so the caller can
-    * resume from the last emitted key without loss. */
-  def streamTail(certDomains: DataFrame, lastTs: Timestamp, batch: Int = 100): DataFrame =
-    monthBound(certDomains, Some(lastTs), None).filter(col("ts") >= lit(lastTs))
-      .orderBy(col("ts"), col("fingerprint"), col("domain"))
-      .limit(batch)
-
-  /** Keyset-paginated /stream poll step: resume STRICTLY after the last
-    * emitted (ts, fingerprint, domain, log_name) key. Unlike a bare
-    * `ts >=` cursor with client-side dedup, this makes progress even when
+  /** GET /stream poll step (app.py:258-262), keyset-paginated: resume
+    * STRICTLY after the last emitted (ts, fingerprint, domain, log_name)
+    * key. Deviation (SURVEY §2.10 ST4): the reference's `ts > last LIMIT
+    * 100` loses rows sharing the boundary second. Unlike a bare `ts >=`
+    * cursor with client-side dedup, this makes progress even when
     * more than one batch of rows shares a single timestamp (the normal
     * case — a whole ingest poll lands on one ingestTs), so delivery is
     * loss-free. log_name is part of the key because it is part of the

@@ -19,7 +19,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * the replay REPLACES any partial output from the crashed attempt instead
   * of appending a duplicate (a bare Append sink re-appends when the crash
   * falls between the write and the checkpoint commit). Readers see `epoch`
-  * as an extra partition column, which CertStore.read drops.
+  * as an extra partition column, which CertStore.read drops. Each epoch
+  * write ends with a CertStore commit at the store root, so readers pin
+  * the new epoch's snapshot on their next read.
   *
   * `ingestTs` parameterizes the wall clock per micro-batch (determinism
   * rule, SURVEY §7.4).
@@ -49,7 +51,16 @@ object StreamIngest {
     * `CertStore.compact(spark, store, s"$tmp/epoch=0")` — compact's plain
     * ts_month output lands as epoch 0 of a fresh epoch-layered store —
     * swap directories, restart (the checkpoint keeps the CT offsets; epoch
-    * ids continue upward, so new epochs never collide with 0). */
+    * ids continue upward, so new epochs never collide with 0). The swap
+    * carries the swapped-in directory's `_commit` files with it: compact's
+    * token sits in `epoch=0/`, so the new root has none and readers list
+    * it afresh until the restarted query's first epoch commits one. Tokens
+    * are random, never reused, so no reader can mistake the swapped-in
+    * tree for a snapshot it cached before the swap.
+    *
+    * Commit: the epoch's files land first, then a new token is published
+    * at the store root — never inside `epoch=N/` — so a replayed batchId
+    * also invalidates any snapshot that pinned its earlier output. */
   def writeEpoch(batch: DataFrame, storePath: String, batchId: Long,
       ts: Timestamp): Unit = {
     val s = batch.sparkSession
@@ -67,7 +78,8 @@ object StreamIngest {
     }
     import s.implicits._
     val rows = IngestPipeline.certDomains(batch.as[RawEntry], ts)
-    CertStore.write(rows, s"$storePath/epoch=$batchId", SaveMode.Overwrite)
+    CertStore.writeFiles(rows, s"$storePath/epoch=$batchId", SaveMode.Overwrite)
+    CertStore.commit(storePath)
   }
 
   def start(spark: SparkSession, sourceOptions: Map[String, String],

@@ -36,8 +36,9 @@ class CertStoreSpec extends SparkSpec {
     import org.apache.spark.sql.functions.input_file_name
     def filesRead(df: org.apache.spark.sql.DataFrame): Long =
       df.select(input_file_name()).distinct().count()
-    val all = filesRead(CertStore.read(spark, dir))
-    val one = filesRead(CertStore.readMonths(spark, dir, "202402", "202402"))
+    val table = CertStore.read(spark, dir)
+    val all = filesRead(table)
+    val one = filesRead(table.filter($"ts_month" >= "202402" && $"ts_month" <= "202402"))
     assert(one < all, s"pruned read should touch fewer files ($one vs $all)")
   }
 
@@ -61,7 +62,7 @@ class CertStoreSpec extends SparkSpec {
     val stats = CtQueries.stats(table, java.sql.Date.valueOf("2024-02-10"), approx = false)
     assert(scannedPartitions(stats) == 1, "single-day stats must touch one month")
     assert(stats.collect()(0).getAs[Long]("total") == 5)
-    val tail = CtQueries.streamTail(table, Timestamp.valueOf("2024-02-01 00:00:00"))
+    val tail = CtQueries.streamTailAfter(table, Timestamp.valueOf("2024-02-01 00:00:00"), "", "", "")
     assert(scannedPartitions(tail) == 2, "tail from Feb must skip January")
     assert(tail.count() == 10)
   }
@@ -139,5 +140,132 @@ class CertStoreSpec extends SparkSpec {
     assert(CertStore.humanBytes(0) == "0B")
     assert(CertStore.humanBytes(1536) == "1.50KB")
     assert(CertStore.humanBytes(5L * 1024 * 1024 * 1024) == "5.00GB")
+  }
+
+  private def epochBatch(n: Long) =
+    (0L until n).map(i => RawEntry("log", i, Fixtures.leafB64())).toDF()
+
+  /** Sum of the store's data files, listed independently of CertStore. */
+  private def parquetBytes(dir: String): Long = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(dir)
+    Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".parquet") &&
+        !root.relativize(p).iterator().asScala.exists(_.toString.startsWith("_")))
+      .map(Files.size).sum
+  }
+
+  test("every writer commits: the next read sees its rows, never a stale snapshot") {
+    val dir = Files.createTempDirectory("certstore-snap").toString
+    def rows(): Long = CertStore.read(spark, dir).count()
+    CertStore.write(fixture("2024-01", 4).toDF(), dir, SaveMode.Append)
+    assert(rows() == 4)
+    CertStore.write(fixture("2024-02", 3).toDF(), dir, SaveMode.Append)
+    assert(rows() == 7, "Append")
+    assert(CertStore.sizeBytes(spark, dir) == parquetBytes(dir), "/size from the snapshot")
+    CertStore.write(fixture("2024-03", 2).toDF(), dir, SaveMode.Overwrite)
+    assert(rows() == 2, "Overwrite")
+    assert(CertStore.sizeBytes(spark, dir) == parquetBytes(dir))
+
+    // compact into a destination that was read (and pinned) before
+    val dest = Files.createTempDirectory("certstore-snap-dest").toString
+    CertStore.write(fixture("2024-05", 1).toDF(), dest, SaveMode.Overwrite)
+    assert(CertStore.read(spark, dest).count() == 1)
+    CertStore.compact(spark, dir, dest)
+    assert(CertStore.read(spark, dest).count() == 2, "compact at dest")
+
+    // compactDrifted in place, with dedupe so the row count changes
+    for (_ <- 1 to 5) CertStore.write(fixture("2024-03", 2).toDF(), dir, SaveMode.Append)
+    assert(rows() == 12)
+    CertStore.compactDrifted(spark, dir, maxFilesPerMonth = 4, dedupe = true)
+    assert(rows() == 2, "compactDrifted")
+    assert(CertStore.sizeBytes(spark, dir) == parquetBytes(dir))
+
+    // writeEpoch, a replayed batchId included
+    val live = Files.createTempDirectory("certstore-snap-epochs").toString
+    val t = Timestamp.valueOf("2024-01-15 00:00:00")
+    StreamIngest.writeEpoch(epochBatch(3), live, batchId = 0L, ts = t)
+    val perEpoch = CertStore.read(spark, live).count()
+    assert(perEpoch == 3L)
+    StreamIngest.writeEpoch(epochBatch(3), live, batchId = 1L, ts = t)
+    assert(CertStore.read(spark, live).count() == 2 * perEpoch, "new epoch")
+    StreamIngest.writeEpoch(epochBatch(3), live, batchId = 1L, ts = t)
+    assert(CertStore.read(spark, live).count() == 2 * perEpoch, "replayed epoch")
+    assert(new java.io.File(s"$live/_commit").isFile)
+    assert(!new java.io.File(s"$live/epoch=1/_commit").exists, "epochs commit at the root")
+  }
+
+  test("two reads at one commit share one snapshot; a commit replaces it") {
+    val dir = Files.createTempDirectory("certstore-pin").toString
+    CertStore.write(fixture("2024-01", 4).toDF(), dir, SaveMode.Append)
+    val a = CertStore.read(spark, dir)
+    assert(CertStore.read(spark, dir) eq a, "same token, same pinned frame")
+    CertStore.write(fixture("2024-01", 4).toDF(), dir, SaveMode.Append)
+    val b = CertStore.read(spark, dir)
+    assert(!(b eq a) && b.count() == 8)
+    assert(CertStore.read(spark, dir) eq b)
+    // a pinned snapshot serves the files of its commit, not later ones
+    assert(a.count() == 4)
+  }
+
+  test("a store without a commit token still sees files written behind CertStore's back") {
+    val dir = Files.createTempDirectory("certstore-bare").toString
+    def bare(month: String, n: Int): Unit =
+      fixture(month, n).toDF()
+        .withColumn("ts_month", org.apache.spark.sql.functions.date_format($"ts", "yyyyMM"))
+        .write.mode(SaveMode.Append).partitionBy("ts_month").parquet(dir)
+    bare("2024-01", 3)
+    assert(CertStore.read(spark, dir).count() == 3)
+    bare("2024-02", 2)
+    assert(CertStore.read(spark, dir).count() == 5)
+    assert(CertStore.sizeBytes(spark, dir) == parquetBytes(dir))
+    assert(!new java.io.File(s"$dir/_commit").exists)
+  }
+
+  test("a store path with no commit yet reads empty, with the populated schema") {
+    val dir = Files.createTempDirectory("certstore-empty").toString + "/store"
+    val empty = CertStore.read(spark, dir)
+    assert(empty.count() == 0 && CertStore.sizeBytes(spark, dir) == 0)
+    CertStore.write(fixture("2024-01", 2).toDF(), dir, SaveMode.Append)
+    val back = CertStore.read(spark, dir)
+    assert(empty.schema == back.schema)
+    assert(back.count() == 2, "the empty frame is not memoized")
+    // a commit that wrote no data files (every entry of the epoch was
+    // rejected) also reads empty instead of failing schema inference
+    val live = Files.createTempDirectory("certstore-rejected").toString
+    val junk = Seq(RawEntry("log", 0L, "AAAA")).toDF()
+    StreamIngest.writeEpoch(junk, live, batchId = 0L, ts = Timestamp.valueOf("2024-01-15 00:00:00"))
+    assert(new java.io.File(s"$live/_commit").isFile)
+    val none = CertStore.read(spark, live)
+    assert(none.schema == back.schema && none.count() == 0)
+    assert(CertStore.sizeBytes(spark, live) == 0)
+  }
+
+  test("concurrent readers never see fewer rows than were committed before they read") {
+    val live = Files.createTempDirectory("certstore-race").toString
+    val t = Timestamp.valueOf("2024-01-15 00:00:00")
+    StreamIngest.writeEpoch(epochBatch(3), live, batchId = 0L, ts = t)
+    val perEpoch = CertStore.read(spark, live).count()
+    val committed = new java.util.concurrent.atomic.AtomicLong(perEpoch)
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val bad = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val reads = new java.util.concurrent.atomic.AtomicInteger(0)
+    val readers = (0 until 4).map { i =>
+      val th = new Thread(() =>
+        try while (!done.get) {
+          val floor = committed.get
+          val n = CertStore.read(spark, live).count()
+          reads.incrementAndGet()
+          if (n < floor) bad.add(s"reader $i counted $n, $floor committed before")
+        } catch { case e: Throwable => bad.add(s"reader $i failed: $e") })
+      th.start(); th
+    }
+    try for (id <- 1L to 5L) {
+      StreamIngest.writeEpoch(epochBatch(3), live, batchId = id, ts = t)
+      committed.addAndGet(perEpoch)
+    } finally { done.set(true); readers.foreach(_.join()) }
+    assert(bad.isEmpty, bad.toString)
+    assert(reads.get > 4, "the readers overlapped the commits")
+    assert(CertStore.read(spark, live).count() == 6 * perEpoch)
   }
 }

@@ -68,13 +68,13 @@ class CtQueriesSpec extends SparkSpec {
     assert(math.abs(approx - exact).toDouble <= math.max(1.0, exact * 0.05))
   }
 
-  test("count() total (A1)") {
-    assert(CtQueries.totalCount(df).collect()(0).getAs[Long]("total") == 5)
-  }
-
   test("/stream tail: boundary-safe incremental batch (ST4 fix)") {
-    val r = CtQueries.streamTail(df, ts("2024-01-15 12:00:00"), batch = 10).collect()
-    // >= semantics: includes the boundary row
-    assert(r.map(_.getAs[String]("domain")).toSeq == Seq("b.example.com", "x.other.org"))
+    def tail(t: String, fp: String, dm: String, lg: String): Seq[String] =
+      CtQueries.streamTailAfter(df, ts(t), fp, dm, lg, batch = 10).collect()
+        .map(_.getAs[String]("domain")).toSeq
+    // a cursor before the boundary second's first key keeps its row
+    assert(tail("2024-01-15 12:00:00", "", "", "") == Seq("b.example.com", "x.other.org"))
+    // resuming after that row's full key skips it, and nothing else
+    assert(tail("2024-01-15 12:00:00", "d" * 64, "b.example.com", "log2") == Seq("x.other.org"))
   }
 }

@@ -189,6 +189,43 @@ class ServerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     } finally srv.stop()
   }
 
+  test("a store with no commit yet serves empty answers, and /stream picks up the first write") {
+    val dir = Files.createTempDirectory("server-empty").toString + "/store"
+    val srv = new Server(spark, () => CertStore.read(spark, dir), dir,
+      port = 0, now = () => ts("2024-01-15 12:00:00"), streamPollMs = 50).start()
+    def at(path: String) = client.send(
+      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${srv.boundPort}$path")).GET().build(),
+      HttpResponse.BodyHandlers.ofString())
+    try {
+      val dom = at("/domain/x")
+      assert(dom.statusCode() == 200 && dom.body() == "[]", dom.body())
+      val size = at("/size")
+      assert(size.statusCode() == 200 && size.body().contains("\"bytes\":0"), size.body())
+      val resp = client.send(HttpRequest.newBuilder(
+          URI.create(s"http://127.0.0.1:${srv.boundPort}/stream")).GET().build(),
+        HttpResponse.BodyHandlers.ofInputStream())
+      assert(resp.statusCode() == 200)
+      Thread.sleep(300) // the subscriber polls the empty store a few times first
+      val rows = Seq(CertDomain(ts("2024-01-15 10:00:00"), "first.example.com", "example.com",
+        "a" * 64, "CN=CA", "CN=first", Seq("first.example.com"),
+        ts("2024-01-01 00:00:00"), ts("2025-01-01 00:00:00"), "log1"))
+      CertStore.write(rows.toDF(), dir)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      val sb = new StringBuilder
+      val buf = new Array[Byte](8192)
+      val in = resp.body()
+      while (!sb.toString.contains("first.example.com") && System.nanoTime() < deadline) {
+        val n = in.read(buf)
+        if (n > 0) sb.append(new String(buf, 0, n, java.nio.charset.StandardCharsets.UTF_8))
+        else if (n < 0) fail(s"stream closed before the first write arrived:\n$sb")
+      }
+      in.close()
+      assert(sb.toString.contains("first.example.com"), s"no row delivered:\n$sb")
+      assert(!sb.toString.contains("event: error"), sb.toString)
+      assert(at("/domain/first.example.com").body().contains("first.example.com"))
+    } finally srv.stop()
+  }
+
   test("/stream reports a failing poll as an error frame, not a silent close") {
     val calls = new java.util.concurrent.atomic.AtomicInteger(0)
     val srv = new Server(spark, () =>

@@ -14,16 +14,20 @@
 #        default   sf0.01      197 declared queries
 #        default   sf0.001     197
 #        hostile   (generated) 197
-#   5. full Bench at sf0.1 on an OTHERWISE-IDLE machine (~15 min wall;
+#   5. ctbench correctness: the generator/checker self-test, then one
+#      `serve_read` and one `mixed_tail` run through the real ingest and
+#      serving path. Gates on exit code only (a run with any wrong answer
+#      exits 1); its timings are not gated here.
+#   6. full Bench at sf0.1 on an OTHERWISE-IDLE machine (~15 min wall;
 #      concurrent CPU work pollutes timings by ~10%+) — refreshes
 #      bench_full.json, which must then be committed.
 #
-# Logs land in /tmp/{test,verify,parity,bench}_close*.log; the script
+# Logs land in /tmp/{test,verify,parity,ctbench,bench}_close*.log; the script
 # exits non-zero on the first red step.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-echo "== 1/5 sbt test"
+echo "== 1/6 sbt test"
 sbt -batch test > /tmp/test_close.log 2>&1 \
   || { tail -30 /tmp/test_close.log; exit 1; }
 # the literal sbt tally is THE spec count of record (round-10 verdict
@@ -31,17 +35,17 @@ sbt -batch test > /tmp/test_close.log 2>&1 \
 # 264 printed; quote THIS line in the close commit and COVERAGE.md)
 grep -E 'Tests: succeeded' /tmp/test_close.log | tail -1 | tee /tmp/close_tally.txt
 
-echo "== 2/5 PlanAudit (PLANS.md must stay diff-clean)"
+echo "== 2/6 PlanAudit (PLANS.md must stay diff-clean)"
 sbt -batch "runMain graft.PlanAudit /root/testdata/sf0.01" \
   > /tmp/planaudit_close.log 2>&1 || { tail -20 /tmp/planaudit_close.log; exit 1; }
 git diff --quiet PLANS.md \
   || { echo "PLANS.md drifted — review & commit:"; git diff --stat PLANS.md; exit 1; }
 
-echo "== 3/5 HostileGen"
+echo "== 3/6 HostileGen"
 sbt -batch "runMain graft.HostileGen" > /tmp/hg_close.log 2>&1 \
   || { tail -20 /tmp/hg_close.log; exit 1; }
 
-echo "== 4/5 parity matrix (3 legs)"
+echo "== 4/6 parity matrix (3 legs)"
 for run in \
     "default:/root/testdata/sf0.01:/tmp/vclose_001" \
     "default0001:/root/testdata/sf0.001:/tmp/vclose_0001" \
@@ -58,10 +62,19 @@ for run in \
   fi
 done
 
+echo "== 5/6 ctbench correctness (self-test, serve_read, mixed_tail)"
+python3 ctbench/run.py --self-test > /tmp/ctbench_close_selftest.log 2>&1 \
+  || { echo "ctbench self-test FAILED"; tail -20 /tmp/ctbench_close_selftest.log; exit 1; }
+for wl in serve_read mixed_tail; do
+  python3 ctbench/run.py --workload "$wl" --seed 1 > "/tmp/ctbench_close_$wl.log" 2>&1 \
+    || { echo "ctbench $wl FAILED"; grep -E '^checks|CORRECTNESS|mismatch:|^ctbench' "/tmp/ctbench_close_$wl.log" | tail -8; exit 1; }
+  echo "ctbench $wl: $(grep '^checks' "/tmp/ctbench_close_$wl.log")"
+done
+
 if [[ "${1:-}" == "--skip-bench" ]]; then
-  echo "== 5/5 bench SKIPPED (--skip-bench)"; exit 0
+  echo "== 6/6 bench SKIPPED (--skip-bench)"; exit 0
 fi
-echo "== 5/5 full bench at sf0.1 (machine must be otherwise idle)"
+echo "== 6/6 full bench at sf0.1 (machine must be otherwise idle)"
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
   sbt -batch "runMain graft.Bench" \
   > /tmp/bench_close.log 2>&1 || { tail -20 /tmp/bench_close.log; exit 1; }
