@@ -430,8 +430,8 @@ object ScaleProbe {
     // the append's component merge at large cluster tables (r17): both
     // arms of mergeAppendClusters priced on a SYNTHESIZED prior-epoch
     // cluster table (200k·n rows in 4-doc clusters, written once per
-    // scale and reused — the first arm's pass1 carries the one-time
-    // fixture write; read pass2) against a serving-sized 100-pair
+    // scale, reused by both arms and deleted after the scale's probes —
+    // the first arm's pass1 carries the fixture write; read pass2) against a serving-sized 100-pair
     // increment touching ≤100 clusters. flat = the pre-r17 shape
     // (whole table as star edges into components(): driver collect
     // below maxDriverEdges, distributed min-label rounds above — the
@@ -463,9 +463,9 @@ object ScaleProbe {
       val scratch = new java.io.File(storesDirFor(d),
         "components_build_scratch").getAbsolutePath
       graft.operators.Dedup.rmdir(new java.io.File(scratch))
-      graft.queries.PipelineQueries.buildComponentsArtifactFrom(
+      graft.operators.ComponentsArtifact.buildComponentsArtifactFrom(
         s, Tables.documents(s, d), scratch)
-      s.read.parquet(graft.queries.PipelineQueries.clustersDirOf(scratch))
+      s.read.parquet(graft.operators.ComponentsArtifact.clustersDirOf(scratch))
     }),
     // the docstring's scale rule applied: p = log2(nVectors / target)
     // holds bucket occupancy ~constant (target ≈ 50 here, the base
@@ -516,9 +516,9 @@ object ScaleProbe {
         .withColumn("doc_id", col("doc_id") + 200000000L + seq * 10000L)
       // dev A/B knob for the candidate-pruned verify (the idx8 decision
       // probe rides this entry on the PROBE_HOT corpora)
-      graft.queries.PipelineQueries.appendComponentsArtifact(s, scratch, inc,
+      graft.operators.ComponentsArtifact.appendComponentsArtifact(s, scratch, inc,
         pruneVerify = sys.env.getOrElse("SPARK_GRAFT_PRUNE_VERIFY", "0") == "1")
-      s.read.parquet(graft.queries.PipelineQueries.clustersDirOf(scratch))
+      s.read.parquet(graft.operators.ComponentsArtifact.clustersDirOf(scratch))
     }),
     // NARROW append at ×n (round-10 verdict ask #3): a 5-doc increment
     // truncated to its first 5 tokens (3 shingles per doc, ≤15 distinct)
@@ -540,8 +540,8 @@ object ScaleProbe {
         .withColumn("text",
           array_join(slice(split(col("text"), " "), 1, 5), " "))
         .withColumn("doc_id", col("doc_id") + 300000000L + seq * 10000L)
-      graft.queries.PipelineQueries.appendComponentsArtifact(s, scratch, inc)
-      s.read.parquet(graft.queries.PipelineQueries.clustersDirOf(scratch))
+      graft.operators.ComponentsArtifact.appendComponentsArtifact(s, scratch, inc)
+      s.read.parquet(graft.operators.ComponentsArtifact.clustersDirOf(scratch))
     }),
     // NARROW append against a HIGH-BUCKET-COUNT (4096) artifact at ×n
     // (round-15): the geometry where the append's per-bucket terms
@@ -562,8 +562,8 @@ object ScaleProbe {
         .withColumn("text",
           array_join(slice(split(col("text"), " "), 1, 5), " "))
         .withColumn("doc_id", col("doc_id") + base)
-      graft.queries.PipelineQueries.appendComponentsArtifact(s, scratch, inc)
-      s.read.parquet(graft.queries.PipelineQueries.clustersDirOf(scratch))
+      graft.operators.ComponentsArtifact.appendComponentsArtifact(s, scratch, inc)
+      s.read.parquet(graft.operators.ComponentsArtifact.clustersDirOf(scratch))
     }),
     // drift-triggered COMPACTION at ×n (round-10 verdict ask #3): the
     // full re-derive + staged generation flip, the one maintenance path
@@ -574,9 +574,9 @@ object ScaleProbe {
     // the steady state), corpus-of-record = the ×n docs themselves.
     P("artifact_compact_full", 100, (s, d, n) => {
       val scratch = compactScratchOf(s, d)
-      graft.queries.PipelineQueries.compactComponentsArtifact(
+      graft.operators.ComponentsArtifact.compactComponentsArtifact(
         s, scratch, Tables.documents(s, d))
-      s.read.parquet(graft.queries.PipelineQueries.clustersDirOf(scratch))
+      s.read.parquet(graft.operators.ComponentsArtifact.clustersDirOf(scratch))
     }),
     // COMPACTION at 4096 buckets (round 16 — the last unmeasured
     // 4096-dir surface): the narrow-append curve proved the
@@ -593,14 +593,14 @@ object ScaleProbe {
       val marker = new java.io.File(dir, s"_HBC_COMPLETE_$Version")
       if (!marker.exists()) {
         graft.operators.Dedup.rmdir(new java.io.File(dir))
-        graft.queries.PipelineQueries.buildComponentsArtifactFrom(
+        graft.operators.ComponentsArtifact.buildComponentsArtifactFrom(
           s, Tables.documents(s, d), dir, 4096)
         java.nio.file.Files.write(marker.toPath, Array.empty[Byte])
         ()
       }
-      graft.queries.PipelineQueries.compactComponentsArtifact(
+      graft.operators.ComponentsArtifact.compactComponentsArtifact(
         s, dir, Tables.documents(s, d))
-      s.read.parquet(graft.queries.PipelineQueries.clustersDirOf(dir))
+      s.read.parquet(graft.operators.ComponentsArtifact.clustersDirOf(dir))
     }),
     // the at-rest store's SERVING path under the scale rule: the store is
     // written once per scale with p = log2(16n) (cell occupancy held
@@ -979,7 +979,7 @@ object ScaleProbe {
     val marker = new java.io.File(dir, s"_HB_COMPLETE_$Version")
     if (!marker.exists()) {
       graft.operators.Dedup.rmdir(new java.io.File(dir))
-      graft.queries.PipelineQueries.buildComponentsArtifactFrom(
+      graft.operators.ComponentsArtifact.buildComponentsArtifactFrom(
         s, Tables.documents(s, d), dir, 4096)
       java.nio.file.Files.write(marker.toPath, Array.empty[Byte])
       ()
@@ -1191,8 +1191,7 @@ object ScaleProbe {
   private def mergeProbe(s: SparkSession, n: Int,
       locality: Boolean): DataFrame = {
     val rows = 200000L * n
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_probe_mergeclusters_x$n").getAbsolutePath
+    val dir = mergeFixtureDir(n)
     if (!new java.io.File(dir, "_SUCCESS").exists) {
       s.range(rows).select(col("id").as("doc_id"),
         (col("id") - pmod(col("id"), lit(4L))).as("cluster_id"))
@@ -1205,10 +1204,21 @@ object ScaleProbe {
     val key = "graft.components.mergeLocalityMinEdges"
     val prev = s.conf.getOption(key)
     s.conf.set(key, if (locality) "0" else Long.MaxValue.toString)
-    try graft.queries.PipelineQueries.mergeAppendClusters(
+    try graft.operators.ComponentsArtifact.mergeAppendClusters(
       s, oldClusters, newPairs, nNew = 100L, nPairsPrior = rows / 4 * 3)
     finally prev.fold(s.conf.unset(key))(s.conf.set(key, _))
   }
+
+  /** The append-merge probes' cluster-table fixture for scale `n`. The
+    * version token names the fixture's shape (row count per scale,
+    * 4-doc clusters labelled by their min doc_id): bump it whenever
+    * [[mergeProbe]] writes a different table, so a fixture left by an
+    * older binary is never reused. [[main]] deletes it once the scale's
+    * probes have run. */
+  private val MergeFixtureVersion = "m1"
+  private def mergeFixtureDir(n: Int): String =
+    new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft_probe_mergeclusters_${MergeFixtureVersion}_x$n").getAbsolutePath
 
   private def once(build: () => DataFrame): Double = {
     val t0 = System.nanoTime()
@@ -1279,6 +1289,7 @@ object ScaleProbe {
             Option(e.getMessage).getOrElse("").replaceAll("[\"\\\\\n\r]", " ").take(200)}"}""")
         }
       }
+      graft.operators.Dedup.rmdir(new java.io.File(mergeFixtureDir(n)))
     }
     spark.stop()
   }

@@ -66,7 +66,7 @@ object CtDemo {
     CtQueries.stats(table, Date.valueOf("2024-01-15")).show(false)
     println(s"-- count: ${table.count()}")
     println("-- /stream tail from the start of 2024-01-15")
-    CtQueries.streamTailAfter(table, Timestamp.valueOf("2024-01-15 00:00:00"), "", "", "")
+    CtQueries.streamTailAfter(table, Some((Timestamp.valueOf("2024-01-15 00:00:00"), "", "", "")))
       .show(false)
 
     spark.stop()

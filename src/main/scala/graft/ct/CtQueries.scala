@@ -108,9 +108,10 @@ object CtQueries {
       max(col("ts")).as("last_seen"))
   }
 
-  /** GET /stream poll step (app.py:258-262), keyset-paginated: resume
-    * STRICTLY after the last emitted (ts, fingerprint, domain, log_name)
-    * key. Deviation (SURVEY §2.10 ST4): the reference's `ts > last LIMIT
+  /** GET /stream poll step (app.py:258-262), keyset-paginated: the next
+    * `batch` rows in (ts, fingerprint, domain, log_name) order, resuming
+    * STRICTLY after the `after` key — `None` starts from the first row.
+    * Deviation (SURVEY §2.10 ST4): the reference's `ts > last LIMIT
     * 100` loses rows sharing the boundary second. Unlike a bare `ts >=`
     * cursor with client-side dedup, this makes progress even when
     * more than one batch of rows shares a single timestamp (the normal
@@ -122,19 +123,21 @@ object CtQueries {
     * The redundant `ts >= last` conjunct is pushed into the Parquet scan
     * (partition pruning + row-group min/max) — the tuple OR alone would
     * not prune. */
-  def streamTailAfter(certDomains: DataFrame, lastTs: Timestamp,
-      lastFingerprint: String, lastDomain: String, lastLogName: String,
+  def streamTailAfter(certDomains: DataFrame,
+      after: Option[(Timestamp, String, String, String)],
       batch: Int = 100): DataFrame = {
-    val afterKey =
-      col("ts") > lit(lastTs) ||
-        (col("ts") === lit(lastTs) &&
-          (col("fingerprint") > lit(lastFingerprint) ||
-            (col("fingerprint") === lit(lastFingerprint) &&
-              (col("domain") > lit(lastDomain) ||
-                (col("domain") === lit(lastDomain) && col("log_name") > lit(lastLogName))))))
-    monthBound(certDomains, Some(lastTs), None)
-      .filter(col("ts") >= lit(lastTs) && afterKey)
-      .orderBy(col("ts"), col("fingerprint"), col("domain"), col("log_name"))
+    val rest = after.fold(certDomains) { case (lastTs, lastFingerprint, lastDomain, lastLogName) =>
+      val afterKey =
+        col("ts") > lit(lastTs) ||
+          (col("ts") === lit(lastTs) &&
+            (col("fingerprint") > lit(lastFingerprint) ||
+              (col("fingerprint") === lit(lastFingerprint) &&
+                (col("domain") > lit(lastDomain) ||
+                  (col("domain") === lit(lastDomain) && col("log_name") > lit(lastLogName))))))
+      monthBound(certDomains, Some(lastTs), None)
+        .filter(col("ts") >= lit(lastTs) && afterKey)
+    }
+    rest.orderBy(col("ts"), col("fingerprint"), col("domain"), col("log_name"))
       .limit(batch)
   }
 }

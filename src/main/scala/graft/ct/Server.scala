@@ -91,31 +91,23 @@ class Server(spark: SparkSession, table: () => DataFrame, storePath: String,
     ex.close()
   }
 
-  /** Client identity for ACCESS CONTROL: behind a trusted proxy the FIRST
-    * X-Forwarded-For hop (reference parity, app.py:47 — assumes the proxy
-    * REPLACES the header), otherwise the socket address. */
-  private def clientIpForAcl(ex: HttpExchange): String = {
+  /** The client's address hops: behind a trusted proxy the
+    * X-Forwarded-For list (socket address when absent), otherwise the
+    * socket address alone. ACCESS CONTROL takes the FIRST hop (reference
+    * parity, app.py:47 — assumes the proxy REPLACES the header); RATE
+    * LIMITING takes the LAST — the one value the proxy itself appended,
+    * which a client cannot forge. Keying abuse control on the first hop
+    * would let any client mint a fresh window per request (and grow the
+    * window map unboundedly) by randomizing the header. Never empty:
+    * the split keeps empty hops, so a header of bare commas is an
+    * unlisted client, not a failed request. */
+  private def clientHops(ex: HttpExchange): Seq[String] = {
+    val socket = ex.getRemoteAddress.getAddress.getHostAddress
     val raw =
       if (trustProxy)
-        Option(ex.getRequestHeaders.getFirst("X-Forwarded-For"))
-          .getOrElse(ex.getRemoteAddress.getAddress.getHostAddress)
-      else ex.getRemoteAddress.getAddress.getHostAddress
-    raw.split(",")(0).trim
-  }
-
-  /** Client identity for RATE LIMITING: behind a trusted proxy the LAST
-    * X-Forwarded-For hop — the one value the proxy itself appended, which
-    * a client cannot forge. Keying abuse control on the first hop would
-    * let any client mint a fresh window per request (and grow the window
-    * map unboundedly) by randomizing the header. */
-  private def clientIpForLimit(ex: HttpExchange): String = {
-    val raw =
-      if (trustProxy)
-        Option(ex.getRequestHeaders.getFirst("X-Forwarded-For"))
-          .getOrElse(ex.getRemoteAddress.getAddress.getHostAddress)
-      else ex.getRemoteAddress.getAddress.getHostAddress
-    val hops = raw.split(",")
-    hops(hops.length - 1).trim
+        Option(ex.getRequestHeaders.getFirst("X-Forwarded-For")).getOrElse(socket)
+      else socket
+    raw.split(",", -1).map(_.trim).toSeq
   }
 
   /** P13 allowlist (reference app.py:27-53): if a non-empty allowlist is
@@ -124,7 +116,7 @@ class Server(spark: SparkSession, table: () => DataFrame, storePath: String,
     * (`trustProxy`); otherwise the socket address is authoritative. */
   private def ipAllowed(ex: HttpExchange): Boolean = allowedIps match {
     case None => true
-    case Some(ips) => ips.contains(clientIpForAcl(ex))
+    case Some(ips) => ips.contains(clientHops(ex).head)
   }
 
   /** Fixed-window per-IP rate limiter (reference flask-limiter "100 per
@@ -136,7 +128,7 @@ class Server(spark: SparkSession, table: () => DataFrame, storePath: String,
   private def rateLimited(ex: HttpExchange): Boolean = rateLimitPerMin match {
     case None => false
     case Some(limit) =>
-      val ip = clientIpForLimit(ex)
+      val ip = clientHops(ex).last
       val minute = now().getTime / 60000L
       rateWindows.keySet.removeIf(k => k._2 < minute - 1)
       val n = rateWindows.computeIfAbsent((ip, minute),
@@ -210,16 +202,8 @@ class Server(spark: SparkSession, table: () => DataFrame, storePath: String,
             val out = ex.getResponseBody
             var cursor: Option[(Timestamp, String, String, String)] = None
             while (streaming) {
-              val base = cursor match {
-                case Some((t, f, dm, lg)) =>
-                  CtQueries.streamTailAfter(table(), t, f, dm, lg, streamBatch)
-                case None =>
-                  table().orderBy(org.apache.spark.sql.functions.col("ts"),
-                    org.apache.spark.sql.functions.col("fingerprint"),
-                    org.apache.spark.sql.functions.col("domain"),
-                    org.apache.spark.sql.functions.col("log_name")).limit(streamBatch)
-              }
-              val rows = base.collect() // sorted (ts, fingerprint, domain, log_name)
+              // sorted (ts, fingerprint, domain, log_name)
+              val rows = CtQueries.streamTailAfter(table(), cursor, streamBatch).collect()
               if (rows.nonEmpty) {
                 rows.foreach { r =>
                   out.write(s"data: ${jval(r.toSeq)}\n\n".getBytes(UTF_8))

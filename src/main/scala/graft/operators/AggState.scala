@@ -50,70 +50,33 @@ object AggState {
     state.select(col("day"), col("event_type"), col("n"),
       col("sum_dec").cast("double").as("sum_value"))
 
-  /** Live version directory of the state table rooted at `path`, or None
-    * before the first committed fold. The `_CURRENT` pointer file names
-    * the committed snapshot (the EmbeddingStore.recluster pattern).
-    * Pointer resolution rides [[FsPointers]] (Hadoop FS API), so a
-    * state table rooted on the cluster FS — the production home of a
-    * foreachBatch sink's state — resolves exactly like a local one. */
-  def currentStateDir(path: String): Option[String] =
-    FsPointers.read(path, "_CURRENT").map(v => s"$path/$v")
-
   /** The committed state (throws before the first fold — callers gate on
-    * having run at least one [[maintainParquet]]). */
+    * having run at least one [[maintainParquet]]). The pointer resolves
+    * through the Hadoop FS API ([[FsPointers.currentVersion]]), so a
+    * state table rooted on the cluster FS — the production home of a
+    * foreachBatch sink's state — reads exactly like a local one. */
   def readState(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(currentStateDir(path).getOrElse(
+    spark.read.parquet(FsPointers.currentVersion(path).getOrElse(
       sys.error(s"no committed state under $path")))
 
   /** Fold one micro-batch's raw events into the versioned parquet state
-    * table at `path` (created on first call).
-    *
-    * Layout: `path/b<batchId>/` immutable snapshots + `path/_CURRENT`
-    * pointing at the committed one. Each fold reads the committed
-    * snapshot, merges the delta, writes a NEW snapshot directory, then
-    * atomically swaps the pointer — readers never observe a partial
-    * view, and the read never races its own target's deletion (the
-    * reason the in-place-overwrite formulation needed a full
-    * materialize-before-write).
+    * table at `path` (created on first call) through the shared
+    * [[FsPointers.foldVersion]]: `b<batchId>/` snapshots behind an
+    * atomically swapped `_CURRENT` pointer, so readers never observe a
+    * partial view and the read never races its own target's deletion.
     *
     * The version id is the streaming engine's batchId, which makes the
-    * fold IDEMPOTENT under micro-batch replay: foreachBatch re-delivers
-    * a batch whose run crashed before the checkpoint commit, and a
-    * non-idempotent sum state would double-count it — here a replayed
-    * (batchId ≤ committed) delta is skipped, turning the sink's
-    * at-least-once delivery into an exactly-once fold. (Contrast
-    * stream_kmv's sketch state, which needs no fence: KMV union is a set
-    * union, idempotent by algebra.) A crash AFTER the snapshot write but
-    * BEFORE the pointer swap leaves an orphan directory that the retry
-    * overwrites; stale snapshots older than the previous one are pruned.
-    * Single-writer by contract — exactly what a foreachBatch sink
-    * provides (one query's micro-batches run serially). */
+    * fold IDEMPOTENT under micro-batch replay: a non-idempotent sum
+    * state would double-count a re-delivered batch, and the fold's
+    * replay fence skips any batchId ≤ the committed one — turning the
+    * sink's at-least-once delivery into an exactly-once fold. */
   def maintainParquet(spark: org.apache.spark.sql.SparkSession,
       path: String, increment: DataFrame, batchId: Long): Unit = {
-    // everything below rides the Hadoop FS API ([[FsPointers]] + one
-    // FileSystem for the prune listing): a java.io.File formulation
-    // could not see a cluster-FS state root at all — readers would pin
-    // to "no committed state" while folds wrote local orphans
-    val committed = FsPointers.read(path, "_CURRENT")
-    val committedId = committed.map(_.stripPrefix("b").toLong)
-    if (committedId.exists(_ >= batchId)) return // replayed batch: already folded
-    val delta = dailyState(increment)
-    val merged = committed match {
-      case Some(dir) => merge(spark.read.parquet(s"$path/$dir"), delta)
-      case None => delta
+    FsPointers.foldVersion(spark, path, batchId) { (committed, out) =>
+      val delta = dailyState(increment)
+      committed.fold(delta)(merge(_, delta))
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(out)
     }
-    val newDir = s"b$batchId"
-    merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/$newDir")
-    FsPointers.publish(path, "_CURRENT", newDir)
-    // prune snapshots older than the immediately-previous one (kept for
-    // readers that resolved _CURRENT just before the swap)
-    val keep = Set(newDir) ++ committed
-    val rootP = new org.apache.hadoop.fs.Path(path)
-    val fs = rootP.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.listStatus(rootP)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("b") &&
-        !keep.contains(st.getPath.getName))
-      .foreach(st => FsPointers.deleteDir(st.getPath.toString))
+    ()
   }
 }

@@ -20,10 +20,10 @@ import org.apache.spark.sql.functions._
   * Accounting meta carries the partition count (every layout-sensitive
   * read derives its pruning from meta, never from a constant), the
   * torn-append row token, and the SAME corpus-of-record receipt as the
-  * band index ([[Dedup.docReceipt]] folded over build + appends) — so
-  * a serving lookup can require, for the price of two one-row meta
-  * reads, that the text store and the band index describe the SAME
-  * corpus instead of silently fetching stale text.
+  * band index ([[StoreManifest.docReceipt]] folded over build +
+  * appends) — so a serving lookup can require, for the price of two
+  * one-row meta reads, that the text store and the band index describe
+  * the SAME corpus instead of silently fetching stale text.
   *
   * Failure-window waiver (the per-store discipline): append-only rows
   * with scan/point readers, same as the band index — a reader
@@ -68,44 +68,40 @@ object CorpusStore {
       .parquet(rowsDirOf(dir))
   }
 
+  /** Write meta with the row dirs' listing manifest as it is on disk
+    * now, so the next append validates against what this write left. */
   private def writeMeta(s: SparkSession, dir: String,
       m: CorpusStoreMeta): Unit = {
-    s.range(1).select(lit(Layout).as("layout"),
-        lit(m.nParts).as("n_parts"), lit(m.nDocs).as("n_docs"),
-        lit(m.docXor).as("doc_xor"),
-        lit(m.nFiles).as("n_files"), lit(m.nBytes).as("n_bytes"),
-        lit("xxhash64_v1").as("receipt_kind"))
-      .coalesce(1).write.mode("overwrite").parquet(metaDirOf(dir))
-    ()
-  }
-
-  /** The row dirs' listing manifest (see [[StoreManifest]]). */
-  private def manifest(s: SparkSession, dir: String): (Long, Long) = {
-    val root = new org.apache.hadoop.fs.Path(rowsDirOf(dir))
-    StoreManifest.list(root.getFileSystem(s.sessionState.newHadoopConf()), root)
+    val l = StoreManifest.list(s, rowsDirOf(dir))
+    StoreManifest.writeMeta(s, metaDirOf(dir), lit(Layout).as("layout"),
+      lit(m.nParts).as("n_parts"), lit(m.nDocs).as("n_docs"),
+      lit(m.docXor).as("doc_xor"),
+      lit(l.files).as("n_files"), lit(l.bytes).as("n_bytes"),
+      lit("xxhash64_v1").as("receipt_kind"))
   }
 
   private[graft] def readMeta(s: SparkSession, dir: String): CorpusStoreMeta = {
-    val p = new org.apache.hadoop.fs.Path(metaDirOf(dir))
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    require(fs.exists(p),
+    val r = StoreManifest.readMeta(s, metaDirOf(dir),
       s"no $Layout corpus store at $dir: the dir holds a legacy dump or " +
         "nothing at all — build it with CorpusStore.write (idp-partitioned " +
         "layout with the partition count and integrity tokens in meta)")
-    val r = s.read.parquet(metaDirOf(dir)).head()
     CorpusStoreMeta(r.getAs[Int]("n_parts"), r.getAs[Long]("n_docs"),
       r.getAs[Long]("doc_xor"), r.getAs[Long]("n_files"),
       r.getAs[Long]("n_bytes"))
   }
 
-  /** Parquet row count from row-group footers (aggregate pushdown — no
-    * text pages read), scoped so the session conf is untouched. */
-  private def footerCount(s: SparkSession, dir: String): Long = {
-    val key = "spark.sql.parquet.aggregatePushdown"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "true")
-    try readRows(s, dir).select(col("doc_id"), col("idp")).count()
-    finally prev.fold(s.conf.unset(key))(s.conf.set(key, _))
+  /** The torn-append check against meta's listing manifest (cst2): a
+    * tear leaves whole committed files beyond meta, so (file count,
+    * bytes) detects it for one parallel listing — the footer row-count
+    * pass was O(store files) per append (measured 7-9 s on a 9k-file
+    * store), a corpus-size tax on an increment-bounded operation. */
+  private def requireUntorn(s: SparkSession, dir: String,
+      meta: CorpusStoreMeta, before: String): Unit = {
+    StoreManifest.requireUntorn(s, dir,
+      Seq(StoreManifest.Recorded("store", rowsDirOf(dir), meta.nFiles, meta.nBytes)),
+      "a prior append or compaction crashed between its data write and " +
+        s"its meta rewrite; rebuild with CorpusStore.write before $before")
+    ()
   }
 
   /** Cold-build the store from `docs` (doc_id, text — extra columns are
@@ -116,19 +112,18 @@ object CorpusStore {
   def write(docs: DataFrame, dir: String, nParts: Int = DefaultParts): Unit = {
     require(nParts > 0, s"nParts must be positive, got $nParts")
     val s = docs.sparkSession
-    val Array(agg) = docs.agg(count(lit(1)), Dedup.docReceipt).collect()
+    val (nDocs, docXor) = StoreManifest.receiptOf(docs)
     docs.select(col("doc_id"), col("text"))
       .withColumn("idp", idPart(col("doc_id"), nParts))
       .repartition(col("idp"))
       .sortWithinPartitions("idp", "doc_id")
       .write.mode("overwrite").partitionBy("idp").parquet(rowsDirOf(dir))
-    val nRows = footerCount(s, dir)
-    require(nRows == agg.getLong(0),
-      s"corpus store write at $dir landed $nRows rows for ${agg.getLong(0)} " +
+    val nRows = StoreManifest.footerCount(
+      readRows(s, dir).select(col("doc_id"), col("idp")))
+    require(nRows == nDocs,
+      s"corpus store write at $dir landed $nRows rows for $nDocs " +
         "input docs — the write must be row-preserving; retry the build")
-    val (nf, nb) = manifest(s, dir)
-    writeMeta(s, dir,
-      CorpusStoreMeta(nParts, agg.getLong(0), agg.getLong(1), nf, nb))
+    writeMeta(s, dir, CorpusStoreMeta(nParts, nDocs, docXor))
   }
 
   /** Append an increment (disjoint doc_ids — same contract as
@@ -139,27 +134,15 @@ object CorpusStore {
   def append(increment: DataFrame, dir: String): Unit = {
     val s = increment.sparkSession
     val meta = readMeta(s, dir)
-    // torn-append validation by LISTING MANIFEST (cst2): a tear leaves
-    // whole committed files beyond meta, so (file count, bytes) detects
-    // it for one parallel listing — the footer row-count pass was
-    // O(store files) per append (measured 7-9 s on a 9k-file store), a
-    // corpus-size tax on an increment-bounded operation
-    val (haveFiles, haveBytes) = manifest(s, dir)
-    require(haveFiles == meta.nFiles && haveBytes == meta.nBytes,
-      s"torn append detected at $dir: store holds $haveFiles files / " +
-        s"$haveBytes bytes but meta records ${meta.nFiles} / " +
-        s"${meta.nBytes} — a prior append or compaction crashed between " +
-        "its data write and its meta rewrite; rebuild with " +
-        "CorpusStore.write before appending again")
-    val Array(agg) = increment.agg(count(lit(1)), Dedup.docReceipt).collect()
+    requireUntorn(s, dir, meta, "appending again")
+    val (incDocs, incXor) = StoreManifest.receiptOf(increment)
     increment.select(col("doc_id"), col("text"))
       .withColumn("idp", idPart(col("doc_id"), meta.nParts))
       .repartition(col("idp"))
       .sortWithinPartitions("idp", "doc_id")
       .write.mode("append").partitionBy("idp").parquet(rowsDirOf(dir))
-    val (nf, nb) = manifest(s, dir)
-    writeMeta(s, dir, meta.copy(nDocs = meta.nDocs + agg.getLong(0),
-      docXor = meta.docXor ^ agg.getLong(1), nFiles = nf, nBytes = nb))
+    writeMeta(s, dir, meta.copy(nDocs = meta.nDocs + incDocs,
+      docXor = meta.docXor ^ incXor))
   }
 
   /** Full scan of the store as (doc_id, text) — the rebuild/backfill
@@ -258,12 +241,8 @@ object CorpusStore {
     // same cheap listing-manifest tear check as the append path — a
     // whole-store footer pass here was the second corpus-size term the
     // round-14 probe surfaced (the first was the append's)
-    val (haveFiles, haveBytes) = manifest(spark, dir)
-    require(haveFiles == meta.nFiles && haveBytes == meta.nBytes,
-      s"torn append detected at $dir: store holds $haveFiles files / " +
-        s"$haveBytes bytes but meta records ${meta.nFiles} / " +
-        s"${meta.nBytes} — rebuild with CorpusStore.write before " +
-        "compacting (a compaction would bake the tear in)")
+    requireUntorn(spark, dir, meta,
+      "compacting (a compaction would bake the tear in)")
     val root = new org.apache.hadoop.fs.Path(rowsDirOf(dir))
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // row preservation is validated INSIDE the kernel, scoped to the
@@ -274,10 +253,7 @@ object CorpusStore {
     // the rewrite changed the file layout: re-record the manifest so
     // the next append's validation sees the compacted state (a crash
     // before this write IS the torn state the next append reports)
-    if (parts.nonEmpty) {
-      val (nf, nb) = manifest(spark, dir)
-      writeMeta(spark, dir, meta.copy(nFiles = nf, nBytes = nb))
-    }
+    if (parts.nonEmpty) writeMeta(spark, dir, meta)
     parts
   }
 
@@ -285,13 +261,7 @@ object CorpusStore {
     * history? Bounded aggregate vs meta's count + receipt — NOT on the
     * query path (it scans the corpus, the cost the store avoids). */
   def verifyReceipt(corpus: DataFrame, dir: String): Unit = {
-    val s = corpus.sparkSession
-    val meta = readMeta(s, dir)
-    val Array(agg) = corpus.agg(count(lit(1)), Dedup.docReceipt).collect()
-    require(agg.getLong(0) == meta.nDocs && agg.getLong(1) == meta.docXor,
-      s"corpus-of-record mismatch at $dir: supplied corpus has " +
-        s"${agg.getLong(0)} docs / receipt ${agg.getLong(1)} but meta " +
-        s"records ${meta.nDocs} / ${meta.docXor} — the store differs from " +
-        "the corpus (missing docs, swapped ids or altered text)")
+    val meta = readMeta(corpus.sparkSession, dir)
+    StoreManifest.requireReceipt(corpus, dir, meta.nDocs, Some(meta.docXor))
   }
 }

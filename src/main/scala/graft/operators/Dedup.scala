@@ -266,20 +266,11 @@ object Dedup {
   // of scanning the full corpus index — the MergeTree sparse-index
   // analog (reference clickhouse/init.sql:18) applied to the SECOND
   // persisted incremental-dedup index, same remedy the shingle index
-  // proved (_idx3 → _idx6 lineage in PipelineQueries). The ×100 probe
+  // proved (_idx3 → _idx6 lineage in ComponentsArtifact). The ×100 probe
   // measured the unbucketed layout's linear corpus-scan term at
   // 2.1/2.4/4.9 s across ×1/×10/×100; the pruned read's corpus-side
   // cost tracks the touched buckets, not the corpus.
   // --------------------------------------------------------------------
-
-  /** Corpus-of-record receipt shared by the persisted index family
-    * (the components/shingle artifact and the band index): xor of one
-    * 64-bit hash per (doc_id, text) row — commutative and
-    * append-foldable, collision-hard to ~2⁻⁶⁴, text-tampering visible.
-    * ONE definition so the stores can never drift on receipt semantics
-    * (round-12 verdict ask #6). */
-  private[graft] def docReceipt: Column =
-    coalesce(expr("bit_xor(xxhash64(doc_id, text))"), lit(0L))
 
   /** Layout version of the persisted band index — IN THE PATH (the
     * bands/meta subdir names), so a version bump can never half-reuse a
@@ -298,7 +289,7 @@ object Dedup {
   private[graft] val BandIndexLayout = "bidx3"
 
   /** Default bucket count for NEW band indexes (the same local[32]
-    * economics as PipelineQueries.ShingleBuckets — at real 100 TB the
+    * economics as ComponentsArtifact.ShingleBuckets — at real 100 TB the
     * layout carries more buckets; the count is a PER-INDEX property
     * read from meta, never assumed from this constant). */
   private[graft] val BandIndexBuckets = 64
@@ -309,7 +300,7 @@ object Dedup {
     * the pmod layout (every layout-sensitive read derives its pruning
     * from THIS value), `nDocs`/`nBandRows` are the torn-append
     * integrity tokens, `docXor` is the corpus-of-record receipt
-    * ([[docReceipt]] folded over build + every append);
+    * ([[StoreManifest.docReceipt]] folded over build + every append);
     * `hotBandCutoff` > 0 means the build wrote the hot-band sidecar at
     * that document-frequency cutoff and lookups must anti-join it
     * (-1 = unguarded index, no sidecar); `nFiles`/`nBytes` are the
@@ -339,40 +330,45 @@ object Dedup {
       .parquet(bandsDirOf(dir))
   }
 
+  /** Write meta with the band dirs' listing manifest as it is on disk
+    * now, so the next append validates against what this write left. */
   private def writeBandMeta(s: org.apache.spark.sql.SparkSession,
       dir: String, m: BandIndexMeta): Unit = {
-    s.range(1).select(lit(BandIndexLayout).as("layout"),
-        lit(m.k).as("k"), lit(m.nBuckets).as("n_buckets"),
-        lit(m.nDocs).as("n_docs"), lit(m.nBandRows).as("n_band_rows"),
-        lit(m.docXor).as("doc_xor"),
-        lit(m.hotBandCutoff).as("hot_band_cutoff"),
-        lit(m.nFiles).as("n_files"), lit(m.nBytes).as("n_bytes"),
-        lit("xxhash64_v1").as("receipt_kind"))
-      .coalesce(1).write.mode("overwrite").parquet(bandMetaDirOf(dir))
-    ()
+    val l = StoreManifest.list(s, bandsDirOf(dir))
+    StoreManifest.writeMeta(s, bandMetaDirOf(dir), lit(BandIndexLayout).as("layout"),
+      lit(m.k).as("k"), lit(m.nBuckets).as("n_buckets"),
+      lit(m.nDocs).as("n_docs"), lit(m.nBandRows).as("n_band_rows"),
+      lit(m.docXor).as("doc_xor"),
+      lit(m.hotBandCutoff).as("hot_band_cutoff"),
+      lit(l.files).as("n_files"), lit(l.bytes).as("n_bytes"),
+      lit("xxhash64_v1").as("receipt_kind"))
   }
 
   private[graft] def readBandIndexMeta(s: org.apache.spark.sql.SparkSession,
       dir: String): BandIndexMeta = {
-    val p = new org.apache.hadoop.fs.Path(bandMetaDirOf(dir))
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    require(fs.exists(p),
+    val r = StoreManifest.readMeta(s, bandMetaDirOf(dir),
       s"no $BandIndexLayout band index at $dir: the dir holds a legacy " +
         "unversioned band-row dump or nothing at all — rebuild it with " +
         "writeBandIndex (bucketed pmod(band_val, n_buckets) layout with " +
         "the bucket count and integrity tokens in meta)")
-    val r = s.read.parquet(bandMetaDirOf(dir)).head()
     BandIndexMeta(r.getAs[Int]("k"), r.getAs[Int]("n_buckets"),
       r.getAs[Long]("n_docs"), r.getAs[Long]("n_band_rows"),
       r.getAs[Long]("doc_xor"), r.getAs[Long]("hot_band_cutoff"),
       r.getAs[Long]("n_files"), r.getAs[Long]("n_bytes"))
   }
 
-  /** The band dirs' listing manifest (see [[StoreManifest]]). */
-  private def bandManifest(s: org.apache.spark.sql.SparkSession,
-      dir: String): (Long, Long) = {
-    val root = new org.apache.hadoop.fs.Path(bandsDirOf(dir))
-    StoreManifest.list(root.getFileSystem(s.sessionState.newHadoopConf()), root)
+  /** The torn-append check against meta's manifest (bidx3): a tear
+    * leaves whole committed files beyond meta, so (file count, bytes)
+    * detects it for one parallel listing — the footer pass was
+    * O(store files) per append (round-14 probe: 7-9 s on a 9k-file
+    * store), a corpus-size tax on an increment-bounded op. */
+  private def requireUntorn(s: org.apache.spark.sql.SparkSession,
+      dir: String, meta: BandIndexMeta, before: String): Unit = {
+    StoreManifest.requireUntorn(s, dir,
+      Seq(StoreManifest.Recorded("index", bandsDirOf(dir), meta.nFiles, meta.nBytes)),
+      "a prior append or compaction crashed between its data write and " +
+        s"its meta rewrite; rebuild with writeBandIndex before $before")
+    ()
   }
 
   /** Cold-build the persisted band index of `docs` at `dir` — written
@@ -410,7 +406,7 @@ object Dedup {
     require(hotBandCutoff.forall(_ > 0),
       s"hotBandCutoff must be positive when set, got $hotBandCutoff")
     val s = docs.sparkSession
-    val Array(agg) = docs.agg(count(lit(1)), docReceipt).collect()
+    val (nDocs, docXor) = StoreManifest.receiptOf(docs)
     // (band_val, doc_id)-sorted within each bucket FROM THE FIRST WRITE:
     // parquet row-group min/max on band_val then skips inside a bucket
     // for point lookups on fresh indexes too, not only after the first
@@ -425,7 +421,7 @@ object Dedup {
       .write.mode("overwrite").partitionBy("bvb").parquet(bandsDirOf(dir))
     // integrity token from the WRITTEN data (footer metadata), so the
     // next append validates against what is actually on disk
-    val nRows = bandRowsFooterCount(s, dir)
+    val nRows = StoreManifest.footerCount(readBandRows(s, dir))
     hotBandCutoff.foreach { cutoff =>
       // one aggregate over the WRITTEN index (bandIndex emits one row
       // per (doc, band_idx), so the row count per (band_idx, band_val)
@@ -437,22 +433,9 @@ object Dedup {
         .select(col("band_idx"), col("band_val"))
         .coalesce(1).write.mode("overwrite").parquet(hotBandsDirOf(dir))
     }
-    val (nf, nb) = bandManifest(s, dir)
     writeBandMeta(s, dir,
-      BandIndexMeta(k, nBuckets, agg.getLong(0), nRows, agg.getLong(1),
-        hotBandCutoff = hotBandCutoff.getOrElse(-1L),
-        nFiles = nf, nBytes = nb))
-  }
-
-  /** Parquet row count from row-group footers (aggregate pushdown — no
-    * data pages read), scoped so the session conf is untouched. */
-  private def bandRowsFooterCount(s: org.apache.spark.sql.SparkSession,
-      dir: String): Long = {
-    val key = "spark.sql.parquet.aggregatePushdown"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "true")
-    try readBandRows(s, dir).count()
-    finally prev.fold(s.conf.unset(key))(s.conf.set(key, _))
+      BandIndexMeta(k, nBuckets, nDocs, nRows, docXor,
+        hotBandCutoff = hotBandCutoff.getOrElse(-1L)))
   }
 
   /** Append an increment's bands into the persisted index. Single-writer
@@ -476,19 +459,8 @@ object Dedup {
   def appendBandIndex(increment: DataFrame, dir: String): Unit = {
     val s = increment.sparkSession
     val meta = readBandIndexMeta(s, dir)
-    // torn-append validation by LISTING MANIFEST, not footer row count
-    // (bidx3): a tear leaves whole committed files beyond meta, so
-    // (file count, bytes) detects it for one parallel listing — the
-    // footer pass was O(store files) per append (round-14 probe: 7-9 s
-    // on a 9k-file store), a corpus-size tax on an increment-bounded op
-    val (haveFiles, haveBytes) = bandManifest(s, dir)
-    require(haveFiles == meta.nFiles && haveBytes == meta.nBytes,
-      s"torn append detected at $dir: index holds $haveFiles files / " +
-        s"$haveBytes bytes but meta records ${meta.nFiles} / " +
-        s"${meta.nBytes} — a prior append or compaction crashed between " +
-        "its data write and its meta rewrite; rebuild with writeBandIndex " +
-        "before appending again")
-    val Array(agg) = increment.agg(count(lit(1)), docReceipt).collect()
+    requireUntorn(s, dir, meta, "appending again")
+    val (incDocs, incXor) = StoreManifest.receiptOf(increment)
     val incBands = bandIndex(increment, meta.k)
       .withColumn("bvb", bandBucket(col("band_val"), meta.nBuckets))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -502,10 +474,8 @@ object Dedup {
       .sortWithinPartitions("bvb", "band_val", "doc_id")
       .write.mode("append").partitionBy("bvb").parquet(bandsDirOf(dir))
     incBands.unpersist(false)
-    val (nf, nb) = bandManifest(s, dir)
-    writeBandMeta(s, dir, meta.copy(nDocs = meta.nDocs + agg.getLong(0),
-      nBandRows = meta.nBandRows + incRows,
-      docXor = meta.docXor ^ agg.getLong(1), nFiles = nf, nBytes = nb))
+    writeBandMeta(s, dir, meta.copy(nDocs = meta.nDocs + incDocs,
+      nBandRows = meta.nBandRows + incRows, docXor = meta.docXor ^ incXor))
   }
 
   /** In-place bucket compaction for the persisted band index — the
@@ -534,12 +504,8 @@ object Dedup {
     val meta = readBandIndexMeta(spark, dir)
     // same cheap listing-manifest tear check as the append path (the
     // whole-index footer pass was a store-size term)
-    val (haveFiles, haveBytes) = bandManifest(spark, dir)
-    require(haveFiles == meta.nFiles && haveBytes == meta.nBytes,
-      s"torn append detected at $dir: index holds $haveFiles files / " +
-        s"$haveBytes bytes but meta records ${meta.nFiles} / " +
-        s"${meta.nBytes} — rebuild with writeBandIndex " +
-        "before compacting (a compaction would bake the tear in)")
+    requireUntorn(spark, dir, meta,
+      "compacting (a compaction would bake the tear in)")
     val root = new org.apache.hadoop.fs.Path(bandsDirOf(dir))
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // row preservation is validated INSIDE the kernel, scoped to the
@@ -579,13 +545,9 @@ object Dedup {
     // index. A crash between the swap and this meta write IS the torn
     // state the next append reports, with rebuild as the recovery (the
     // store's documented derived-data story).
-    if (buckets.nonEmpty || refreshHotBands) {
-      val (nf, nb) = bandManifest(spark, dir)
-      writeBandMeta(spark, dir, meta.copy(
-        hotBandCutoff =
-          if (refreshHotBands) autoDfCutoffFor(meta.nDocs) else meta.hotBandCutoff,
-        nFiles = nf, nBytes = nb))
-    }
+    if (buckets.nonEmpty || refreshHotBands)
+      writeBandMeta(spark, dir, meta.copy(hotBandCutoff =
+        if (refreshHotBands) autoDfCutoffFor(meta.nDocs) else meta.hotBandCutoff))
     buckets
   }
 
@@ -595,15 +557,8 @@ object Dedup {
     * or after a suspected operational mixup; NOT on the query path
     * (it scans the corpus, the exact cost the index exists to avoid). */
   def verifyBandIndexReceipt(corpus: DataFrame, dir: String): Unit = {
-    val s = corpus.sparkSession
-    val meta = readBandIndexMeta(s, dir)
-    val Array(agg) = corpus.agg(count(lit(1)), docReceipt).collect()
-    require(agg.getLong(0) == meta.nDocs && agg.getLong(1) == meta.docXor,
-      s"corpus-of-record mismatch at $dir: supplied corpus has " +
-        s"${agg.getLong(0)} docs / receipt ${agg.getLong(1)} but meta " +
-        s"records ${meta.nDocs} / ${meta.docXor} — the corpus differs " +
-        "from the build+append history (missing docs, swapped ids or " +
-        "altered text)")
+    val meta = readBandIndexMeta(corpus.sparkSession, dir)
+    StoreManifest.requireReceipt(corpus, dir, meta.nDocs, Some(meta.docXor))
   }
 
   /** Broadcast-safety cap for the indexed path's increment-band collect:
@@ -896,7 +851,7 @@ object Dedup {
     * which must recompute the cutoff a cold rebuild WOULD use over the
     * appended corpus (the cutoff grows with n, so append-to-cold
     * equality can break in both directions; see
-    * PipelineQueries.appendComponentsArtifact). */
+    * ComponentsArtifact.appendComponentsArtifact). */
   def autoDfCutoffFor(nDocs: Long): Long = math.max(16L, (nDocs * 0.004).toLong)
 
   /** Document pairs with k-shingle Jaccard ≥ threshold.

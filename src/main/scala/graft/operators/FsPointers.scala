@@ -1,9 +1,12 @@
 package graft.operators
 
 /** Shared pointer-file plumbing for the stores that publish immutable
-  * snapshots behind a one-line pointer (the components artifact's
-  * GEN/CURRENT epochs, [[AggState]]'s `_CURRENT` state versions): read,
-  * atomic replace, and recursive GC — all through the Hadoop FS API, so
+  * snapshots behind a one-line pointer: the components artifact's
+  * GEN/CURRENT epochs ([[ComponentsArtifact]]), the versioned
+  * `b<batchId>` + `_CURRENT` streaming states ([[foldVersion]] — under
+  * [[AggState.maintainParquet]], stream_kmv and stream_heavy_hitters)
+  * and `CertStore`'s `_commit` token: read, atomic replace, the
+  * versioned fold and recursive GC — all through the Hadoop FS API, so
   * an `hdfs://`-rooted store resolves exactly like a local one. A
   * `java.io.File` implementation silently cannot see a cluster FS at
   * all: readers pin to the pre-pointer state forever while writers
@@ -84,5 +87,47 @@ private[graft] object FsPointers {
     val p = new org.apache.hadoop.fs.Path(path)
     val fc = fcFor(p)
     if (fc.util().exists(p)) { fc.delete(p, false); () }
+  }
+
+  /** Live version directory of the versioned state rooted at `root`,
+    * or None before the first committed [[foldVersion]]. */
+  def currentVersion(root: String): Option[String] =
+    read(root, "_CURRENT").map(v => s"$root/$v")
+
+  /** Fold one streaming micro-batch into the versioned state at `root`
+    * (created on first call). Layout: `root/b<batchId>/` immutable
+    * snapshots + `root/_CURRENT` naming the committed one. `write` gets
+    * the committed snapshot (None on the first fold) and the NEW
+    * snapshot dir, and writes the merged state there; the pointer is
+    * then swapped atomically, so readers never observe a partial state
+    * and the fold never reads the dir it overwrites.
+    *
+    * REPLAY FENCE: the version id is the streaming engine's batchId,
+    * and a batch whose id is ≤ the committed one is skipped (returns
+    * false, `write` not called). foreachBatch re-delivers a batch whose
+    * run crashed after the pointer swap but before the checkpoint
+    * commit; re-folding it would double-count a sum state, and would
+    * lazily read and Overwrite-write the SAME snapshot dir (the
+    * self-clobber). A crash AFTER the snapshot write but BEFORE the
+    * swap leaves an orphan dir that the retry overwrites; snapshots
+    * older than the previous one are pruned (the previous one is kept
+    * for readers that resolved the pointer just before the swap).
+    * Single-writer by contract — exactly what a foreachBatch sink
+    * provides (one query's micro-batches run serially). */
+  def foldVersion(spark: org.apache.spark.sql.SparkSession, root: String,
+      batchId: Long)(
+      write: (Option[org.apache.spark.sql.DataFrame], String) => Unit): Boolean = {
+    val committed = read(root, "_CURRENT")
+    if (committed.exists(_.stripPrefix("b").toLong >= batchId)) return false
+    val newDir = s"b$batchId"
+    write(committed.map(v => spark.read.parquet(s"$root/$v")), s"$root/$newDir")
+    publish(root, "_CURRENT", newDir)
+    val keep = Set(newDir) ++ committed
+    val rootP = new org.apache.hadoop.fs.Path(root)
+    fcFor(rootP).util().listStatus(rootP)
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("b") &&
+        !keep.contains(st.getPath.getName))
+      .foreach(st => deleteDir(st.getPath.toString))
+    true
   }
 }

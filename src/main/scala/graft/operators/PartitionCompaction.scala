@@ -101,31 +101,18 @@ object PartitionCompaction {
     // bottleneck at object-storage latencies (10⁵ partitions ×
     // ~50 ms/list ≈ 80 min serial, ~3 min at 32-way — the same reason
     // Spark's own InMemoryFileIndex parallelizes listing past a
-    // threshold). Driver threads, not a Spark job: the work is pure
-    // metadata I/O and a job would pay scheduling for nothing.
-    val partDirs = fs.listStatus(root)
+    // threshold) — [[StoreManifest.listEach]].
+    val partDirs = fs.listStatus(root).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(partCol + "="))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(32, math.max(1, partDirs.length)))
-    val drifted = try {
-      import scala.jdk.CollectionConverters._
-      pool.invokeAll(partDirs.toSeq.map { st =>
-        new java.util.concurrent.Callable[Option[String]] {
-          def call(): Option[String] = {
-            val entries = fs.listStatus(st.getPath)
-            val n = entries.count(f => f.isFile &&
-              !f.getPath.getName.startsWith("_") &&
-              !f.getPath.getName.startsWith("."))
-            if (n > maxFiles && !entries.exists(_.isDirectory))
-              Some(st.getPath.getName.substring(partCol.length + 1))
-            else None
-          }
-        }
-      }.asJava).asScala
-        .flatMap(_.get()) // rethrows any listing failure
-        .flatMap(v => scala.util.Try(v.toLong).toOption) // skip non-numeric dirs
-        .toSeq.sorted
-    } finally pool.shutdown()
+    val drifted = partDirs.zip(StoreManifest.listEach(fs, partDirs.map(_.getPath)))
+      .flatMap { case (st, entries) =>
+        val n = entries.count(f => f.isFile && StoreManifest.visible(f.getPath.getName))
+        if (n > maxFiles && !entries.exists(_.isDirectory))
+          Some(st.getPath.getName.substring(partCol.length + 1))
+        else None
+      }
+      .flatMap(v => scala.util.Try(v.toLong).toOption) // skip non-numeric dirs
+      .sorted
     if (drifted.isEmpty) return Seq.empty
     // one job: (partition, slice) co-partitioned so a partition writes
     // exactly `target` sorted files
@@ -139,13 +126,8 @@ object PartitionCompaction {
       // drift-scoped footer counts (aggregate pushdown — row-group
       // metadata only), original dirs vs the tmp rewrite, BEFORE any
       // swap: a row-moving rewrite aborts with the originals intact
-      val key = "spark.sql.parquet.aggregatePushdown"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "true")
-      val (origRows, newRows) =
-        try (spark.read.parquet(dirs: _*).count(),
-          spark.read.parquet(tmp.toString).count())
-        finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      val origRows = StoreManifest.footerCount(spark.read.parquet(dirs: _*))
+      val newRows = StoreManifest.footerCount(spark.read.parquet(tmp.toString))
       require(newRows == origRows,
         s"compact: rewrite would move row count $origRows -> $newRows " +
           s"across drifted $partCol partitions at $root — aborting before " +

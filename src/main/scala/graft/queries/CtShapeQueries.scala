@@ -168,7 +168,7 @@ object CtShapeQueries {
         col("event_type").as("fingerprint"),
         col("user_id").cast("string").as("domain"),
         col("event_id").cast("string").as("log_name"))
-    val page1 = graft.ct.CtQueries.streamTailAfter(frame, t0, "", "", "", batch = 100)
+    val page1 = graft.ct.CtQueries.streamTailAfter(frame, Some((t0, "", "", "")), batch = 100)
     // the cursor for page 2 = max key of page 1 (the server keeps this
     // from the rows it just emitted; re-derived here from the page itself)
     val rows = page1.collect()
@@ -180,7 +180,7 @@ object CtShapeQueries {
     val page1Local = spark.createDataFrame(
       java.util.Arrays.asList(rows: _*), page1.schema)
     val page2 = graft.ct.CtQueries.streamTailAfter(frame,
-      k.getTimestamp(0), k.getString(1), k.getString(2), k.getString(3), batch = 100)
+      Some((k.getTimestamp(0), k.getString(1), k.getString(2), k.getString(3))), batch = 100)
     page1Local.withColumn("page", lit(1))
       .union(page2.withColumn("page", lit(2)))
       .orderBy(col("page"), col("ts"), col("fingerprint"), col("domain"), col("log_name"))

@@ -527,52 +527,35 @@ object StreamingQueries {
         val delta = batch.toDF()
           .select(to_date(col("ts")).as("day"), mixed(col("user_id")).as("h"))
           .groupBy(col("day")).agg(kmvSketch(col("h"), kk).as("sk"))
-        // versioned snapshot dirs + pointer swap (the AggState pattern):
-        // the fold reads the committed snapshot and writes a NEW one, so
-        // no materialize-before-overwrite pass is needed — the in-place
+        // the shared versioned fold (FsPointers.foldVersion): the fold
+        // reads the committed snapshot and writes a NEW one, so no
+        // materialize-before-overwrite pass is needed — the in-place
         // formulation paid a persist+count of the merged state per batch
         // solely to avoid overwriting the parquet it was lazily reading
-        // (optimization round r16). REPLAY FENCE (ADVICE r16): KMV union
-        // is idempotent set algebra, so RE-FOLDING a delta is harmless —
-        // but a replay after _CURRENT was published and before the
-        // streaming checkpoint committed would make committed == newDir,
-        // and the fold would lazily read and Overwrite-write the SAME
-        // parquet dir (the self-clobber the removed persist+count guard
-        // prevented). The pointer says the state already includes this
-        // batch; skip the fold instead of re-writing it.
-        val committed = graft.operators.FsPointers.read(statePath, "_CURRENT")
-        val newDir = s"b$batchId"
-        if (!committed.contains(newDir)) {
-        val merged = committed match {
-          case Some(dir) =>
-            spark.read.parquet(s"$statePath/$dir").as("s")
-              .join(delta.as("d"), Seq("day"), "full")
-              .select(col("day"),
-                slice(array_sort(array_union(
-                  coalesce(col("s.sk"), array().cast("array<long>")),
-                  coalesce(col("d.sk"), array().cast("array<long>")))),
-                  1, kk).as("sk"))
-          case None => delta
+        // (optimization round r16). KMV union is idempotent set algebra,
+        // so re-folding a delta would be harmless to the VALUE; the
+        // fold's replay fence still matters, because a replay after the
+        // pointer swap would read and Overwrite-write the same snapshot
+        graft.operators.FsPointers.foldVersion(spark, statePath, batchId) {
+          (committed, out) =>
+            committed.fold(delta) { st =>
+              st.as("s").join(delta.as("d"), Seq("day"), "full")
+                .select(col("day"),
+                  slice(array_sort(array_union(
+                    coalesce(col("s.sk"), array().cast("array<long>")),
+                    coalesce(col("d.sk"), array().cast("array<long>")))),
+                    1, kk).as("sk"))
+            }.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(out)
         }
-        merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$statePath/$newDir")
-        graft.operators.FsPointers.publish(statePath, "_CURRENT", newDir)
-        val keep = Set(newDir) ++ committed
-        val rootP = new org.apache.hadoop.fs.Path(statePath)
-        val fs = rootP.getFileSystem(spark.sessionState.newHadoopConf())
-        fs.listStatus(rootP)
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith("b") &&
-            !keep.contains(st.getPath.getName))
-          .foreach(st => graft.operators.FsPointers.deleteDir(st.getPath.toString))
-        }
+        ()
       }
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .start()
     try q.awaitTermination()
     finally graft.operators.Dedup.rmdir(new java.io.File(ckpt))
-    val view = spark.read.parquet(statePath + "/" +
-        graft.operators.FsPointers.read(statePath, "_CURRENT").getOrElse(
+    val view = spark.read.parquet(
+        graft.operators.FsPointers.currentVersion(statePath).getOrElse(
           sys.error(s"stream_kmv: no committed sketch state under $statePath")))
       .select(col("day"), size(col("sk")).cast("long").as("n_sk"),
         when(size(col("sk")) < kk, size(col("sk")).cast("double"))
@@ -620,59 +603,41 @@ object StreamingQueries {
         val batchCounts = batch.toDF()
           .select(explode(T.tokens(col("text"))).as("token"))
           .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-        // versioned snapshot dirs + pointer swap (the AggState pattern):
-        // the fold writes a NEW snapshot instead of overwriting the one
-        // it reads, so the filtered state needs no persist+count
-        // materialization pass per batch (optimization round r16). The
-        // merged frame stays persisted: it has two genuine consumers
-        // (the decrement's top-k collect and the snapshot write).
-        // MG-fold replay is absorbed by the error bound (the summary is
-        // approximate-with-guarantee; the closing exact recount is what
-        // the declared output rides), matching the prior shape.
-        // REPLAY FENCE (ADVICE r16): if _CURRENT already points at this
-        // batch's dir, the fold ran and published but the streaming
-        // checkpoint didn't commit — re-folding would lazily read and
-        // Overwrite-write the SAME parquet dir (self-clobber). The state
-        // already includes this batch; skip the fold.
-        val committed = graft.operators.FsPointers.read(statePath, "_CURRENT")
-        val newDir = s"b$batchId"
-        if (!committed.contains(newDir)) {
-        val merged =
-          (committed match {
-             case Some(dir) =>
-               spark.read.parquet(s"$statePath/$dir").unionByName(batchCounts)
-                 .groupBy(col("token")).agg(sum(col("cnt")).as("cnt"))
-             case None => batchCounts
-           })
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // the compression decrement: the (cap+1)th-largest merged count
-        // (0 when ≤ cap counters survive the union) — a VALUE, not a row
-        // choice, so ties cost no determinism
-        val top = merged.orderBy(col("cnt").desc, col("token"))
-          .limit(cap + 1).select(col("cnt")).collect()
-        val d = if (top.length > cap) top.last.getLong(0) else 0L
-        try merged.filter(col("cnt") > lit(d))
-          .select(col("token"), (col("cnt") - lit(d)).as("cnt"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$statePath/$newDir")
-        finally { merged.unpersist(false); () }
-        graft.operators.FsPointers.publish(statePath, "_CURRENT", newDir)
-        val keep = Set(newDir) ++ committed
-        val rootP = new org.apache.hadoop.fs.Path(statePath)
-        val fs = rootP.getFileSystem(spark.sessionState.newHadoopConf())
-        fs.listStatus(rootP)
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith("b") &&
-            !keep.contains(st.getPath.getName))
-          .foreach(st => graft.operators.FsPointers.deleteDir(st.getPath.toString))
+        // the shared versioned fold (FsPointers.foldVersion): the fold
+        // writes a NEW snapshot instead of overwriting the one it reads,
+        // so the filtered state needs no persist+count materialization
+        // pass per batch (optimization round r16). The merged frame stays
+        // persisted: it has two genuine consumers (the decrement's top-k
+        // collect and the snapshot write). MG-fold replay is absorbed by
+        // the error bound (the closing exact recount is what the declared
+        // output rides); the fold's replay fence keeps a replay after the
+        // pointer swap from re-writing the committed snapshot.
+        graft.operators.FsPointers.foldVersion(spark, statePath, batchId) {
+          (committed, out) =>
+            val merged = committed.fold(batchCounts)(
+                _.unionByName(batchCounts)
+                  .groupBy(col("token")).agg(sum(col("cnt")).as("cnt")))
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            // the compression decrement: the (cap+1)th-largest merged
+            // count (0 when ≤ cap counters survive the union) — a VALUE,
+            // not a row choice, so ties cost no determinism
+            val top = merged.orderBy(col("cnt").desc, col("token"))
+              .limit(cap + 1).select(col("cnt")).collect()
+            val d = if (top.length > cap) top.last.getLong(0) else 0L
+            try merged.filter(col("cnt") > lit(d))
+              .select(col("token"), (col("cnt") - lit(d)).as("cnt"))
+              .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(out)
+            finally { merged.unpersist(false); () }
         }
+        ()
       }
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .start()
     try q.awaitTermination()
     finally graft.operators.Dedup.rmdir(new java.io.File(ckpt))
-    val candidates = spark.read.parquet(statePath + "/" +
-        graft.operators.FsPointers.read(statePath, "_CURRENT").getOrElse(
+    val candidates = spark.read.parquet(
+        graft.operators.FsPointers.currentVersion(statePath).getOrElse(
           sys.error(s"stream_heavy_hitters: no committed state under $statePath")))
       .select(col("token"))
     val tokens = graft.Tables.documents(spark, dir)

@@ -62,7 +62,7 @@ class CertStoreSpec extends SparkSpec {
     val stats = CtQueries.stats(table, java.sql.Date.valueOf("2024-02-10"), approx = false)
     assert(scannedPartitions(stats) == 1, "single-day stats must touch one month")
     assert(stats.collect()(0).getAs[Long]("total") == 5)
-    val tail = CtQueries.streamTailAfter(table, Timestamp.valueOf("2024-02-01 00:00:00"), "", "", "")
+    val tail = CtQueries.streamTailAfter(table, Some((Timestamp.valueOf("2024-02-01 00:00:00"), "", "", "")))
     assert(scannedPartitions(tail) == 2, "tail from Feb must skip January")
     assert(tail.count() == 10)
   }

@@ -70,7 +70,7 @@ class CtQueriesSpec extends SparkSpec {
 
   test("/stream tail: boundary-safe incremental batch (ST4 fix)") {
     def tail(t: String, fp: String, dm: String, lg: String): Seq[String] =
-      CtQueries.streamTailAfter(df, ts(t), fp, dm, lg, batch = 10).collect()
+      CtQueries.streamTailAfter(df, Some((ts(t), fp, dm, lg)), batch = 10).collect()
         .map(_.getAs[String]("domain")).toSeq
     // a cursor before the boundary second's first key keeps its row
     assert(tail("2024-01-15 12:00:00", "", "", "") == Seq("b.example.com", "x.other.org"))

@@ -129,6 +129,36 @@ class ServerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     finally loopback.stop()
   }
 
+  test("a proxied X-Forwarded-For of bare commas is an unlisted client, not a 500") {
+    val srv = new Server(spark, () => CertStore.read(spark, storeDir), storeDir,
+      port = 0, now = () => ts("2024-01-15 12:00:00"),
+      allowedIps = Some(Set("10.1.2.3")), trustProxy = true,
+      rateLimitPerMin = Some(3)).start()
+    try assert(getWith(srv, Seq("X-Forwarded-For" -> ",")) == 403)
+    finally srv.stop()
+  }
+
+  test("ipsFile allowlist (reference api/ips.txt): blank and # lines skipped, " +
+      "a missing or empty file turns the filter off") {
+    val dir = Files.createTempDirectory("server-ips")
+    def file(name: String, lines: String*): java.nio.file.Path =
+      Files.write(dir.resolve(name), lines.mkString("\n").getBytes("UTF-8"))
+    def statusWith(ipsFile: java.nio.file.Path): Int = {
+      val srv = new Server(spark, () => CertStore.read(spark, storeDir), storeDir,
+        0, () => ts("2024-01-15 12:00:00"), ipsFile).start()
+      try getWith(srv, Nil) finally srv.stop()
+    }
+    // the loopback client listed among comments, blanks and padding
+    assert(statusWith(file("listed.txt",
+      "# office proxies", "", "  10.1.2.3  ", "127.0.0.1", "   ")) == 200)
+    // any other IP listed: the loopback client is denied
+    assert(statusWith(file("other.txt", "# office proxies", "10.1.2.3")) == 403)
+    // only comments and blanks: nothing listed, so the filter is off
+    assert(statusWith(file("comments.txt", "# nobody yet", "", "   ")) == 200)
+    assert(statusWith(file("empty.txt")) == 200)
+    assert(statusWith(dir.resolve("missing.txt")) == 200)
+  }
+
   test("per-IP rate limit: fixed window 429s above the limit, resets next minute") {
     @volatile var clock = ts("2024-01-15 12:00:00")
     val limited = new Server(spark, () => CertStore.read(spark, storeDir), storeDir,

@@ -4,9 +4,8 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.queries.PipelineQueries
 
-/** Pins [[PipelineQueries.compactComponentsArtifact]] and the GEN
+/** Pins [[ComponentsArtifact.compactComponentsArtifact]] and the GEN
   * generation-pointer machinery (round-10 verdict asks #1/#4 + ADVICE
   * r9): the artifact's full 100 TB maintenance runbook, exercised
   * END-TO-END in one loop —
@@ -41,15 +40,15 @@ class ComponentsCompactSpec extends SparkSpec {
     }).toDF("doc_id", "text")
 
   private def readClusters(dir: String): Seq[(Long, Long)] =
-    spark.read.parquet(PipelineQueries.clustersDirOf(dir))
+    spark.read.parquet(ComponentsArtifact.clustersDirOf(dir))
       .select(col("doc_id"), col("cluster_id")).as[(Long, Long)]
       .collect().toSeq.sorted
 
   private def coldOf(docs: DataFrame): (Seq[(Long, Long)], Long) = {
     val dir = Files.createTempDirectory("comp-compact-cold").toString
     try {
-      PipelineQueries.buildComponentsArtifactFrom(spark, docs, dir)
-      (readClusters(dir), PipelineQueries.readMeta(spark, dir).nPairs)
+      ComponentsArtifact.buildComponentsArtifactFrom(spark, docs, dir)
+      (readClusters(dir), ComponentsArtifact.readMeta(spark, dir).nPairs)
     } finally Dedup.rmdir(new java.io.File(dir))
   }
 
@@ -57,30 +56,30 @@ class ComponentsCompactSpec extends SparkSpec {
       "reset -> appends continue on the new generation, still equal to cold") {
     val base = Files.createTempDirectory("comp-compact-e2e").toString
     try {
-      PipelineQueries.buildComponentsArtifactFrom(spark, corpusDocs, base)
+      ComponentsArtifact.buildComponentsArtifactFrom(spark, corpusDocs, base)
       // append 1 (fresh tails, plus a near-dup of corpus doc 5 so the
       // append contributes a real cross-boundary edge): flag stays down
       val inc1 = Seq((101L, tail(500)), (102L, tail(5) + " extra"))
         .toDF("doc_id", "text")
-      PipelineQueries.appendComponentsArtifact(spark, base, inc1)
+      ComponentsArtifact.appendComponentsArtifact(spark, base, inc1)
       val docs1 = corpusDocs.unionByName(inc1)
-      assert(!PipelineQueries.readMeta(spark, base).rebuildRecommended)
-      assert((readClusters(base), PipelineQueries.readMeta(spark, base).nPairs)
+      assert(!ComponentsArtifact.readMeta(spark, base).rebuildRecommended)
+      assert((readClusters(base), ComponentsArtifact.readMeta(spark, base).nPairs)
         == coldOf(docs1))
       // append 2 carries the prefix: the df-16 shingle reaches 17 > 16
       val inc2 = Seq((103L, "edge boiler plate " + tail(600)))
         .toDF("doc_id", "text")
-      PipelineQueries.appendComponentsArtifact(spark, base, inc2)
+      ComponentsArtifact.appendComponentsArtifact(spark, base, inc2)
       val docs2 = docs1.unionByName(inc2)
-      assert(PipelineQueries.readMeta(spark, base).rebuildRecommended,
+      assert(ComponentsArtifact.readMeta(spark, base).rebuildRecommended,
         "fixture: the cutoff-crossing append must trip the flag")
 
       // COMPACT on the corpus-of-record: one atomic GEN flip
-      PipelineQueries.compactComponentsArtifact(spark, base, docs2)
-      assert(PipelineQueries.genDirOf(base).endsWith("gen-1"))
-      assert(PipelineQueries.currentEpoch(base) == 0L,
+      ComponentsArtifact.compactComponentsArtifact(spark, base, docs2)
+      assert(ComponentsArtifact.genDirOf(base).endsWith("gen-1"))
+      assert(ComponentsArtifact.currentEpoch(base) == 0L,
         "a fresh generation starts at epoch 0")
-      val m = PipelineQueries.readMeta(spark, base)
+      val m = ComponentsArtifact.readMeta(spark, base)
       assert(!m.rebuildRecommended, s"compaction must reset the flag: $m")
       // the re-derived snapshot re-cut: the once-drifting shingle (df 17)
       // is now HOT, so the new drift floors reflect the NEW corpus
@@ -92,11 +91,11 @@ class ComponentsCompactSpec extends SparkSpec {
       // validation against gen-1's own index, equality to cold holds
       val inc3 = Seq((104L, tail(700)), (105L, tail(700) + " extra"))
         .toDF("doc_id", "text")
-      PipelineQueries.appendComponentsArtifact(spark, base, inc3)
+      ComponentsArtifact.appendComponentsArtifact(spark, base, inc3)
       val docs3 = docs2.unionByName(inc3)
-      assert(PipelineQueries.currentEpoch(base) == 1L)
-      assert(PipelineQueries.clustersDirOf(base).contains("gen-1"))
-      val m3 = PipelineQueries.readMeta(spark, base)
+      assert(ComponentsArtifact.currentEpoch(base) == 1L)
+      assert(ComponentsArtifact.clustersDirOf(base).contains("gen-1"))
+      val m3 = ComponentsArtifact.readMeta(spark, base)
       assert(!m3.rebuildRecommended, s"fresh drift floor after compact: $m3")
       assert((readClusters(base), m3.nPairs) == coldOf(docs3))
     } finally Dedup.rmdir(new java.io.File(base))
@@ -113,11 +112,11 @@ class ComponentsCompactSpec extends SparkSpec {
       val quiet = ((1L to 30L).map(id =>
         (id, if (id == 30L) tail(29) + " extra" else tail(id.toInt))))
         .toDF("doc_id", "text")
-      PipelineQueries.buildComponentsArtifactFrom(spark, quiet, base)
+      ComponentsArtifact.buildComponentsArtifactFrom(spark, quiet, base)
       var corpus = quiet
       def appendOne(id: Long): Unit = {
         val inc = Seq((id, tail(5000 + id.toInt))).toDF("doc_id", "text")
-        PipelineQueries.appendComponentsArtifact(spark, base, inc,
+        ComponentsArtifact.appendComponentsArtifact(spark, base, inc,
           maxFilesPerBucket = 3)
         corpus = corpus.unionByName(inc)
       }
@@ -125,22 +124,22 @@ class ComponentsCompactSpec extends SparkSpec {
       // bound 3: append #1 (pre-count 1, +1 = 2) and #2 (2+1 = 3) stay
       // quiet; append #3 sees pre-count 3, +1 = 4 > 3 and trips.
       appendOne(101L)
-      assert(!PipelineQueries.readMeta(spark, base).rebuildRecommended,
+      assert(!ComponentsArtifact.readMeta(spark, base).rebuildRecommended,
         "first append must not trip the file-count direction")
       appendOne(102L)
       appendOne(103L)
-      assert(PipelineQueries.readMeta(spark, base).rebuildRecommended,
+      assert(ComponentsArtifact.readMeta(spark, base).rebuildRecommended,
         "crossing the per-bucket file bound must recommend a rebuild")
       // the runbook remedy: maintain compacts, the re-derived index is
       // back to one file per bucket, the flag clears, clusters = cold
       val inc = Seq((104L, tail(5104))).toDF("doc_id", "text")
       val newCorpus = corpus.unionByName(inc)
-      val compacted = PipelineQueries.maintainComponentsArtifact(
+      val compacted = ComponentsArtifact.maintainComponentsArtifact(
         spark, base, inc, newCorpus, maxFilesPerBucket = 3)
       assert(compacted, "tripped flag must drive the maintain compaction")
-      val m = PipelineQueries.readMeta(spark, base)
+      val m = ComponentsArtifact.readMeta(spark, base)
       assert(!m.rebuildRecommended, "compaction must clear the flag")
-      val gen = PipelineQueries.genDirOf(base)
+      val gen = ComponentsArtifact.genDirOf(base)
       val maxFiles = new java.io.File(s"$gen/shingles").listFiles()
         .filter(f => f.isDirectory && f.getName.startsWith("shb="))
         .map(_.listFiles().count(f => f.isFile &&
@@ -157,16 +156,16 @@ class ComponentsCompactSpec extends SparkSpec {
       "second, and each prior generation gets the same grace") {
     val base = Files.createTempDirectory("comp-compact-gc").toString
     try {
-      PipelineQueries.buildComponentsArtifactFrom(spark, corpusDocs, base)
+      ComponentsArtifact.buildComponentsArtifactFrom(spark, corpusDocs, base)
       // a reader that resolved its paths BEFORE any compaction — the
       // mid-scan scenario the two-behind grace exists for
-      val readerPath = PipelineQueries.clustersDirOf(base)
+      val readerPath = ComponentsArtifact.clustersDirOf(base)
       val readerSaw = spark.read.parquet(readerPath)
         .select(col("doc_id"), col("cluster_id")).as[(Long, Long)]
         .collect().toSeq.sorted
 
-      PipelineQueries.compactComponentsArtifact(spark, base, corpusDocs)
-      assert(PipelineQueries.genDirOf(base).endsWith("gen-1"))
+      ComponentsArtifact.compactComponentsArtifact(spark, base, corpusDocs)
+      assert(ComponentsArtifact.genDirOf(base).endsWith("gen-1"))
       // gen-0's root layout is ONE behind: fully intact, same content
       // (no CURRENT file here — a fresh cold build is epoch 0 by absence)
       for (n <- Seq("clusters", "meta", "shingles", "sizes", "hot"))
@@ -177,8 +176,8 @@ class ComponentsCompactSpec extends SparkSpec {
         .collect().toSeq.sorted == readerSaw,
         "a gen-0 mid-scan reader must survive the first flip unchanged")
 
-      PipelineQueries.compactComponentsArtifact(spark, base, corpusDocs)
-      assert(PipelineQueries.genDirOf(base).endsWith("gen-2"))
+      ComponentsArtifact.compactComponentsArtifact(spark, base, corpusDocs)
+      assert(ComponentsArtifact.genDirOf(base).endsWith("gen-2"))
       // now gen-0 is two behind: its root artifact dirs are swept...
       for (n <- Seq("clusters", "meta", "shingles", "sizes", "hot", "CURRENT"))
         assert(!new java.io.File(base, n).exists,
@@ -187,7 +186,7 @@ class ComponentsCompactSpec extends SparkSpec {
       assert(new java.io.File(base, "gen-1").isDirectory)
       assert(readClusters(base) == readerSaw)
 
-      PipelineQueries.compactComponentsArtifact(spark, base, corpusDocs)
+      ComponentsArtifact.compactComponentsArtifact(spark, base, corpusDocs)
       assert(!new java.io.File(base, "gen-1").exists,
         "gen-1 must be swept once two behind")
       assert(new java.io.File(base, "gen-2").isDirectory)
@@ -212,22 +211,22 @@ class ComponentsCompactSpec extends SparkSpec {
       (7L, "totally different text about other things entirely")))
     val base = Files.createTempDirectory("comp-compact-hostile").toString
     try {
-      PipelineQueries.buildComponentsArtifactFrom(spark, corpus, base)
+      ComponentsArtifact.buildComponentsArtifactFrom(spark, corpus, base)
       // an append first, so the compaction folds real epoch history
       val inc = frame(Seq((101L, "alpha beta gamma delta epsilon zeta eta"),
         (102L, null)))
-      PipelineQueries.appendComponentsArtifact(spark, base, inc)
+      ComponentsArtifact.appendComponentsArtifact(spark, base, inc)
       val docs = corpus.unionByName(inc)
-      PipelineQueries.compactComponentsArtifact(spark, base, docs)
-      assert(PipelineQueries.genDirOf(base).endsWith("gen-1"))
-      assert((readClusters(base), PipelineQueries.readMeta(spark, base).nPairs)
+      ComponentsArtifact.compactComponentsArtifact(spark, base, docs)
+      assert(ComponentsArtifact.genDirOf(base).endsWith("gen-1"))
+      assert((readClusters(base), ComponentsArtifact.readMeta(spark, base).nPairs)
         == coldOf(docs))
-      val m = PipelineQueries.readMeta(spark, base)
+      val m = ComponentsArtifact.readMeta(spark, base)
       assert(m.nDocsTotal == 9L && !m.rebuildRecommended, s"got $m")
       // and the compacted generation keeps accepting hostile appends
       val inc2 = frame(Seq((201L, "novel words nothing shares"), (202L, "")))
-      PipelineQueries.appendComponentsArtifact(spark, base, inc2)
-      assert((readClusters(base), PipelineQueries.readMeta(spark, base).nPairs)
+      ComponentsArtifact.appendComponentsArtifact(spark, base, inc2)
+      assert((readClusters(base), ComponentsArtifact.readMeta(spark, base).nPairs)
         == coldOf(docs.unionByName(inc2)))
     } finally Dedup.rmdir(new java.io.File(base))
   }
@@ -237,17 +236,17 @@ class ComponentsCompactSpec extends SparkSpec {
       "both throw with the gen dir absent and the pointer untouched") {
     val base = Files.createTempDirectory("comp-compact-guard").toString
     try {
-      PipelineQueries.buildComponentsArtifactFrom(spark, corpusDocs, base)
+      ComponentsArtifact.buildComponentsArtifactFrom(spark, corpusDocs, base)
       val inc = Seq((101L, tail(500)), (102L, tail(5) + " extra"))
         .toDF("doc_id", "text")
-      PipelineQueries.appendComponentsArtifact(spark, base, inc)
+      ComponentsArtifact.appendComponentsArtifact(spark, base, inc)
       val docs = corpusDocs.unionByName(inc)
       val live = readClusters(base)
 
       // (a) SHORT corpus: the cold build's docs without the appended
       // increment — the stale-corpus-of-record operator error
       val eShort = intercept[IllegalArgumentException] {
-        PipelineQueries.compactComponentsArtifact(spark, base, corpusDocs)
+        ComponentsArtifact.compactComponentsArtifact(spark, base, corpusDocs)
       }
       assert(eShort.getMessage.contains("corpus-of-record mismatch") &&
         eShort.getMessage.contains("30") && eShort.getMessage.contains("32"),
@@ -259,7 +258,7 @@ class ComponentsCompactSpec extends SparkSpec {
         Seq((101L, tail(500)), (999L, tail(5) + " extra"))
           .toDF("doc_id", "text"))
       val eSwap = intercept[IllegalArgumentException] {
-        PipelineQueries.compactComponentsArtifact(spark, base, swapped)
+        ComponentsArtifact.compactComponentsArtifact(spark, base, swapped)
       }
       assert(eSwap.getMessage.contains("corpus-of-record mismatch"),
         eSwap.getMessage)
@@ -269,14 +268,14 @@ class ComponentsCompactSpec extends SparkSpec {
       assert(!new java.io.File(base, "gen-1").exists,
         "a rejected compaction must not leave a generation dir")
       assert(!new java.io.File(base, "GEN").exists &&
-        PipelineQueries.genDirOf(base) == base,
+        ComponentsArtifact.genDirOf(base) == base,
         "a rejected compaction must not move the generation pointer")
       assert(readClusters(base) == live)
 
       // the correct corpus still compacts
-      PipelineQueries.compactComponentsArtifact(spark, base, docs)
-      assert(PipelineQueries.genDirOf(base).endsWith("gen-1"))
-      assert((readClusters(base), PipelineQueries.readMeta(spark, base).nPairs)
+      ComponentsArtifact.compactComponentsArtifact(spark, base, docs)
+      assert(ComponentsArtifact.genDirOf(base).endsWith("gen-1"))
+      assert((readClusters(base), ComponentsArtifact.readMeta(spark, base).nPairs)
         == coldOf(docs))
     } finally Dedup.rmdir(new java.io.File(base))
   }
@@ -290,9 +289,9 @@ class ComponentsCompactSpec extends SparkSpec {
     val docsB = Seq((1L, tail(10)), (2L, tail(11))).toDF("doc_id", "text")
     val base = Files.createTempDirectory("comp-receipt-collide").toString
     try {
-      PipelineQueries.buildComponentsArtifactFrom(spark, docsA, base)
+      ComponentsArtifact.buildComponentsArtifactFrom(spark, docsA, base)
       val eSwap = intercept[IllegalArgumentException] {
-        PipelineQueries.compactComponentsArtifact(spark, base, docsB)
+        ComponentsArtifact.compactComponentsArtifact(spark, base, docsB)
       }
       assert(eSwap.getMessage.contains("corpus-of-record mismatch"),
         eSwap.getMessage)
@@ -300,15 +299,15 @@ class ComponentsCompactSpec extends SparkSpec {
       val altered = Seq((0L, tail(10)), (3L, tail(11) + " tampered"))
         .toDF("doc_id", "text")
       val eText = intercept[IllegalArgumentException] {
-        PipelineQueries.compactComponentsArtifact(spark, base, altered)
+        ComponentsArtifact.compactComponentsArtifact(spark, base, altered)
       }
       assert(eText.getMessage.contains("corpus-of-record mismatch") &&
         eText.getMessage.contains("altered text"), eText.getMessage)
       // both rejected BEFORE any write; the true corpus still compacts
       assert(!new java.io.File(base, "GEN").exists &&
         !new java.io.File(base, "gen-1").exists)
-      PipelineQueries.compactComponentsArtifact(spark, base, docsA)
-      assert(PipelineQueries.genDirOf(base).endsWith("gen-1"))
+      ComponentsArtifact.compactComponentsArtifact(spark, base, docsA)
+      assert(ComponentsArtifact.genDirOf(base).endsWith("gen-1"))
     } finally Dedup.rmdir(new java.io.File(base))
   }
 
@@ -318,10 +317,10 @@ class ComponentsCompactSpec extends SparkSpec {
     val base32 = Files.createTempDirectory("comp-b32").toString
     val base64 = Files.createTempDirectory("comp-b64").toString
     try {
-      PipelineQueries.buildComponentsArtifactFrom(spark, corpusDocs, base32, 32)
-      PipelineQueries.buildComponentsArtifactFrom(spark, corpusDocs, base64)
-      assert(PipelineQueries.readMeta(spark, base32).nBuckets == 32)
-      assert(PipelineQueries.readMeta(spark, base64).nBuckets == 64)
+      ComponentsArtifact.buildComponentsArtifactFrom(spark, corpusDocs, base32, 32)
+      ComponentsArtifact.buildComponentsArtifactFrom(spark, corpusDocs, base64)
+      assert(ComponentsArtifact.readMeta(spark, base32).nBuckets == 32)
+      assert(ComponentsArtifact.readMeta(spark, base64).nBuckets == 64)
       // the 32-bucket index really is pmod-32 at rest: every shb
       // partition dir stays under 32
       val shbDirs = new java.io.File(base32, "shingles").listFiles()
@@ -331,31 +330,31 @@ class ComponentsCompactSpec extends SparkSpec {
       // (ADVICE r11): identical counts across layouts, no silent miss
       val inc = Seq((101L, tail(5) + " extra"), (102L, tail(500)))
         .toDF("doc_id", "text")
-      val n32 = PipelineQueries.appendPairTermOnly(spark, base32, inc)
-      val n64 = PipelineQueries.appendPairTermOnly(spark, base64, inc)
+      val n32 = ComponentsArtifact.appendPairTermOnly(spark, base32, inc)
+      val n64 = ComponentsArtifact.appendPairTermOnly(spark, base64, inc)
       assert(n32 == n64 && n32 > 0, s"pair counts diverge: $n32 vs $n64")
       // full append under the default build: clusters equal cold, the
       // artifact keeps its own bucket count
-      PipelineQueries.appendComponentsArtifact(spark, base32, inc)
+      ComponentsArtifact.appendComponentsArtifact(spark, base32, inc)
       val docs1 = corpusDocs.unionByName(inc)
-      assert((readClusters(base32), PipelineQueries.readMeta(spark, base32).nPairs)
+      assert((readClusters(base32), ComponentsArtifact.readMeta(spark, base32).nPairs)
         == coldOf(docs1))
-      assert(PipelineQueries.readMeta(spark, base32).nBuckets == 32,
+      assert(ComponentsArtifact.readMeta(spark, base32).nBuckets == 32,
         "an append must preserve the artifact's own bucket count")
       // compaction preserves the count by default...
-      PipelineQueries.compactComponentsArtifact(spark, base32, docs1)
-      assert(PipelineQueries.readMeta(spark, base32).nBuckets == 32)
-      assert((readClusters(base32), PipelineQueries.readMeta(spark, base32).nPairs)
+      ComponentsArtifact.compactComponentsArtifact(spark, base32, docs1)
+      assert(ComponentsArtifact.readMeta(spark, base32).nBuckets == 32)
+      assert((readClusters(base32), ComponentsArtifact.readMeta(spark, base32).nPairs)
         == coldOf(docs1))
       // ...and is the explicit re-bucket point (grow with the corpus)
-      PipelineQueries.compactComponentsArtifact(spark, base32, docs1, nBuckets = 64)
-      assert(PipelineQueries.readMeta(spark, base32).nBuckets == 64)
-      assert((readClusters(base32), PipelineQueries.readMeta(spark, base32).nPairs)
+      ComponentsArtifact.compactComponentsArtifact(spark, base32, docs1, nBuckets = 64)
+      assert(ComponentsArtifact.readMeta(spark, base32).nBuckets == 64)
+      assert((readClusters(base32), ComponentsArtifact.readMeta(spark, base32).nPairs)
         == coldOf(docs1))
       // appends continue on the re-bucketed generation
       val inc2 = Seq((103L, tail(700))).toDF("doc_id", "text")
-      PipelineQueries.appendComponentsArtifact(spark, base32, inc2)
-      assert((readClusters(base32), PipelineQueries.readMeta(spark, base32).nPairs)
+      ComponentsArtifact.appendComponentsArtifact(spark, base32, inc2)
+      assert((readClusters(base32), ComponentsArtifact.readMeta(spark, base32).nPairs)
         == coldOf(docs1.unionByName(inc2)))
     } finally {
       Dedup.rmdir(new java.io.File(base32))
@@ -368,10 +367,10 @@ class ComponentsCompactSpec extends SparkSpec {
       "compaction migrates it to a fully-receipted artifact") {
     val base = Files.createTempDirectory("comp-legacy").toString
     try {
-      PipelineQueries.buildComponentsArtifactFrom(spark, corpusDocs, base)
+      ComponentsArtifact.buildComponentsArtifactFrom(spark, corpusDocs, base)
       // rewrite meta WITHOUT the idx4+ fields — the persisted shape
       // of a pre-idx4 private-dir artifact
-      val metaDir = PipelineQueries.metaDirOf(base)
+      val metaDir = ComponentsArtifact.metaDirOf(base)
       val legacy = spark.read.parquet(metaDir)
         .drop("n_buckets", "doc_id_xor", "receipt_kind")
       val schema = legacy.schema
@@ -379,35 +378,35 @@ class ComponentsCompactSpec extends SparkSpec {
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
         .coalesce(1).write.mode("overwrite").parquet(metaDir)
       // tolerant read surfaces sentinels instead of a raw Spark error
-      val m = PipelineQueries.readMeta(spark, base)
+      val m = ComponentsArtifact.readMeta(spark, base)
       assert(m.nBuckets == -1 && !m.hasReceipt, s"$m")
       // append and the bench hook refuse with the migration message
       val inc = Seq((101L, tail(500))).toDF("doc_id", "text")
       val eApp = intercept[IllegalArgumentException] {
-        PipelineQueries.appendComponentsArtifact(spark, base, inc)
+        ComponentsArtifact.appendComponentsArtifact(spark, base, inc)
       }
       assert(eApp.getMessage.contains("legacy artifact layout") &&
         eApp.getMessage.contains("compactComponentsArtifact"), eApp.getMessage)
       val eBench = intercept[IllegalArgumentException] {
-        PipelineQueries.appendPairTermOnly(spark, base, inc)
+        ComponentsArtifact.appendPairTermOnly(spark, base, inc)
       }
       assert(eBench.getMessage.contains("legacy artifact layout"), eBench.getMessage)
       // the count check still guards a legacy compaction: a short
       // corpus is rejected even with no receipt to compare
       val eShort = intercept[IllegalArgumentException] {
-        PipelineQueries.compactComponentsArtifact(spark, base, corpusDocs.limit(10))
+        ComponentsArtifact.compactComponentsArtifact(spark, base, corpusDocs.limit(10))
       }
       assert(eShort.getMessage.contains("corpus-of-record mismatch"),
         eShort.getMessage)
       // compaction IS the migration path: count-checked (receipt absent,
       // loud warning), and the rebuilt generation is fully receipted
-      PipelineQueries.compactComponentsArtifact(spark, base, corpusDocs)
-      val m1 = PipelineQueries.readMeta(spark, base)
+      ComponentsArtifact.compactComponentsArtifact(spark, base, corpusDocs)
+      val m1 = ComponentsArtifact.readMeta(spark, base)
       assert(m1.nBuckets == 64 && m1.hasReceipt, s"$m1")
       assert((readClusters(base), m1.nPairs) == coldOf(corpusDocs))
       // and the migrated artifact accepts appends again
-      PipelineQueries.appendComponentsArtifact(spark, base, inc)
-      assert((readClusters(base), PipelineQueries.readMeta(spark, base).nPairs)
+      ComponentsArtifact.appendComponentsArtifact(spark, base, inc)
+      assert((readClusters(base), ComponentsArtifact.readMeta(spark, base).nPairs)
         == coldOf(corpusDocs.unionByName(inc)))
     } finally Dedup.rmdir(new java.io.File(base))
   }
@@ -417,47 +416,47 @@ class ComponentsCompactSpec extends SparkSpec {
       "alone, and appends never mint a trusted receipt for it (ADVICE r12)") {
     val base = Files.createTempDirectory("comp-idx4").toString
     try {
-      PipelineQueries.buildComponentsArtifactFrom(spark, corpusDocs, base)
+      ComponentsArtifact.buildComponentsArtifactFrom(spark, corpusDocs, base)
       // rewrite meta in the idx4 persisted shape: the SAME doc_id_xor
       // column name, but holding bit_xor(doc_id) — raw-id semantics —
       // and no receipt_kind field. Schema-indistinguishable from idx5
       // without the kind field, which is the whole point of the fix.
       val rawXor = corpusDocs.agg(expr("bit_xor(doc_id)")).head().getLong(0)
-      val metaDir = PipelineQueries.metaDirOf(base)
+      val metaDir = ComponentsArtifact.metaDirOf(base)
       val idx4 = spark.read.parquet(metaDir)
         .withColumn("doc_id_xor", lit(rawXor)).drop("receipt_kind")
       val schema = idx4.schema
       val rows = idx4.collect()
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
         .coalesce(1).write.mode("overwrite").parquet(metaDir)
-      assert(!PipelineQueries.readMeta(spark, base).hasReceipt,
+      assert(!ComponentsArtifact.readMeta(spark, base).hasReceipt,
         "an idx4 meta must read as pre-receipt — validating its raw-id " +
           "xor against the hashed receipt falsely rejects the true corpus")
       // the append path still works (n_buckets is present) but must NOT
       // promote the artifact to receipted: folding hashed increment
       // receipts into a raw-id xor validates nothing
       val inc = Seq((101L, tail(500))).toDF("doc_id", "text")
-      PipelineQueries.appendComponentsArtifact(spark, base, inc)
-      assert(!PipelineQueries.readMeta(spark, base).hasReceipt,
+      ComponentsArtifact.appendComponentsArtifact(spark, base, inc)
+      assert(!ComponentsArtifact.readMeta(spark, base).hasReceipt,
         "an append on a pre-receipt artifact must stay pre-receipt")
       val docs1 = corpusDocs.unionByName(inc)
       // the count check still guards: a short corpus is rejected
       val eShort = intercept[IllegalArgumentException] {
-        PipelineQueries.compactComponentsArtifact(spark, base, corpusDocs)
+        ComponentsArtifact.compactComponentsArtifact(spark, base, corpusDocs)
       }
       assert(eShort.getMessage.contains("corpus-of-record mismatch"),
         eShort.getMessage)
       // the TRUE corpus compacts (this was the falsely-rejected case:
       // its hashed receipt never equals the stored raw-id xor) and the
       // rebuilt generation is fully receipted
-      PipelineQueries.compactComponentsArtifact(spark, base, docs1)
-      val m1 = PipelineQueries.readMeta(spark, base)
+      ComponentsArtifact.compactComponentsArtifact(spark, base, docs1)
+      val m1 = ComponentsArtifact.readMeta(spark, base)
       assert(m1.hasReceipt, s"$m1")
       assert((readClusters(base), m1.nPairs) == coldOf(docs1))
       // and the migrated artifact's receipt is live again: a tampered
       // corpus is now caught by the hash
       val eSwap = intercept[IllegalArgumentException] {
-        PipelineQueries.compactComponentsArtifact(spark, base,
+        ComponentsArtifact.compactComponentsArtifact(spark, base,
           docs1.withColumn("text",
             when(col("doc_id") === 101L, lit("tampered")).otherwise(col("text"))))
       }
@@ -471,15 +470,15 @@ class ComponentsCompactSpec extends SparkSpec {
       "(round-10 verdict ask #4)") {
     val base = Files.createTempDirectory("comp-maintain").toString
     try {
-      PipelineQueries.buildComponentsArtifactFrom(spark, corpusDocs, base)
+      ComponentsArtifact.buildComponentsArtifactFrom(spark, corpusDocs, base)
       // step 1: below the cutoff — append only, no compaction
       val inc1 = Seq((101L, tail(500)), (102L, tail(5) + " extra"))
         .toDF("doc_id", "text")
       val docs1 = corpusDocs.unionByName(inc1)
-      assert(!PipelineQueries.maintainComponentsArtifact(spark, base, inc1, docs1),
+      assert(!ComponentsArtifact.maintainComponentsArtifact(spark, base, inc1, docs1),
         "no drift -> no compaction")
-      assert(PipelineQueries.genDirOf(base) == base, "still generation 0")
-      assert((readClusters(base), PipelineQueries.readMeta(spark, base).nPairs)
+      assert(ComponentsArtifact.genDirOf(base) == base, "still generation 0")
+      assert((readClusters(base), ComponentsArtifact.readMeta(spark, base).nPairs)
         == coldOf(docs1))
       // step 2: the prefix doc pushes the df-16 shingle over the cutoff
       // — the operator must compact, with the corpus-of-record
@@ -489,12 +488,12 @@ class ComponentsCompactSpec extends SparkSpec {
       val docs2 = docs1.unionByName(inc2)
       // the runbook carries the compaction's re-bucket choice (the
       // drift-triggered rebuild is where a grown corpus re-buckets)
-      assert(PipelineQueries.maintainComponentsArtifact(spark, base, inc2, docs2,
+      assert(ComponentsArtifact.maintainComponentsArtifact(spark, base, inc2, docs2,
           compactNBuckets = 32),
         "drift -> exactly this call compacts")
-      assert(PipelineQueries.genDirOf(base).endsWith("gen-1"),
+      assert(ComponentsArtifact.genDirOf(base).endsWith("gen-1"),
         "one compaction, one generation flip")
-      val m2 = PipelineQueries.readMeta(spark, base)
+      val m2 = ComponentsArtifact.readMeta(spark, base)
       assert(!m2.rebuildRecommended, s"compaction resets the flag: $m2")
       assert(m2.nBuckets == 32,
         s"the re-bucket choice must reach the compaction: $m2")
@@ -503,10 +502,10 @@ class ComponentsCompactSpec extends SparkSpec {
       val inc3 = Seq((104L, tail(700)), (105L, tail(700) + " extra"))
         .toDF("doc_id", "text")
       val docs3 = docs2.unionByName(inc3)
-      assert(!PipelineQueries.maintainComponentsArtifact(spark, base, inc3, docs3))
-      assert(PipelineQueries.genDirOf(base).endsWith("gen-1"),
+      assert(!ComponentsArtifact.maintainComponentsArtifact(spark, base, inc3, docs3))
+      assert(ComponentsArtifact.genDirOf(base).endsWith("gen-1"),
         "exactly once: no second generation")
-      assert((readClusters(base), PipelineQueries.readMeta(spark, base).nPairs)
+      assert((readClusters(base), ComponentsArtifact.readMeta(spark, base).nPairs)
         == coldOf(docs3))
     } finally Dedup.rmdir(new java.io.File(base))
   }
@@ -515,7 +514,7 @@ class ComponentsCompactSpec extends SparkSpec {
       "rebuilt; it was never resolvable so the live artifact never wavered") {
     val base = Files.createTempDirectory("comp-compact-crash").toString
     try {
-      PipelineQueries.buildComponentsArtifactFrom(spark, corpusDocs, base)
+      ComponentsArtifact.buildComponentsArtifactFrom(spark, corpusDocs, base)
       val live = readClusters(base)
       // plant the crash debris: a half-written gen-1 (clusters dir with
       // a garbage file, no meta, no index) — the GEN pointer still
@@ -526,15 +525,15 @@ class ComponentsCompactSpec extends SparkSpec {
         .toPath, Array.fill[Byte](16)(0x5a))
       assert(readClusters(base) == live,
         "the planted partial generation must be invisible to readers")
-      PipelineQueries.compactComponentsArtifact(spark, base, corpusDocs)
-      assert(PipelineQueries.genDirOf(base).endsWith("gen-1"))
-      assert((readClusters(base), PipelineQueries.readMeta(spark, base).nPairs)
+      ComponentsArtifact.compactComponentsArtifact(spark, base, corpusDocs)
+      assert(ComponentsArtifact.genDirOf(base).endsWith("gen-1"))
+      assert((readClusters(base), ComponentsArtifact.readMeta(spark, base).nPairs)
         == coldOf(corpusDocs),
         "the rebuilt generation must equal a fresh cold build")
       // and the artifact keeps accepting appends after the recovery
-      PipelineQueries.appendComponentsArtifact(spark, base,
+      ComponentsArtifact.appendComponentsArtifact(spark, base,
         Seq((201L, tail(800))).toDF("doc_id", "text"))
-      assert(PipelineQueries.currentEpoch(base) == 1L)
+      assert(ComponentsArtifact.currentEpoch(base) == 1L)
     } finally Dedup.rmdir(new java.io.File(base))
   }
 }

@@ -4,13 +4,12 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.queries.PipelineQueries
 
 /** Pins the incremental components-artifact contract (round-7 verdict
   * ask #4): appending an increment to a corpus-snapshot artifact via
-  * [[PipelineQueries.appendComponentsArtifact]] must produce clusters
+  * [[ComponentsArtifact.appendComponentsArtifact]] must produce clusters
   * AND the n_pairs meta HASH-EQUAL to a cold
-  * [[PipelineQueries.buildComponentsArtifactFrom]] over corpus∪increment
+  * [[ComponentsArtifact.buildComponentsArtifactFrom]] over corpus∪increment
   * — including when the snapshot's df-cutoff guard is armed (a hot
   * boilerplate shingle cut from candidate generation on both paths) —
   * and the appended artifact must itself accept FURTHER appends (the
@@ -63,12 +62,12 @@ class ComponentsIncrSpec extends SparkSpec {
   // resolved through the epoch pointer: after appends the live
   // clusters/meta sit in versioned dirs published via CURRENT
   private def readClusters(dir: String): Seq[(Long, Long)] =
-    spark.read.parquet(PipelineQueries.clustersDirOf(dir))
+    spark.read.parquet(ComponentsArtifact.clustersDirOf(dir))
       .select(col("doc_id"), col("cluster_id")).as[(Long, Long)]
       .collect().toSeq.sorted
 
   private def readNPairs(dir: String): Long =
-    PipelineQueries.readMeta(spark, dir).nPairs
+    ComponentsArtifact.readMeta(spark, dir).nPairs
 
   test("append == cold rebuild over the union (clusters + n_pairs), guard armed") {
     val base = Files.createTempDirectory("comp-incr-base").toString
@@ -78,12 +77,12 @@ class ComponentsIncrSpec extends SparkSpec {
       // spec stops covering the hot re-add path
       assert(Dedup.autoDfCutoff(corpusDocs) < 20,
         "fixture regression: cutoff must sit below the boilerplate df")
-      PipelineQueries.buildComponentsArtifactFrom(spark, corpusDocs, base)
+      ComponentsArtifact.buildComponentsArtifactFrom(spark, corpusDocs, base)
       assert(spark.read.parquet(s"$base/hot").count() >= 1L,
         "fixture regression: the boilerplate shingle must be hot")
-      PipelineQueries.buildComponentsArtifactFrom(spark,
+      ComponentsArtifact.buildComponentsArtifactFrom(spark,
         corpusDocs.unionByName(incrementDocs), cold)
-      PipelineQueries.appendComponentsArtifact(spark, base, incrementDocs)
+      ComponentsArtifact.appendComponentsArtifact(spark, base, incrementDocs)
       assert(readClusters(base) == readClusters(cold))
       assert(readNPairs(base) == readNPairs(cold))
       // sanity on the semantics themselves: the cross-boundary edge
@@ -104,7 +103,7 @@ class ComponentsIncrSpec extends SparkSpec {
       "over-cap fallback included, guard armed") {
     val base = Files.createTempDirectory("comp-incr-semi").toString
     try {
-      PipelineQueries.buildComponentsArtifactFrom(spark, corpusDocs, base)
+      ComponentsArtifact.buildComponentsArtifactFrom(spark, corpusDocs, base)
       val dflt = Dedup.incrementalNgramPairs(incrementDocs,
           spark.read.parquet(s"$base/shingles"),
           spark.read.parquet(s"$base/sizes"),
@@ -159,10 +158,10 @@ class ComponentsIncrSpec extends SparkSpec {
       if (forcePlain) // exercise the non-broadcast merge joins too
         spark.conf.set("graft.components.mergeBcastMaxPairs", "0")
       try {
-        PipelineQueries.buildComponentsArtifactFrom(spark, corpusDocs, base)
-        PipelineQueries.buildComponentsArtifactFrom(spark,
+        ComponentsArtifact.buildComponentsArtifactFrom(spark, corpusDocs, base)
+        ComponentsArtifact.buildComponentsArtifactFrom(spark,
           corpusDocs.unionByName(inc), cold)
-        PipelineQueries.appendComponentsArtifact(spark, base, inc)
+        ComponentsArtifact.appendComponentsArtifact(spark, base, inc)
         assert(readClusters(base) == readClusters(cold),
           s"forcePlain=$forcePlain")
         assert(readNPairs(base) == readNPairs(cold), s"forcePlain=$forcePlain")
@@ -190,10 +189,10 @@ class ComponentsIncrSpec extends SparkSpec {
     val base = Files.createTempDirectory("comp-incr-plain").toString
     val cold = Files.createTempDirectory("comp-incr-plain-cold").toString
     try {
-      PipelineQueries.buildComponentsArtifactFrom(spark, corpusDocs, base)
-      PipelineQueries.buildComponentsArtifactFrom(spark,
+      ComponentsArtifact.buildComponentsArtifactFrom(spark, corpusDocs, base)
+      ComponentsArtifact.buildComponentsArtifactFrom(spark,
         corpusDocs.unionByName(incrementDocs), cold)
-      PipelineQueries.appendComponentsArtifact(spark, base, incrementDocs,
+      ComponentsArtifact.appendComponentsArtifact(spark, base, incrementDocs,
         broadcastCap = 0L)
       assert(readClusters(base) == readClusters(cold))
       assert(readNPairs(base) == readNPairs(cold))
@@ -208,10 +207,10 @@ class ComponentsIncrSpec extends SparkSpec {
     val base = Files.createTempDirectory("comp-incr-prunev").toString
     val cold = Files.createTempDirectory("comp-incr-prunev-cold").toString
     try {
-      PipelineQueries.buildComponentsArtifactFrom(spark, corpusDocs, base)
-      PipelineQueries.buildComponentsArtifactFrom(spark,
+      ComponentsArtifact.buildComponentsArtifactFrom(spark, corpusDocs, base)
+      ComponentsArtifact.buildComponentsArtifactFrom(spark,
         corpusDocs.unionByName(incrementDocs), cold)
-      PipelineQueries.appendComponentsArtifact(spark, base, incrementDocs,
+      ComponentsArtifact.appendComponentsArtifact(spark, base, incrementDocs,
         pruneVerify = true)
       assert(readClusters(base) == readClusters(cold))
       assert(readNPairs(base) == readNPairs(cold))
@@ -227,8 +226,8 @@ class ComponentsIncrSpec extends SparkSpec {
     val base = Files.createTempDirectory("comp-incr-adapt").toString
     val cold = Files.createTempDirectory("comp-incr-adapt-cold").toString
     try {
-      PipelineQueries.buildComponentsArtifactFrom(spark, corpusDocs, base)
-      PipelineQueries.buildComponentsArtifactFrom(spark,
+      ComponentsArtifact.buildComponentsArtifactFrom(spark, corpusDocs, base)
+      ComponentsArtifact.buildComponentsArtifactFrom(spark,
         corpusDocs.unionByName(incrementDocs), cold)
       // cutoff forced to 1: the fixture's hot sidecar is non-empty with
       // minHotDf > 0, so |hot| × minHotDf ≥ 1 fires the adaptive prune
@@ -238,7 +237,7 @@ class ComponentsIncrSpec extends SparkSpec {
       val errBuf = new java.io.ByteArrayOutputStream()
       val realErr = System.err
       System.setErr(new java.io.PrintStream(errBuf, true, "UTF-8"))
-      try PipelineQueries.appendComponentsArtifact(spark, base, incrementDocs)
+      try ComponentsArtifact.appendComponentsArtifact(spark, base, incrementDocs)
       finally {
         System.setErr(realErr)
         spark.conf.unset("graft.dedup.pruneVerifyHotRows")
@@ -252,10 +251,10 @@ class ComponentsIncrSpec extends SparkSpec {
       // measured-loss default: the decision line must NOT claim the prune
       val base2 = Files.createTempDirectory("comp-incr-adapt2").toString
       try {
-        PipelineQueries.buildComponentsArtifactFrom(spark, corpusDocs, base2)
+        ComponentsArtifact.buildComponentsArtifactFrom(spark, corpusDocs, base2)
         val errBuf2 = new java.io.ByteArrayOutputStream()
         System.setErr(new java.io.PrintStream(errBuf2, true, "UTF-8"))
-        try PipelineQueries.appendComponentsArtifact(spark, base2, incrementDocs)
+        try ComponentsArtifact.appendComponentsArtifact(spark, base2, incrementDocs)
         finally {
           System.setErr(realErr)
           realErr.print(errBuf2.toString("UTF-8"))
@@ -276,10 +275,10 @@ class ComponentsIncrSpec extends SparkSpec {
     try {
       val inc1 = incrementDocs.filter(col("doc_id") <= 103L)
       val inc2 = incrementDocs.filter(col("doc_id") > 103L)
-      PipelineQueries.buildComponentsArtifactFrom(spark, corpusDocs, base)
-      PipelineQueries.appendComponentsArtifact(spark, base, inc1)
-      PipelineQueries.appendComponentsArtifact(spark, base, inc2)
-      PipelineQueries.buildComponentsArtifactFrom(spark,
+      ComponentsArtifact.buildComponentsArtifactFrom(spark, corpusDocs, base)
+      ComponentsArtifact.appendComponentsArtifact(spark, base, inc1)
+      ComponentsArtifact.appendComponentsArtifact(spark, base, inc2)
+      ComponentsArtifact.buildComponentsArtifactFrom(spark,
         corpusDocs.unionByName(incrementDocs), cold)
       assert(readClusters(base) == readClusters(cold))
       assert(readNPairs(base) == readNPairs(cold))
@@ -326,9 +325,9 @@ class ComponentsIncrSpec extends SparkSpec {
       val base = Files.createTempDirectory(s"comp-incr-rnd-$seed").toString
       val cold = Files.createTempDirectory(s"comp-incr-rndc-$seed").toString
       try {
-        PipelineQueries.buildComponentsArtifactFrom(spark, corpus, base)
-        PipelineQueries.appendComponentsArtifact(spark, base, increment)
-        PipelineQueries.buildComponentsArtifactFrom(spark,
+        ComponentsArtifact.buildComponentsArtifactFrom(spark, corpus, base)
+        ComponentsArtifact.appendComponentsArtifact(spark, base, increment)
+        ComponentsArtifact.buildComponentsArtifactFrom(spark,
           corpus.unionByName(increment), cold)
         assert(readClusters(base) == readClusters(cold), s"seed $seed: clusters")
         assert(readNPairs(base) == readNPairs(cold), s"seed $seed: n_pairs")
@@ -347,7 +346,7 @@ class ComponentsIncrSpec extends SparkSpec {
           }
           (3001L + i, text)
         }.toDF("doc_id", "text")
-        val baseGen = PipelineQueries.genDirOf(base)
+        val baseGen = ComponentsArtifact.genDirOf(base)
         def rePair(prune: Boolean) = Dedup.incrementalNgramPairs(inc2,
             spark.read.parquet(s"$baseGen/shingles"),
             spark.read.parquet(s"$baseGen/sizes"),
@@ -391,9 +390,9 @@ class ComponentsIncrSpec extends SparkSpec {
     val base = Files.createTempDirectory("comp-incr-hostile").toString
     val cold = Files.createTempDirectory("comp-incr-hostile-cold").toString
     try {
-      PipelineQueries.buildComponentsArtifactFrom(spark, corpus, base)
-      PipelineQueries.appendComponentsArtifact(spark, base, increment)
-      PipelineQueries.buildComponentsArtifactFrom(spark,
+      ComponentsArtifact.buildComponentsArtifactFrom(spark, corpus, base)
+      ComponentsArtifact.appendComponentsArtifact(spark, base, increment)
+      ComponentsArtifact.buildComponentsArtifactFrom(spark,
         corpus.unionByName(increment), cold)
       assert(readClusters(base) == readClusters(cold))
       assert(readNPairs(base) == readNPairs(cold))
@@ -425,8 +424,8 @@ class ComponentsIncrSpec extends SparkSpec {
     val base = Files.createTempDirectory("comp-incr-bootstrap").toString
     val cold = Files.createTempDirectory("comp-incr-bootstrap-cold").toString
     try {
-      PipelineQueries.buildComponentsArtifactFrom(spark, corpus, base)
-      val m0 = PipelineQueries.readMeta(spark, base)
+      ComponentsArtifact.buildComponentsArtifactFrom(spark, corpus, base)
+      val m0 = ComponentsArtifact.readMeta(spark, base)
       assert(m0.nDocsIndexed == 0L && m0.nShingleRows == 0L &&
         m0.nDocsTotal == 3L && m0.minHotDf == Long.MaxValue &&
         !m0.rebuildRecommended, s"got $m0")
@@ -434,8 +433,8 @@ class ComponentsIncrSpec extends SparkSpec {
       val increment = frame(Seq(
         (101L, "alpha beta gamma delta epsilon zeta"),
         (102L, "alpha beta gamma delta epsilon zeta eta"))) // near-dup pair
-      PipelineQueries.appendComponentsArtifact(spark, base, increment)
-      PipelineQueries.buildComponentsArtifactFrom(spark,
+      ComponentsArtifact.appendComponentsArtifact(spark, base, increment)
+      ComponentsArtifact.buildComponentsArtifactFrom(spark,
         corpus.unionByName(increment), cold)
       assert(readClusters(base) == readClusters(cold))
       assert(readNPairs(base) == readNPairs(cold) && readNPairs(base) >= 1L)
@@ -448,9 +447,9 @@ class ComponentsIncrSpec extends SparkSpec {
   test("empty increment is a no-op") {
     val base = Files.createTempDirectory("comp-incr-empty").toString
     try {
-      PipelineQueries.buildComponentsArtifactFrom(spark, corpusDocs, base)
+      ComponentsArtifact.buildComponentsArtifactFrom(spark, corpusDocs, base)
       val before = (readClusters(base), readNPairs(base))
-      PipelineQueries.appendComponentsArtifact(spark, base,
+      ComponentsArtifact.appendComponentsArtifact(spark, base,
         incrementDocs.filter(lit(false)))
       assert((readClusters(base), readNPairs(base)) == before)
     } finally Dedup.rmdir(new java.io.File(base))

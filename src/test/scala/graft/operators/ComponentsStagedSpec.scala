@@ -4,7 +4,6 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.queries.PipelineQueries
 
 /** Pins the round-9 maintenance contracts of the components artifact:
   *
@@ -45,12 +44,12 @@ class ComponentsStagedSpec extends SparkSpec {
 
   private def buildBase(): String = {
     val base = Files.createTempDirectory("comp-staged").toString
-    PipelineQueries.buildComponentsArtifactFrom(spark, corpusDocs, base)
+    ComponentsArtifact.buildComponentsArtifactFrom(spark, corpusDocs, base)
     base
   }
 
   private def readClusters(dir: String): Seq[(Long, Long)] =
-    spark.read.parquet(PipelineQueries.clustersDirOf(dir))
+    spark.read.parquet(ComponentsArtifact.clustersDirOf(dir))
       .select(col("doc_id"), col("cluster_id")).as[(Long, Long)]
       .collect().toSeq.sorted
 
@@ -59,7 +58,7 @@ class ComponentsStagedSpec extends SparkSpec {
     val base = buildBase()
     val cold = Files.createTempDirectory("comp-staged-cold").toString
     try {
-      val m0 = PipelineQueries.readMeta(spark, base)
+      val m0 = ComponentsArtifact.readMeta(spark, base)
       assert(m0.cutoff == 16L, s"fixture: cutoff must be the floor, got $m0")
       assert(m0.maxNonhotDf == 16L,
         s"fixture: the prefix shingle must sit AT the cutoff, got $m0")
@@ -70,10 +69,10 @@ class ComponentsStagedSpec extends SparkSpec {
       // flag must stay down (the running max keeps the build-time 16)
       val incBelow = Seq((101L, tail(500)), (102L, tail(500) + " extra"))
         .toDF("doc_id", "text")
-      PipelineQueries.appendComponentsArtifact(spark, base, incBelow)
-      val m1 = PipelineQueries.readMeta(spark, base)
+      ComponentsArtifact.appendComponentsArtifact(spark, base, incBelow)
+      val m1 = ComponentsArtifact.readMeta(spark, base)
       assert(m1.maxNonhotDf == 16L && !m1.rebuildRecommended, s"got $m1")
-      PipelineQueries.buildComponentsArtifactFrom(spark,
+      ComponentsArtifact.buildComponentsArtifactFrom(spark,
         corpusDocs.unionByName(incBelow), cold)
       assert(readClusters(base) == readClusters(cold))
 
@@ -82,8 +81,8 @@ class ComponentsStagedSpec extends SparkSpec {
       // rebuild would have CUT it; the flag must trip
       val incCross = Seq((103L, "edge boiler plate " + tail(600)))
         .toDF("doc_id", "text")
-      PipelineQueries.appendComponentsArtifact(spark, base, incCross)
-      val m2 = PipelineQueries.readMeta(spark, base)
+      ComponentsArtifact.appendComponentsArtifact(spark, base, incCross)
+      val m2 = ComponentsArtifact.readMeta(spark, base)
       assert(m2.maxNonhotDf == 17L && m2.rebuildRecommended,
         s"crossing the cutoff must trip the flag: $m2")
     } finally {
@@ -100,11 +99,11 @@ class ComponentsStagedSpec extends SparkSpec {
         .toDF("doc_id", "text")
       val v0Clusters = new java.io.File(base, "clusters")
       val v0Content = readClusters(base)
-      assert(PipelineQueries.currentEpoch(base) == 0L)
+      assert(ComponentsArtifact.currentEpoch(base) == 0L)
 
-      PipelineQueries.appendComponentsArtifact(spark, base, inc(1))
-      assert(PipelineQueries.currentEpoch(base) == 1L)
-      assert(PipelineQueries.clustersDirOf(base).endsWith("clusters_v1"))
+      ComponentsArtifact.appendComponentsArtifact(spark, base, inc(1))
+      assert(ComponentsArtifact.currentEpoch(base) == 1L)
+      assert(ComponentsArtifact.clustersDirOf(base).endsWith("clusters_v1"))
       // the epoch-0 dirs a concurrent reader may be mid-scan of are
       // intact — same files, same content
       assert(v0Clusters.isDirectory,
@@ -113,15 +112,15 @@ class ComponentsStagedSpec extends SparkSpec {
         .select(col("doc_id"), col("cluster_id")).as[(Long, Long)]
         .collect().toSeq.sorted == v0Content)
 
-      PipelineQueries.appendComponentsArtifact(spark, base, inc(2))
-      assert(PipelineQueries.currentEpoch(base) == 2L)
+      ComponentsArtifact.appendComponentsArtifact(spark, base, inc(2))
+      assert(ComponentsArtifact.currentEpoch(base) == 2L)
       // now epoch 0 has had a full append's grace and is GC'd; epoch 1
       // (the new previous) survives
       assert(!v0Clusters.exists, "epoch two behind the pointer must be GC'd")
       assert(!new java.io.File(base, "meta").exists)
       assert(new java.io.File(base, "clusters_v1").isDirectory)
 
-      PipelineQueries.appendComponentsArtifact(spark, base, inc(3))
+      ComponentsArtifact.appendComponentsArtifact(spark, base, inc(3))
       assert(!new java.io.File(base, "clusters_v1").exists)
       assert(new java.io.File(base, "clusters_v2").isDirectory)
       assert(new java.io.File(base, "clusters_v3").isDirectory)
@@ -163,22 +162,22 @@ class ComponentsStagedSpec extends SparkSpec {
     }).toDF("doc_id", "text")
     val base = Files.createTempDirectory("comp-revdrift").toString
     try {
-      PipelineQueries.buildComponentsArtifactFrom(spark, corpus, base)
-      val m0 = PipelineQueries.readMeta(spark, base)
+      ComponentsArtifact.buildComponentsArtifactFrom(spark, corpus, base)
+      val m0 = ComponentsArtifact.readMeta(spark, base)
       assert(m0.cutoff == 20L && m0.minHotDf == 25L && m0.nDocsTotal == 5000L &&
         !m0.rebuildRecommended, s"fixture: $m0")
       // +200 docs: recomputed cutoff = ⌊0.4%·5200⌋ = 20 < 25 — no trip
-      PipelineQueries.appendComponentsArtifact(spark, base,
+      ComponentsArtifact.appendComponentsArtifact(spark, base,
         ((10001L to 10200L).map(uniq)).toDF("doc_id", "text"))
-      val m1 = PipelineQueries.readMeta(spark, base)
+      val m1 = ComponentsArtifact.readMeta(spark, base)
       assert(m1.nDocsTotal == 5200L && !m1.rebuildRecommended, s"got $m1")
       // +1100 docs: recomputed cutoff = ⌊0.4%·6300⌋ = 25 ≥ minHotDf 25 —
       // a cold rebuild over the grown corpus could now DECLASSIFY the
       // df-25 shingle (and surface candidates the fixed cut set never
       // will); the flag must trip although the forward max never moved
-      PipelineQueries.appendComponentsArtifact(spark, base,
+      ComponentsArtifact.appendComponentsArtifact(spark, base,
         ((20001L to 21100L).map(uniq)).toDF("doc_id", "text"))
-      val m2 = PipelineQueries.readMeta(spark, base)
+      val m2 = ComponentsArtifact.readMeta(spark, base)
       assert(m2.maxNonhotDf <= m2.cutoff,
         s"fixture regression: the forward check must not be what fires: $m2")
       assert(m2.rebuildRecommended, s"grown cutoff must trip the flag: $m2")
@@ -197,10 +196,10 @@ class ComponentsStagedSpec extends SparkSpec {
       // never produces if the constant moved — ADVICE r10)
       Dedup.shingleIndex(Seq((999L, tail(900))).toDF("doc_id", "text"), 3)
         .withColumn("shb",
-          pmod(col("sh"), lit(PipelineQueries.ShingleBuckets.toLong)).cast("int"))
+          pmod(col("sh"), lit(ComponentsArtifact.ShingleBuckets.toLong)).cast("int"))
         .write.mode("append").partitionBy("shb").parquet(s"$base/shingles")
       val e = intercept[IllegalArgumentException] {
-        PipelineQueries.appendComponentsArtifact(spark, base,
+        ComponentsArtifact.appendComponentsArtifact(spark, base,
           Seq((104L, tail(901))).toDF("doc_id", "text"))
       }
       assert(e.getMessage.contains("torn append"), e.getMessage)
@@ -213,24 +212,24 @@ class ComponentsStagedSpec extends SparkSpec {
     val local = Files.createTempDirectory("comp-scheme").toString
     val base = s"file:$local"
     try {
-      PipelineQueries.buildComponentsArtifactFrom(spark, corpusDocs, base)
-      assert(PipelineQueries.currentEpoch(base) == 0L)
+      ComponentsArtifact.buildComponentsArtifactFrom(spark, corpusDocs, base)
+      assert(ComponentsArtifact.currentEpoch(base) == 0L)
       // staged append: epoch pointer advances, clusters resolve, the
       // torn-check manifest validates through the FS API
-      PipelineQueries.appendComponentsArtifact(spark, base,
+      ComponentsArtifact.appendComponentsArtifact(spark, base,
         Seq((301L, tail(29) + " extra3")).toDF("doc_id", "text"))
-      assert(PipelineQueries.currentEpoch(base) == 1L)
+      assert(ComponentsArtifact.currentEpoch(base) == 1L)
       assert(readClusters(base).map(_._1).toSet.contains(301L))
       // generation flip: compaction publishes gen-1 via the GEN pointer
       // and GCs nothing yet (grace); a second append continues on gen-1
       val docs1 = corpusDocs.unionByName(
         Seq((301L, tail(29) + " extra3")).toDF("doc_id", "text"))
-      PipelineQueries.compactComponentsArtifact(spark, base, docs1)
-      assert(PipelineQueries.currentEpoch(base) == 0L,
+      ComponentsArtifact.compactComponentsArtifact(spark, base, docs1)
+      assert(ComponentsArtifact.currentEpoch(base) == 0L,
         "fresh generation restarts epochs")
-      PipelineQueries.appendComponentsArtifact(spark, base,
+      ComponentsArtifact.appendComponentsArtifact(spark, base,
         Seq((302L, tail(29) + " extra4")).toDF("doc_id", "text"))
-      assert(PipelineQueries.currentEpoch(base) == 1L)
+      assert(ComponentsArtifact.currentEpoch(base) == 1L)
       val ids = readClusters(base).map(_._1).toSet
       assert(ids.contains(301L) && ids.contains(302L), s"$ids")
       // the scheme-qualified dir really was the one written
@@ -261,30 +260,30 @@ class ComponentsStagedSpec extends SparkSpec {
     val base = buildBase()
     try {
       // build-time manifest matches an independent listing
-      val m0 = PipelineQueries.readMeta(spark, base)
+      val m0 = ComponentsArtifact.readMeta(spark, base)
       assert((m0.shFiles, m0.shBytes) == listManifest(s"$base/shingles"), s"$m0")
       assert((m0.szFiles, m0.szBytes) == listManifest(s"$base/sizes"), s"$m0")
       // forge the idx6-era meta: same row, manifest fields dropped
-      val metaDir = PipelineQueries.metaDirOf(base)
+      val metaDir = ComponentsArtifact.metaDirOf(base)
       val legacy = spark.read.parquet(metaDir)
         .drop("sh_files", "sh_bytes", "sz_files", "sz_bytes")
       val rows = legacy.collect()
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), legacy.schema)
         .coalesce(1).write.mode("overwrite").parquet(metaDir)
-      assert(PipelineQueries.readMeta(spark, base).shFiles == -1L,
+      assert(ComponentsArtifact.readMeta(spark, base).shFiles == -1L,
         "an idx6-era meta must surface the no-manifest sentinel")
       // first append validates by the legacy footer pass and mints the
       // manifest; the second takes the listing path — both hash-equal
       // to the incremental contract (clusters contain the new docs)
-      PipelineQueries.appendComponentsArtifact(spark, base,
+      ComponentsArtifact.appendComponentsArtifact(spark, base,
         Seq((201L, tail(29) + " extra2")).toDF("doc_id", "text"))
-      val m1 = PipelineQueries.readMeta(spark, base)
+      val m1 = ComponentsArtifact.readMeta(spark, base)
       assert((m1.shFiles, m1.shBytes) == listManifest(s"$base/shingles"),
         s"the migrating append must mint the true manifest: $m1")
       assert((m1.szFiles, m1.szBytes) == listManifest(s"$base/sizes"), s"$m1")
-      PipelineQueries.appendComponentsArtifact(spark, base,
+      ComponentsArtifact.appendComponentsArtifact(spark, base,
         Seq((202L, tail(951))).toDF("doc_id", "text"))
-      val m2 = PipelineQueries.readMeta(spark, base)
+      val m2 = ComponentsArtifact.readMeta(spark, base)
       assert((m2.shFiles, m2.shBytes) == listManifest(s"$base/shingles"), s"$m2")
       assert(m2.shFiles > m1.shFiles,
         s"each append adds index files the manifest must account for: $m1 -> $m2")

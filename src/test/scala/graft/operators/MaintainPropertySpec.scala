@@ -5,9 +5,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Properties, Test}
 import graft.SparkSpec
-import graft.queries.PipelineQueries
 
-/** Property-based pin on [[PipelineQueries.maintainComponentsArtifact]]
+/** Property-based pin on [[ComponentsArtifact.maintainComponentsArtifact]]
   * (round-11 verdict ask #6): ComponentsCompactSpec drives ONE
   * hand-picked boundary crossing; this property drives randomized
   * append schedules — random increment counts, sizes and contents,
@@ -71,15 +70,15 @@ object MaintainPropertySpec extends Properties("maintainComponents") {
   } yield (incs, nBuckets)
 
   private def readClusters(dir: String): Seq[(Long, Long)] =
-    spark.read.parquet(PipelineQueries.clustersDirOf(dir))
+    spark.read.parquet(ComponentsArtifact.clustersDirOf(dir))
       .select(col("doc_id"), col("cluster_id")).as[(Long, Long)]
       .collect().toSeq.sorted
 
   private def coldOf(docs: DataFrame): (Seq[(Long, Long)], Long) = {
     val dir = Files.createTempDirectory("maintain-prop-cold").toString
     try {
-      PipelineQueries.buildComponentsArtifactFrom(spark, docs, dir)
-      (readClusters(dir), PipelineQueries.readMeta(spark, dir).nPairs)
+      ComponentsArtifact.buildComponentsArtifactFrom(spark, docs, dir)
+      (readClusters(dir), ComponentsArtifact.readMeta(spark, dir).nPairs)
     } finally Dedup.rmdir(new java.io.File(dir))
   }
 
@@ -96,7 +95,7 @@ object MaintainPropertySpec extends Properties("maintainComponents") {
       Prop.forAll(scheduleGen) { case (sched, nBuckets) =>
     val base = Files.createTempDirectory("maintain-prop").toString
     try {
-      PipelineQueries.buildComponentsArtifactFrom(spark, corpusDocs, base,
+      ComponentsArtifact.buildComponentsArtifactFrom(spark, corpusDocs, base,
         nBuckets)
       var corpus = corpusDocs
       var nextId = 101L
@@ -111,12 +110,12 @@ object MaintainPropertySpec extends Properties("maintainComponents") {
         }
         val inc = rows.toDF("doc_id", "text")
         val newCorpus = corpus.unionByName(inc)
-        val genBefore = PipelineQueries.genDirOf(base)
+        val genBefore = ComponentsArtifact.genDirOf(base)
         val compacted =
-          PipelineQueries.maintainComponentsArtifact(spark, base, inc, newCorpus)
-        val genAfter = PipelineQueries.genDirOf(base)
+          ComponentsArtifact.maintainComponentsArtifact(spark, base, inc, newCorpus)
+        val genAfter = ComponentsArtifact.genDirOf(base)
         corpus = newCorpus
-        val m = PipelineQueries.readMeta(spark, base)
+        val m = ComponentsArtifact.readMeta(spark, base)
         val bucketsOk = m.nBuckets == nBuckets
         val flipOk = (genAfter != genBefore) == compacted
         val flagOk = !compacted || !m.rebuildRecommended
