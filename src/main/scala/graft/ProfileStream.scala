@@ -40,21 +40,16 @@ object ProfileStream {
     }
     spark.streams.addListener(listener)
     // run ONE streaming query directly on this session (the harness uses
-    // newSession, whose manager the listener can't see) — ewmaBuffered
-    // over the four-file time-sliced replay, the stream_ewma_replay body
+    // newSession, whose manager the listener can't see) — the watermarked
+    // ewma over the four-file time-sliced replay, the stream_ewma_replay body
     spark.conf.set("spark.sql.shuffle.partitions", "8")
-    import org.apache.spark.sql.functions.col
+    import graft.queries.StreamingQueries
     for (i <- 1 to 2) {
       val t0 = System.nanoTime()
       val ckpt = java.nio.file.Files.createTempDirectory("profile_ckpt").toString
-      val splitDir = graft.queries.StreamingQueries.eventsSplitByTimeForProfile(spark, sfDir)
-      val src = spark.readStream
-        .schema(graft.Tables.events(spark, sfDir).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(splitDir)
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-      val q = graft.streaming.EventStreams.ewmaBuffered(spark, src).toDF()
+      val q = graft.streaming.EventStreams.ewma(spark,
+          StreamingQueries.replayEvents(spark, sfDir),
+          watermark = Some(StreamingQueries.ReplaySlicing.Watermark)).toDF()
         .writeStream.outputMode("update").format("memory")
         .queryName(s"profile_$i")
         .option("checkpointLocation", ckpt)

@@ -2,7 +2,7 @@ package graft.ct
 
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType}
@@ -145,6 +145,16 @@ object CertStore {
     df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }
       .collect { case r: HadoopFsRelation => r.location.sizeInBytes }.getOrElse(0L)
 
+  /** The ReplacingMergeTree dedupe window: one row per
+    * (`within`…, fingerprint, domain), the earliest by (ts, log_name). */
+  private def keepEarliest(df: DataFrame, within: Column*): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(within ++ Seq(col("fingerprint"), col("domain")): _*)
+      .orderBy(col("ts"), col("log_name"))
+    df.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1).drop("__rn")
+  }
+
   /** MergeTree background-merge analog: rewrite each monthly partition into
     * `filesPerMonth` sorted files. Plain batch job, no custom strategy
     * (SURVEY §4). Writes to `dest` (caller swaps directories atomically).
@@ -155,13 +165,7 @@ object CertStore {
   def compact(spark: SparkSession, src: String, dest: String,
       filesPerMonth: Int = 1, dedupe: Boolean = false): Unit = {
     val base = read(spark, src)
-    val merged = if (dedupe) {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("fingerprint", "domain")
-        .orderBy(col("ts"), col("log_name"))
-      base.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-    } else base
+    val merged = if (dedupe) keepEarliest(base) else base
     // Repartition keeps one task per month (hash on the partition column)
     // so every monthly dir compacts in parallel; filesPerMonth > 1 adds a
     // deterministic fingerprint-hash split WITHIN each month. A global
@@ -215,14 +219,7 @@ object CertStore {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return Seq.empty
     val merge: DataFrame => DataFrame =
-      if (!dedupe) identity
-      else { df =>
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(partitionCol), col("fingerprint"), col("domain"))
-          .orderBy(col("ts"), col("log_name"))
-        df.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
-      }
+      if (!dedupe) identity else keepEarliest(_, col(partitionCol))
     val months = graft.operators.PartitionCompaction.compactDrifted(spark, fs, root,
       partitionCol, Seq("base_domain", "domain", "fingerprint"),
       hash(col("fingerprint")), maxFilesPerMonth, filesPerMonth, merge)

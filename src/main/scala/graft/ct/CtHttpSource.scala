@@ -18,14 +18,18 @@ import java.util.Base64
 class CtHttpSource(client: HttpClient = CtHttpSource.defaultClient)
     extends source.EntrySource {
 
-  private def getJson(url: String, timeoutSec: Int): com.fasterxml.jackson.databind.JsonNode = {
+  /** GET `url` → response body; a non-2xx status is an IOException. */
+  private def get(url: String, timeoutSec: Int): String = {
     val req = HttpRequest.newBuilder(URI.create(url))
       .timeout(Duration.ofSeconds(timeoutSec)).GET().build()
     val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
     if (resp.statusCode() / 100 != 2)
       throw new java.io.IOException(s"HTTP ${resp.statusCode()} from $url")
-    new com.fasterxml.jackson.databind.ObjectMapper().readTree(resp.body())
+    resp.body()
   }
+
+  private def getJson(url: String, timeoutSec: Int): com.fasterxml.jackson.databind.JsonNode =
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(get(url, timeoutSec))
 
   /** S3: current tree size (high-watermark offset). */
   override def treeSize(log: LogList.CtLog): Long =
@@ -45,14 +49,7 @@ class CtHttpSource(client: HttpClient = CtHttpSource.defaultClient)
   }
 
   /** S1: fetch the log list JSON (admission happens in LogList.parse). */
-  def fetchLogList(url: String): String = {
-    val req = HttpRequest.newBuilder(URI.create(url))
-      .timeout(Duration.ofSeconds(20)).GET().build()
-    val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
-    if (resp.statusCode() / 100 != 2)
-      throw new java.io.IOException(s"HTTP ${resp.statusCode()} from $url")
-    resp.body()
-  }
+  def fetchLogList(url: String): String = get(url, timeoutSec = 20)
 
   /** S1 with the reference's daily disk cache (ct_ingestor.py:49-72):
     * if `cacheFile` exists and is younger than `ttl`, serve it without any

@@ -228,10 +228,6 @@ object Dedup {
     incrementalNearDupsFromBands(bandIndex(increment, k), increment,
       corpusBands, corpus, k, threshold)
 
-  /** [[incrementalNearDups]] with the increment's band rows supplied —
-    * the indexed path bands the increment ONCE (collected, bounded) and
-    * reuses the rows for both bucket pruning and this join; the inline
-    * path passes the lazy [[bandIndex]] frame. */
   /** Candidate (i = increment, j = corpus) pairs from one band
     * equi-join — the generation half both verify shapes share. */
   private def bandCandidatePairs(incBands: DataFrame,
@@ -242,6 +238,10 @@ object Dedup {
         col("a.band_val") === col("b.band_val"))
       .select(col("a.doc_id").as("i"), col("b.doc_id").as("j")).distinct()
 
+  /** [[incrementalNearDups]] with the increment's band rows supplied —
+    * the indexed paths band the increment ONCE ([[indexedCandidateInputs]])
+    * and reuse the rows for both bucket pruning and this join; the inline
+    * path passes the lazy [[bandIndex]] frame. */
   private def incrementalNearDupsFromBands(incBands: DataFrame,
       increment: DataFrame, corpusBands: DataFrame,
       corpus: DataFrame, k: Int, threshold: Double): DataFrame = {

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.streaming.EventStreams
@@ -157,16 +157,6 @@ object StreamingQueries {
         "click", "view", lookback = "4 hours"),
       Seq("a_id", "b_id"))
 
-  /** Streaming incremental view maintenance: the events table is split
-    * into four parquet files (untimed fixture), streamed back one file
-    * per micro-batch (maxFilesPerTrigger=1 under AvailableNow), and each
-    * batch folds its AggState increment into the parquet-persisted view
-    * via foreachBatch — history is never rescanned, exactly the
-    * production refresh loop. The oracle is q51's full recompute: four
-    * successive delta-merges must converge to the from-scratch aggregate
-    * bit-for-bit. The final view is day×type-bounded (≤ a few hundred
-    * rows), so collecting it to cut the scratch-dir lifetime is the
-    * memory-sink treatment, not a scale hazard. */
   /** Content fingerprint of a source parquet path (file or directory):
     * names + sizes + mtimes. The split caches below key on THIS, not just
     * the path — a driver-side testdata regeneration (which has happened
@@ -273,7 +263,9 @@ object StreamingQueries {
     * would quietly stop exercising the cross-file ts-tie case. */
   private[graft] object ReplaySlicing {
     val NSlices = 4
-    /** The 30-min watermark every replayed stream uses (µs). */
+    /** The 30-min watermark every replayed stream uses, as the streams
+      * state it and in µs. */
+    val Watermark = "30 minutes"
     val WatermarkUs = 1800000000L
 
     /** Slicing state of an events frame: span min, slice width, and each
@@ -315,16 +307,16 @@ object StreamingQueries {
     }
   }
 
-  /** The events table split into four untimed parquet files, built once
-    * per (sfDir, content stamp) — the replayable fixture for
-    * file-per-micro-batch streaming maintenance queries. */
-  private def eventsSplit(spark: SparkSession, dir: String): String = {
-    val tmp = System.getProperty("java.io.tmpdir")
-    val splitDir = new java.io.File(tmp,
-      "graft_mv_split_" + sourceStamp(s"$dir/events.parquet")).getAbsolutePath
+  /** `table` split into four untimed parquet files, built once per
+    * (sfDir, content stamp) — the replayable fixture of the
+    * file-per-micro-batch maintenance gates (their folds are
+    * arrival-order-independent, so no time slicing is needed). */
+  private def untimedSplit(spark: SparkSession, dir: String, table: String,
+      load: (SparkSession, String) => DataFrame): String = {
+    val splitDir = new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft_${table}_split_" + sourceStamp(s"$dir/$table.parquet")).getAbsolutePath
     buildOnce(splitDir) { staged =>
-      graft.Tables.events(spark, dir).repartition(4)
-        .write.mode("overwrite").parquet(staged)
+      load(spark, dir).repartition(4).write.mode("overwrite").parquet(staged)
     }
   }
 
@@ -351,9 +343,6 @@ object StreamingQueries {
     * (pinned by BufferedReplaySpec's boundary case; HostileGen plants
     * exactly these rows). On data with no exact-boundary odd-id row the
     * rule no-ops and the split is the plain time slicing. */
-  private[graft] def eventsSplitByTimeForProfile(spark: SparkSession,
-      dir: String): String = eventsSplitByTime(spark, dir)
-
   private def eventsSplitByTime(spark: SparkSession, dir: String): String = {
     val tmp = System.getProperty("java.io.tmpdir")
     // _v2: the boundary rule changed the fixture's content contract —
@@ -392,115 +381,100 @@ object StreamingQueries {
     }
   }
 
-  /** Embeddings table split into 4 files so a file-per-trigger stream
-    * replays the corpus as 4 micro-batches (the embeddings analog of
-    * [[eventsSplit]]; routing is arrival-order-independent, so no time
-    * slicing is needed). */
-  private def embsSplit(spark: SparkSession, dir: String): String = {
-    val tmp = System.getProperty("java.io.tmpdir")
-    val splitDir = new java.io.File(tmp,
-      "graft_emb_split_" + sourceStamp(s"$dir/embeddings.parquet")).getAbsolutePath
-    buildOnce(splitDir) { staged =>
-      graft.Tables.embeddings(spark, dir).repartition(4)
-        .write.mode("overwrite").parquet(staged)
-    }
+  /** A split directory streamed back one file per micro-batch
+    * (maxFilesPerTrigger=1; under AvailableNow each file is its own
+    * batch, oldest first). */
+  private def fileReplay(s: SparkSession, schema: org.apache.spark.sql.types.StructType,
+      splitDir: String): DataFrame =
+    s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(splitDir)
+
+  /** The time-sliced four-file events replay the *_replay gates fold
+    * (schema probed from the batch loader; 5-column event shape). */
+  private[graft] def replayEvents(s: SparkSession, dir: String): DataFrame =
+    fileReplay(s, graft.Tables.events(s, dir).schema, eventsSplitByTime(s, dir))
+      .select(col("event_id"), col("ts"), col("user_id"),
+        col("event_type"), col("value"))
+
+  /** The replay driver of the maintained-state gates: `table` (read by
+    * `load`) is split into four untimed files and streamed back one file
+    * per micro-batch; each batch `fold`s into a fresh per-run state
+    * directory via foreachBatch — history is never rescanned, exactly
+    * the production refresh loop. Once the AvailableNow run ends (its
+    * scratch checkpoint deleted), `view` reads the maintained state; the
+    * view is bounded (day×type rows, ≤ cap tokens, k probe hits), so
+    * collecting it to cut the state dir's lifetime is the memory-sink
+    * treatment, not a scale hazard. */
+  private def replayMaintained(spark: SparkSession, dir: String, name: String,
+      table: String, load: (SparkSession, String) => DataFrame, order: Seq[Column])(
+      fold: (String, DataFrame, Long) => Unit)(view: String => DataFrame): DataFrame = {
+    val runId = java.util.UUID.randomUUID().toString.replace("-", "")
+    val statePath = new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft_${name}_stream_$runId").getAbsolutePath
+    val ckpt = scratchCkpt(s"graft_${name}_ckpt_$runId")
+    val q = fileReplay(spark, load(spark, dir).schema,
+        untimedSplit(spark, dir, table, load))
+      .writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+        fold(statePath, batch.toDF(), batchId)
+      }
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    try q.awaitTermination()
+    finally graft.operators.Dedup.rmdir(new java.io.File(ckpt))
+    try {
+      val v = view(statePath).orderBy(order: _*)
+      spark.createDataFrame(java.util.Arrays.asList(v.collect(): _*), v.schema)
+        .orderBy(order: _*)
+    } finally graft.operators.Dedup.rmdir(new java.io.File(statePath))
   }
 
   /** Streaming maintenance of the IVF embedding store — the similarity
-    * index's answer to stream_mv: each micro-batch (one file,
-    * AvailableNow) routes its vectors to their LSH cells via
-    * EmbeddingStore.append (deterministic routing, so arrival order is
-    * immaterial), fragmented cells are reclustered once at the end, and
-    * the probe over the incrementally-built store must be
-    * indistinguishable from the one-shot store's — emb_knn_store's
-    * oracle gates it verbatim. History is never rescanned: each append
-    * touches only the arriving batch, recluster only the cells past the
-    * compaction bound. (Production hardening note: a redelivered batch
-    * would re-append its vectors; the exactly-once deployment stamps
-    * appends with the batchId and skips committed ones, the AggState
-    * fencing pattern — under AvailableNow with a fresh checkpoint each
-    * batch delivers exactly once, which is what the gate exercises.) */
+    * index's answer to stream_mv: each replayed micro-batch routes its
+    * vectors to their LSH cells via EmbeddingStore.append (deterministic
+    * routing, so arrival order is immaterial), fragmented cells are
+    * reclustered once at the end, and the probe over the
+    * incrementally-built store must be indistinguishable from the
+    * one-shot store's — emb_knn_store's oracle gates it verbatim. Each
+    * append touches only the arriving batch, recluster only the cells
+    * past the compaction bound. (Production hardening note: a
+    * redelivered batch would re-append its vectors; the exactly-once
+    * deployment stamps appends with the batchId and skips committed
+    * ones, the AggState fencing pattern — under AvailableNow with a
+    * fresh checkpoint each batch delivers exactly once, which is what
+    * the gate exercises.) */
   def streamEmbStore(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.EmbeddingStore
-    val tmp = System.getProperty("java.io.tmpdir")
-    val splitDir = embsSplit(spark, dir)
-    val runId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val storePath = new java.io.File(tmp, s"graft_emb_stream_$runId").getAbsolutePath
-    val ckpt = scratchCkpt(s"graft_emb_sckpt_$runId")
-    val src = spark.readStream
-      .schema(graft.Tables.embeddings(spark, dir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(splitDir)
-    val q = src.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (batchId == 0L)
-          EmbeddingStore.write(batch.toDF(), storePath, nPlanes = 4)
-        else
-          EmbeddingStore.append(batch.toDF(), storePath, nPlanes = 4)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally graft.operators.Dedup.rmdir(new java.io.File(ckpt))
-    EmbeddingStore.recluster(spark, storePath, maxFilesPerCell = 2)
-    val view = EmbeddingStore.knnProbe(spark, storePath, queryId = 0L, k = 10,
-        nPlanes = 4, maxFlips = 1)
-      .select(col("vec_id"), col("label"),
-        col("bucket").cast("long").as("bucket"), col("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    val rows = java.util.Arrays.asList(view.collect(): _*)
-    graft.operators.Dedup.rmdir(new java.io.File(storePath))
-    spark.createDataFrame(rows, view.schema)
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-  }
-
-  /** Documents table split into 4 files so a file-per-trigger stream
-    * replays the corpus as 4 micro-batches (the documents analog of
-    * [[eventsSplit]]). */
-  private def docsSplit(spark: SparkSession, dir: String): String = {
-    val tmp = System.getProperty("java.io.tmpdir")
-    val splitDir = new java.io.File(tmp,
-      "graft_hh_split_" + sourceStamp(s"$dir/documents.parquet")).getAbsolutePath
-    buildOnce(splitDir) { staged =>
-      graft.Tables.documents(spark, dir).repartition(4)
-        .write.mode("overwrite").parquet(staged)
+    replayMaintained(spark, dir, "emb", "embeddings", graft.Tables.embeddings,
+        Seq(col("cos_sim").desc, col("vec_id"))) { (storePath, batch, batchId) =>
+      if (batchId == 0L) EmbeddingStore.write(batch, storePath, nPlanes = 4)
+      else EmbeddingStore.append(batch, storePath, nPlanes = 4)
+    } { storePath =>
+      EmbeddingStore.recluster(spark, storePath, maxFilesPerCell = 2)
+      EmbeddingStore.knnProbe(spark, storePath, queryId = 0L, k = 10,
+          nPlanes = 4, maxFlips = 1)
+        .select(col("vec_id"), col("label"),
+          col("bucket").cast("long").as("bucket"), col("cos_sim"))
     }
   }
 
+  /** Streaming incremental view maintenance: each replayed micro-batch
+    * folds its AggState increment into the parquet-persisted view. The
+    * oracle is q51's full recompute: four successive delta-merges must
+    * converge to the from-scratch aggregate bit-for-bit. */
   def streamMvMaintain(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.AggState
-    val tmp = System.getProperty("java.io.tmpdir")
-    val splitDir = eventsSplit(spark, dir)
-    val runId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val statePath = new java.io.File(tmp, s"graft_mv_stream_$runId").getAbsolutePath
-    val ckpt = scratchCkpt(s"graft_mv_ckpt_$runId")
-    val src = spark.readStream
-      .schema(graft.Tables.events(spark, dir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(splitDir)
-    val q = src.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        AggState.maintainParquet(spark, statePath, batch.toDF(), batchId)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally graft.operators.Dedup.rmdir(new java.io.File(ckpt))
-    val view = AggState.finish(AggState.readState(spark, statePath))
-      .orderBy("day", "event_type")
-    val rows = java.util.Arrays.asList(view.collect(): _*)
-    graft.operators.Dedup.rmdir(new java.io.File(statePath))
-    spark.createDataFrame(rows, view.schema)
-      .orderBy("day", "event_type")
+    replayMaintained(spark, dir, "mv", "events", graft.Tables.events,
+        Seq(col("day"), col("event_type"))) { (statePath, batch, batchId) =>
+      AggState.maintainParquet(spark, statePath, batch, batchId)
+    } { statePath => AggState.finish(AggState.readState(spark, statePath)) }
   }
 
   /** Streaming KMV sketch-state maintenance — the q52 HLL-union flow
     * with a sketch whose merge is DETERMINISTIC set algebra, so the
     * streamed state is gated hash-exact instead of within-tolerance:
-    * each micro-batch (one file, AvailableNow) folds its per-day KMV
-    * delta into the parquet-persisted sketch table via
+    * each replayed micro-batch folds its per-day KMV delta into the
+    * parquet-persisted sketch table via
     * `slice(array_sort(array_union(…)), 1, k)` — KMV union IS
     * k-smallest-of-merged, order-insensitive, so four incremental merges
     * must equal the one-shot batch sketch value-for-value, and the
@@ -510,69 +484,52 @@ object StreamingQueries {
     import graft.expressions.KmvSketch.kmvSketch
     import graft.functions.{TextFunctions => T}
     val kk = 64
-    val tmp = System.getProperty("java.io.tmpdir")
-    val splitDir = eventsSplit(spark, dir)
-    val runId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val statePath = new java.io.File(tmp, s"graft_kmv_stream_$runId").getAbsolutePath
-    val ckpt = scratchCkpt(s"graft_kmv_ckpt_$runId")
-    def mixed(c: org.apache.spark.sql.Column) =
+    def mixed(c: Column) =
       pmod(T.polyHash(c.cast("string")) * lit(1103515245L) + lit(12345L),
         lit(1000000007L))
-    val src = spark.readStream
-      .schema(graft.Tables.events(spark, dir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(splitDir)
-    val q = src.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val delta = batch.toDF()
-          .select(to_date(col("ts")).as("day"), mixed(col("user_id")).as("h"))
-          .groupBy(col("day")).agg(kmvSketch(col("h"), kk).as("sk"))
-        // the shared versioned fold (FsPointers.foldVersion): the fold
-        // reads the committed snapshot and writes a NEW one, so no
-        // materialize-before-overwrite pass is needed — the in-place
-        // formulation paid a persist+count of the merged state per batch
-        // solely to avoid overwriting the parquet it was lazily reading
-        // (optimization round r16). KMV union is idempotent set algebra,
-        // so re-folding a delta would be harmless to the VALUE; the
-        // fold's replay fence still matters, because a replay after the
-        // pointer swap would read and Overwrite-write the same snapshot
-        graft.operators.FsPointers.foldVersion(spark, statePath, batchId) {
-          (committed, out) =>
-            committed.fold(delta) { st =>
-              st.as("s").join(delta.as("d"), Seq("day"), "full")
-                .select(col("day"),
-                  slice(array_sort(array_union(
-                    coalesce(col("s.sk"), array().cast("array<long>")),
-                    coalesce(col("d.sk"), array().cast("array<long>")))),
-                    1, kk).as("sk"))
-            }.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(out)
-        }
-        ()
+    replayMaintained(spark, dir, "kmv", "events", graft.Tables.events,
+        Seq(col("day"))) { (statePath, batch, batchId) =>
+      val delta = batch
+        .select(to_date(col("ts")).as("day"), mixed(col("user_id")).as("h"))
+        .groupBy(col("day")).agg(kmvSketch(col("h"), kk).as("sk"))
+      // the shared versioned fold (FsPointers.foldVersion): the fold
+      // reads the committed snapshot and writes a NEW one, so no
+      // materialize-before-overwrite pass is needed — the in-place
+      // formulation paid a persist+count of the merged state per batch
+      // solely to avoid overwriting the parquet it was lazily reading
+      // (optimization round r16). KMV union is idempotent set algebra,
+      // so re-folding a delta would be harmless to the VALUE; the
+      // fold's replay fence still matters, because a replay after the
+      // pointer swap would read and Overwrite-write the same snapshot
+      graft.operators.FsPointers.foldVersion(spark, statePath, batchId) {
+        (committed, out) =>
+          committed.fold(delta) { st =>
+            st.as("s").join(delta.as("d"), Seq("day"), "full")
+              .select(col("day"),
+                slice(array_sort(array_union(
+                  coalesce(col("s.sk"), array().cast("array<long>")),
+                  coalesce(col("d.sk"), array().cast("array<long>")))),
+                  1, kk).as("sk"))
+          }.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(out)
       }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally graft.operators.Dedup.rmdir(new java.io.File(ckpt))
-    val view = spark.read.parquet(
-        graft.operators.FsPointers.currentVersion(statePath).getOrElse(
-          sys.error(s"stream_kmv: no committed sketch state under $statePath")))
-      .select(col("day"), size(col("sk")).cast("long").as("n_sk"),
-        when(size(col("sk")) < kk, size(col("sk")).cast("double"))
-          .otherwise(lit((kk - 1).toDouble) /
-            (element_at(col("sk"), kk).cast("double") / lit(1000000007.0)))
-          .as("est_users"))
-      .orderBy("day")
-    val rows = java.util.Arrays.asList(view.collect(): _*)
-    graft.operators.Dedup.rmdir(new java.io.File(statePath))
-    spark.createDataFrame(rows, view.schema).orderBy("day")
+      ()
+    } { statePath =>
+      spark.read.parquet(
+          graft.operators.FsPointers.currentVersion(statePath).getOrElse(
+            sys.error(s"stream_kmv: no committed sketch state under $statePath")))
+        .select(col("day"), size(col("sk")).cast("long").as("n_sk"),
+          when(size(col("sk")) < kk, size(col("sk")).cast("double"))
+            .otherwise(lit((kk - 1).toDouble) /
+              (element_at(col("sk"), kk).cast("double") / lit(1000000007.0)))
+            .as("est_users"))
+    }
   }
 
   /** Streaming Misra-Gries heavy-hitter maintenance — BOUNDED state over
     * an UNBOUNDED key space, the constraint that separates streaming-at-
     * scale from batch: the token vocabulary grows with the corpus, but the
-    * maintained state never exceeds `cap` counters. Each micro-batch (one
-    * file, AvailableNow) folds its exact per-token counts into the
+    * maintained state never exceeds `cap` counters. Each replayed
+    * micro-batch folds its exact per-token counts into the
     * parquet-persisted sketch by union-sum, then MG-compresses: subtract
     * the (cap+1)th-largest merged count from every counter and drop the
     * non-positive — the Agarwal et al. mergeable-summaries merge, whose
@@ -589,77 +546,59 @@ object StreamingQueries {
     import graft.functions.{TextFunctions => T}
     val cap = 128
     val k = 64L
-    val tmp = System.getProperty("java.io.tmpdir")
-    val splitDir = docsSplit(spark, dir)
-    val runId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val statePath = new java.io.File(tmp, s"graft_hh_stream_$runId").getAbsolutePath
-    val ckpt = scratchCkpt(s"graft_hh_ckpt_$runId")
-    val src = spark.readStream
-      .schema(graft.Tables.documents(spark, dir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(splitDir)
-    val q = src.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val batchCounts = batch.toDF()
-          .select(explode(T.tokens(col("text"))).as("token"))
-          .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-        // the shared versioned fold (FsPointers.foldVersion): the fold
-        // writes a NEW snapshot instead of overwriting the one it reads,
-        // so the filtered state needs no persist+count materialization
-        // pass per batch (optimization round r16). The merged frame stays
-        // persisted: it has two genuine consumers (the decrement's top-k
-        // collect and the snapshot write). MG-fold replay is absorbed by
-        // the error bound (the closing exact recount is what the declared
-        // output rides); the fold's replay fence keeps a replay after the
-        // pointer swap from re-writing the committed snapshot.
-        graft.operators.FsPointers.foldVersion(spark, statePath, batchId) {
-          (committed, out) =>
-            val merged = committed.fold(batchCounts)(
-                _.unionByName(batchCounts)
-                  .groupBy(col("token")).agg(sum(col("cnt")).as("cnt")))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            // the compression decrement: the (cap+1)th-largest merged
-            // count (0 when ≤ cap counters survive the union) — a VALUE,
-            // not a row choice, so ties cost no determinism
-            val top = merged.orderBy(col("cnt").desc, col("token"))
-              .limit(cap + 1).select(col("cnt")).collect()
-            val d = if (top.length > cap) top.last.getLong(0) else 0L
-            try merged.filter(col("cnt") > lit(d))
-              .select(col("token"), (col("cnt") - lit(d)).as("cnt"))
-              .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(out)
-            finally { merged.unpersist(false); () }
-        }
-        ()
+    replayMaintained(spark, dir, "hh", "documents", graft.Tables.documents,
+        Seq(col("cnt").desc, col("token"))) { (statePath, batch, batchId) =>
+      val batchCounts = batch
+        .select(explode(T.tokens(col("text"))).as("token"))
+        .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
+      // the shared versioned fold (FsPointers.foldVersion): the fold
+      // writes a NEW snapshot instead of overwriting the one it reads,
+      // so the filtered state needs no persist+count materialization
+      // pass per batch (optimization round r16). The merged frame stays
+      // persisted: it has two genuine consumers (the decrement's top-k
+      // collect and the snapshot write). MG-fold replay is absorbed by
+      // the error bound (the closing exact recount is what the declared
+      // output rides); the fold's replay fence keeps a replay after the
+      // pointer swap from re-writing the committed snapshot.
+      graft.operators.FsPointers.foldVersion(spark, statePath, batchId) {
+        (committed, out) =>
+          val merged = committed.fold(batchCounts)(
+              _.unionByName(batchCounts)
+                .groupBy(col("token")).agg(sum(col("cnt")).as("cnt")))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          // the compression decrement: the (cap+1)th-largest merged
+          // count (0 when ≤ cap counters survive the union) — a VALUE,
+          // not a row choice, so ties cost no determinism
+          val top = merged.orderBy(col("cnt").desc, col("token"))
+            .limit(cap + 1).select(col("cnt")).collect()
+          val d = if (top.length > cap) top.last.getLong(0) else 0L
+          try merged.filter(col("cnt") > lit(d))
+            .select(col("token"), (col("cnt") - lit(d)).as("cnt"))
+            .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(out)
+          finally { merged.unpersist(false); () }
       }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally graft.operators.Dedup.rmdir(new java.io.File(ckpt))
-    val candidates = spark.read.parquet(
-        graft.operators.FsPointers.currentVersion(statePath).getOrElse(
-          sys.error(s"stream_heavy_hitters: no committed state under $statePath")))
-      .select(col("token"))
-    val tokens = graft.Tables.documents(spark, dir)
-      .select(explode(T.tokens(col("text"))).as("token"))
-    val total = tokens.agg(count(lit(1)).as("n"))
-    val view = tokens
-      .join(broadcast(candidates), Seq("token"), "left_semi")
-      .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-      .crossJoin(broadcast(total))
-      .filter(col("cnt") * lit(k) > col("n"))
-      .select(col("token"), col("cnt"), col("n"))
-      .orderBy(col("cnt").desc, col("token"))
-    val rows = java.util.Arrays.asList(view.collect(): _*)
-    graft.operators.Dedup.rmdir(new java.io.File(statePath))
-    spark.createDataFrame(rows, view.schema)
-      .orderBy(col("cnt").desc, col("token"))
+      ()
+    } { statePath =>
+      val candidates = spark.read.parquet(
+          graft.operators.FsPointers.currentVersion(statePath).getOrElse(
+            sys.error(s"stream_heavy_hitters: no committed state under $statePath")))
+        .select(col("token"))
+      val tokens = graft.Tables.documents(spark, dir)
+        .select(explode(T.tokens(col("text"))).as("token"))
+      val total = tokens.agg(count(lit(1)).as("n"))
+      tokens
+        .join(broadcast(candidates), Seq("token"), "left_semi")
+        .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
+        .crossJoin(broadcast(total))
+        .filter(col("cnt") * lit(k) > col("n"))
+        .select(col("token"), col("cnt"), col("n"))
+    }
   }
 
-  /** EventStreams.funnelStages (mapGroupsWithState windowFunnel DP,
-    * update mode) driven to completion: the terminal per-user stage must
-    * equal the batch funnel — the oracle IS q36_funnel's join-chain
-    * formulation, shared verbatim. */
+  /** EventStreams.funnelStages (the windowFunnel DP as group state, no
+    * watermark, update mode) driven to completion: the terminal per-user
+    * stage must equal the batch funnel — the oracle IS q36_funnel's
+    * join-chain formulation, shared verbatim. */
   def streamFunnel(spark: SparkSession, dir: String): DataFrame =
     runToCompletion(spark, "sfunnel",
       s => EventStreams.funnelStages(
@@ -667,9 +606,9 @@ object StreamingQueries {
         Seq("view", "click", "purchase"), windowMicros = 21600000000L).toDF(),
       Seq("user_id"), mode = "update")
 
-  /** EventStreams.seqCountStages (mapGroupsWithState sequence counting,
-    * update mode) driven to completion: the terminal per-user count must
-    * equal the batch operator — the oracle IS q46_seq_count's
+  /** EventStreams.seqCountStages (sequence counting as group state, no
+    * watermark, update mode) driven to completion: the terminal per-user
+    * count must equal the batch operator — the oracle IS q46_seq_count's
     * recursive-CTE state machine, shared verbatim. */
   def streamSeqCount(spark: SparkSession, dir: String): DataFrame =
     runToCompletion(spark, "ssqc",
@@ -704,8 +643,8 @@ object StreamingQueries {
       .orderBy(col("user_id"))
   }
 
-  /** EventStreams.anomalies (flatMapGroupsWithState prefix z-test,
-    * update mode) driven to completion: every flagged event depends only
+  /** EventStreams.anomalies (prefix z-test as group state, no
+    * watermark, update mode) driven to completion: every flagged event depends only
     * on the immutable event-time prefix before it, so the batch window
     * oracle (prefix sums + the same exact-integer z-test in HUGEINT) is
     * bit-exact. */
@@ -715,7 +654,7 @@ object StreamingQueries {
         s, EventStreams.readTestdataEvents(s, dir)).toDF(),
       Seq("user_id", "event_id"), mode = "update")
 
-  /** EventStreams.ewma (flatMapGroupsWithState bounded tap-list state,
+  /** EventStreams.ewma (bounded tap-list group state, no watermark,
     * update mode) driven to completion: dyadic weights make every
     * intermediate exact, so the streamed smoother must bit-equal the
     * batch lag-chain — q64_ewma's oracle gates it verbatim. */
@@ -725,73 +664,61 @@ object StreamingQueries {
         s, EventStreams.readTestdataEvents(s, dir)).toDF(),
       Seq("user_id", "event_id"), mode = "update")
 
-  /** EventStreams.anomaliesBuffered driven across a FOUR-micro-batch
-    * time-ordered replay (maxFilesPerTrigger=1 over [[eventsSplitByTime]]):
-    * the multi-batch form of stream_anomaly, where no key can rely on one
+  /** EventStreams.anomalies with the 30 min watermark, driven across a
+    * FOUR-micro-batch time-ordered replay ([[replayEvents]]): the
+    * multi-batch form of stream_anomaly, where no key can rely on one
     * AvailableNow iterator delivering all its events — the per-key
     * event-time buffer + watermark flush must reconstruct the exact
     * (ts, event_id) fold order across batch boundaries. The oracle is the
     * batch z-test restricted to ts ≤ the terminal watermark (events inside
     * the final 30 min horizon are still buffered at stream end, undecided
     * by design). */
-  def streamAnomalyReplay(spark: SparkSession, dir: String): DataFrame = {
-    val splitDir = eventsSplitByTime(spark, dir)
+  def streamAnomalyReplay(spark: SparkSession, dir: String): DataFrame =
     runToCompletion(spark, "sanomr",
-      s => EventStreams.anomaliesBuffered(
-        s, replaySource(s, dir, splitDir)).toDF(),
+      s => EventStreams.anomalies(s, replayEvents(s, dir),
+        watermark = Some(ReplaySlicing.Watermark)).toDF(),
       Seq("user_id", "event_id"), mode = "update")
-  }
 
-  /** The time-sliced four-file replay source shared by the *_replay
-    * gates (schema probed from the batch loader; 5-column event shape). */
-  private def replaySource(s: SparkSession, dir: String, splitDir: String) =
-    s.readStream
-      .schema(graft.Tables.events(s, dir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(splitDir)
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value"))
-
-  /** EventStreams.ewmaBuffered across the four-micro-batch time-ordered
-    * replay: each event's smoothed value emits only once the watermark
-    * decides it, in (ts, event_id) fold order across batch boundaries —
-    * the q64 lag-chain restricted to the terminal watermark gates it
-    * bit-exact (dyadic weights, as for stream_ewma). */
-  def streamEwmaReplay(spark: SparkSession, dir: String): DataFrame = {
-    val splitDir = eventsSplitByTime(spark, dir)
+  /** EventStreams.ewma with the 30 min watermark across the
+    * four-micro-batch time-ordered replay: each event's smoothed value
+    * emits only once the watermark decides it, in (ts, event_id) fold
+    * order across batch boundaries — the q64 lag-chain restricted to the
+    * terminal watermark gates it bit-exact (dyadic weights, as for
+    * stream_ewma). */
+  def streamEwmaReplay(spark: SparkSession, dir: String): DataFrame =
     runToCompletion(spark, "sewmar",
-      s => EventStreams.ewmaBuffered(s, replaySource(s, dir, splitDir)).toDF(),
+      s => EventStreams.ewma(s, replayEvents(s, dir),
+        watermark = Some(ReplaySlicing.Watermark)).toDF(),
       Seq("user_id", "event_id"), mode = "update")
-  }
 
-  /** EventStreams.funnelBuffered across the replay: terminal per-user
-    * funnel stage over the DECIDED (ts ≤ terminal watermark) prefix.
-    * Update-mode sinks append one row per (user, emitting batch); stage
-    * counts only grow, so the terminal state is the per-user max. */
-  def streamFunnelReplay(spark: SparkSession, dir: String): DataFrame = {
-    val splitDir = eventsSplitByTime(spark, dir)
+  /** EventStreams.funnelStages with the 30 min watermark across the
+    * replay: terminal per-user funnel stage over the DECIDED
+    * (ts ≤ terminal watermark) prefix. Update-mode sinks append one row
+    * per (user, emitting batch); stage counts only grow, so the terminal
+    * state is the per-user max. */
+  def streamFunnelReplay(spark: SparkSession, dir: String): DataFrame =
     runToCompletion(spark, "sfunr",
-      s => EventStreams.funnelBuffered(s, replaySource(s, dir, splitDir),
-        Seq("view", "click", "purchase"), windowMicros = 21600000000L).toDF(),
+      s => EventStreams.funnelStages(s, replayEvents(s, dir),
+        Seq("view", "click", "purchase"), windowMicros = 21600000000L,
+        watermark = Some(ReplaySlicing.Watermark)).toDF(),
       Seq("user_id"), mode = "update")
       .groupBy(col("user_id"))
       .agg(max(col("funnel_stage")).as("funnel_stage"))
       .orderBy(col("user_id"))
-  }
 
-  /** EventStreams.seqCountBuffered across the replay: terminal per-user
-    * completed-sequence count over the decided prefix, per-user max of
-    * the update-mode emissions (counts only grow). */
-  def streamSeqReplay(spark: SparkSession, dir: String): DataFrame = {
-    val splitDir = eventsSplitByTime(spark, dir)
+  /** EventStreams.seqCountStages with the 30 min watermark across the
+    * replay: terminal per-user completed-sequence count over the decided
+    * prefix, per-user max of the update-mode emissions (counts only
+    * grow). */
+  def streamSeqReplay(spark: SparkSession, dir: String): DataFrame =
     runToCompletion(spark, "ssqr",
-      s => EventStreams.seqCountBuffered(s, replaySource(s, dir, splitDir),
-        Seq("view", "click", "purchase")).toDF(),
+      s => EventStreams.seqCountStages(s, replayEvents(s, dir),
+        Seq("view", "click", "purchase"),
+        watermark = Some(ReplaySlicing.Watermark)).toDF(),
       Seq("user_id"), mode = "update")
       .groupBy(col("user_id"))
       .agg(max(col("n_matches")).as("n_matches"))
       .orderBy(col("user_id"))
-  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "stream_emb_store" -> (streamEmbStore _),

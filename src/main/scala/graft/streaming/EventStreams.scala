@@ -193,6 +193,13 @@ object EventStreams {
   // case classes ("Private member cannot be accessed")
   case class UserState(n: Long, cents: Long, hasValue: Boolean, lastTsUs: Long)
 
+  /** A value as exact integer cents ([[UserState]]'s rounding rule) —
+    * what the user aggregate, the z-state and the EWMA taps accumulate. */
+  private def cents(v: Double): Long =
+    java.math.BigDecimal.valueOf(v)
+      .setScale(2, java.math.RoundingMode.HALF_UP)
+      .movePointRight(2).longValueExact()
+
   // java.sql.Timestamp keeps sub-second precision in getNanos, not
   // getTime (ms) — state tracks full epoch MICROseconds or max(ts)
   // would silently truncate the micros the events carry
@@ -209,10 +216,6 @@ object EventStreams {
     * checkpointed state store. */
   def runningUserAggs(spark: SparkSession, events: DataFrame): Dataset[UserAgg] = {
     import spark.implicits._
-    def cents(v: Double): Long =
-      java.math.BigDecimal.valueOf(v)
-        .setScale(2, java.math.RoundingMode.HALF_UP)
-        .movePointRight(2).longValueExact()
     events.as[Event]
       .groupByKey(_.user_id)
       .mapGroupsWithState[UserState, UserAgg](GroupStateTimeout.NoTimeout) {
@@ -262,256 +265,248 @@ object EventStreams {
       }
   }
 
-  case class FunnelRow(user_id: Long, funnel_stage: Long)
-  case class FunnelState(starts: Seq[Long])
+  /** The event-time buffer every ordered per-key fold below
+    * ([[funnelStages]], [[seqCountStages]], [[anomalies]], [[ewma]]) runs
+    * through: merge the key's persisted buffer with the batch's arrivals,
+    * order by the op's (time, tiebreak) key, and split at the watermark —
+    * everything ≤ it is ripe for the deterministic fold, the rest stays
+    * buffered. The watermark bounds the buffer exactly as it bounds any
+    * windowed aggregation's live state. With no watermark every row is
+    * ripe: nothing is buffered, nothing is timed out, and the batch folds
+    * in the same order.
+    *
+    * A non-empty buffer arms an event-time timeout so the key is
+    * re-invoked when the watermark alone advances (terminal no-data
+    * batch, or batches carrying only other keys). Spark fires a timeout
+    * only when `timeoutTs < watermark` STRICTLY, so arm 1 ms BELOW the
+    * earliest buffered event: an event exactly at a future watermark
+    * millisecond then still gets its deciding invocation (the split is
+    * the actual ≤-watermark gate — firing early is harmless, the buffer
+    * just re-arms). The API requires a timestamp strictly above the
+    * current watermark, hence the max. */
+  private def splitRipe[A](state: GroupState[_], watermarked: Boolean,
+      buffered: Seq[(Long, Long, A)], incoming: Iterator[(Long, Long, A)])
+      : (Seq[(Long, Long, A)], Seq[(Long, Long, A)]) = {
+    val all = (buffered ++ incoming).sortBy(t => (t._1, t._2))
+    if (!watermarked) (all, Nil)
+    else {
+      val wmUs = state.getCurrentWatermarkMs() * 1000L
+      val (ripe, stillBuf) = all.partition(_._1 <= wmUs)
+      if (stillBuf.nonEmpty)
+        state.setTimeoutTimestamp(
+          math.max(stillBuf.head._1 / 1000L - 1L, wmUs / 1000L + 1L))
+      (ripe, stillBuf)
+    }
+  }
 
-  /** Streaming funnel (ST6-family): the windowFunnel DP as
-    * mapGroupsWithState custom state — acc[s] = max chain-start among
-    * chains at stage s+1, exactly the batch operator's accumulator, so
-    * the terminal state must hash-match the batch funnel (and therefore
-    * its join-chain oracle). Events inside a batch are sorted by
-    * (ts, stage) before folding — the DP needs time order, which the
-    * shuffled iterator does not provide; across batches the gate relies
-    * on AvailableNow's single-batch read like every other parity gate
-    * here (a production multi-batch deployment would pair this with a
-    * per-user event-time buffer flushed by watermark). */
+  /** The events an ordered fold reads, carrying the `watermark` when one
+    * is given, and the matching group-state timeout. */
+  private def timed(events: DataFrame, watermark: Option[String]): DataFrame =
+    watermark.fold(events)(events.withWatermark("ts", _))
+  private def timeoutOf(watermark: Option[String]): GroupStateTimeout =
+    if (watermark.isDefined) GroupStateTimeout.EventTimeTimeout
+    else GroupStateTimeout.NoTimeout
+
+  case class FunnelRow(user_id: Long, funnel_stage: Long)
+  case class FunnelState(starts: Seq[Long], nFolded: Long,
+      bufTsUs: Seq[Long], bufStage: Seq[Long])
+
+  /** Streaming funnel (ST6-family): the windowFunnel DP as custom state —
+    * acc[s] = max chain-start among chains at stage s+1, exactly the
+    * batch operator's accumulator, so the terminal state must hash-match
+    * the batch funnel (and therefore its join-chain oracle). (ts, stage)
+    * pairs fold in the DP's own order through [[splitRipe]]: without a
+    * `watermark` each batch folds whole (the stream_funnel gate's single
+    * AvailableNow batch); with one they wait in the per-user event-time
+    * buffer until the watermark passes them, so the terminal per-user
+    * stage is batch-identical no matter how the key's events spread
+    * across micro-batches. A user emits only after its first DECIDED
+    * event: users whose events all sit inside the final horizon are
+    * undecided, exactly what the terminal-watermark oracle states. Stage
+    * counts only grow, so the terminal row is the per-user max across
+    * update-mode emissions. */
   def funnelStages(spark: SparkSession, events: DataFrame, types: Seq[String],
-      windowMicros: Long): Dataset[FunnelRow] = {
+      windowMicros: Long, watermark: Option[String] = None): Dataset[FunnelRow] = {
     import spark.implicits._
     val n = types.size
     val typeIdx = types.zipWithIndex.toMap
-    val ev = events.filter(col("event_type").isin(types: _*))
-      .select(col("user_id"), unix_micros(col("ts")).as("t"), col("event_type"))
-      .as[(Long, Long, String)]
-    ev.groupByKey(_._1)
-      .mapGroupsWithState[FunnelState, FunnelRow](GroupStateTimeout.NoTimeout) {
-        (userId: Long, batch: Iterator[(Long, Long, String)],
+    timed(events, watermark)
+      .filter(col("event_type").isin(types: _*))
+      .select(col("user_id"), col("ts"), col("event_type"))
+      .as[(Long, Timestamp, String)]
+      .groupByKey(_._1)
+      .flatMapGroupsWithState[FunnelState, FunnelRow](
+          OutputMode.Update, timeoutOf(watermark)) {
+        (userId: Long, batch: Iterator[(Long, Timestamp, String)],
             state: GroupState[FunnelState]) =>
-          val acc = state.getOption
-            .map(_.starts.toArray)
-            .getOrElse(Array.fill(n)(Long.MinValue))
-          val evs = batch.map { case (_, t, et) => (t, typeIdx(et) + 1) }
-            .toArray.sortBy(identity)
-          evs.foreach { case (t, s) =>
+          val prev = state.getOption.getOrElse(
+            FunnelState(Seq.fill(n)(Long.MinValue), 0L, Nil, Nil))
+          val (ripe, stillBuf) = splitRipe(state, watermark.isDefined,
+            prev.bufTsUs.lazyZip(prev.bufStage).map((t, s) => (t, s, ())).toSeq,
+            batch.map { case (_, ts, et) =>
+              (tsToMicros(ts), (typeIdx(et) + 1).toLong, ()) })
+          val acc = prev.starts.toArray
+          ripe.foreach { case (t, sL, _) =>
+            val s = sL.toInt
             if (s == 1) acc(0) = math.max(acc(0), t)
             else if (acc(s - 2) != Long.MinValue && t <= acc(s - 2) + windowMicros)
               acc(s - 1) = math.max(acc(s - 1), acc(s - 2))
           }
-          state.update(FunnelState(acc.toSeq))
-          FunnelRow(userId, acc.count(_ != Long.MinValue).toLong)
+          val folded = prev.nFolded + ripe.size
+          state.update(FunnelState(acc.toSeq, folded,
+            stillBuf.map(_._1), stillBuf.map(_._2)))
+          if (folded > 0)
+            Iterator(FunnelRow(userId, acc.count(_ != Long.MinValue).toLong))
+          else Iterator.empty
       }
   }
 
   case class SeqCountRow(user_id: Long, n_matches: Long)
-  case class SeqCountState(stage: Int, cnt: Long)
+  case class SeqCountState(stage: Int, cnt: Long, nFolded: Long,
+      bufTsUs: Seq[Long], bufStage: Seq[Long])
 
   /** Streaming sequence counting (ST6-family): q46_seq_count's greedy
-    * state machine as mapGroupsWithState custom state — (stage, count),
-    * an event matching stage+1 advances, a completed chain resets and
-    * increments. Terminal state must hash-match the batch operator (and
-    * therefore its recursive-CTE oracle). Same in-batch (ts, stage)
-    * sort and single-batch AvailableNow reliance as [[funnelStages]]. */
+    * state machine as custom state — (stage, count), an event matching
+    * stage+1 advances, a completed chain resets and increments. Terminal
+    * state must hash-match the batch operator (and therefore its
+    * recursive-CTE oracle). Same (ts, stage) fold order, optional
+    * event-time buffer and emission rule as [[funnelStages]]: counts only
+    * grow, so the terminal row is the per-user max across update-mode
+    * emissions; users with no decided event never emit. */
   def seqCountStages(spark: SparkSession, events: DataFrame,
-      types: Seq[String]): Dataset[SeqCountRow] = {
+      types: Seq[String], watermark: Option[String] = None): Dataset[SeqCountRow] = {
     import spark.implicits._
     val n = types.size
     val typeIdx = types.zipWithIndex.toMap
-    val ev = events.filter(col("event_type").isin(types: _*))
-      .select(col("user_id"), unix_micros(col("ts")).as("t"), col("event_type"))
-      .as[(Long, Long, String)]
-    ev.groupByKey(_._1)
-      .mapGroupsWithState[SeqCountState, SeqCountRow](GroupStateTimeout.NoTimeout) {
-        (userId: Long, batch: Iterator[(Long, Long, String)],
+    timed(events, watermark)
+      .filter(col("event_type").isin(types: _*))
+      .select(col("user_id"), col("ts"), col("event_type"))
+      .as[(Long, Timestamp, String)]
+      .groupByKey(_._1)
+      .flatMapGroupsWithState[SeqCountState, SeqCountRow](
+          OutputMode.Update, timeoutOf(watermark)) {
+        (userId: Long, batch: Iterator[(Long, Timestamp, String)],
             state: GroupState[SeqCountState]) =>
-          var st = state.getOption.map(_.stage).getOrElse(0)
-          var cnt = state.getOption.map(_.cnt).getOrElse(0L)
-          val evs = batch.map { case (_, t, et) => (t, typeIdx(et) + 1) }
-            .toArray.sortBy(identity)
-          evs.foreach { case (_, s) =>
+          val prev = state.getOption.getOrElse(SeqCountState(0, 0L, 0L, Nil, Nil))
+          val (ripe, stillBuf) = splitRipe(state, watermark.isDefined,
+            prev.bufTsUs.lazyZip(prev.bufStage).map((t, s) => (t, s, ())).toSeq,
+            batch.map { case (_, ts, et) =>
+              (tsToMicros(ts), (typeIdx(et) + 1).toLong, ()) })
+          var st = prev.stage
+          var cnt = prev.cnt
+          ripe.foreach { case (_, sL, _) =>
+            val s = sL.toInt
             if (s == st + 1) { st += 1; if (st == n) { cnt += 1; st = 0 } }
           }
-          state.update(SeqCountState(st, cnt))
-          SeqCountRow(userId, cnt)
+          val folded = prev.nFolded + ripe.size
+          state.update(SeqCountState(st, cnt, folded,
+            stillBuf.map(_._1), stillBuf.map(_._2)))
+          if (folded > 0) Iterator(SeqCountRow(userId, cnt)) else Iterator.empty
       }
   }
 
   case class AnomalyRow(user_id: Long, event_id: Long, ts_us: Long,
       value: Double, n_prior: Long, mean_prior: Double)
-  case class AnomalyState(n: Long, cents: Long, sqCents: Long)
+  case class AnomalyState(n: Long, cents: Long, sqCents: Long,
+      bufTsUs: Seq[Long], bufId: Seq[Long], bufValue: Seq[Double])
 
   /** Streaming per-key z-score anomaly detection (ST6-family): flag an
     * event whose value deviates from the mean of the SAME user's PRIOR
     * events (event-time order) by more than `kSigma` standard deviations,
-    * once at least `minPrior` priors exist. The state is three integers —
-    * count, exact-cents sum, exact-cents sum of squares — so it is
-    * bounded per key forever, and the flag test is evaluated in exact
-    * integer arithmetic: (x·n − s)² > k²·(n·ss − s²) is the z-test
+    * once at least `minPrior` priors exist. The z-state is three
+    * integers — count, exact-cents sum, exact-cents sum of squares — so
+    * it is bounded per key forever, and the flag test is evaluated in
+    * exact integer arithmetic: (x·n − s)² > k²·(n·ss − s²) is the z-test
     * cleared of divisions, computed on BigInt so no magnitude ever
     * rounds, which is what lets a SQL window oracle (HUGEINT math) gate
-    * the stream hash-exact. Within a batch events fold in (ts, event_id)
-    * order — prefix semantics need time order, which the shuffled
-    * iterator does not provide; across batches the gate relies on
-    * AvailableNow's single-batch read like [[funnelStages]]
-    * ([[anomaliesBuffered]] is the multi-batch form: the same z-test
-    * behind a per-key event-time buffer flushed by watermark, gated
-    * across a four-file replay). Flags are emitted as they
-    * are decided (flatMap, update mode) and never retracted — each
-    * decision depends only on the immutable prefix before the event. */
+    * the stream hash-exact. Events fold in (ts, event_id) order through
+    * [[splitRipe]]: without a `watermark` each batch folds whole (the
+    * stream_anomaly gate's single AvailableNow batch); with one, arriving
+    * events wait in the per-key event-time buffer and each is decided
+    * only once the watermark passes its event time, so the emitted
+    * prefix is immutable no matter how many micro-batches the stream
+    * takes or how keys interleave across them. The stream_anomaly_replay
+    * gate replays the events table as four time-sliced files; its oracle
+    * is the batch z-test restricted to ts ≤ the terminal watermark
+    * (events inside the final horizon are still buffered when the stream
+    * ends — never decided). State is the z-state plus only the ≤-horizon
+    * buffer. Flags are emitted as they are decided (update mode) and
+    * never retracted — each decision depends only on the immutable
+    * prefix before the event. */
   def anomalies(spark: SparkSession, events: DataFrame,
-      minPrior: Int = 8, kSigma: Int = 3): Dataset[AnomalyRow] = {
+      minPrior: Int = 8, kSigma: Int = 3,
+      watermark: Option[String] = None): Dataset[AnomalyRow] = {
     import spark.implicits._
-    def cents(v: Double): Long =
-      java.math.BigDecimal.valueOf(v)
-        .setScale(2, java.math.RoundingMode.HALF_UP)
-        .movePointRight(2).longValueExact()
     // the z-test is a statement about VALUES: an event with NULL value
     // carries no sample, so the op runs on the value-bearing subset (its
-    // oracle filters WHERE value IS NOT NULL identically) — e.value.get
-    // below is safe by this filter
-    events.filter(col("value").isNotNull).as[Event]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[AnomalyState, AnomalyRow](
-          OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (userId: Long, batch: Iterator[Event], state: GroupState[AnomalyState]) =>
-          var st = state.getOption.getOrElse(AnomalyState(0L, 0L, 0L))
-          val evs = batch.toArray.sortBy(e => (tsToMicros(e.ts), e.event_id))
-          val out = scala.collection.mutable.ArrayBuffer.empty[AnomalyRow]
-          evs.foreach { e =>
-            val c = cents(e.value.get)
-            if (st.n >= minPrior) {
-              val dev = BigInt(c) * st.n - BigInt(st.cents)
-              val varTerm = BigInt(st.n) * st.sqCents - BigInt(st.cents) * st.cents
-              if (dev * dev > BigInt(kSigma.toLong * kSigma) * varTerm)
-                out += AnomalyRow(userId, e.event_id, tsToMicros(e.ts), e.value.get,
-                  st.n, st.cents.toDouble / (100.0 * st.n))
-            }
-            st = AnomalyState(st.n + 1, st.cents + c, st.sqCents + c * c)
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
-
-  /** Event-time buffer bookkeeping shared by the *Buffered multi-batch
-    * operators: merge the persisted buffer with the batch's arrivals,
-    * order by the op's (time, tiebreak) key, and split at the watermark —
-    * everything ≤ it is ripe for the deterministic fold, the rest stays
-    * buffered. The watermark bounds the buffer exactly as it bounds any
-    * windowed aggregation's live state. */
-  private def splitRipe[A](buffered: Seq[(Long, Long, A)],
-      incoming: Iterator[(Long, Long, A)],
-      wmUs: Long): (Seq[(Long, Long, A)], Seq[(Long, Long, A)]) =
-    (buffered ++ incoming).sortBy(t => (t._1, t._2)).partition(_._1 <= wmUs)
-
-  /** Arm an event-time timeout so a key with a non-empty buffer is
-    * re-invoked when the watermark alone advances (terminal no-data
-    * batch, or batches carrying only other keys). Spark fires a timeout
-    * only when `timeoutTs < watermark` STRICTLY, so arm 1 ms BELOW the
-    * earliest buffered event: an event exactly at a future watermark
-    * millisecond then still gets its deciding invocation (splitRipe is
-    * the actual ≤-watermark gate — firing early is harmless, the buffer
-    * just re-arms). The API requires a timestamp strictly above the
-    * current watermark, hence the max. */
-  private def armTimeout(state: GroupState[_], firstBufTsUs: Long,
-      wmUs: Long): Unit =
-    state.setTimeoutTimestamp(
-      math.max(firstBufTsUs / 1000L - 1L, wmUs / 1000L + 1L))
-
-  case class AnomalyBufState(n: Long, cents: Long, sqCents: Long,
-      bufTsUs: Seq[Long], bufId: Seq[Long], bufValue: Seq[Double])
-
-  /** Multi-batch [[anomalies]]: the same prefix z-test, but with a
-    * per-key EVENT-TIME BUFFER flushed by the watermark — the production
-    * form that does NOT rely on a single AvailableNow batch delivering
-    * each key's events in one iterator. Arriving events are buffered in
-    * state; when the watermark advances (new data for the key, or an
-    * event-time timeout when only OTHER keys got data), every buffered
-    * event with ts ≤ watermark is folded in (ts, event_id) order —
-    * exactly the batch DP's order — and its flag decision emitted. Events
-    * still above the watermark stay buffered, so the emitted prefix is
-    * immutable no matter how many micro-batches the stream takes or how
-    * keys interleave across them. State is the 3-integer z-state plus
-    * only the ≤-horizon buffer (the watermark bounds it, same as any
-    * windowed aggregation's live state). The gate replays the events
-    * table as four time-sliced files, one per micro-batch; the oracle is
-    * the batch z-test restricted to ts ≤ the terminal watermark (events
-    * inside the final 30 min horizon are still buffered when the stream
-    * ends — never decided, exactly what the semantics say). */
-  def anomaliesBuffered(spark: SparkSession, events: DataFrame,
-      minPrior: Int = 8, kSigma: Int = 3,
-      watermark: String = "30 minutes"): Dataset[AnomalyRow] = {
-    import spark.implicits._
-    def cents(v: Double): Long =
-      java.math.BigDecimal.valueOf(v)
-        .setScale(2, java.math.RoundingMode.HALF_UP)
-        .movePointRight(2).longValueExact()
-    // The filter is written after withWatermark, but Catalyst pushes a
-    // predicate that does not reference the event-time column BELOW the
-    // EventTimeWatermark operator — so the executed plan's watermark
-    // tracks the FILTERED stream (equivalent to a source that never
-    // carried the value-less rows). The oracle computes wm over the same
-    // filtered set; don't "fix" the order here without changing it there.
-    events.withWatermark("ts", watermark)
+    // oracles filter WHERE value IS NOT NULL identically) — e.value.get
+    // below is safe by this filter. The filter is written after
+    // withWatermark, but Catalyst pushes a predicate that does not
+    // reference the event-time column BELOW the EventTimeWatermark
+    // operator — so the executed plan's watermark tracks the FILTERED
+    // stream (equivalent to a source that never carried the value-less
+    // rows). The replay oracle computes wm over the same filtered set;
+    // don't "fix" the order here without changing it there.
+    timed(events, watermark)
       .filter(col("value").isNotNull).as[Event]
       .groupByKey(_.user_id)
-      .flatMapGroupsWithState[AnomalyBufState, AnomalyRow](
-          OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, batch: Iterator[Event], state: GroupState[AnomalyBufState]) =>
-          val prev = state.getOption.getOrElse(
-            AnomalyBufState(0L, 0L, 0L, Nil, Nil, Nil))
-          val incoming = batch.map(e => (tsToMicros(e.ts), e.event_id, e.value.get))
-          val buffered =
-            prev.bufTsUs.lazyZip(prev.bufId).lazyZip(prev.bufValue).toSeq
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val (ripe, stillBuf) = splitRipe(buffered, incoming, wmUs)
-          var st = AnomalyState(prev.n, prev.cents, prev.sqCents)
+      .flatMapGroupsWithState[AnomalyState, AnomalyRow](
+          OutputMode.Update, timeoutOf(watermark)) {
+        (userId: Long, batch: Iterator[Event], state: GroupState[AnomalyState]) =>
+          val prev = state.getOption.getOrElse(AnomalyState(0L, 0L, 0L, Nil, Nil, Nil))
+          val (ripe, stillBuf) = splitRipe(state, watermark.isDefined,
+            prev.bufTsUs.lazyZip(prev.bufId).lazyZip(prev.bufValue).toSeq,
+            batch.map(e => (tsToMicros(e.ts), e.event_id, e.value.get)))
+          var (n, s, ss) = (prev.n, prev.cents, prev.sqCents)
           val out = scala.collection.mutable.ArrayBuffer.empty[AnomalyRow]
           ripe.foreach { case (tUs, id, v) =>
             val c = cents(v)
-            if (st.n >= minPrior) {
-              val dev = BigInt(c) * st.n - BigInt(st.cents)
-              val varTerm = BigInt(st.n) * st.sqCents - BigInt(st.cents) * st.cents
+            if (n >= minPrior) {
+              val dev = BigInt(c) * n - BigInt(s)
+              val varTerm = BigInt(n) * ss - BigInt(s) * s
               if (dev * dev > BigInt(kSigma.toLong * kSigma) * varTerm)
-                out += AnomalyRow(userId, id, tUs, v, st.n,
-                  st.cents.toDouble / (100.0 * st.n))
+                out += AnomalyRow(userId, id, tUs, v, n, s.toDouble / (100.0 * n))
             }
-            st = AnomalyState(st.n + 1, st.cents + c, st.sqCents + c * c)
+            n += 1; s += c; ss += c * c
           }
-          state.update(AnomalyBufState(st.n, st.cents, st.sqCents,
+          state.update(AnomalyState(n, s, ss,
             stillBuf.map(_._1), stillBuf.map(_._2), stillBuf.map(_._3)))
-          if (stillBuf.nonEmpty) armTimeout(state, stillBuf.head._1, wmUs)
           out.iterator
       }
   }
 
-  case class EwmaBufState(taps: Seq[Long],
+  case class EwmaRow(user_id: Long, event_id: Long, ts: Timestamp,
+      value: Double, ewma: Double)
+  case class EwmaState(taps: Seq[Long],
       bufTsUs: Seq[Long], bufId: Seq[Long], bufValue: Seq[Double])
 
-  /** Multi-batch [[ewma]]: the 16-tap dyadic smoother behind the same
-    * per-key event-time buffer as [[anomaliesBuffered]] — each event's
-    * smoothed value is emitted only once the watermark passes its event
-    * time, folded in (ts, event_id) order regardless of how many
-    * micro-batches delivered the key's events. State is the ≤`taps`
-    * tap list plus the ≤-horizon buffer. */
-  def ewmaBuffered(spark: SparkSession, events: DataFrame, taps: Int = 16,
-      watermark: String = "30 minutes"): Dataset[EwmaRow] = {
+  /** Streaming 16-tap EWMA — the unbounded face of the batch q64 window:
+    * per-key state is the last ≤`taps` exact-cents values (bounded
+    * forever), and each event emits its smoothed value from the tap list.
+    * Because the weights are dyadic (α = 0.5, truncated at 16 taps) every
+    * intermediate is an exact binary fraction, so summation order cannot
+    * matter and the streamed result must BIT-EQUAL the batch lag-chain —
+    * the q64 oracle gates this stream verbatim. Same (ts, event_id) fold
+    * order and optional event-time buffer as [[anomalies]]: with a
+    * `watermark` each event's smoothed value is emitted only once the
+    * watermark passes its event time, however many micro-batches
+    * delivered the key's events, and the state adds the ≤-horizon
+    * buffer. A NULL-value event carries nothing to smooth — the op runs
+    * on the value-bearing subset, mirrored by the oracles'
+    * value IS NOT NULL. */
+  def ewma(spark: SparkSession, events: DataFrame, taps: Int = 16,
+      watermark: Option[String] = None): Dataset[EwmaRow] = {
     import spark.implicits._
-    def cents(v: Double): Long =
-      java.math.BigDecimal.valueOf(v)
-        .setScale(2, java.math.RoundingMode.HALF_UP)
-        .movePointRight(2).longValueExact()
-    events.withWatermark("ts", watermark)
+    timed(events, watermark)
       .filter(col("value").isNotNull).as[Event]
       .groupByKey(_.user_id)
-      .flatMapGroupsWithState[EwmaBufState, EwmaRow](
-          OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, batch: Iterator[Event], state: GroupState[EwmaBufState]) =>
-          val prev = state.getOption.getOrElse(EwmaBufState(Nil, Nil, Nil, Nil))
-          val incoming = batch.map(e => (tsToMicros(e.ts), e.event_id, e.value.get))
-          val buffered =
-            prev.bufTsUs.lazyZip(prev.bufId).lazyZip(prev.bufValue).toSeq
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val (ripe, stillBuf) = splitRipe(buffered, incoming, wmUs)
+      .flatMapGroupsWithState[EwmaState, EwmaRow](
+          OutputMode.Update, timeoutOf(watermark)) {
+        (userId: Long, batch: Iterator[Event], state: GroupState[EwmaState]) =>
+          val prev = state.getOption.getOrElse(EwmaState(Nil, Nil, Nil, Nil))
+          val (ripe, stillBuf) = splitRipe(state, watermark.isDefined,
+            prev.bufTsUs.lazyZip(prev.bufId).lazyZip(prev.bufValue).toSeq,
+            batch.map(e => (tsToMicros(e.ts), e.event_id, e.value.get)))
           var tapsNow = prev.taps.toList
           val out = ripe.map { case (tUs, id, v) =>
             tapsNow = (cents(v) :: tapsNow).take(taps)
@@ -522,147 +517,8 @@ object EventStreams {
             }
             EwmaRow(userId, id, microsToTs(tUs), v, num / den / 100.0)
           }
-          state.update(EwmaBufState(tapsNow,
+          state.update(EwmaState(tapsNow,
             stillBuf.map(_._1), stillBuf.map(_._2), stillBuf.map(_._3)))
-          if (stillBuf.nonEmpty) armTimeout(state, stillBuf.head._1, wmUs)
-          out.iterator
-      }
-  }
-
-  case class FunnelBufState(starts: Seq[Long], nFolded: Long,
-      bufTsUs: Seq[Long], bufStage: Seq[Long])
-
-  /** Multi-batch [[funnelStages]]: the windowFunnel DP behind the
-    * event-time buffer — buffered (ts, stage) pairs fold in the DP's own
-    * (ts, stage) order once the watermark passes them, so the terminal
-    * per-user stage is batch-identical no matter how the key's events
-    * spread across micro-batches. A user emits only after its first
-    * DECIDED (≤ watermark) event: users whose events all sit inside the
-    * final horizon are undecided, exactly what the terminal-watermark
-    * oracle states. Stage counts only grow, so the terminal row is the
-    * per-user max across update-mode emissions. */
-  def funnelBuffered(spark: SparkSession, events: DataFrame,
-      types: Seq[String], windowMicros: Long,
-      watermark: String = "30 minutes"): Dataset[FunnelRow] = {
-    import spark.implicits._
-    val n = types.size
-    val typeIdx = types.zipWithIndex.toMap
-    val ev = events.withWatermark("ts", watermark)
-      .filter(col("event_type").isin(types: _*))
-      .select(col("user_id"), col("ts"), col("event_type"))
-      .as[(Long, Timestamp, String)]
-    ev.groupByKey(_._1)
-      .flatMapGroupsWithState[FunnelBufState, FunnelRow](
-          OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, batch: Iterator[(Long, Timestamp, String)],
-            state: GroupState[FunnelBufState]) =>
-          val prev = state.getOption.getOrElse(
-            FunnelBufState(Seq.fill(n)(Long.MinValue), 0L, Nil, Nil))
-          val incoming = batch.map { case (_, ts, et) =>
-            (tsToMicros(ts), (typeIdx(et) + 1).toLong, ()) }
-          val buffered = prev.bufTsUs.lazyZip(prev.bufStage)
-            .map((t, s) => (t, s, ())).toSeq
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val (ripe, stillBuf) = splitRipe(buffered, incoming, wmUs)
-          val acc = prev.starts.toArray
-          ripe.foreach { case (t, sL, _) =>
-            val s = sL.toInt
-            if (s == 1) acc(0) = math.max(acc(0), t)
-            else if (acc(s - 2) != Long.MinValue && t <= acc(s - 2) + windowMicros)
-              acc(s - 1) = math.max(acc(s - 1), acc(s - 2))
-          }
-          val folded = prev.nFolded + ripe.size
-          state.update(FunnelBufState(acc.toSeq, folded,
-            stillBuf.map(_._1), stillBuf.map(_._2)))
-          if (stillBuf.nonEmpty) armTimeout(state, stillBuf.head._1, wmUs)
-          if (folded > 0)
-            Iterator(FunnelRow(userId, acc.count(_ != Long.MinValue).toLong))
-          else Iterator.empty
-      }
-  }
-
-  case class SeqCountBufState(stage: Int, cnt: Long, nFolded: Long,
-      bufTsUs: Seq[Long], bufStage: Seq[Long])
-
-  /** Multi-batch [[seqCountStages]]: the greedy sequence-count state
-    * machine behind the event-time buffer, folding decided (ts, stage)
-    * pairs in order as the watermark advances. Counts only grow, so the
-    * terminal row is the per-user max across update-mode emissions;
-    * users with no decided event never emit. */
-  def seqCountBuffered(spark: SparkSession, events: DataFrame,
-      types: Seq[String],
-      watermark: String = "30 minutes"): Dataset[SeqCountRow] = {
-    import spark.implicits._
-    val n = types.size
-    val typeIdx = types.zipWithIndex.toMap
-    val ev = events.withWatermark("ts", watermark)
-      .filter(col("event_type").isin(types: _*))
-      .select(col("user_id"), col("ts"), col("event_type"))
-      .as[(Long, Timestamp, String)]
-    ev.groupByKey(_._1)
-      .flatMapGroupsWithState[SeqCountBufState, SeqCountRow](
-          OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, batch: Iterator[(Long, Timestamp, String)],
-            state: GroupState[SeqCountBufState]) =>
-          val prev = state.getOption.getOrElse(SeqCountBufState(0, 0L, 0L, Nil, Nil))
-          val incoming = batch.map { case (_, ts, et) =>
-            (tsToMicros(ts), (typeIdx(et) + 1).toLong, ()) }
-          val buffered = prev.bufTsUs.lazyZip(prev.bufStage)
-            .map((t, s) => (t, s, ())).toSeq
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val (ripe, stillBuf) = splitRipe(buffered, incoming, wmUs)
-          var st = prev.stage
-          var cnt = prev.cnt
-          ripe.foreach { case (_, sL, _) =>
-            val s = sL.toInt
-            if (s == st + 1) { st += 1; if (st == n) { cnt += 1; st = 0 } }
-          }
-          val folded = prev.nFolded + ripe.size
-          state.update(SeqCountBufState(st, cnt, folded,
-            stillBuf.map(_._1), stillBuf.map(_._2)))
-          if (stillBuf.nonEmpty) armTimeout(state, stillBuf.head._1, wmUs)
-          if (folded > 0) Iterator(SeqCountRow(userId, cnt)) else Iterator.empty
-      }
-  }
-
-  case class EwmaRow(user_id: Long, event_id: Long, ts: Timestamp,
-      value: Double, ewma: Double)
-  case class EwmaState(taps: Seq[Long])
-
-  /** Streaming 16-tap EWMA — the unbounded face of the batch q64 window:
-    * per-key state is the last ≤16 exact-cents values (bounded forever),
-    * and each arriving event emits its smoothed value from the tap list.
-    * Because the weights are dyadic (α = 0.5, truncated at 16 taps) every
-    * intermediate is an exact binary fraction, so summation order cannot
-    * matter and the streamed result must BIT-EQUAL the batch lag-chain —
-    * the q64 oracle gates this stream verbatim. Same in-batch
-    * (ts, event_id) sort and single-batch AvailableNow reliance as
-    * [[anomalies]]. */
-  def ewma(spark: SparkSession, events: DataFrame, taps: Int = 16): Dataset[EwmaRow] = {
-    import spark.implicits._
-    def cents(v: Double): Long =
-      java.math.BigDecimal.valueOf(v)
-        .setScale(2, java.math.RoundingMode.HALF_UP)
-        .movePointRight(2).longValueExact()
-    // a NULL-value event carries nothing to smooth — the op runs on the
-    // value-bearing subset, mirrored by the oracle's value IS NOT NULL
-    events.filter(col("value").isNotNull).as[Event]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[EwmaState, EwmaRow](
-          OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (userId: Long, batch: Iterator[Event], state: GroupState[EwmaState]) =>
-          var tapsNow = state.getOption.map(_.taps.toList).getOrElse(Nil)
-          val evs = batch.toArray.sortBy(e => (tsToMicros(e.ts), e.event_id))
-          val out = evs.map { e =>
-            tapsNow = (cents(e.value.get) :: tapsNow).take(taps)
-            var num = 0.0; var den = 0.0
-            tapsNow.zipWithIndex.foreach { case (c, i) =>
-              val w = math.pow(0.5, i + 1)
-              num += c.toDouble * w; den += w
-            }
-            EwmaRow(userId, e.event_id, e.ts, e.value.get, num / den / 100.0)
-          }
-          state.update(EwmaState(tapsNow))
           out.iterator
       }
   }

@@ -2,12 +2,12 @@ package graft.streaming
 
 import java.nio.file.Files
 import java.sql.Timestamp
-import org.apache.spark.sql.SaveMode
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.streaming.OutputMode
 import graft.SparkSpec
 
-/** Pins the event-time-buffer contract of the *Buffered multi-batch
-  * operators across APPENDED batches:
+/** Pins the event-time-buffer contract of the stateful operators run
+  * with a watermark, across APPENDED batches:
   *
   *  - an event is DECIDED (folded + emitted) only once the watermark
   *    passes its event time — events inside the final horizon never emit;
@@ -38,8 +38,8 @@ class BufferedReplaySpec extends SparkSpec {
     writeBatch(dir, priors :+ Event(10, ts("2024-01-01 00:45:00"), 1, "click", Some(9.0)))
 
     val q = EventStreams.runToMemory(
-      EventStreams.anomaliesBuffered(spark,
-        EventStreams.readEvents(spark, dir)).toDF(),
+      EventStreams.anomalies(spark,
+        EventStreams.readEvents(spark, dir), watermark = Some("30 minutes")).toDF(),
       "anom_buf_out", ckpt, OutputMode.Update())
     q.processAllAvailable()
     // watermark = 00:45 − 30 min = 00:15 → only ids 1-4 decided, none
@@ -91,8 +91,8 @@ class BufferedReplaySpec extends SparkSpec {
       // purchase at 01:04 would be decided and the count would read 2
       Event(7, ts("2024-01-01 01:35:00"), 1, "error", Some(1.0))))
     val q = EventStreams.runToMemory(
-      EventStreams.seqCountBuffered(spark, EventStreams.readEvents(spark, dir),
-        Seq("view", "click", "purchase")).toDF(),
+      EventStreams.seqCountStages(spark, EventStreams.readEvents(spark, dir),
+        Seq("view", "click", "purchase"), watermark = Some("30 minutes")).toDF(),
       "wm_push_out", ckpt, OutputMode.Update())
     q.processAllAvailable()
     q.stop()
@@ -140,7 +140,7 @@ class BufferedReplaySpec extends SparkSpec {
     val src = spark.readStream.schema(EventStreams.eventSchema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
     val q = EventStreams.runToMemory(
-      EventStreams.ewmaBuffered(spark, src).toDF(),
+      EventStreams.ewma(spark, src, watermark = Some("30 minutes")).toDF(),
       "wmb_buf_out", ckpt, OutputMode.Update())
     q.processAllAvailable()
     q.stop()
@@ -167,8 +167,8 @@ class BufferedReplaySpec extends SparkSpec {
       Event(i.toLong, ts(f"2024-01-01 00:${(i - 1) * 10}%02d:00"), 1, "click",
         Some(i.toDouble))))
     val q = EventStreams.runToMemory(
-      EventStreams.ewmaBuffered(spark,
-        EventStreams.readEvents(spark, dir)).toDF(),
+      EventStreams.ewma(spark,
+        EventStreams.readEvents(spark, dir), watermark = Some("30 minutes")).toDF(),
       "ewma_buf_out", ckpt, OutputMode.Update())
     q.processAllAvailable()
     // wm = 00:30 − 30 min = 00:00 → only id 1 decided; first tap = value
@@ -186,5 +186,67 @@ class BufferedReplaySpec extends SparkSpec {
     // 16-tap dyadic smoothing in (ts, id) order: id 2 = (2·1/2 + 1·1/4)/(3/4)
     assert(math.abs(all(2L) - (2.0 * 0.5 + 1.0 * 0.25) / 0.75) < 1e-12)
     spark.catalog.dropTempView("ewma_buf_out")
+  }
+
+  /** Two appended batches whose keys straddle them, and the terminal
+    * watermark they leave (02:10 − 30 min). User 1's click arrives in
+    * batch 2 but precedes its batch-1 purchase in event time, so only a
+    * (ts, stage)-ordered fold completes its chain; user 2's purchase
+    * sits inside the final horizon; user 3 has only undecided events. */
+  private val straddleTypes = Seq("view", "click", "purchase")
+  private val straddleWm = ts("2024-01-01 01:40:00")
+
+  private def straddle(kind: String,
+      op: DataFrame => DataFrame): (Seq[Event], DataFrame) = {
+    val dir = Files.createTempDirectory(s"events-$kind-straddle").toString
+    val ckpt = Files.createTempDirectory(s"ckpt-$kind-straddle").toString
+    val b1 = Seq(
+      Event(1, ts("2024-01-01 00:00:00"), 1, "view", Some(1.0)),
+      Event(2, ts("2024-01-01 01:00:00"), 1, "purchase", Some(1.0)),
+      Event(3, ts("2024-01-01 00:10:00"), 2, "view", Some(1.0)))
+    // batch 2 arrives at watermark 00:30: nothing in it is late
+    val b2 = Seq(
+      Event(4, ts("2024-01-01 00:40:00"), 1, "click", Some(1.0)),
+      Event(5, ts("2024-01-01 00:50:00"), 2, "click", Some(1.0)),
+      Event(6, ts("2024-01-01 01:50:00"), 2, "purchase", Some(1.0)),
+      Event(7, ts("2024-01-01 02:10:00"), 3, "view", Some(1.0)))
+    writeBatch(dir, b1)
+    val q = EventStreams.runToMemory(op(EventStreams.readEvents(spark, dir)),
+      s"${kind}_straddle_out", ckpt, OutputMode.Update())
+    q.processAllAvailable()
+    writeBatch(dir, b2)
+    q.processAllAvailable()
+    q.stop()
+    (b1 ++ b2, spark.table(s"${kind}_straddle_out"))
+  }
+
+  test("funnelStages with a watermark: terminal per-user stage is the batch funnel over the decided events") {
+    val (all, out) = straddle("funnel", ev => EventStreams.funnelStages(spark, ev,
+      straddleTypes, windowMicros = 21600000000L, watermark = Some("30 minutes")).toDF())
+    val streamed = out.groupBy($"user_id")
+      .agg(org.apache.spark.sql.functions.max($"funnel_stage"))
+      .as[(Long, Long)].collect().toMap
+    spark.catalog.dropTempView("funnel_straddle_out")
+    val batch = graft.operators.Funnel.windowFunnel(
+        all.filter(!_.ts.after(straddleWm)).toDF(), straddleTypes, 21600000000L)
+      .as[(Long, Long)].collect().toMap
+    assert(streamed == batch, s"streamed $streamed vs batch $batch")
+    // user 1 completes in (ts, stage) order; user 2's horizon purchase is
+    // not folded; user 3 never emits
+    assert(batch == Map(1L -> 3L, 2L -> 2L), s"got $batch")
+  }
+
+  test("seqCountStages with a watermark: terminal per-user count is the batch fold over the decided events") {
+    val (all, out) = straddle("seq", ev => EventStreams.seqCountStages(spark, ev,
+      straddleTypes, watermark = Some("30 minutes")).toDF())
+    val streamed = out.groupBy($"user_id")
+      .agg(org.apache.spark.sql.functions.max($"n_matches"))
+      .as[(Long, Long)].collect().toMap
+    spark.catalog.dropTempView("seq_straddle_out")
+    val batch = graft.operators.Funnel.sequenceCount(
+        all.filter(!_.ts.after(straddleWm)).toDF(), straddleTypes)
+      .as[(Long, Long)].collect().toMap
+    assert(streamed == batch, s"streamed $streamed vs batch $batch")
+    assert(batch == Map(1L -> 1L, 2L -> 0L), s"got $batch")
   }
 }
