@@ -61,9 +61,12 @@ import org.apache.spark.sql.functions._
 object ScaleProbe {
 
   // v2: fixed-width replica tag (see below) — prefix-free by
-  // construction. Bumping this regenerates the corpora AND (the marker
-  // names embed it) every probe-owned store built from them.
-  private val Version = "v2"
+  // construction. v3: the components artifact's one layout (every
+  // generation in gen-<g>/), so marker-guarded artifacts built in the
+  // old root layout are rebuilt. Bumping this regenerates the corpora
+  // AND (the marker names embed it) every probe-owned store built from
+  // them.
+  private val Version = "v3"
 
   private def ceilLog2(n: Int): Int =
     if (n <= 1) 0 else 32 - Integer.numberOfLeadingZeros(n - 1)
@@ -487,15 +490,17 @@ object ScaleProbe {
     // nothing; what this unpruned call pays is the corpus-index
     // SHUFFLE (every rare corpus row moves to the sh-hash join) — the
     // append below semi-joins the corpus side at the scan instead
-    P("artifact_incr_pairs", 100, (s, d, n) =>
+    P("artifact_incr_pairs", 100, (s, d, n) => {
+      val gen = operators.ComponentsArtifact.genDirOf(artifactOf(s, d))
       operators.Dedup.incrementalNgramPairs(
         incrementOf(s, d),
-        s.read.parquet(artifactOf(s, d) + "/shingles"),
-        s.read.parquet(artifactOf(s, d) + "/sizes"),
-        s.read.parquet(artifactOf(s, d) + "/hot"), k = 3, threshold = 0.5)),
+        s.read.parquet(s"$gen/shingles"),
+        s.read.parquet(s"$gen/sizes"),
+        s.read.parquet(s"$gen/hot"), k = 3, threshold = 0.5)
+    }),
     // the FULL serving append at ×n — everything an hourly append pays
     // beyond the pair computation the probe above isolates: torn-append
-    // validation (idx7: two parallel listing manifests — previously an
+    // validation (two parallel listing manifests — previously an
     // O(index-files) footer pass + corpus-row-linear sizes SUM, the
     // round-14 deferred term), the adaptive-pushdown pair
     // join, the star-edge component merge, the drift probe's

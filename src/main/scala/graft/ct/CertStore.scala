@@ -156,25 +156,20 @@ object CertStore {
   }
 
   /** MergeTree background-merge analog: rewrite each monthly partition into
-    * `filesPerMonth` sorted files. Plain batch job, no custom strategy
+    * one sorted file. Plain batch job, no custom strategy
     * (SURVEY §4). Writes to `dest` (caller swaps directories atomically).
     * `dedupe` applies the ReplacingMergeTree-style merge the README claims
     * (README.md:19): collapse rows sharing (fingerprint, domain) — e.g. the
     * same certificate observed in several CT logs or replayed batches —
     * keeping the earliest ts. Commits at `dest`. */
   def compact(spark: SparkSession, src: String, dest: String,
-      filesPerMonth: Int = 1, dedupe: Boolean = false): Unit = {
+      dedupe: Boolean = false): Unit = {
     val base = read(spark, src)
     val merged = if (dedupe) keepEarliest(base) else base
     // Repartition keeps one task per month (hash on the partition column)
-    // so every monthly dir compacts in parallel; filesPerMonth > 1 adds a
-    // deterministic fingerprint-hash split WITHIN each month. A global
-    // coalesce here would funnel the whole store through one task.
-    val parts =
-      if (filesPerMonth <= 1) merged.repartition(col(partitionCol))
-      else merged.repartition(col(partitionCol),
-        pmod(hash(col("fingerprint")), lit(filesPerMonth)))
-    parts
+    // so every monthly dir compacts in parallel. A global coalesce here
+    // would funnel the whole store through one task.
+    merged.repartition(col(partitionCol))
       .sortWithinPartitions("base_domain", "domain", "fingerprint")
       .write.mode(SaveMode.Overwrite)
       .partitionBy(partitionCol)
@@ -213,8 +208,7 @@ object CertStore {
     * Commits after every call on an existing store, compacted months or
     * none: the kernel's recovery sweep may have moved a month back. */
   def compactDrifted(spark: SparkSession, path: String,
-      maxFilesPerMonth: Int = 4, filesPerMonth: Int = 1,
-      dedupe: Boolean = false): Seq[Long] = {
+      maxFilesPerMonth: Int = 4, dedupe: Boolean = false): Seq[Long] = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return Seq.empty
@@ -222,7 +216,7 @@ object CertStore {
       if (!dedupe) identity else keepEarliest(_, col(partitionCol))
     val months = graft.operators.PartitionCompaction.compactDrifted(spark, fs, root,
       partitionCol, Seq("base_domain", "domain", "fingerprint"),
-      hash(col("fingerprint")), maxFilesPerMonth, filesPerMonth, merge)
+      hash(col("fingerprint")), maxFilesPerMonth, target = 1, transform = merge)
     commit(path)
     months
   }
@@ -231,25 +225,10 @@ object CertStore {
     * file metadata only (SURVEY §2.1 S12). A store with a commit token
     * answers from its pinned snapshot's file index — the same snapshot
     * [[read]] serves, built by whichever of the two comes first after a
-    * commit — so /size costs no listing; one without a token sums its
-    * `.parquet` files via the Hadoop FileSystem. */
+    * commit — so /size costs no listing; one without a token sums a
+    * fresh listing's file index, the same one a snapshot pins. */
   def sizeBytes(spark: SparkSession, path: String): Long =
-    pinned(spark, path).map(_.bytes).getOrElse(listBytes(spark, path))
-
-  private def listBytes(spark: SparkSession, path: String): Long = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) 0L
-    else {
-      val it = fs.listFiles(p, true)
-      var total = 0L
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet")) total += f.getLen
-      }
-      total
-    }
-  }
+    pinned(spark, path).map(_.bytes).getOrElse(fileBytes(load(spark, path)))
 
   /** Human-readable byte size, reference semantics (api/app.py:211-219):
     * base 1024, two decimals, no separator, 0 → "0B". */

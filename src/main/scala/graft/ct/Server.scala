@@ -25,7 +25,10 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * in several logs; rate limiting matches the reference's
   * flask-limiter defaults (app.py:10-11): fixed per-minute window per
   * client IP, DISABLED by default (`rateLimitPerMin` = None), 429 with an
-  * error body when exceeded.
+  * error body when exceeded; a /stream poll that finds no new rows sends
+  * one SSE comment line (`:`) as a heartbeat, which SSE clients ignore,
+  * so a subscriber that went away is noticed at the next poll and its
+  * `maxStreams` slot freed even while the store gets no commits.
   *
   * The reference trusts X-Forwarded-For for the IP allowlist because it
   * assumes a trusted reverse proxy (app.py:47). Served directly that header
@@ -204,12 +207,15 @@ class Server(spark: SparkSession, table: () => DataFrame, storePath: String,
             while (streaming) {
               // sorted (ts, fingerprint, domain, log_name)
               val rows = CtQueries.streamTailAfter(table(), cursor, streamBatch).collect()
-              if (rows.nonEmpty) {
-                rows.foreach { r =>
-                  out.write(s"data: ${jval(r.toSeq)}\n\n".getBytes(UTF_8))
-                }
-                out.flush()
-                val last = rows.last
+              // an empty poll writes the heartbeat: the write is what
+              // finds a closed client, so an idle store cannot hold a
+              // dead subscriber's slot
+              if (rows.isEmpty) out.write(":\n\n".getBytes(UTF_8))
+              rows.foreach { r =>
+                out.write(s"data: ${jval(r.toSeq)}\n\n".getBytes(UTF_8))
+              }
+              out.flush()
+              rows.lastOption.foreach { last =>
                 cursor = Some((last.getAs[Timestamp]("ts"),
                   last.getAs[String]("fingerprint"), last.getAs[String]("domain"),
                   last.getAs[String]("log_name")))

@@ -13,16 +13,20 @@ import org.apache.spark.sql.functions._
   * generation + union-find (measured 10.5 s of the keep-best query's
   * 10.5 s at sf0.1 before sharing).
   *
-  * Layout: `clusters/` (doc_id → cluster_id parquet), `meta/` (1-row
-  * parquet: n_pairs — the candidate-pair count the report quotes,
-  * persisted at build time so no consumer ever re-runs the pair join
-  * just to count it — plus the integrity, drift and receipt fields),
-  * and the snapshot index incremental maintenance needs (`shingles/`,
-  * `sizes/`, `hot/`). Appends stage `clusters_v<N>`/`meta_v<N>` epochs
-  * behind the `CURRENT` pointer, compactions publish `gen-<g>/`
-  * generations behind `GEN` — both through [[FsPointers]]; the meta
-  * row, listing manifest, torn-append check and corpus-of-record
-  * receipt ride the shared [[StoreManifest]] kernel. The declared
+  * Layout — one format, which cold builds and compactions both write:
+  * every generation lives in `gen-<g>/` behind the `GEN` pointer (the
+  * cold build writes `gen-0/`, an absent `GEN` means `gen-0`), and
+  * holds the snapshot index incremental maintenance needs
+  * (`shingles/`, `sizes/`, `hot/`) plus its epochs
+  * `clusters_v<e>/` (doc_id → cluster_id parquet) and `meta_v<e>/`
+  * (1-row parquet: n_pairs — the candidate-pair count the report
+  * quotes, persisted at build time so no consumer ever re-runs the
+  * pair join just to count it — plus the integrity, drift and receipt
+  * fields) behind the generation's `CURRENT` pointer (absent = epoch
+  * 0). Appends stage epochs, compactions publish generations — both
+  * through [[FsPointers]]; the meta row, listing manifest, torn-append
+  * check and corpus-of-record receipt ride the shared [[StoreManifest]]
+  * kernel. The declared
   * queries' SHARED artifact (cache-keyed by corpus content stamp and
   * build parameters, built through a staging + atomic rename) is
   * resolved in `graft.queries.PipelineQueries`. */
@@ -63,8 +67,8 @@ object ComponentsArtifact {
       .getOrElse(PruneVerifyHotRowsDefault)
 
   /** The shingle index is PARTITIONED at rest by `shb = sh mod
-    * n_buckets` (layout `_idx7b64`, the 100 TB remedy SCALE.md round 9
-    * named): a serving append touches a bounded shingle set, so every
+    * n_buckets` (the 100 TB remedy SCALE.md round 9 named): a serving
+    * append touches a bounded shingle set, so every
     * corpus-index read on the append path filters to the touched
     * buckets FIRST — parquet PartitionFilters prune whole directories
     * instead of scanning the full index and filtering rows (the ×100
@@ -78,8 +82,7 @@ object ComponentsArtifact {
     * every layout-sensitive read derives its pmod from the artifact's
     * OWN persisted `meta.n_buckets`, so a private-dir artifact built
     * with any bucket count appends/compacts correctly under any
-    * binary; only a legacy pre-idx5 artifact (no n_buckets field) is
-    * refused, with the go-compact migration message. */
+    * binary. */
   private[graft] val ShingleBuckets = 64
 
   /** The bucket count is a PER-ARTIFACT property, not a binary
@@ -160,20 +163,26 @@ object ComponentsArtifact {
     }
   }
 
-  /** Cold build over an explicit docs frame. Besides `clusters/` +
-    * `meta/`, the artifact persists the SNAPSHOT INDEX incremental
-    * maintenance needs ([[appendComponentsArtifact]]): `shingles/` (the
-    * full (doc_id, sh) index, bucketed at rest by `shb = sh mod
-    * nBuckets` — layout `_idx7b64`), `sizes/` (per-doc
-    * distinct-shingle counts) and `hot/` (the shingles the snapshot's
-    * df cutoff cut from candidate generation — FIXED until the next
-    * full rebuild, the compaction step). Raw text is shingled exactly
-    * once: the pair build, the sizes table, the hot set and the drift
-    * floors all read the WRITTEN index back. `nBuckets` is the
-    * shingle index's pmod (a per-artifact property recorded in meta;
-    * compaction and the cross-bucket-count spec pass their own). */
+  /** Cold build over an explicit docs frame into `out`'s generation 0
+    * (`out/gen-0/`). `nBuckets` is the shingle index's pmod (a
+    * per-artifact property recorded in meta; the cross-bucket-count
+    * spec passes its own). */
   private[graft] def buildComponentsArtifactFrom(s: SparkSession,
-      docs: DataFrame, out: String, nBuckets: Int = ShingleBuckets): Unit = {
+      docs: DataFrame, out: String, nBuckets: Int = ShingleBuckets): Unit =
+    buildGeneration(s, docs, s"$out/gen-0", nBuckets)
+
+  /** Build one complete generation at `gen` (epoch 0). Besides
+    * `clusters_v0/` + `meta_v0/`, a generation persists the SNAPSHOT
+    * INDEX incremental maintenance needs ([[appendComponentsArtifact]]):
+    * `shingles/` (the full (doc_id, sh) index, bucketed at rest by
+    * `shb = sh mod nBuckets`), `sizes/` (per-doc distinct-shingle
+    * counts) and `hot/` (the shingles the snapshot's df cutoff cut from
+    * candidate generation — FIXED until the next full rebuild, the
+    * compaction step). Raw text is shingled exactly once: the pair
+    * build, the sizes table, the hot set and the drift floors all read
+    * the WRITTEN index back. */
+  private def buildGeneration(s: SparkSession, docs: DataFrame, out: String,
+      nBuckets: Int): Unit = {
     // corpus accounting in ONE pass: the raw doc count (the cutoff
     // formula's n) plus the hashed row receipt
     // ([[StoreManifest.docReceipt]]) —
@@ -187,11 +196,11 @@ object ComponentsArtifact {
     val phaseLog = phaseLogger("build")
     // index FIRST: raw text is shingled exactly once; the pair build,
     // sizes and hot set all read the written 8-byte (doc_id, sh) grain.
-    // Bucketed by sh (layout _idx7b64) so the append path's corpus-index
-    // reads prune partitions instead of scanning the full index; the
-    // repartition co-locates each bucket into one task so the layout is
-    // ~one file per bucket, not tasks×buckets shards — every append
-    // re-reads these footers for the torn-append validation.
+    // Bucketed by sh so the append path's corpus-index reads prune
+    // partitions instead of scanning the full index; the repartition
+    // co-locates each bucket into one task so the layout is ~one file
+    // per bucket, not tasks×buckets shards — every append lists these
+    // files for the torn-append validation.
     // The corpus accounting (raw doc count for the cutoff formula +
     // hashed row receipt) RIDES THIS SCAN via observe() instead of its
     // own pass — at 100 TB the old standalone docs.agg was one full
@@ -243,7 +252,8 @@ object ComponentsArtifact {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nPairs = pairs.count()
     phaseLog("pairs")
-    Dedup.components(pairs).write.mode("overwrite").parquet(s"$out/clusters")
+    Dedup.components(pairs).write.mode("overwrite")
+      .parquet(epochDir(out, "clusters", 0L))
     pairs.unpersist(false)
     phaseLog("components")
     // snapshot accounting for meta (one bounded aggregate each):
@@ -270,141 +280,109 @@ object ComponentsArtifact {
       .collect()
     dfT.unpersist(false)
     // listing manifests of the two append-only index dirs, from the
-    // WRITTEN data (idx7): the first append validates against what is
+    // WRITTEN data: the first append validates against what is
     // actually on disk — one parallel listing, never a footer pass
-    writeMeta(s, out, s"$out/meta", Meta(nPairs, cutoff,
+    writeMeta(s, out, 0L, (sh, sz) => Meta(nPairs, cutoff,
       nDocsIndexed, nShingleRows, dfAgg.getLong(0),
       nDocsTotal = nDocsTotal, minHotDf = dfAgg.getLong(1),
       rebuildRecommended = false,
-      nBuckets = nBuckets, docIdXor = docIdXor))
+      nBuckets = nBuckets, docIdXor = docIdXor,
+      shFiles = sh.files, shBytes = sh.bytes,
+      szFiles = sz.files, szBytes = sz.bytes))
     phaseLog("meta")
   }
 
   /** The artifact's meta row — build/maintenance accounting the
-    * consumers and the append path read by NAME (never by position).
-    * `nDocsTotal` counts EVERY corpus doc (shingle-less included — the
-    * cutoff formula runs over raw corpus size), vs `nDocsIndexed` which
-    * counts docs with index rows; `minHotDf` is the declassification
-    * floor for the reverse drift direction (Long.MaxValue = no hot
-    * shingles, nothing to declassify); `nBuckets` pins the shingle
-    * index's pmod layout (every layout-sensitive read uses THIS value,
-    * never the binary's [[ShingleBuckets]] — round-11 verdict ask #2;
-    * -1 = legacy pre-idx5 artifact whose meta lacks the field, which
-    * appends refuse with the migration message); `docIdXor` is the
-    * corpus-of-record receipt ([[StoreManifest.docReceipt]] folded over every row
-    * ever built or appended) compaction validates against;
-    * `hasReceipt` is false for artifacts whose meta predates the
-    * HASHED receipt (compaction then warns and skips the receipt
-    * check — count-only). The receipt's SEMANTIC is pinned by an
-    * explicit `receipt_kind` field (ADVICE r12): idx4 metas carry a
-    * `doc_id_xor` whose value is the old raw-id xor — presence of the
-    * column alone cannot distinguish them from idx5's hashed receipt,
-    * and validating a raw-id xor against the hashed receipt would falsely
-    * reject the TRUE corpus, permanently blocking the documented
-    * migration path. Only `receipt_kind = "xxhash64_v1"` is trusted;
-    * anything else (absent field, "none") reads as pre-receipt.
-    * `shFiles`/`shBytes`/`szFiles`/`szBytes` are the listing manifests
-    * of the two append-only index dirs (`shingles/`, `sizes/` — see
-    * [[StoreManifest]], layout `idx7`): the append
-    * path's torn-append validation compares them against one parallel
-    * listing instead of the old O(index-files) footer row count plus
-    * the corpus-row-linear sizes SUM (the round-14 deferred term —
-    * SCALE.md measured the same shape at 92 s/append on the ×100
-    * corpus store before bidx3/cst2 removed it). -1 = legacy idx6-era
-    * meta with no manifest: the next append validates by the old
-    * footer pass once and mints the manifest. The ROW counts stay the
-    * build/compaction integrity tokens (row-preserving invariants);
-    * only the per-append validation moved to the listing. */
+    * consumers and the append path read by NAME (never by position);
+    * every field is required. `nDocsTotal` counts EVERY corpus doc
+    * (shingle-less included — the cutoff formula runs over raw corpus
+    * size), vs `nDocsIndexed` which counts docs with index rows;
+    * `minHotDf` is the declassification floor for the reverse drift
+    * direction (Long.MaxValue = no hot shingles, nothing to
+    * declassify); `nBuckets` pins the shingle index's pmod layout
+    * (every layout-sensitive read uses THIS value, never the binary's
+    * [[ShingleBuckets]] — round-11 verdict ask #2); `docIdXor` is the
+    * corpus-of-record receipt ([[StoreManifest.docReceipt]] folded over
+    * every row ever built or appended) compaction validates against,
+    * recorded beside `receipt_kind = "xxhash64_v1"` so its semantic is
+    * explicit on disk. `shFiles`/`shBytes`/`szFiles`/`szBytes` are the
+    * listing manifests of the two append-only index dirs (`shingles/`,
+    * `sizes/` — see [[StoreManifest]]): the append path's torn-append
+    * check compares them against one parallel listing. The ROW counts
+    * stay the build/compaction integrity tokens (row-preserving
+    * invariants). */
   private[graft] case class Meta(nPairs: Long, cutoff: Long,
       nDocsIndexed: Long, nShingleRows: Long, maxNonhotDf: Long,
       nDocsTotal: Long, minHotDf: Long,
       rebuildRecommended: Boolean,
-      nBuckets: Int, docIdXor: Long, hasReceipt: Boolean = true,
-      shFiles: Long = -1L, shBytes: Long = -1L,
-      szFiles: Long = -1L, szBytes: Long = -1L)
+      nBuckets: Int, docIdXor: Long,
+      shFiles: Long, shBytes: Long, szFiles: Long, szBytes: Long)
 
-  /** Write meta at `path` with the listing manifests of generation
-    * `gen`'s two append-only index dirs as they are on disk now (idx7),
-    * so the next append validates against exactly what this write
-    * left. */
-  private def writeMeta(s: SparkSession, gen: String, path: String,
-      m0: Meta): Unit = {
-    val sh = StoreManifest.list(s, s"$gen/shingles")
-    val sz = StoreManifest.list(s, s"$gen/sizes")
-    val m = m0.copy(shFiles = sh.files, shBytes = sh.bytes,
-      szFiles = sz.files, szBytes = sz.bytes)
-    StoreManifest.writeMeta(s, path,
-      lit(m.nPairs).as("n_pairs"), lit(m.cutoff).as("cutoff"),
-      lit(m.nDocsIndexed).as("n_docs_indexed"),
-      lit(m.nShingleRows).as("n_shingle_rows"),
-      lit(m.maxNonhotDf).as("max_nonhot_df"),
-      lit(m.nDocsTotal).as("n_docs_total"),
-      lit(m.minHotDf).as("min_hot_df"),
-      lit(m.rebuildRecommended).as("rebuild_recommended"),
-      lit(m.nBuckets).as("n_buckets"),
-      lit(m.docIdXor).as("doc_id_xor"),
-      // receipt semantics versioned explicitly: a pre-receipt
-      // artifact's appends must NOT mint a trusted kind for a xor
-      // that never folded the full history (it stays "none" until
-      // compaction rebuilds with a real receipt)
-      lit(if (m.hasReceipt) "xxhash64_v1" else "none").as("receipt_kind"),
-      lit(m.shFiles).as("sh_files"), lit(m.shBytes).as("sh_bytes"),
-      lit(m.szFiles).as("sz_files"), lit(m.szBytes).as("sz_bytes"))
+  private val ReceiptKind = "xxhash64_v1"
+
+  /** The meta columns, each required on read. */
+  private val MetaFields = Seq("n_pairs", "cutoff", "n_docs_indexed",
+    "n_shingle_rows", "max_nonhot_df", "n_docs_total", "min_hot_df",
+    "rebuild_recommended", "n_buckets", "doc_id_xor", "receipt_kind",
+    "sh_files", "sh_bytes", "sz_files", "sz_bytes")
+
+  /** Write epoch `epoch`'s meta in generation `gen`; `meta` receives the
+    * listing manifests of the two append-only index dirs as they are on
+    * disk now, so the next append validates against exactly what this
+    * write left. */
+  private def writeMeta(s: SparkSession, gen: String, epoch: Long,
+      meta: (StoreManifest.Detailed, StoreManifest.Detailed) => Meta): Unit = {
+    val m = meta(StoreManifest.list(s, s"$gen/shingles"),
+      StoreManifest.list(s, s"$gen/sizes"))
+    StoreManifest.writeMeta(s, epochDir(gen, "meta", epoch),
+      Seq(m.nPairs, m.cutoff, m.nDocsIndexed, m.nShingleRows, m.maxNonhotDf,
+        m.nDocsTotal, m.minHotDf, m.rebuildRecommended, m.nBuckets,
+        m.docIdXor, ReceiptKind, m.shFiles, m.shBytes, m.szFiles, m.szBytes)
+        .zip(MetaFields).map { case (v, name) => lit(v).as(name) }: _*)
   }
 
+  /** The live meta of the artifact at `dir`. A meta on disk is outside
+    * input: one that lacks a field, or records another receipt kind, is
+    * refused with the rebuild remedy before anything reads it. */
   private[graft] def readMeta(s: SparkSession, dir: String): Meta = {
     val r = StoreManifest.readMeta(s, metaDirOf(dir),
       s"no components artifact at $dir: build it with " +
         "buildComponentsArtifactFrom")
-    // the idx4/idx5 fields are read TOLERANTLY (ADVICE r11): a legacy
-    // private-dir artifact written before they existed must surface
-    // sentinels so the append's legacy guard can emit its actionable
-    // go-compact message — not die on a raw missing-field Spark error
-    // before the guard is reached
-    val fields = r.schema.fieldNames.toSet
-    // trust the receipt ONLY when its kind says it is the hashed one
-    // (ADVICE r12): an idx4 meta has doc_id_xor too, but its value is
-    // the raw-id xor — comparing that against the hashed receipt would falsely
-    // reject the true corpus at compaction time
-    val hasReceipt = fields.contains("doc_id_xor") &&
-      fields.contains("receipt_kind") &&
-      r.getAs[String]("receipt_kind") == "xxhash64_v1"
+    val missing = MetaFields.filterNot(r.schema.fieldNames.toSet)
+    require(missing.isEmpty && r.getAs[String]("receipt_kind") == ReceiptKind,
+      s"components artifact meta at $dir is not in the current format (" +
+        (if (missing.nonEmpty) s"missing ${missing.mkString(", ")}"
+         else s"receipt_kind ${r.getAs[String]("receipt_kind")}") +
+        "): rebuild the artifact with a cold build " +
+        "(buildComponentsArtifactFrom) into a fresh dir")
     Meta(r.getAs[Long]("n_pairs"), r.getAs[Long]("cutoff"),
       r.getAs[Long]("n_docs_indexed"), r.getAs[Long]("n_shingle_rows"),
       r.getAs[Long]("max_nonhot_df"), r.getAs[Long]("n_docs_total"),
       r.getAs[Long]("min_hot_df"), r.getAs[Boolean]("rebuild_recommended"),
-      if (fields.contains("n_buckets")) r.getAs[Int]("n_buckets") else -1,
-      if (hasReceipt) r.getAs[Long]("doc_id_xor") else 0L,
-      hasReceipt = hasReceipt,
-      // idx6-era metas lack the listing manifest: surface -1 so the
-      // append's validation takes the legacy footer pass once and
-      // mints it (in-place migration, no refusal needed)
-      shFiles = if (fields.contains("sh_files")) r.getAs[Long]("sh_files") else -1L,
-      shBytes = if (fields.contains("sh_bytes")) r.getAs[Long]("sh_bytes") else -1L,
-      szFiles = if (fields.contains("sz_files")) r.getAs[Long]("sz_files") else -1L,
-      szBytes = if (fields.contains("sz_bytes")) r.getAs[Long]("sz_bytes") else -1L)
+      r.getAs[Int]("n_buckets"), r.getAs[Long]("doc_id_xor"),
+      r.getAs[Long]("sh_files"), r.getAs[Long]("sh_bytes"),
+      r.getAs[Long]("sz_files"), r.getAs[Long]("sz_bytes"))
   }
 
   /** Pointer-versioned clusters/meta — the artifact's MUTABLE grain.
-    * `CURRENT` (a one-line file at the artifact root) names the live
-    * epoch; absent = epoch 0 = the cold build's plain `clusters/` +
-    * `meta/`. An append never rewrites in place: it writes
-    * `clusters_v<N+1>` + `meta_v<N+1>`, appends the (append-only)
-    * index dirs, then publishes with ONE atomic replace of CURRENT —
-    * so a concurrent reader always resolves a COMPLETE epoch: the
-    * epoch it read was fully written before the flip made it
-    * resolvable, and epochs are GC'd only when they fall TWO behind
-    * (an in-flight reader of the previous epoch keeps an intact
-    * directory). Pinned by ComponentsStagedSpec.
+    * `CURRENT` (a one-line file at the generation root) names the live
+    * epoch; absent = epoch 0, the `clusters_v0/` + `meta_v0/` the
+    * generation was built with. An append never rewrites in place: it
+    * writes `clusters_v<N+1>` + `meta_v<N+1>`, appends the
+    * (append-only) index dirs, then publishes with ONE atomic replace of
+    * CURRENT — so a concurrent reader always resolves a COMPLETE epoch:
+    * the epoch it read was fully written before the flip made it
+    * resolvable, and epochs are GC'd only when they fall TWO behind (an
+    * in-flight reader of the previous epoch keeps an intact directory).
+    * Pinned by ComponentsStagedSpec.
     *
     * Generation pointer — the artifact's COMPACTION grain, one level
     * above epochs. `GEN` (a one-line file at the artifact root) names
-    * the live generation subdirectory; absent = generation 0 = the
-    * cold build's root layout, so every artifact written before
-    * compaction existed resolves unchanged. Each generation carries a
-    * full artifact (clusters/meta epochs + its own index dirs);
-    * [[compactComponentsArtifact]] publishes a new one with the same
-    * atomic-pointer discipline appends use for epochs.
+    * the live `gen-<g>/` subdirectory; absent = `gen-0`, the cold
+    * build's. Each generation carries a full artifact (clusters/meta
+    * epochs + its own index dirs); [[compactComponentsArtifact]]
+    * publishes a new one with the same atomic-pointer discipline
+    * appends use for epochs.
     *
     * Both pointers ride [[FsPointers]] (round-15): its `publish` is the
     * ONE atomic replace of a pointer file — the only mutation a reader
@@ -412,21 +390,19 @@ object ComponentsArtifact {
     * publishes, so an hdfs:// or s3a:// artifact dir resolves exactly
     * like a local one (ComponentsStagedSpec's file:-scheme round trip).
     * Atomicity/object-store caveats live on FsPointers. */
-  private[graft] def genDirOf(dir: String): String =
-    FsPointers.read(dir, "GEN").map(g => s"$dir/$g").getOrElse(dir)
+  private[graft] def genDirOf(dir: String): String = s"$dir/gen-${genNumberOf(dir)}"
 
   private def genNumberOf(dir: String): Long =
-    FsPointers.read(dir, "GEN")
-      .map(_.stripPrefix("gen-").toLong).getOrElse(0L)
+    FsPointers.read(dir, "GEN").fold(0L)(_.stripPrefix("gen-").toLong)
 
   /** Epoch of a GENERATION root (no generation resolution — internal). */
   private def rawEpoch(genRoot: String): Long =
-    FsPointers.read(genRoot, "CURRENT").map(_.toLong).getOrElse(0L)
+    FsPointers.read(genRoot, "CURRENT").fold(0L)(_.toLong)
 
   private[graft] def currentEpoch(dir: String): Long = rawEpoch(genDirOf(dir))
 
-  private def epochDir(dir: String, name: String, epoch: Long): String =
-    if (epoch == 0L) s"$dir/$name" else s"$dir/${name}_v$epoch"
+  private def epochDir(gen: String, name: String, epoch: Long): String =
+    s"$gen/${name}_v$epoch"
 
   private[graft] def clustersDirOf(dir: String): String = {
     val g = genDirOf(dir)
@@ -459,7 +435,7 @@ object ComponentsArtifact {
     * never a partial one. A crash at ANY point leaves the live epoch
     * resolving to complete data; a crash that tears the index (between
     * the two index appends, or after them but before the flip) is
-    * caught LOUDLY by the next append's meta-count validation instead
+    * caught LOUDLY by the next append's listing-manifest check instead
     * of silently losing pairs against the unindexed increment.
     *
     * HOT-SET DRIFT detection (round-9 ask #2): equality-to-cold holds
@@ -485,24 +461,11 @@ object ComponentsArtifact {
     val gen = genDirOf(dir)
     val epoch = rawEpoch(gen)
     val meta = readMeta(s, dir)
-    // LEGACY GUARD (round-11 verdict ask #2 + ADVICE r11): the
-    // bucket-pruned scans below filter `shb` by the ARTIFACT'S OWN
-    // pmod (meta.nBuckets — a 32- or 128-bucket artifact appends
-    // correctly under this binary's 64-bucket default, no lockstep).
-    // What cannot work is a pre-idx5 artifact whose meta carries no
-    // bucket count at all (readMeta surfaces -1): refuse with the
-    // actionable migration message instead of guessing a pmod that
-    // would silently miss corpus rows.
-    require(meta.nBuckets > 0,
-      s"legacy artifact layout at $dir: meta lacks the n_buckets field, " +
-        "so the bucket-pruned scans cannot know the shingle index's pmod " +
-        "layout; rebuild the artifact (compactComponentsArtifact, or a " +
-        "cold build) to migrate it")
     // the append is the artifact's operational hot path: its cost
     // STRUCTURE (validation vs pair work vs publish) is what a 100 TB
     // operator tunes
     val phaseLog = phaseLogger("append")
-    // torn-append validation by LISTING MANIFEST (idx7): a tear leaves
+    // torn-append validation by LISTING MANIFEST: a tear leaves
     // whole committed FILES beyond what meta records (the committer
     // publishes files atomically per task, never partial rows), so
     // (file count, byte sum) over the two append-only index dirs
@@ -514,42 +477,20 @@ object ComponentsArtifact {
     // bidx3/cst2 removed it). Any mismatch means a prior append crashed
     // between its index appends and its meta/pointer publish:
     // re-running it would double-append the increment's index rows and
-    // corrupt every later jaccard, so fail loudly instead.
-    val sizesDf = s.read.parquet(s"$gen/sizes")
-    // the shingle listing is DETAILED: the same parallel walk that
-    // yields the torn-check manifest also yields the per-bucket
-    // fragmentation max the drift direction-(c) probe needs below —
-    // previously a second, SERIAL O(buckets) listing of the same dirs
-    // (≈ minutes per append at 4096 object-storage dirs)
+    // corrupt every later jaccard, so fail loudly instead. The shingle
+    // listing is DETAILED: the same parallel walk also yields the
+    // per-bucket fragmentation max the drift direction-(c) probe needs
+    // below.
     val tornRemedy = "a prior append crashed between its index appends " +
-      "and its pointer flip; rebuild the artifact (cold build) before " +
-      "appending again"
-    val preMaxBucketFiles: Option[Int] = if (meta.shFiles >= 0L) {
-      val Seq(sh, _) = StoreManifest.requireUntorn(s, dir, Seq(
-        StoreManifest.Recorded("shingle index", s"$gen/shingles",
-          meta.shFiles, meta.shBytes),
-        StoreManifest.Recorded("sizes", s"$gen/sizes", meta.szFiles,
-          meta.szBytes)), tornRemedy)
-      Some(sh.maxPerDir)
-    } else {
-      // legacy idx6-era meta (no manifest recorded): validate by the
-      // old footer row-count + sizes aggregate ONCE — this append's
-      // staged meta mints the manifest, so every later append takes
-      // the listing path (in-place migration, loudly attributed)
-      System.err.println(s"[components] NOTE: $dir predates the listing " +
-        "manifest (idx6-era meta); validating this append by the legacy " +
-        "footer pass and minting the manifest for future appends")
-      val Array(szAgg) = sizesDf
-        .agg(count(lit(1)), coalesce(sum(col("n")), lit(0L))).collect()
-      val shCount = StoreManifest.footerCount(readShingleIndex(s, gen))
-      StoreManifest.tornUnless(szAgg.getLong(0) == meta.nDocsIndexed &&
-          szAgg.getLong(1) == meta.nShingleRows && shCount == meta.nShingleRows,
-        dir, s"index holds ${szAgg.getLong(0)} docs / ${szAgg.getLong(1)} " +
-          s"size rows / $shCount shingle rows",
-        s"${meta.nDocsIndexed} docs / ${meta.nShingleRows} rows", tornRemedy)
-      None
-    }
+      "and its pointer flip; rebuild the artifact with a cold build " +
+      "(buildComponentsArtifactFrom) into a fresh dir before appending again"
+    val Seq(shListing, _) = StoreManifest.requireUntorn(s, dir, Seq(
+      StoreManifest.Recorded("shingle index", s"$gen/shingles",
+        meta.shFiles, meta.shBytes),
+      StoreManifest.Recorded("sizes", s"$gen/sizes", meta.szFiles,
+        meta.szBytes)), tornRemedy)
     phaseLog("validate")
+    val sizesDf = s.read.parquet(s"$gen/sizes")
     val hot = s.read.parquet(s"$gen/hot")
     // increment accounting FIRST: its raw doc count feeds the
     // recomputed-cutoff drift check (the xor rides the same pass — it
@@ -604,11 +545,10 @@ object ComponentsArtifact {
     // is bounded BELOW by |hot| × minHotDf (every hot shingle's df is
     // ≥ the snapshot floor — one tiny count over the hot sidecar), so
     // crossing the cutoff with the LOWER bound means the prune is
-    // safely in its win regime; legacy metas (minHotDf sentinel ≤ 0)
-    // and small hot sets keep the measured-loss default. An explicit
-    // pruneVerify = true still forces it on.
-    val hotVolumeLowerBound =
-      if (meta.minHotDf > 0) acc.nHotRows * meta.minHotDf else 0L
+    // safely in its win regime; small hot sets keep the measured-loss
+    // default. An explicit pruneVerify = true still forces it on. (An
+    // empty hot set reads 0 whatever its Long.MaxValue floor.)
+    val hotVolumeLowerBound = acc.nHotRows * meta.minHotDf
     val effectivePrune = pruneVerify ||
       hotVolumeLowerBound >= pruneVerifyHotRowsCutoff(s)
     System.err.println(s"[components] append: ${acc.nIncDocs} docs / " +
@@ -683,22 +623,16 @@ object ComponentsArtifact {
     // the next maintain compacts, the re-derive restores one file per
     // bucket.
     // pre-append fragmentation max, from the validate phase's ONE
-    // parallel listing when the manifest path ran; a legacy (idx6-era)
-    // migration append lists here instead, once
-    val maxBucketFiles = preMaxBucketFiles.getOrElse {
-      val root = new org.apache.hadoop.fs.Path(s"$gen/shingles")
-      if (!root.getFileSystem(s.sessionState.newHadoopConf()).exists(root)) 0
-      else StoreManifest.list(s, s"$gen/shingles").maxPerDir
-    }
+    // parallel listing
     val drift = newMaxNonhot > meta.cutoff || grownCutoff >= meta.minHotDf ||
-      maxBucketFiles + 1 > maxFilesPerBucket ||
+      shListing.maxPerDir + 1 > maxFilesPerBucket ||
       meta.rebuildRecommended
     // stage the new epoch's clusters (invisible until the flip)
     val next = epoch + 1
     merged.write.mode("overwrite").parquet(epochDir(gen, "clusters", next))
     phaseLog("stage-epoch")
     newPairs.unpersist(false)
-    // index appends BEFORE the staged meta (idx7 reorder): the meta
+    // index appends BEFORE the staged meta: the meta
     // records the POST-append listing manifests, which exist only once
     // the files are down. Crash-window semantics are unchanged — the
     // live epoch's meta never accounts for in-flight appends, so a
@@ -720,7 +654,7 @@ object ComponentsArtifact {
     // meta, so the NEXT append validates against what this one left on
     // disk; ROW counts stay incremental arithmetic (compaction's
     // row-preserving invariant still reads them)
-    writeMeta(s, gen, epochDir(gen, "meta", next), Meta(
+    writeMeta(s, gen, next, (sh, sz) => Meta(
       nPairs = meta.nPairs + nNew, cutoff = meta.cutoff,
       nDocsIndexed = meta.nDocsIndexed + acc.nIncDocs,
       nShingleRows = meta.nShingleRows + acc.nIncShingleRows,
@@ -728,14 +662,9 @@ object ComponentsArtifact {
       nDocsTotal = newDocsTotal, minHotDf = meta.minHotDf,
       rebuildRecommended = drift,
       nBuckets = meta.nBuckets,
-      // a pre-receipt artifact (idx4 meta, or anything whose
-      // receipt_kind isn't the hashed one) stays pre-receipt: folding
-      // hashed increment receipts into a raw-id xor would produce a
-      // value that validates NOTHING — compaction is the migration
-      // path that mints a real receipt (ADVICE r12)
-      docIdXor =
-        if (meta.hasReceipt) meta.docIdXor ^ incDocXor else 0L,
-      hasReceipt = meta.hasReceipt))
+      docIdXor = meta.docIdXor ^ incDocXor,
+      shFiles = sh.files, shBytes = sh.bytes,
+      szFiles = sz.files, szBytes = sz.bytes))
     phaseLog("manifest+meta")
     // publish: ONE atomic replace of the pointer file
     FsPointers.publish(gen, "CURRENT", next.toString)
@@ -974,9 +903,6 @@ object ComponentsArtifact {
     // guard — benching a different-bucket artifact would have pruned
     // with the wrong pmod and silently undercounted pairs)
     val meta = readMeta(s, dir)
-    require(meta.nBuckets > 0,
-      s"legacy artifact layout at $dir: meta lacks the n_buckets field " +
-        "(see appendComponentsArtifact's migration message)")
     val sizesDf = s.read.parquet(s"$gen/sizes")
     val hot = s.read.parquet(s"$gen/hot")
     val incSh = Dedup.shingleIndex(increment, ComponentsK)
@@ -1033,45 +959,22 @@ object ComponentsArtifact {
     // receipt catches same-count swaps (including raw-id-xor
     // collisions like {0,3} vs {1,2}) and altered text, to ~2⁻⁶⁴.
     val meta = readMeta(s, dir)
-    StoreManifest.requireReceipt(docs, dir, meta.nDocsTotal,
-      Some(meta.docIdXor).filter(_ => meta.hasReceipt))
-    // legacy pre-receipt artifact: compaction IS its migration path, so
-    // it proceeded on the count check alone — loudly
-    if (!meta.hasReceipt)
-      System.err.println(s"[components] WARNING: $dir predates the " +
-        "corpus-of-record receipt; compacting on the count check alone " +
-        "(the rebuilt generation will carry a full receipt)")
+    StoreManifest.requireReceipt(docs, dir, meta.nDocsTotal, meta.docIdXor)
     // the bucket count is a per-artifact property: preserve the
     // artifact's own unless the caller re-buckets explicitly (the
-    // natural point to grow it with the corpus); a legacy artifact
-    // migrates to the binary default
-    val nb = if (nBuckets > 0) nBuckets
-      else if (meta.nBuckets > 0) meta.nBuckets
-      else ShingleBuckets
+    // natural point to grow it with the corpus)
+    val nb = if (nBuckets > 0) nBuckets else meta.nBuckets
     val next = genNumberOf(dir) + 1
     val nextDir = s"$dir/gen-$next"
     // a crashed prior compaction may have left a partial gen dir —
     // never resolvable (the pointer still names the old generation),
     // so clearing it is invisible too
     FsPointers.deleteDir(nextDir)
-    buildComponentsArtifactFrom(s, docs, nextDir, nb)
+    buildGeneration(s, docs, nextDir, nb)
     FsPointers.publish(dir, "GEN", s"gen-$next")
     // GC generations ≥ 2 behind, sweeping stale ones from crash-skipped
-    // GCs. Generation 0 is the cold build's ROOT layout: its artifact
-    // dirs (all epochs) live at the artifact root itself.
-    val rootP = new org.apache.hadoop.fs.Path(dir)
-    val fs = rootP.getFileSystem(s.sessionState.newHadoopConf())
-    (0L to next - 2).foreach { g =>
-      if (g == 0L) {
-        fs.listStatus(rootP).map(_.getPath.getName)
-          .filter { n =>
-            n == "shingles" || n == "sizes" || n == "hot" ||
-              n == "clusters" || n.startsWith("clusters_v") ||
-              n == "meta" || n.startsWith("meta_v")
-          }.foreach(n => FsPointers.deleteDir(s"$dir/$n"))
-        FsPointers.deleteFile(s"$dir/CURRENT")
-      } else FsPointers.deleteDir(s"$dir/gen-$g")
-    }
+    // GCs
+    (0L to next - 2).foreach(g => FsPointers.deleteDir(s"$dir/gen-$g"))
   }
 
   /** THE MAINTENANCE RUNBOOK AS ONE OPERATOR (round-10 verdict ask

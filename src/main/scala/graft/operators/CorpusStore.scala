@@ -262,6 +262,6 @@ object CorpusStore {
     * query path (it scans the corpus, the cost the store avoids). */
   def verifyReceipt(corpus: DataFrame, dir: String): Unit = {
     val meta = readMeta(corpus.sparkSession, dir)
-    StoreManifest.requireReceipt(corpus, dir, meta.nDocs, Some(meta.docXor))
+    StoreManifest.requireReceipt(corpus, dir, meta.nDocs, meta.docXor)
   }
 }

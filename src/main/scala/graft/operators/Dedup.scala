@@ -558,7 +558,7 @@ object Dedup {
     * (it scans the corpus, the exact cost the index exists to avoid). */
   def verifyBandIndexReceipt(corpus: DataFrame, dir: String): Unit = {
     val meta = readBandIndexMeta(corpus.sparkSession, dir)
-    StoreManifest.requireReceipt(corpus, dir, meta.nDocs, Some(meta.docXor))
+    StoreManifest.requireReceipt(corpus, dir, meta.nDocs, meta.docXor)
   }
 
   /** Broadcast-safety cap for the indexed path's increment-band collect:

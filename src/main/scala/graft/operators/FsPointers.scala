@@ -82,13 +82,6 @@ private[graft] object FsPointers {
     if (fc.util().exists(p)) { fc.delete(p, true); () }
   }
 
-  /** Non-recursive delete of a single file (legacy pointer cleanup). */
-  def deleteFile(path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fc = fcFor(p)
-    if (fc.util().exists(p)) { fc.delete(p, false); () }
-  }
-
   /** Live version directory of the versioned state rooted at `root`,
     * or None before the first committed [[foldVersion]]. */
   def currentVersion(root: String): Option[String] =

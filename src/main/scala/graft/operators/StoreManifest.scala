@@ -98,21 +98,14 @@ private[graft] object StoreManifest {
       remedy: String): Seq[Detailed] = {
     val have = recorded.map(r => list(s, r.path))
     val both = recorded.zip(have)
-    tornUnless(both.forall { case (r, d) => d.files == r.files && d.bytes == r.bytes },
-      dir,
-      both.map { case (r, d) => s"${r.label} holds ${d.files} files / ${d.bytes} bytes" }
-        .mkString(" and "),
-      recorded.map(r => s"${r.files} / ${r.bytes}").mkString(" and "), remedy)
+    require(both.forall { case (r, d) => d.files == r.files && d.bytes == r.bytes },
+      s"torn append detected at $dir: " +
+        both.map { case (r, d) => s"${r.label} holds ${d.files} files / ${d.bytes} bytes" }
+          .mkString(" and ") +
+        " but meta records " +
+        recorded.map(r => s"${r.files} / ${r.bytes}").mkString(" and ") + s" — $remedy")
     have
   }
-
-  /** The torn-append refusal itself, for checks that compare something
-    * other than a listing (the components artifact's legacy row-count
-    * validation of a meta that predates its manifest). */
-  def tornUnless(ok: Boolean, dir: String, holds: => String,
-      records: => String, remedy: String): Unit =
-    require(ok, s"torn append detected at $dir: $holds but meta records " +
-      s"$records — $remedy")
 
   /** Write a store's one-row meta parquet at `path` (replacing it). */
   def writeMeta(s: SparkSession, path: String, fields: Column*): Unit = {
@@ -158,16 +151,16 @@ private[graft] object StoreManifest {
   }
 
   /** Maintenance check: does `corpus` match the store's build+append
-    * history (meta's doc count, and its receipt when the store carries
-    * one)? One bounded aggregate over the corpus — NOT a query-path
-    * check (it scans the corpus, the cost the stores exist to avoid). */
+    * history (meta's doc count and receipt)? One bounded aggregate over
+    * the corpus — NOT a query-path check (it scans the corpus, the cost
+    * the stores exist to avoid). */
   def requireReceipt(corpus: DataFrame, dir: String, nDocs: Long,
-      docXor: Option[Long]): Unit = {
+      docXor: Long): Unit = {
     val (n, x) = receiptOf(corpus)
-    require(n == nDocs && docXor.forall(_ == x),
+    require(n == nDocs && docXor == x,
       s"corpus-of-record mismatch at $dir: supplied corpus has $n docs / " +
-        s"receipt $x but meta records $nDocs docs / " +
-        docXor.fold("no receipt")(r => s"receipt $r") + " — the corpus " +
+        s"receipt $x but meta records $nDocs docs / receipt $docXor" +
+        " — the corpus " +
         "differs from the build+append history (missing docs, swapped ids " +
         "or altered text)")
   }

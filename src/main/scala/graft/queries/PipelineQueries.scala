@@ -65,32 +65,19 @@ object PipelineQueries {
       ComponentsArtifact.buildComponentsArtifactFrom(s, Tables.documents(s, d), _))
 
   /** Pure path of the artifact (no build): tmp/graft_components_<params>_<stamp>.
-    * `idx7b<N>` versions the layout (migration-on-rebuild: a version
-    * bump changes the path, so stale layouts are never half-reused) —
-    * `idx1` lacked the integrity/drift meta, `idx2` lacked the
-    * sh-bucketed shingle partitioning and the two-direction drift
-    * fields (n_docs_total / min_hot_df), `idx3` lacked the persisted
-    * bucket count and corpus-of-record receipt (n_buckets /
-    * doc_id_xor), `idx4`'s receipt xor'd RAW doc_ids (collision-
-    * constructible and text-blind — round-11 verdict ask #1) where
-    * idx5's is [[graft.operators.StoreManifest.docReceipt]]'s per-row
-    * hash, and `idx5` lacked the explicit `receipt_kind` that
-    * distinguishes the hashed receipt from idx4's schema-identical
-    * raw-id one (ADVICE r12 — without
-    * it, idx5-era metas now read as pre-receipt), and `idx6` lacked
-    * the index-dir listing manifests (sh_files/sh_bytes/sz_files/
-    * sz_bytes) whose absence made every append's torn-append
-    * validation an O(index-files) footer pass plus a corpus-row-linear
-    * sizes SUM (idx7 — the round-14 deferred term; idx6-era private
-    * artifacts migrate in place, see [[ComponentsArtifact.readMeta]]).
-    * The `b<N>` suffix encodes [[ComponentsArtifact.ShingleBuckets]]
-    * itself (ADVICE r10): raising the bucket count at larger scale
-    * re-paths — and therefore re-builds — the shared artifact by
+    * `idx8b<N>` names the on-disk format: `idx8` is the one layout
+    * [[ComponentsArtifact]] reads and writes (every generation in
+    * `gen-<g>/`, epochs in `clusters_v<e>`/`meta_v<e>`, every meta field
+    * required), so an artifact cached under an older token is never
+    * read as this one — a format change bumps the number and re-paths,
+    * and therefore re-builds, the shared artifact. `b<N>` is
+    * [[ComponentsArtifact.ShingleBuckets]] itself (ADVICE r10): raising
+    * the bucket count at larger scale re-paths the shared artifact by
     * construction, with no manual version bump to forget. */
   private[graft] def componentsArtifactPath(d: String): String = {
     import ComponentsArtifact.{ComponentsK, ComponentsThreshold, ShingleBuckets}
     val params =
-      s"k${ComponentsK}t${(ComponentsThreshold * 100).round}autodf_idx7b$ShingleBuckets"
+      s"k${ComponentsK}t${(ComponentsThreshold * 100).round}autodf_idx8b$ShingleBuckets"
     new java.io.File(System.getProperty("java.io.tmpdir"),
       s"graft_components_${params}_" +
         StreamingQueries.sourceStamp(s"$d/documents.parquet")).getAbsolutePath

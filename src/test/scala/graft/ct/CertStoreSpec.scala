@@ -107,7 +107,7 @@ class CertStoreSpec extends SparkSpec {
     val rowsBefore = CertStore.read(spark, dir).count()
     val months = CertStore.compactDrifted(spark, dir, maxFilesPerMonth = 4)
     assert(months == Seq(202401L), s"only January drifted, got $months")
-    assert(files("202401").size == 1, "drifted month must compact to filesPerMonth files")
+    assert(files("202401").size == 1, "drifted month must compact to one file")
     assert(files("202402") == febBefore, "in-bound month's files must be untouched")
     assert(CertStore.read(spark, dir).count() == rowsBefore, "in-place compaction keeps rows")
     // dedupe: January holds 5 copies of each (fingerprint, domain) from

@@ -274,6 +274,49 @@ class ServerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     } finally srv.stop()
   }
 
+  test("/stream past maxStreams is a 503, and a subscriber that disconnects " +
+      "from an idle store frees its slot") {
+    val srv = new Server(spark, () => CertStore.read(spark, storeDir), storeDir,
+      port = 0, streamPollMs = 50, maxStreams = 1).start()
+    // a raw socket, so closing it really drops the connection
+    def subscribe(): (java.net.Socket, java.io.BufferedReader, String) = {
+      val sock = new java.net.Socket("127.0.0.1", srv.boundPort)
+      sock.setSoTimeout(30000)
+      sock.getOutputStream.write(
+        s"GET /stream HTTP/1.0\r\nHost: 127.0.0.1\r\n\r\n".getBytes("UTF-8"))
+      sock.getOutputStream.flush()
+      val in = new java.io.BufferedReader(new java.io.InputStreamReader(
+        sock.getInputStream, "UTF-8"))
+      (sock, in, String.valueOf(in.readLine()))
+    }
+    try {
+      val (first, firstIn, status) = subscribe()
+      assert(status.contains(" 200"), status)
+      // caught up: the store's last row has arrived, so every later poll
+      // of this subscriber comes back empty
+      var line = firstIn.readLine()
+      while (line != null && !line.contains("b.example.com")) line = firstIn.readLine()
+      assert(line != null, "the first subscriber never received the store's rows")
+      val busy = client.send(HttpRequest.newBuilder(
+          URI.create(s"http://127.0.0.1:${srv.boundPort}/stream")).GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(busy.statusCode() == 503 && busy.body().contains("too many streams"),
+        busy.body())
+      // the store gets no commit from here on: only the empty-poll
+      // heartbeat can find that the first subscriber went away
+      first.close()
+      val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
+      var admitted = false
+      while (!admitted && System.nanoTime() < deadline) {
+        val (next, _, st) = subscribe()
+        next.close()
+        admitted = st.contains(" 200")
+        if (!admitted) Thread.sleep(100)
+      }
+      assert(admitted, "the closed subscriber's slot was never freed")
+    } finally srv.stop()
+  }
+
   test("stop() leaves no non-daemon thread the server started alive") {
     import scala.jdk.CollectionConverters._
     def nonDaemon(): Set[Thread] = Thread.getAllStackTraces.keySet.asScala

@@ -17,7 +17,7 @@ import graft.SparkSpec
   *
   * Plus the crash/GC contracts: a generation survives ONE compaction's
   * grace before being swept (a reader mid-scan of pre-flip-resolved
-  * paths keeps intact directories), generation 0's ROOT-layout dirs are
+  * paths keeps intact directories), the cold build's `gen-0/` is
   * removed exactly at two-behind, and a partial `gen-<g+1>/` left by a
   * crashed prior compaction is cleared and rebuilt — it was never
   * resolvable, so clearing it is invisible.
@@ -166,11 +166,11 @@ class ComponentsCompactSpec extends SparkSpec {
 
       ComponentsArtifact.compactComponentsArtifact(spark, base, corpusDocs)
       assert(ComponentsArtifact.genDirOf(base).endsWith("gen-1"))
-      // gen-0's root layout is ONE behind: fully intact, same content
-      // (no CURRENT file here — a fresh cold build is epoch 0 by absence)
-      for (n <- Seq("clusters", "meta", "shingles", "sizes", "hot"))
-        assert(new java.io.File(base, n).exists,
-          s"gen-0 root dir $n must survive the first compaction")
+      // gen-0 is ONE behind: fully intact, same content (no CURRENT
+      // file here — a fresh cold build is epoch 0 by absence)
+      for (n <- Seq("clusters_v0", "meta_v0", "shingles", "sizes", "hot"))
+        assert(new java.io.File(base, s"gen-0/$n").exists,
+          s"gen-0 dir $n must survive the first compaction")
       assert(spark.read.parquet(readerPath)
         .select(col("doc_id"), col("cluster_id")).as[(Long, Long)]
         .collect().toSeq.sorted == readerSaw,
@@ -178,10 +178,11 @@ class ComponentsCompactSpec extends SparkSpec {
 
       ComponentsArtifact.compactComponentsArtifact(spark, base, corpusDocs)
       assert(ComponentsArtifact.genDirOf(base).endsWith("gen-2"))
-      // now gen-0 is two behind: its root artifact dirs are swept...
-      for (n <- Seq("clusters", "meta", "shingles", "sizes", "hot", "CURRENT"))
-        assert(!new java.io.File(base, n).exists,
-          s"gen-0 root dir $n must be GC'd at two-behind")
+      // now gen-0 is two behind: its artifact dirs are swept...
+      for (n <- Seq("clusters_v0", "meta_v0", "shingles", "sizes", "hot", "CURRENT"))
+        assert(!new java.io.File(base, s"gen-0/$n").exists,
+          s"gen-0 dir $n must be GC'd at two-behind")
+      assert(!new java.io.File(base, "gen-0").exists, "gen-0 must be GC'd at two-behind")
       // ...while gen-1 (one behind) keeps its grace, and gen-2 is live
       assert(new java.io.File(base, "gen-1").isDirectory)
       assert(readClusters(base) == readerSaw)
@@ -268,7 +269,7 @@ class ComponentsCompactSpec extends SparkSpec {
       assert(!new java.io.File(base, "gen-1").exists,
         "a rejected compaction must not leave a generation dir")
       assert(!new java.io.File(base, "GEN").exists &&
-        ComponentsArtifact.genDirOf(base) == base,
+        ComponentsArtifact.genDirOf(base) == s"$base/gen-0",
         "a rejected compaction must not move the generation pointer")
       assert(readClusters(base) == live)
 
@@ -323,7 +324,8 @@ class ComponentsCompactSpec extends SparkSpec {
       assert(ComponentsArtifact.readMeta(spark, base64).nBuckets == 64)
       // the 32-bucket index really is pmod-32 at rest: every shb
       // partition dir stays under 32
-      val shbDirs = new java.io.File(base32, "shingles").listFiles()
+      val shbDirs = new java.io.File(ComponentsArtifact.genDirOf(base32), "shingles")
+        .listFiles()
         .filter(_.getName.startsWith("shb=")).map(_.getName.stripPrefix("shb=").toInt)
       assert(shbDirs.nonEmpty && shbDirs.max < 32, shbDirs.toSeq.sorted.mkString(","))
       // the bench hook's pair term prunes with the ARTIFACT'S pmod
@@ -362,106 +364,58 @@ class ComponentsCompactSpec extends SparkSpec {
     }
   }
 
-  test("a legacy pre-idx5 artifact (meta without n_buckets/doc_id_xor) gets " +
-      "the actionable go-compact message from append (ADVICE r11), and " +
-      "compaction migrates it to a fully-receipted artifact") {
-    val base = Files.createTempDirectory("comp-legacy").toString
+  test("a meta missing any required field (each in turn) is refused by " +
+      "readMeta, append, appendPairTermOnly and compaction with the rebuild " +
+      "message, and no file is written") {
+    val base = Files.createTempDirectory("comp-meta-fields").toString
     try {
       ComponentsArtifact.buildComponentsArtifactFrom(spark, corpusDocs, base)
-      // rewrite meta WITHOUT the idx4+ fields — the persisted shape
-      // of a pre-idx4 private-dir artifact
       val metaDir = ComponentsArtifact.metaDirOf(base)
-      val legacy = spark.read.parquet(metaDir)
-        .drop("n_buckets", "doc_id_xor", "receipt_kind")
-      val schema = legacy.schema
-      val rows = legacy.collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-        .coalesce(1).write.mode("overwrite").parquet(metaDir)
-      // tolerant read surfaces sentinels instead of a raw Spark error
-      val m = ComponentsArtifact.readMeta(spark, base)
-      assert(m.nBuckets == -1 && !m.hasReceipt, s"$m")
-      // append and the bench hook refuse with the migration message
+      val written = spark.read.parquet(metaDir)
+      val fields = written.columns.toSeq
+      assert(fields.size == 15 && fields.contains("receipt_kind") &&
+        fields.contains("n_buckets") && fields.contains("sh_files"), s"$fields")
+      val writtenRows = written.collect()
+      def rewrite(meta: DataFrame): Unit = {
+        val rows = meta.collect()
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), meta.schema)
+          .coalesce(1).write.mode("overwrite").parquet(metaDir)
+      }
+      def original =
+        spark.createDataFrame(java.util.Arrays.asList(writtenRows: _*), written.schema)
+      def tree(): Seq[(String, Long)] = {
+        import scala.jdk.CollectionConverters._
+        val root = java.nio.file.Paths.get(base)
+        Files.walk(root).iterator().asScala.filter(Files.isRegularFile(_))
+          .map(p => (root.relativize(p).toString, Files.size(p))).toSeq.sorted
+      }
       val inc = Seq((101L, tail(500))).toDF("doc_id", "text")
-      val eApp = intercept[IllegalArgumentException] {
-        ComponentsArtifact.appendComponentsArtifact(spark, base, inc)
+      // every field dropped in turn, plus a receipt of another kind
+      val forged = fields.map(f => f -> original.drop(f)) :+
+        ("receipt_kind=none" -> original.withColumn("receipt_kind", lit("none")))
+      for ((what, meta) <- forged) {
+        rewrite(meta)
+        val before = tree()
+        val ops = Seq[(String, () => Any)](
+          "readMeta" -> (() => ComponentsArtifact.readMeta(spark, base)),
+          "append" -> (() => ComponentsArtifact.appendComponentsArtifact(spark, base, inc)),
+          "appendPairTermOnly" -> (() =>
+            ComponentsArtifact.appendPairTermOnly(spark, base, inc)),
+          "compact" -> (() =>
+            ComponentsArtifact.compactComponentsArtifact(spark, base, corpusDocs)))
+        for ((op, run) <- ops) {
+          val e = intercept[IllegalArgumentException](run())
+          assert(e.getMessage.contains("rebuild the artifact") &&
+            e.getMessage.contains(what.takeWhile(_ != '=')),
+            s"$op on a meta without $what: ${e.getMessage}")
+        }
+        assert(tree() == before, s"a refused meta without $what must write nothing")
       }
-      assert(eApp.getMessage.contains("legacy artifact layout") &&
-        eApp.getMessage.contains("compactComponentsArtifact"), eApp.getMessage)
-      val eBench = intercept[IllegalArgumentException] {
-        ComponentsArtifact.appendPairTermOnly(spark, base, inc)
-      }
-      assert(eBench.getMessage.contains("legacy artifact layout"), eBench.getMessage)
-      // the count check still guards a legacy compaction: a short
-      // corpus is rejected even with no receipt to compare
-      val eShort = intercept[IllegalArgumentException] {
-        ComponentsArtifact.compactComponentsArtifact(spark, base, corpusDocs.limit(10))
-      }
-      assert(eShort.getMessage.contains("corpus-of-record mismatch"),
-        eShort.getMessage)
-      // compaction IS the migration path: count-checked (receipt absent,
-      // loud warning), and the rebuilt generation is fully receipted
-      ComponentsArtifact.compactComponentsArtifact(spark, base, corpusDocs)
-      val m1 = ComponentsArtifact.readMeta(spark, base)
-      assert(m1.nBuckets == 64 && m1.hasReceipt, s"$m1")
-      assert((readClusters(base), m1.nPairs) == coldOf(corpusDocs))
-      // and the migrated artifact accepts appends again
+      // the true meta restored, the artifact reads and appends again
+      rewrite(original)
       ComponentsArtifact.appendComponentsArtifact(spark, base, inc)
       assert((readClusters(base), ComponentsArtifact.readMeta(spark, base).nPairs)
         == coldOf(corpusDocs.unionByName(inc)))
-    } finally Dedup.rmdir(new java.io.File(base))
-  }
-
-  test("an idx4-era meta (doc_id_xor present but NO receipt_kind — its value " +
-      "is the raw-id xor) reads as pre-receipt, compacts on the count check " +
-      "alone, and appends never mint a trusted receipt for it (ADVICE r12)") {
-    val base = Files.createTempDirectory("comp-idx4").toString
-    try {
-      ComponentsArtifact.buildComponentsArtifactFrom(spark, corpusDocs, base)
-      // rewrite meta in the idx4 persisted shape: the SAME doc_id_xor
-      // column name, but holding bit_xor(doc_id) — raw-id semantics —
-      // and no receipt_kind field. Schema-indistinguishable from idx5
-      // without the kind field, which is the whole point of the fix.
-      val rawXor = corpusDocs.agg(expr("bit_xor(doc_id)")).head().getLong(0)
-      val metaDir = ComponentsArtifact.metaDirOf(base)
-      val idx4 = spark.read.parquet(metaDir)
-        .withColumn("doc_id_xor", lit(rawXor)).drop("receipt_kind")
-      val schema = idx4.schema
-      val rows = idx4.collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-        .coalesce(1).write.mode("overwrite").parquet(metaDir)
-      assert(!ComponentsArtifact.readMeta(spark, base).hasReceipt,
-        "an idx4 meta must read as pre-receipt — validating its raw-id " +
-          "xor against the hashed receipt falsely rejects the true corpus")
-      // the append path still works (n_buckets is present) but must NOT
-      // promote the artifact to receipted: folding hashed increment
-      // receipts into a raw-id xor validates nothing
-      val inc = Seq((101L, tail(500))).toDF("doc_id", "text")
-      ComponentsArtifact.appendComponentsArtifact(spark, base, inc)
-      assert(!ComponentsArtifact.readMeta(spark, base).hasReceipt,
-        "an append on a pre-receipt artifact must stay pre-receipt")
-      val docs1 = corpusDocs.unionByName(inc)
-      // the count check still guards: a short corpus is rejected
-      val eShort = intercept[IllegalArgumentException] {
-        ComponentsArtifact.compactComponentsArtifact(spark, base, corpusDocs)
-      }
-      assert(eShort.getMessage.contains("corpus-of-record mismatch"),
-        eShort.getMessage)
-      // the TRUE corpus compacts (this was the falsely-rejected case:
-      // its hashed receipt never equals the stored raw-id xor) and the
-      // rebuilt generation is fully receipted
-      ComponentsArtifact.compactComponentsArtifact(spark, base, docs1)
-      val m1 = ComponentsArtifact.readMeta(spark, base)
-      assert(m1.hasReceipt, s"$m1")
-      assert((readClusters(base), m1.nPairs) == coldOf(docs1))
-      // and the migrated artifact's receipt is live again: a tampered
-      // corpus is now caught by the hash
-      val eSwap = intercept[IllegalArgumentException] {
-        ComponentsArtifact.compactComponentsArtifact(spark, base,
-          docs1.withColumn("text",
-            when(col("doc_id") === 101L, lit("tampered")).otherwise(col("text"))))
-      }
-      assert(eSwap.getMessage.contains("corpus-of-record mismatch"),
-        eSwap.getMessage)
     } finally Dedup.rmdir(new java.io.File(base))
   }
 
@@ -477,7 +431,7 @@ class ComponentsCompactSpec extends SparkSpec {
       val docs1 = corpusDocs.unionByName(inc1)
       assert(!ComponentsArtifact.maintainComponentsArtifact(spark, base, inc1, docs1),
         "no drift -> no compaction")
-      assert(ComponentsArtifact.genDirOf(base) == base, "still generation 0")
+      assert(ComponentsArtifact.genDirOf(base) == s"$base/gen-0", "still generation 0")
       assert((readClusters(base), ComponentsArtifact.readMeta(spark, base).nPairs)
         == coldOf(docs1))
       // step 2: the prefix doc pushes the df-16 shingle over the cutoff

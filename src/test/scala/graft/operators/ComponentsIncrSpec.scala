@@ -78,7 +78,7 @@ class ComponentsIncrSpec extends SparkSpec {
       assert(Dedup.autoDfCutoff(corpusDocs) < 20,
         "fixture regression: cutoff must sit below the boilerplate df")
       ComponentsArtifact.buildComponentsArtifactFrom(spark, corpusDocs, base)
-      assert(spark.read.parquet(s"$base/hot").count() >= 1L,
+      assert(spark.read.parquet(s"${ComponentsArtifact.genDirOf(base)}/hot").count() >= 1L,
         "fixture regression: the boilerplate shingle must be hot")
       ComponentsArtifact.buildComponentsArtifactFrom(spark,
         corpusDocs.unionByName(incrementDocs), cold)
@@ -104,10 +104,11 @@ class ComponentsIncrSpec extends SparkSpec {
     val base = Files.createTempDirectory("comp-incr-semi").toString
     try {
       ComponentsArtifact.buildComponentsArtifactFrom(spark, corpusDocs, base)
+      val gen = ComponentsArtifact.genDirOf(base)
       val dflt = Dedup.incrementalNgramPairs(incrementDocs,
-          spark.read.parquet(s"$base/shingles"),
-          spark.read.parquet(s"$base/sizes"),
-          spark.read.parquet(s"$base/hot"), k = 3, threshold = 0.5)
+          spark.read.parquet(s"$gen/shingles"),
+          spark.read.parquet(s"$gen/sizes"),
+          spark.read.parquet(s"$gen/hot"), k = 3, threshold = 0.5)
         .collect().map(_.toSeq).toSeq
       // the fixture surfaces cross-boundary, increment-internal and
       // hot-contribution pairs — a diverging verify could not hide
@@ -119,9 +120,9 @@ class ComponentsIncrSpec extends SparkSpec {
       def pruned(cap: String) = {
         spark.conf.set("graft.dedup.candidatePairCollectMaxRows", cap)
         try Dedup.incrementalNgramPairs(incrementDocs,
-            spark.read.parquet(s"$base/shingles"),
-            spark.read.parquet(s"$base/sizes"),
-            spark.read.parquet(s"$base/hot"), k = 3, threshold = 0.5,
+            spark.read.parquet(s"$gen/shingles"),
+            spark.read.parquet(s"$gen/sizes"),
+            spark.read.parquet(s"$gen/hot"), k = 3, threshold = 0.5,
             pruneVerifyByCandidates = true)
           .collect().map(_.toSeq).toSeq
         finally spark.conf.unset("graft.dedup.candidatePairCollectMaxRows")

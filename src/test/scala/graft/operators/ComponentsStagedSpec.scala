@@ -97,7 +97,8 @@ class ComponentsStagedSpec extends SparkSpec {
     try {
       val inc = (n: Long) => Seq((100L + n, tail(700 + n.toInt)))
         .toDF("doc_id", "text")
-      val v0Clusters = new java.io.File(base, "clusters")
+      val gen = ComponentsArtifact.genDirOf(base)
+      val v0Clusters = new java.io.File(gen, "clusters_v0")
       val v0Content = readClusters(base)
       assert(ComponentsArtifact.currentEpoch(base) == 0L)
 
@@ -117,13 +118,13 @@ class ComponentsStagedSpec extends SparkSpec {
       // now epoch 0 has had a full append's grace and is GC'd; epoch 1
       // (the new previous) survives
       assert(!v0Clusters.exists, "epoch two behind the pointer must be GC'd")
-      assert(!new java.io.File(base, "meta").exists)
-      assert(new java.io.File(base, "clusters_v1").isDirectory)
+      assert(!new java.io.File(gen, "meta_v0").exists)
+      assert(new java.io.File(gen, "clusters_v1").isDirectory)
 
       ComponentsArtifact.appendComponentsArtifact(spark, base, inc(3))
-      assert(!new java.io.File(base, "clusters_v1").exists)
-      assert(new java.io.File(base, "clusters_v2").isDirectory)
-      assert(new java.io.File(base, "clusters_v3").isDirectory)
+      assert(!new java.io.File(gen, "clusters_v1").exists)
+      assert(new java.io.File(gen, "clusters_v2").isDirectory)
+      assert(new java.io.File(gen, "clusters_v3").isDirectory)
     } finally Dedup.rmdir(new java.io.File(base))
   }
 
@@ -132,14 +133,15 @@ class ComponentsStagedSpec extends SparkSpec {
     val base = buildBase()
     try {
       // the physical layout: shb=N partition dirs, no root-level files
-      val names = Option(new java.io.File(base, "shingles").listFiles())
+      val gen = ComponentsArtifact.genDirOf(base)
+      val names = Option(new java.io.File(gen, "shingles").listFiles())
         .toSeq.flatten.map(_.getName)
       assert(names.exists(_.startsWith("shb=")), s"got $names")
       assert(!names.exists(_.endsWith(".parquet")),
         s"data files must live under shb= dirs, got $names")
       // a bucket predicate must land in PartitionFilters — directory
       // pruning, not row filtering after a full scan
-      val plan = spark.read.parquet(s"$base/shingles")
+      val plan = spark.read.parquet(s"$gen/shingles")
         .filter(col("shb").isin(1, 2, 3))
         .queryExecution.executedPlan.toString
       val pf = plan.linesIterator.find(_.contains("PartitionFilters"))
@@ -197,7 +199,8 @@ class ComponentsStagedSpec extends SparkSpec {
       Dedup.shingleIndex(Seq((999L, tail(900))).toDF("doc_id", "text"), 3)
         .withColumn("shb",
           pmod(col("sh"), lit(ComponentsArtifact.ShingleBuckets.toLong)).cast("int"))
-        .write.mode("append").partitionBy("shb").parquet(s"$base/shingles")
+        .write.mode("append").partitionBy("shb")
+        .parquet(s"${ComponentsArtifact.genDirOf(base)}/shingles")
       val e = intercept[IllegalArgumentException] {
         ComponentsArtifact.appendComponentsArtifact(spark, base,
           Seq((104L, tail(901))).toDF("doc_id", "text"))
@@ -254,37 +257,26 @@ class ComponentsStagedSpec extends SparkSpec {
     (files.length.toLong, files.map(_.length()).sum)
   }
 
-  test("idx7 manifest: build and append record the index dirs' true " +
-      "(file count, bytes); an idx6-era meta (no manifest fields) migrates " +
-      "in place — one footer-validated append mints it") {
+  test("listing manifest: build and every append record the index dirs' " +
+      "true (file count, bytes) in meta, in the generation's own dirs") {
     val base = buildBase()
     try {
+      val gen = ComponentsArtifact.genDirOf(base)
+      assert(gen == s"$base/gen-0", gen)
       // build-time manifest matches an independent listing
       val m0 = ComponentsArtifact.readMeta(spark, base)
-      assert((m0.shFiles, m0.shBytes) == listManifest(s"$base/shingles"), s"$m0")
-      assert((m0.szFiles, m0.szBytes) == listManifest(s"$base/sizes"), s"$m0")
-      // forge the idx6-era meta: same row, manifest fields dropped
-      val metaDir = ComponentsArtifact.metaDirOf(base)
-      val legacy = spark.read.parquet(metaDir)
-        .drop("sh_files", "sh_bytes", "sz_files", "sz_bytes")
-      val rows = legacy.collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), legacy.schema)
-        .coalesce(1).write.mode("overwrite").parquet(metaDir)
-      assert(ComponentsArtifact.readMeta(spark, base).shFiles == -1L,
-        "an idx6-era meta must surface the no-manifest sentinel")
-      // first append validates by the legacy footer pass and mints the
-      // manifest; the second takes the listing path — both hash-equal
-      // to the incremental contract (clusters contain the new docs)
+      assert((m0.shFiles, m0.shBytes) == listManifest(s"$gen/shingles"), s"$m0")
+      assert((m0.szFiles, m0.szBytes) == listManifest(s"$gen/sizes"), s"$m0")
       ComponentsArtifact.appendComponentsArtifact(spark, base,
         Seq((201L, tail(29) + " extra2")).toDF("doc_id", "text"))
       val m1 = ComponentsArtifact.readMeta(spark, base)
-      assert((m1.shFiles, m1.shBytes) == listManifest(s"$base/shingles"),
-        s"the migrating append must mint the true manifest: $m1")
-      assert((m1.szFiles, m1.szBytes) == listManifest(s"$base/sizes"), s"$m1")
+      assert((m1.shFiles, m1.shBytes) == listManifest(s"$gen/shingles"),
+        s"the append must record the true manifest: $m1")
+      assert((m1.szFiles, m1.szBytes) == listManifest(s"$gen/sizes"), s"$m1")
       ComponentsArtifact.appendComponentsArtifact(spark, base,
         Seq((202L, tail(951))).toDF("doc_id", "text"))
       val m2 = ComponentsArtifact.readMeta(spark, base)
-      assert((m2.shFiles, m2.shBytes) == listManifest(s"$base/shingles"), s"$m2")
+      assert((m2.shFiles, m2.shBytes) == listManifest(s"$gen/shingles"), s"$m2")
       assert(m2.shFiles > m1.shFiles,
         s"each append adds index files the manifest must account for: $m1 -> $m2")
       // 201 is a near-dup of 29/30, so both appends' pair work ran for
