@@ -73,7 +73,8 @@ object CertStore {
       try Some(new String(in.readAllBytes(), "UTF-8").trim) finally in.close()
     } catch { case _: java.io.IOException => None }
 
-  /** One store version: the frame built under `token` and its data bytes. */
+  /** One store version: the frame built under `token` and its data bytes
+    * (`token` is empty for a store listed without one). */
   private final case class Snapshot(token: String, df: DataFrame, bytes: Long)
   private final class Slot { @volatile var snap: Option[Snapshot] = None }
   private val slots = new ConcurrentHashMap[(SparkSession, String), Slot]()
@@ -94,8 +95,7 @@ object CertStore {
         // another reader may have rebuilt meanwhile, or a writer committed again
         token(fs, root).map { now =>
           slot.snap.filter(_.token == now).getOrElse {
-            val df = load(spark, path)
-            val built = Snapshot(now, df, fileBytes(df))
+            val built = load(spark, path).copy(token = now)
             slot.snap = Some(built)
             built
           }
@@ -119,13 +119,31 @@ object CertStore {
     * `df.write.parquet`) is listed afresh on every call, as before. A path
     * that does not exist yet, or holds no data files, reads as an empty
     * frame with the populated store's schema (memoized only under a
-    * token). */
+    * token).
+    *
+    * Plan shape: a store whose data files total at most
+    * `spark.sql.files.openCostInBytes` (Spark's own estimate of the bytes
+    * readable in the time one file open costs; 4 MB by default) is served
+    * as `coalesce(1)`. Filters and projections still push through the
+    * `Coalesce` into the scan, and every aggregate, sort and top-k above
+    * it then needs no exchange, so a request runs as one single-task job
+    * instead of a scan stage, a hash or range exchange and the range
+    * sampling job. Measured on 4 cores (SCALE.md, "Round 18"): at 2.2
+    * and 16.5 MB one task cuts solo `/subdomains` and raises 4-thread
+    * throughput by half or more, while solo `/domain`, which plans no
+    * exchange in either shape, stays within 6%; at 62.9 MB it loses solo
+    * `/subdomains`, where reading the files in turn costs more than the
+    * exchanges save. The threshold sits below that crossover. The rule is
+    * decided once per listing, where the bytes are known, so every route,
+    * every `/stream` poll and a tokenless read all get the same shape;
+    * larger stores keep the parallel plans. */
   def read(spark: SparkSession, path: String): DataFrame =
-    pinned(spark, path).map(_.df).getOrElse(load(spark, path))
+    pinned(spark, path).getOrElse(load(spark, path)).df
 
-  /** A fresh listing of the store: the frame a snapshot pins. */
-  private def load(spark: SparkSession, path: String): DataFrame =
-    try {
+  /** A fresh listing of the store, shaped by size (see [[read]]): the
+    * snapshot `pinned` caches, here under no token. */
+  private def load(spark: SparkSession, path: String): Snapshot = {
+    val df = try {
       val df = spark.read.parquet(path)
       if (df.columns.contains("epoch")) df.drop("epoch") else df
     } catch {
@@ -133,6 +151,10 @@ object CertStore {
           if Set("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA").contains(e.getCondition) =>
         spark.createDataFrame(java.util.Collections.emptyList[Row](), emptySchema(spark))
     }
+    val bytes = fileBytes(df)
+    val small = bytes <= spark.sessionState.conf.filesOpenCostInBytes
+    Snapshot("", if (small) df.coalesce(1) else df, bytes)
+  }
 
   /** `CertDomain.schema` plus `ts_month` typed as partition inference types
     * a yyyyMM directory value. */
@@ -228,7 +250,7 @@ object CertStore {
     * commit — so /size costs no listing; one without a token sums a
     * fresh listing's file index, the same one a snapshot pins. */
   def sizeBytes(spark: SparkSession, path: String): Long =
-    pinned(spark, path).map(_.bytes).getOrElse(fileBytes(load(spark, path)))
+    pinned(spark, path).getOrElse(load(spark, path)).bytes
 
   /** Human-readable byte size, reference semantics (api/app.py:211-219):
     * base 1024, two decimals, no separator, 0 → "0B". */

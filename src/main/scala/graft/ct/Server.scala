@@ -38,9 +38,26 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * Serving is driver-side: each request runs a DataFrame query whose scan
   * prunes partitions/row-groups by the request predicate (SURVEY §4) and
   * collects only the bounded result (every endpoint is LIMITed or
-  * single-row by shape). /stream connections are long-lived poll loops, so
-  * they run on their own unbounded executor (capped by `maxStreams`, excess
-  * rejected 503) and never starve the request pool.
+  * single-row by shape). The table comes from `CertStore.read`, which
+  * serves a store of at most `spark.sql.files.openCostInBytes` data bytes
+  * (4 MB by default) as one partition: below that size one task reading
+  * the files in turn beats a scan stage plus the hash and range exchanges
+  * the aggregates and sorts would otherwise plan (measured on 4 cores: it
+  * wins solo /subdomains and 4-thread throughput up to 16.5 MB and loses
+  * solo /subdomains at 62.9 MB; SCALE.md, Round 18), so
+  * each request on a small store is one single-task job, as ClickHouse
+  * answers these shapes on one server's local threads (SURVEY §3.1).
+  * /stream connections are long-lived poll loops, so they run on their own
+  * unbounded executor (capped by `maxStreams`, excess rejected 503) and
+  * never starve the request pool; each poll leaves as one write.
+  *
+  * Every other response is fixed-length and sent with `Connection: close`.
+  * The JDK server writes a response's headers and body separately, so on
+  * a kept-alive connection Nagle holds the body until the client's
+  * delayed ACK (~40 ms per response); closing sends it at once. The
+  * JVM-wide `sun.net.httpserver.nodelay` property is no fix: the JDK reads
+  * it once, when the JVM creates its first `HttpServer`, which need not be
+  * this one.
   */
 class Server(spark: SparkSession, table: () => DataFrame, storePath: String,
     port: Int = 0, now: () => Timestamp = () => new Timestamp(System.currentTimeMillis()),
@@ -85,10 +102,13 @@ class Server(spark: SparkSession, table: () => DataFrame, storePath: String,
   private def rowAsDict(r: Row): String =
     jval(r.schema.fieldNames.map(f => f -> r.getAs[Any](f)).toMap)
 
+  /** One fixed-length response; the connection closes behind it so Nagle
+    * cannot hold the body (see the class doc). */
   private def send(ex: HttpExchange, code: Int, body: String,
       ctype: String = "application/json"): Unit = {
     val bytes = body.getBytes(UTF_8)
     ex.getResponseHeaders.set("Content-Type", ctype)
+    ex.getResponseHeaders.set("Connection", "close")
     ex.sendResponseHeaders(code, bytes.length)
     ex.getResponseBody.write(bytes)
     ex.close()
@@ -207,13 +227,13 @@ class Server(spark: SparkSession, table: () => DataFrame, storePath: String,
             while (streaming) {
               // sorted (ts, fingerprint, domain, log_name)
               val rows = CtQueries.streamTailAfter(table(), cursor, streamBatch).collect()
-              // an empty poll writes the heartbeat: the write is what
-              // finds a closed client, so an idle store cannot hold a
-              // dead subscriber's slot
-              if (rows.isEmpty) out.write(":\n\n".getBytes(UTF_8))
-              rows.foreach { r =>
-                out.write(s"data: ${jval(r.toSeq)}\n\n".getBytes(UTF_8))
-              }
+              // one write per poll: its frames, or the heartbeat when it
+              // is empty. The write is what finds a closed client, so an
+              // idle store cannot hold a dead subscriber's slot
+              val frames =
+                if (rows.isEmpty) ":\n\n"
+                else rows.map(r => s"data: ${jval(r.toSeq)}\n\n").mkString
+              out.write(frames.getBytes(UTF_8))
               out.flush()
               rows.lastOption.foreach { last =>
                 cursor = Some((last.getAs[Timestamp]("ts"),

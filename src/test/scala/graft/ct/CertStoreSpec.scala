@@ -268,4 +268,123 @@ class CertStoreSpec extends SparkSpec {
     assert(reads.get > 4, "the readers overlapped the commits")
     assert(CertStore.read(spark, live).count() == 6 * perEpoch)
   }
+
+  /** Rows, Spark tasks and shuffle exchanges of one run of `df`. Tasks are
+    * counted by job group; a marker job in another group, run after `df`,
+    * shows the listener has seen every event `df` posted. */
+  private def profile(df: org.apache.spark.sql.DataFrame)
+      : (Seq[org.apache.spark.sql.Row], Int, Int) = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val group = s"certstore-shape-${java.util.UUID.randomUUID()}"
+    val marker = group + "-marker"
+    val stages = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val markerJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val tasks = new java.util.concurrent.atomic.AtomicInteger(0)
+    val markerDone = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach { g =>
+            e.stageIds.foreach(stages.put(_, g))
+            if (g == marker) markerJobs.add(e.jobId)
+          }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.get(e.stageId) == group) tasks.incrementAndGet()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (markerJobs.contains(e.jobId)) markerDone.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "shape")
+      val rows = try df.collect().toSeq finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerDone.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus stalled")
+      val exchanges = plans.collect(df.queryExecution.executedPlan) {
+          case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+        }.length
+      (rows, tasks.get, exchanges)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The six query shapes the server runs, `/stream` with and without a
+    * cursor, over the snapshot `t`. */
+  private def shapes(t: org.apache.spark.sql.DataFrame): Seq[(String, org.apache.spark.sql.DataFrame)] = {
+    val cursor = (Timestamp.valueOf("2024-02-10 12:00:02"), f"${2}%064d", "d2.example.com", "log")
+    Seq(
+      "domain" -> CtQueries.domainLookup(t, "d3.example.com"),
+      "subdomains" -> CtQueries.subdomains(t, "example.com"),
+      "recent" -> CtQueries.recent(t, "example.com", Timestamp.valueOf("2024-03-10 18:00:00")),
+      "tld" -> CtQueries.tldTopk(t, "com", 3),
+      "stats" -> CtQueries.stats(t, java.sql.Date.valueOf("2024-02-10")),
+      "stream" -> CtQueries.streamTailAfter(t, None, 4),
+      "stream cursor" -> CtQueries.streamTailAfter(t, Some(cursor), 4))
+  }
+
+  private object plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  private def scanOf(df: org.apache.spark.sql.DataFrame) =
+    plans.collectFirst(df.queryExecution.executedPlan) {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+    }.get
+
+  test("a store within openCostInBytes serves every shape as one single-task job, " +
+      "filters still pushed into the scan") {
+    val dir = Files.createTempDirectory("certstore-shape").toString
+    for (m <- Seq("2024-01", "2024-02", "2024-03"))
+      CertStore.write(fixture(m, 6).toDF(), dir, SaveMode.Append)
+    assert(CertStore.sizeBytes(spark, dir) <= spark.sessionState.conf.filesOpenCostInBytes)
+    shapes(CertStore.read(spark, dir)).foreach { case (name, df) =>
+      val (rows, tasks, exchanges) = profile(df)
+      assert(rows.nonEmpty, name)
+      assert(exchanges == 0, s"$name plans an exchange:\n${df.queryExecution.executedPlan}")
+      assert(tasks == 1, s"$name ran $tasks tasks")
+    }
+    // the partition and data filters still reach the scan through the Coalesce
+    val t = CertStore.read(spark, dir)
+    val byName = shapes(t).toMap
+    for (name <- Seq("recent", "stream cursor")) {
+      val scan = scanOf(byName(name))
+      assert(scan.partitionFilters.exists(_.references.exists(_.name == "ts_month")),
+        s"$name lost its ts_month partition filter: ${scan.partitionFilters}")
+      assert(scan.metadata("PushedFilters").contains("GreaterThan"),
+        s"$name lost its pushed ts filter: ${scan.metadata("PushedFilters")}")
+    }
+    assert(scanOf(byName("recent")).metadata("PushedFilters")
+      .contains("EqualTo(base_domain,example.com)"))
+  }
+
+  test("a store past openCostInBytes keeps its parallel plans, with identical rows; " +
+      "a commit that grows a store past it switches the shape at the next token") {
+    val dir = Files.createTempDirectory("certstore-shape-big").toString
+    for (m <- Seq("2024-01", "2024-02", "2024-03"))
+      CertStore.write(fixture(m, 6).toDF(), dir, SaveMode.Append)
+    val bytes = CertStore.sizeBytes(spark, dir)
+    val single = shapes(CertStore.read(spark, dir)).map { case (n, df) => n -> profile(df)._1 }
+    val key = "spark.sql.files.openCostInBytes"
+    val saved = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, (bytes - 1).toString)
+      CertStore.commit(dir) // the same files under a new token: the shape is chosen per snapshot
+      val t = CertStore.read(spark, dir)
+      assert(t.rdd.getNumPartitions > 1, "a store past the threshold is read in parallel")
+      shapes(t).zip(single).foreach { case ((name, df), (_, want)) =>
+        val (rows, tasks, exchanges) = profile(df)
+        assert(rows == want, s"$name answers differently in parallel")
+        assert(tasks > 1, s"$name ran $tasks tasks")
+        if (Set("subdomains", "recent", "tld", "stats")(name))
+          assert(exchanges > 0, s"$name planned no exchange")
+      }
+      // grow past the threshold: one partition before the commit, several after
+      spark.conf.set(key, bytes.toString)
+      CertStore.commit(dir)
+      assert(CertStore.read(spark, dir).rdd.getNumPartitions == 1)
+      CertStore.write(fixture("2024-04", 6).toDF(), dir, SaveMode.Append)
+      assert(CertStore.sizeBytes(spark, dir) > bytes)
+      val grown = CertStore.read(spark, dir)
+      assert(grown.rdd.getNumPartitions > 1, "the grown store keeps the parallel shape")
+      assert(profile(CtQueries.subdomains(grown, "example.com"))._3 > 0)
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }

@@ -317,6 +317,72 @@ class ServerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     } finally srv.stop()
   }
 
+  test("sequential requests on one keep-alive client answer under the delayed-ACK floor") {
+    // headers and body leave in separate writes; on a connection kept
+    // alive, Nagle holds the body for the client's delayed ACK (~40 ms)
+    val keepAlive = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+    val req = HttpRequest.newBuilder(
+      URI.create(s"http://127.0.0.1:${server.boundPort}/size")).GET().build()
+    (1 to 3).foreach(_ => keepAlive.send(req, HttpResponse.BodyHandlers.ofString()))
+    val ms = (1 to 10).map { _ =>
+      val t0 = System.nanoTime()
+      assert(keepAlive.send(req, HttpResponse.BodyHandlers.ofString()).statusCode() == 200)
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    val median = (ms(4) + ms(5)) / 2
+    assert(median < 20.0, s"median $median ms over ${ms.map(m => f"$m%.1f")}")
+  }
+
+  test("every fixed-length response carries Connection: close, errors included; " +
+      "/stream does not and stays open across polls") {
+    def connection(srv: Server, path: String, headers: (String, String)*): (Int, Option[String]) = {
+      val b = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${srv.boundPort}$path"))
+      headers.foreach { case (k, v) => b.header(k, v) }
+      val r = client.send(b.GET().build(), HttpResponse.BodyHandlers.ofString())
+      (r.statusCode(), Option(r.headers().firstValue("Connection").orElse(null)))
+    }
+    for ((path, code) <- Seq("/" -> 200, "/domain/a.example.com" -> 200, "/size" -> 200,
+        "/stats?date=2024-01-15" -> 200, "/stats?date=nope" -> 400, "/nope" -> 404))
+      assert(connection(server, path) == (code, Some("close")), path)
+    val guarded = new Server(spark, () => throw new IllegalStateException("store unreadable"),
+      storeDir, port = 0, now = () => ts("2024-01-15 12:00:00"),
+      allowedIps = Some(Set("10.1.2.3")), trustProxy = true, maxStreams = 0,
+      rateLimitPerMin = Some(1)).start()
+    try {
+      assert(connection(guarded, "/") == (403, Some("close")))
+      val listed = "X-Forwarded-For" -> "10.1.2.3"
+      assert(connection(guarded, "/domain/a.example.com", listed) == (500, Some("close")))
+      assert(connection(guarded, "/", listed) == (429, Some("close")))
+    } finally guarded.stop()
+    val full = new Server(spark, () => CertStore.read(spark, storeDir), storeDir,
+      port = 0, maxStreams = 0).start()
+    try assert(connection(full, "/stream") == (503, Some("close")))
+    finally full.stop()
+
+    val srv = new Server(spark, () => CertStore.read(spark, storeDir), storeDir,
+      port = 0, streamPollMs = 50).start()
+    try {
+      val resp = client.send(HttpRequest.newBuilder(
+          URI.create(s"http://127.0.0.1:${srv.boundPort}/stream")).GET().build(),
+        HttpResponse.BodyHandlers.ofInputStream())
+      assert(resp.statusCode() == 200)
+      assert(!resp.headers().firstValue("Connection").isPresent, resp.headers())
+      // the store's rows, then one heartbeat per idle poll on the same connection
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      val sb = new StringBuilder
+      val buf = new Array[Byte](8192)
+      val in = resp.body()
+      def heartbeats = ":\n\n".r.findAllMatchIn(sb).length
+      while (heartbeats < 3 && System.nanoTime() < deadline) {
+        val n = in.read(buf)
+        if (n > 0) sb.append(new String(buf, 0, n, java.nio.charset.StandardCharsets.UTF_8))
+        else if (n < 0) fail(s"the stream closed after:\n$sb")
+      }
+      in.close()
+      assert(sb.toString.contains("b.example.com") && heartbeats >= 3, sb.toString)
+    } finally srv.stop()
+  }
+
   test("stop() leaves no non-daemon thread the server started alive") {
     import scala.jdk.CollectionConverters._
     def nonDaemon(): Set[Thread] = Thread.getAllStackTraces.keySet.asScala
