@@ -121,27 +121,35 @@ object CertStore {
     * frame with the populated store's schema (memoized only under a
     * token).
     *
-    * Plan shape: a store whose data files total at most
-    * `spark.sql.files.openCostInBytes` (Spark's own estimate of the bytes
-    * readable in the time one file open costs; 4 MB by default) is served
-    * as `coalesce(1)`. Filters and projections still push through the
-    * `Coalesce` into the scan, and every aggregate, sort and top-k above
-    * it then needs no exchange, so a request runs as one single-task job
-    * instead of a scan stage, a hash or range exchange and the range
-    * sampling job. Measured on 4 cores (SCALE.md, "Round 18"): at 2.2
-    * and 16.5 MB one task cuts solo `/subdomains` and raises 4-thread
-    * throughput by half or more, while solo `/domain`, which plans no
-    * exchange in either shape, stays within 6%; at 62.9 MB it loses solo
-    * `/subdomains`, where reading the files in turn costs more than the
-    * exchanges save. The threshold sits below that crossover. The rule is
-    * decided once per listing, where the bytes are known, so every route,
-    * every `/stream` poll and a tokenless read all get the same shape;
-    * larger stores keep the parallel plans. */
+    * Plan shape: a store of at most [[SingleTaskMaxFiles]] data files and
+    * [[SingleTaskMaxBytes]] data bytes is served as `coalesce(1)`.
+    * Filters and projections still push through the `Coalesce` into the
+    * scan, and every aggregate, sort and top-k above it then needs no
+    * exchange, so a request runs as one single-task job instead of a scan
+    * stage, a hash or range exchange and the range-sampling job. The
+    * shape is decided once per listing, where the files and bytes are
+    * known, so every route, every `/stream` poll and a tokenless read get
+    * the same one; a store past either bound keeps the parallel plans. */
   def read(spark: SparkSession, path: String): DataFrame =
     pinned(spark, path).getOrElse(load(spark, path)).df
 
-  /** A fresh listing of the store, shaped by size (see [[read]]): the
-    * snapshot `pinned` caches, here under no token. */
+  /** The serving plan-shape bounds (see [[read]]), set from the crossover
+    * measured by `ServeShapeProbe` (SCALE.md, "Round 18": 4 cores,
+    * `local[4]`, solo medians of `/domain` and `/subdomains` as DataFrame
+    * collects, which spread ~15% run to run). One task reads the files in
+    * turn, so its cost follows the file count more than the bytes. At
+    * ~2 MB and at ~16 MB, up to 8 files, one task cut solo `/subdomains`
+    * by 3–41% and moved solo `/domain` by −7% to +25%; at 12 files it
+    * lost solo `/domain` by 50–62%. With 4 files it won both routes at
+    * 16 MB and lost both at 31 MB (+12% and +4%) and 61 MB (+9% and
+    * +17%). The bounds guard unloaded latency: under 4 concurrent
+    * threads one task won throughput at every size and file count
+    * measured, 32 files and 64 MB included. */
+  private[ct] val SingleTaskMaxFiles = 8
+  private[ct] val SingleTaskMaxBytes: Long = 16L << 20
+
+  /** A fresh listing of the store, shaped by its files and bytes (see
+    * [[read]]): the snapshot `pinned` caches, here under no token. */
   private def load(spark: SparkSession, path: String): Snapshot = {
     val df = try {
       val df = spark.read.parquet(path)
@@ -151,9 +159,12 @@ object CertStore {
           if Set("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA").contains(e.getCondition) =>
         spark.createDataFrame(java.util.Collections.emptyList[Row](), emptySchema(spark))
     }
-    val bytes = fileBytes(df)
-    val small = bytes <= spark.sessionState.conf.filesOpenCostInBytes
-    Snapshot("", if (small) df.coalesce(1) else df, bytes)
+    val index = df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r.location }
+    val bytes = index.fold(0L)(_.sizeInBytes)
+    val oneTask = bytes <= SingleTaskMaxBytes &&
+      index.forall(_.inputFiles.length <= SingleTaskMaxFiles)
+    Snapshot("", if (oneTask) df.coalesce(1) else df, bytes)
   }
 
   /** `CertDomain.schema` plus `ts_month` typed as partition inference types
@@ -161,11 +172,6 @@ object CertStore {
   private def emptySchema(spark: SparkSession) =
     CertDomain.schema.add(partitionCol,
       if (spark.sessionState.conf.partitionColumnTypeInferenceEnabled) IntegerType else StringType)
-
-  /** Bytes of the data files in `df`'s file index; 0 for an empty frame. */
-  private def fileBytes(df: DataFrame): Long =
-    df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }
-      .collect { case r: HadoopFsRelation => r.location.sizeInBytes }.getOrElse(0L)
 
   /** The ReplacingMergeTree dedupe window: one row per
     * (`within`…, fingerprint, domain), the earliest by (ts, log_name). */

@@ -39,25 +39,29 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * prunes partitions/row-groups by the request predicate (SURVEY §4) and
   * collects only the bounded result (every endpoint is LIMITed or
   * single-row by shape). The table comes from `CertStore.read`, which
-  * serves a store of at most `spark.sql.files.openCostInBytes` data bytes
-  * (4 MB by default) as one partition: below that size one task reading
-  * the files in turn beats a scan stage plus the hash and range exchanges
-  * the aggregates and sorts would otherwise plan (measured on 4 cores: it
-  * wins solo /subdomains and 4-thread throughput up to 16.5 MB and loses
-  * solo /subdomains at 62.9 MB; SCALE.md, Round 18), so
-  * each request on a small store is one single-task job, as ClickHouse
-  * answers these shapes on one server's local threads (SURVEY §3.1).
-  * /stream connections are long-lived poll loops, so they run on their own
-  * unbounded executor (capped by `maxStreams`, excess rejected 503) and
-  * never starve the request pool; each poll leaves as one write.
+  * serves a store of at most `CertStore.SingleTaskMaxBytes` data bytes as
+  * one partition, so each request on a small store is one single-task job
+  * with no hash or range exchange, as ClickHouse answers these shapes on
+  * one server's local threads (SURVEY §3.1); the threshold and the
+  * crossover it rests on are documented there. /stream connections are
+  * long-lived poll loops, so they run on their own unbounded executor
+  * (capped by `maxStreams`, excess rejected 503) and never starve the
+  * request pool.
   *
   * Every other response is fixed-length and sent with `Connection: close`.
   * The JDK server writes a response's headers and body separately, so on
   * a kept-alive connection Nagle holds the body until the client's
-  * delayed ACK (~40 ms per response); closing sends it at once. The
-  * JVM-wide `sun.net.httpserver.nodelay` property is no fix: the JDK reads
-  * it once, when the JVM creates its first `HttpServer`, which need not be
-  * this one.
+  * delayed ACK (~40 ms per response, measured on loopback); closing sends
+  * it at once. The price is keep-alive: every request pays a new TCP
+  * connect (and a TLS handshake behind a TLS proxy), and the server side
+  * holds one TIME_WAIT socket per request. No remote or proxied client
+  * was measured. The real fix is TCP_NODELAY on the server's sockets,
+  * which the JDK only offers JVM-wide: `sun.net.httpserver.nodelay` is
+  * read once, when the JVM creates its first `HttpServer` (in ctbench
+  * and in `CtHttpSourceSpec` that is a stub CT log, not this server), so
+  * it would have to be set at the top of the serving entry point, before
+  * any `HttpServer` exists. Until then the close is the workaround, not
+  * the design.
   */
 class Server(spark: SparkSession, table: () => DataFrame, storePath: String,
     port: Int = 0, now: () => Timestamp = () => new Timestamp(System.currentTimeMillis()),
@@ -227,9 +231,9 @@ class Server(spark: SparkSession, table: () => DataFrame, storePath: String,
             while (streaming) {
               // sorted (ts, fingerprint, domain, log_name)
               val rows = CtQueries.streamTailAfter(table(), cursor, streamBatch).collect()
-              // one write per poll: its frames, or the heartbeat when it
-              // is empty. The write is what finds a closed client, so an
-              // idle store cannot hold a dead subscriber's slot
+              // a poll's frames, or the heartbeat when it is empty, in one
+              // write and one flush. The write is what finds a closed
+              // client, so an idle store cannot hold a dead subscriber's slot
               val frames =
                 if (rows.isEmpty) ":\n\n"
                 else rows.map(r => s"data: ${jval(r.toSeq)}\n\n").mkString

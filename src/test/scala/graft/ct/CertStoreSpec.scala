@@ -329,12 +329,13 @@ class CertStoreSpec extends SparkSpec {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
     }.get
 
-  test("a store within openCostInBytes serves every shape as one single-task job, " +
+  test("a small store serves every shape as one single-task job, " +
       "filters still pushed into the scan") {
     val dir = Files.createTempDirectory("certstore-shape").toString
     for (m <- Seq("2024-01", "2024-02", "2024-03"))
       CertStore.write(fixture(m, 6).toDF(), dir, SaveMode.Append)
-    assert(CertStore.sizeBytes(spark, dir) <= spark.sessionState.conf.filesOpenCostInBytes)
+    assert(CertStore.read(spark, dir).inputFiles.length <= CertStore.SingleTaskMaxFiles)
+    assert(CertStore.sizeBytes(spark, dir) <= CertStore.SingleTaskMaxBytes)
     shapes(CertStore.read(spark, dir)).foreach { case (name, df) =>
       val (rows, tasks, exchanges) = profile(df)
       assert(rows.nonEmpty, name)
@@ -355,36 +356,55 @@ class CertStoreSpec extends SparkSpec {
       .contains("EqualTo(base_domain,example.com)"))
   }
 
-  test("a store past openCostInBytes keeps its parallel plans, with identical rows; " +
-      "a commit that grows a store past it switches the shape at the next token") {
-    val dir = Files.createTempDirectory("certstore-shape-big").toString
-    for (m <- Seq("2024-01", "2024-02", "2024-03"))
-      CertStore.write(fixture(m, 6).toDF(), dir, SaveMode.Append)
-    val bytes = CertStore.sizeBytes(spark, dir)
-    val single = shapes(CertStore.read(spark, dir)).map { case (n, df) => n -> df.collect().toSeq }
-    val key = "spark.sql.files.openCostInBytes"
-    val saved = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key, (bytes - 1).toString)
-      CertStore.commit(dir) // the same files under a new token: the shape is chosen per snapshot
+  test("the commit that takes a store past SingleTaskMaxFiles switches it to the " +
+      "parallel plans at the next token, with the same rows as one task") {
+    val dir = Files.createTempDirectory("certstore-shape-files").toString
+    // one file per append: a new month each
+    for (m <- 1 to CertStore.SingleTaskMaxFiles + 1) {
+      CertStore.write(fixture(f"2024-$m%02d", 6).toDF(), dir, SaveMode.Append)
       val t = CertStore.read(spark, dir)
-      assert(t.rdd.getNumPartitions > 1, "a store past the threshold is read in parallel")
-      shapes(t).zip(single).foreach { case ((name, df), (_, want)) =>
-        val (rows, tasks, exchanges) = profile(df)
-        assert(rows == want, s"$name answers differently in parallel")
-        assert(tasks > 1, s"$name ran $tasks tasks")
-        if (Set("subdomains", "recent", "tld", "stats")(name))
-          assert(exchanges > 0, s"$name planned no exchange")
-      }
-      // grow past the threshold: one partition before the commit, several after
-      spark.conf.set(key, bytes.toString)
-      CertStore.commit(dir)
-      assert(CertStore.read(spark, dir).rdd.getNumPartitions == 1)
-      CertStore.write(fixture("2024-04", 6).toDF(), dir, SaveMode.Append)
-      assert(CertStore.sizeBytes(spark, dir) > bytes)
-      val grown = CertStore.read(spark, dir)
-      assert(grown.rdd.getNumPartitions > 1, "the grown store keeps the parallel shape")
-      assert(profile(CtQueries.subdomains(grown, "example.com"))._3 > 0)
-    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      assert(t.inputFiles.length == m)
+      assert((t.rdd.getNumPartitions == 1) == (m <= CertStore.SingleTaskMaxFiles),
+        s"$m files in ${t.rdd.getNumPartitions} partitions")
+    }
+    val t = CertStore.read(spark, dir)
+    shapes(t).zip(shapes(t.coalesce(1))).foreach { case ((name, df), (_, one)) =>
+      val (rows, tasks, exchanges) = profile(df)
+      assert(rows.nonEmpty, name)
+      assert(rows == one.collect().toSeq, s"$name answers differently in parallel")
+      assert(tasks > 1, s"$name ran $tasks tasks")
+      if (Set("subdomains", "recent", "tld", "stats")(name))
+        assert(exchanges > 0, s"$name planned no exchange")
+    }
+  }
+
+  test("the commit that takes a store past SingleTaskMaxBytes switches it to the " +
+      "parallel plans at the next token") {
+    import org.apache.spark.sql.functions._
+    val dir = Files.createTempDirectory("certstore-shape-bytes").toString
+    CertStore.write(fixture("2024-01", 6).toDF(), dir, SaveMode.Append)
+    // random fingerprints, so the bytes grow as a real store's do
+    def bulk(part: Int) = spark.range(CertStore.SingleTaskMaxBytes / 150).select(
+      (lit(1706745600L) + col("id") % 86400).cast("timestamp").as("ts"),
+      concat(lit("h"), (col("id") % 50).cast("string"), lit(".example.com")).as("domain"),
+      lit("example.com").as("base_domain"),
+      sha2(concat(lit(s"p$part-"), col("id").cast("string")), 256).as("fingerprint"),
+      lit("CN=CA").as("issuer"), lit("CN=d").as("subject"),
+      array(concat(lit("h"), (col("id") % 50).cast("string"), lit(".example.com"))).as("san"),
+      lit(Timestamp.valueOf("2024-01-01 00:00:00")).as("not_before"),
+      lit(Timestamp.valueOf("2025-01-01 00:00:00")).as("not_after"),
+      lit("log").as("log_name"))
+    var appends = 0
+    while (CertStore.sizeBytes(spark, dir) <= CertStore.SingleTaskMaxBytes) {
+      assert(CertStore.read(spark, dir).rdd.getNumPartitions == 1,
+        s"${CertStore.sizeBytes(spark, dir)} bytes")
+      CertStore.write(bulk(appends), dir, SaveMode.Append)
+      appends += 1
+    }
+    assert(appends > 1, "the store was under the bound at a token before it grew past")
+    val grown = CertStore.read(spark, dir)
+    assert(grown.inputFiles.length <= CertStore.SingleTaskMaxFiles)
+    assert(grown.rdd.getNumPartitions > 1, "a store past the bytes bound is read in parallel")
+    assert(profile(CtQueries.subdomains(grown, "example.com"))._3 > 0)
   }
 }

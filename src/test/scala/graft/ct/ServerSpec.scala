@@ -319,7 +319,8 @@ class ServerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   test("sequential requests on one keep-alive client answer under the delayed-ACK floor") {
     // headers and body leave in separate writes; on a connection kept
-    // alive, Nagle holds the body for the client's delayed ACK (~40 ms)
+    // alive, Nagle holds the body for the client's delayed ACK (~40 ms),
+    // so a stalled response takes 40 ms or more however fast the machine
     val keepAlive = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
     val req = HttpRequest.newBuilder(
       URI.create(s"http://127.0.0.1:${server.boundPort}/size")).GET().build()
@@ -328,9 +329,9 @@ class ServerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       val t0 = System.nanoTime()
       assert(keepAlive.send(req, HttpResponse.BodyHandlers.ofString()).statusCode() == 200)
       (System.nanoTime() - t0) / 1e6
-    }.sorted
-    val median = (ms(4) + ms(5)) / 2
-    assert(median < 20.0, s"median $median ms over ${ms.map(m => f"$m%.1f")}")
+    }
+    val stalled = ms.count(_ > 35.0)
+    assert(stalled <= 2, s"$stalled of 10 at the delayed-ACK floor: ${ms.map(m => f"$m%.1f")}")
   }
 
   test("every fixed-length response carries Connection: close, errors included; " +
